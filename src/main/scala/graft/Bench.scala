@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -13,18 +12,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val startedAt = java.time.Instant.now().toString
     val strict = sys.env.get("SPARK_GRAFT_STRICT_CODEGEN").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // local[32] with 8-48g heap: a ~20MB edge list is cheaper to
-      // broadcast than to shuffle 40M wedge rows against (AQE decides
-      // from runtime stats; clusters with small executors should lower it)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // older testdata generations carry INT64 TIMESTAMP(NANOS) — read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.localBuilder(cpus.toInt)
       .config("spark.sql.codegen.fallback", (!strict).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,7 +20,17 @@ object GraftSession {
   /** Local session: shuffle partitions = cores (not the 200 default). */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft"): SparkSession = {
-    val s = configure(SparkSession.builder()
+    val s = localBuilder(cores, appName).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** [[local]]'s builder, for callers that add confs of their own before
+    * `getOrCreate()`.
+    */
+  def localBuilder(cores: Int = Runtime.getRuntime.availableProcessors(),
+                   appName: String = "graft"): SparkSession.Builder =
+    configure(SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -28,8 +38,4 @@ object GraftSession {
       // single-box tuning: broadcasting a ~20MB side beats shuffling a
       // 40M-row probe side; lower on clusters with small executors
       .config("spark.sql.autoBroadcastJoinThreshold", "64m"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // local[32] with 8-48g heap: a ~20MB edge list is cheaper to
-      // broadcast than to shuffle 40M wedge rows against (AQE decides
-      // from runtime stats; clusters with small executors should lower it)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // older testdata generations carry INT64 TIMESTAMP(NANOS) — read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // dev knob (same as Bench): SPARK_GRAFT_ONLY=q54,q55 dumps a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY")

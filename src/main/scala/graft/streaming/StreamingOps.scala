@@ -1,8 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.GraphStream
 import graft.summaries.{DisjointSet, ParityDisjointSet, SummaryCodecs}
@@ -39,8 +45,7 @@ object StreamingOps {
     * r4). Streams built from this clone's MemoryStream pick up the
     * pinned value at `.start()`; the parent's conf is never touched.
     */
-  private def pinnedShuffleSession(parent: org.apache.spark.sql.SparkSession,
-                                   n: Int): org.apache.spark.sql.SparkSession = {
+  private def pinnedShuffleSession(parent: SparkSession, n: Int): SparkSession = {
     val s = parent.newSession()
     parent.conf.getAll.foreach { case (k, v) =>
       if (s.conf.isModifiable(k)) s.conf.set(k, v)
@@ -49,9 +54,11 @@ object StreamingOps {
     s
   }
 
-  /** Ephemeral checkpoint dir for the REPLAY HARNESSES (correctness
-    * gates over MemoryStreams — the checkpoint never outlives the
-    * call). Prefers tmpfs (/dev/shm): the state store fsyncs delta +
+  /** A fresh `graft-replay-*` directory for one replay run, holding
+    * its checkpoint and any scratch output. Only [[Replay]] calls this,
+    * and [[runReplay]] deletes the directory when it returns, so it
+    * never outlives the harness call.
+    * Prefers tmpfs (/dev/shm): the state store fsyncs delta +
     * snapshot + offset/commit-log files per partition per trigger, and
     * on shared-storage machines a few-ms fsync turns a 3 s gate into a
     * 60 s one (measured: the same replay trio swung 46→74 s with disk
@@ -59,11 +66,117 @@ object StreamingOps {
     * Production queries pass their own durable checkpointLocation —
     * this helper is harness-only by construction.
     */
-  private def replayCkpt(prefix: String): String = {
+  private def replayCkpt(): String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)
-      java.nio.file.Files.createTempDirectory(shm.toPath, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
+      Files.createTempDirectory(shm.toPath, "graft-replay-").toString
+    else Files.createTempDirectory("graft-replay-").toString
+  }
+
+  /** One replay run as its harness sees it: the session the query runs
+    * on, fresh MemoryStreams on it, the memory-sink view and a scratch
+    * directory for the harness's own files. [[runReplay]] drops the
+    * view and deletes the run's directory when it returns.
+    */
+  private final class Replay(val session: SparkSession) {
+    private val root = replayCkpt()
+    val checkpoint: String = s"$root/checkpoint"
+    val scratch: String = s"$root/scratch"
+    val view: String = "graft_replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    def stream[T: Encoder]: MemoryStream[T] = MemoryStream[T](session)
+    /** `df` into the run's memory sink, in output `mode`. */
+    def memory(df: DataFrame, mode: String): DataStreamWriter[Row] =
+      df.writeStream.outputMode(mode).format("memory").queryName(view)
+    def table: DataFrame = session.table(view)
+    def close(): Unit = {
+      session.catalog.dropTempView(view)
+      FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
+  /** THE replay driver behind every `replay*` harness. A harness feeds
+    * a batch table through a MemoryStream in `nBatches` triggers of the
+    * operator under test; its final state must equal the one-shot batch
+    * answer. The contract:
+    *  - feed order is the harness's job: `rows` arrive collected and
+    *    sorted in replay order;
+    *  - the driver adds `rows` in chunks of `chunk = ceil(n / nBatches)`,
+    *    so a replay runs `ceil(n / chunk)` triggers (none for empty
+    *    `rows`), and drains each with `processAllAvailable` before the
+    *    next chunk goes in;
+    *  - `query` builds the query from the stream and returns its writer
+    *    with output mode and sink set (a memory sink via
+    *    [[Replay.memory]], or `foreachBatch`); `result` reads the answer
+    *    before the query stops;
+    *  - the checkpoint lives in a `graft-replay-*` directory that is
+    *    deleted on return, with the scratch files and the sink view;
+    *  - the shuffle-partition pin belongs to each harness: `pin` clones
+    *    the session at that many partitions ([[pinnedShuffleSession]]),
+    *    None runs on the caller's session.
+    * The driver-side collect and feed are the harness, not the
+    * operator: MemoryStream is a driver-fed test source, and
+    * production streams never pass through the driver.
+    */
+  private def replay[T: Encoder, R](parent: SparkSession, pin: Option[Int],
+                                    rows: scala.collection.Seq[T], nBatches: Int)(
+      query: (Replay, DataFrame) => DataStreamWriter[Row])(result: Replay => R): R =
+    runReplay(parent, pin) { r =>
+      val ms = r.stream[T]
+      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
+      (query(r, ms.toDF()), rows.grouped(chunk).map(g => () => { ms.addData(g); () }))
+    }(result)
+
+  /** [[replay]]'s lifecycle with the feed left to the caller: `start`
+    * builds the query and the per-trigger feeds; each feed runs, then
+    * the query drains it. `result` is read before the query stops; the
+    * checkpoint, the scratch files and the memory-sink view are gone on
+    * return.
+    */
+  private def runReplay[R](parent: SparkSession, pin: Option[Int])(
+      start: Replay => (DataStreamWriter[Row], Iterator[() => Unit]))(result: Replay => R): R = {
+    val r = new Replay(pin.fold(parent)(pinnedShuffleSession(parent, _)))
+    try {
+      val (writer, feeds) = start(r)
+      val q = writer.option("checkpointLocation", r.checkpoint).start()
+      try {
+        feeds.foreach { feed => feed(); q.processAllAvailable() }
+        result(r)
+      } finally q.stop()
+    } finally r.close()
+  }
+
+  /** (src, dst, ts in µs) rows in ascending event time: the replay
+    * order of the edge-stream harnesses. Sorted driver-side — a shuffle
+    * sort just to feed the driver is wasted cluster work.
+    */
+  private def edgesByTs(edges: DataFrame): Array[(Long, Long, Long)] = {
+    import edges.sparkSession.implicits._
+    val rows = edges
+      .select(col("src").cast("long"), col("dst").cast("long"),
+        unix_micros(col("ts").cast("timestamp")))
+      .as[(Long, Long, Long)].collect()
+    rows.sortInPlaceBy(_._3)
+    rows
+  }
+
+  /** The last row per key of an update-mode changelog: the one with the
+    * largest `counter`, a running count that strictly increases per key.
+    */
+  private def lastUpdate(changelog: DataFrame, counter: String, keys: String*): DataFrame =
+    changelog
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col(counter).desc)))
+      .where(col("rn") === 1).drop("rn")
+
+  /** An exactly-once parquet sink for (a, b) id pairs in `r.scratch`
+    * ([[graft.sources.Sources.idempotentBatchWriter]]). An empty batch
+    * -1 anchors the schema, so zero pairs still read.
+    */
+  private def pairSink(r: Replay, a: String, b: String): (DataFrame, Long) => Unit = {
+    val sink = graft.sources.Sources.idempotentBatchWriter(r.scratch)
+    sink(r.session.createDataFrame(r.session.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField(a, LongType), StructField(b, LongType)))), -1L)
+    sink
   }
 
   // Keyed-state wire format: compact array-product codec, not Java
@@ -296,44 +409,33 @@ object StreamingOps {
       }
   }
 
-  /** Replay harness for the TTL'd running CC (the
-    * [[replayConnectedComponents]] discipline: MemoryStream batches in
-    * ascending-ts order on a pinned-partition cloned session, driver-side
-    * feeds/collects are the harness, not the operator). Returns the LAST
-    * trigger's full surviving (id, component) assignment — the state
-    * snapshot the divergence contract talks about.
+  /** The (src, dst, ts µs) replay stream of [[edgesByTs]] rows as an
+    * edge stream with a timestamp `ts`.
+    */
+  private def microsToTs(in: DataFrame): DataFrame =
+    in.toDF("src", "dst", "tsu")
+      .select(col("src"), col("dst"), timestamp_micros(col("tsu")).as("ts"))
+
+  /** Replay harness for the TTL'd running CC ([[replay]] in
+    * ascending-ts order, one state partition like
+    * [[replayConnectedComponents]]). Returns the LAST trigger's full
+    * surviving (id, component) assignment — the state snapshot the
+    * divergence contract talks about.
     */
   def replayConnectedComponentsTtl(edges: DataFrame, ttl: String,
                                    nBatches: Int = 4, fanIn: Int = 0): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val rows = edges
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        unix_micros(col("ts").cast("timestamp")))
-      .as[(Long, Long, Long)].collect()
-    rows.sortInPlaceBy(_._3)
-    val stream = pinnedShuffleSession(spark, 1)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val ckpt = replayCkpt("graft-replay-ccttl")
     val last = new java.util.concurrent.atomic.AtomicReference[Array[(Long, Long)]](Array.empty)
-    val q = runningConnectedComponentsTtl(
-        ms.toDF().toDF("src", "dst", "tsu")
-          .select(col("src"), col("dst"),
-            timestamp_micros(col("tsu")).as("ts")), ttl, fanIn)
-      .toDF("id", "component")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val snap = df.collect().map(r => (r.getLong(0), r.getLong(1)))
-        if (snap.nonEmpty) last.set(snap)
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      spark.createDataset(last.get.toIndexedSeq).toDF("id", "component")
-    } finally q.stop()
+    replay(spark, Some(1), edgesByTs(edges), nBatches) { (_, in) =>
+      runningConnectedComponentsTtl(microsToTs(in), ttl, fanIn)
+        .toDF("id", "component")
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val snap = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+          if (snap.nonEmpty) last.set(snap)
+        }
+    } { _ => spark.createDataset(last.get.toIndexedSeq).toDF("id", "component") }
   }
 
   /** TTL'd parity union-find state: per live vertex its component
@@ -501,40 +603,22 @@ object StreamingOps {
   }
 
   /** Replay harness for the TTL'd bipartiteness (the
-    * [[replayConnectedComponentsTtl]] discipline): last trigger's
-    * verdict over ascending-ts batches.
+    * [[replayConnectedComponentsTtl]] replay): last trigger's verdict.
     */
   def replayBipartitenessTtl(edges: DataFrame, ttl: String,
                              nBatches: Int = 4, fanIn: Int = 0): Boolean = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val rows = edges
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        unix_micros(col("ts").cast("timestamp")))
-      .as[(Long, Long, Long)].collect()
-    rows.sortInPlaceBy(_._3)
-    val stream = pinnedShuffleSession(spark, 1)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val ckpt = replayCkpt("graft-replay-bipttl")
     val last = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q = runningBipartitenessTtl(
-        ms.toDF().toDF("src", "dst", "tsu")
-          .select(col("src"), col("dst"),
-            timestamp_micros(col("tsu")).as("ts")), ttl, fanIn)
-      .toDF("ok")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val snap = df.collect()
-        if (snap.nonEmpty) last.set(snap.last.getBoolean(0))
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      last.get()
-    } finally q.stop()
+    replay(spark, Some(1), edgesByTs(edges), nBatches) { (_, in) =>
+      runningBipartitenessTtl(microsToTs(in), ttl, fanIn)
+        .toDF("ok")
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val snap = df.collect()
+          if (snap.nonEmpty) last.set(snap.last.getBoolean(0))
+        }
+    } { _ => last.get() }
   }
 
   private implicit val pdsEnc: Encoder[ParityDisjointSet] =
@@ -573,60 +657,30 @@ object StreamingOps {
   }
 
   /** Correctness-gate harness for the running summary (the reference's
-    * signature `transientState=false` behavior): replay a BATCH edge
-    * table through a MemoryStream in ascending-ts order across
-    * `nBatches` triggers of [[runningConnectedComponents]], and return
-    * the converged (id, component) assignment — which must equal the
-    * one-shot batch answer (same oracle as q13a).
-    *
-    * The driver-side collect is the replay harness, not the operator:
-    * MemoryStream is inherently a driver-fed test source (production
-    * streams arrive via file/socket/Kafka sources and never pass through
-    * the driver). Component labels only merge downward as edges arrive,
-    * so the converged assignment is `min(component)` per id over the
-    * update-mode emissions — no "last trigger" bookkeeping needed.
+    * signature `transientState=false` behavior): [[replay]] a BATCH
+    * edge table in ascending-ts order through [[runningConnectedComponents]]
+    * and return the converged (id, component) assignment — which must
+    * equal the one-shot batch answer (same oracle as q13a).
     */
   def replayConnectedComponents(edges: DataFrame, nBatches: Int = 4,
                                 fanIn: Int = 0): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // ascending-ts replay order: sort driver-side — a full shuffle sort
-    // just to feed the driver harness is wasted cluster work
-    val rows = edges
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        unix_micros(col("ts").cast("timestamp")))
-      .as[(Long, Long, Long)].collect()
-    rows.sortInPlaceBy(_._3)
     // the merger is keyed by a constant (the reference's parallelism-1
     // merge), so >1 state partition only adds empty state-store commits
-    // per trigger; the pin lives on a cloned session, not the caller's
-    val stream = pinnedShuffleSession(spark, 1)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val name = "graft_replay_cc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-cc")
-    val q = runningConnectedComponents(ms.toDF().toDF("src", "dst"), fanIn)
-      .toDF("id", "component")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g =>
-        ms.addData(g.map { case (s, d, _) => (s, d) }.toSeq)
-        q.processAllAvailable()
-      }
+    // per trigger
+    replay(spark, Some(1), edgesByTs(edges).map(e => (e._1, e._2)), nBatches) { (r, in) =>
+      r.memory(runningConnectedComponents(in.toDF("src", "dst"), fanIn)
+        .toDF("id", "component"), "update")
+    } { r =>
       // labels only merge downward, so min(component) per id over the
       // update-mode emissions is the converged assignment; it is tiny
       // (one row per vertex) — materialize via the driver rather than
       // spinning up checkpoint machinery on the ephemeral memory table
-      val converged = stream.table(name)
+      val converged = r.table
         .groupBy("id").agg(min("component").as("component"))
         .as[(Long, Long)].collect()
       spark.createDataset(converged.toIndexedSeq).toDF("id", "component")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -763,9 +817,9 @@ object StreamingOps {
 
   /** Correctness-gate harness for incremental triangle counting — the
     * reference's flagship streaming example (ExactTriangleCount emits
-    * global AND per-vertex counts): replay a BATCH canonical edge set
-    * through a MemoryStream in `nBatches` triggers of the keyed-state
-    * pipeline ([[streamingTriangleEmissions]] → [[triangleDeltas]] in
+    * global AND per-vertex counts): [[replay]] a BATCH canonical edge
+    * set through the keyed-state pipeline
+    * ([[streamingTriangleEmissions]] → [[triangleDeltas]] in
     * `foreachBatch`). After the last trigger the merged deltas must
     * equal the one-shot batch per-vertex answer (q15-shaped oracle); the
     * global count is their sum / 3. Exact at every prefix, not just at
@@ -781,35 +835,28 @@ object StreamingOps {
     val rows = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].collect()
     rows.sortInPlaceBy(identity)
+    val counts = new scala.collection.mutable.HashMap[Long, Long]()
     // vertex-keyed state: a handful of state partitions keeps per-trigger
     // state-store commit overhead proportional to real work at replay
-    // scale (a cluster deployment raises it with the data); the pin
-    // lives on a cloned session, not the caller's
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val ckpt = replayCkpt("graft-replay-tri")
-    val counts = new scala.collection.mutable.HashMap[Long, Long]()
-    val q = streamingTriangleEmissions(ms.toDF().toDF("src", "dst"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (em: DataFrame, _: Long) =>
-        // persist: triangleDeltas branches the batch twice (side 0 ⋈
-        // side 1) — unpersisted, each branch would re-execute the
-        // whole micro-batch including the stateful operator
-        em.persist()
-        try triangleDeltas(em).collect().foreach { r =>
-          val v = r.getLong(0)
-          counts(v) = counts.getOrElse(v, 0L) + r.getLong(1)
-        } finally em.unpersist()
-      }.start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
+    // scale (a cluster deployment raises it with the data)
+    replay(spark, Some(8), rows, nBatches) { (_, in) =>
+      streamingTriangleEmissions(in.toDF("src", "dst"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (em: DataFrame, _: Long) =>
+          // persist: triangleDeltas branches the batch twice (side 0 ⋈
+          // side 1) — unpersisted, each branch would re-execute the
+          // whole micro-batch including the stateful operator
+          em.persist()
+          try triangleDeltas(em).collect().foreach { r =>
+            val v = r.getLong(0)
+            counts(v) = counts.getOrElse(v, 0L) + r.getLong(1)
+          } finally em.unpersist()
+        }
+    } { _ =>
       val fin = counts.iterator.filter(_._2 > 0)
         .map { case (v, w6) => (v, w6 / 6) }.toSeq
       spark.createDataset(fin).toDF("id", "triangles")
-    } finally q.stop()
+    }
   }
 
   /** Streaming exact dedup: first-seen-wins on the 128-bit normalized
@@ -842,39 +889,27 @@ object StreamingOps {
       .dropDuplicatesWithinWatermark("lang", "h1", "h2")
   }
 
-  /** Correctness-gate harness: replay the documents table through a
-    * MemoryStream in doc_id order across `nBatches` triggers of
-    * [[streamingExactDedup]]; the per-language survivor counts must
-    * equal the one-shot batch answer (q20's oracle). Duplicate copies
-    * split across triggers exercise the cross-batch state path.
+  /** Correctness-gate harness: [[replay]] the documents table in
+    * doc_id order through [[streamingExactDedup]], on the caller's
+    * session; the per-language survivor counts must equal the one-shot
+    * batch answer (q20's oracle). Duplicate copies split across triggers
+    * exercise the cross-batch state path.
     */
   def replayExactDedup(docs: DataFrame, nBatches: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // the replay feed carries the raw rows so the gate exercises the real
-    // operator (hashing inside the stream) — MemoryStream is a
-    // driver-fed test source, as in the other replay harnesses
+    // operator (hashing inside the stream)
     val rows = docs.select(col("doc_id").cast("long"), col("lang"), col("text"))
       .as[(Long, String, String)].collect()
     rows.sortInPlaceBy(_._1)
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
-    val name = "graft_replay_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-dedup")
-    val q = streamingExactDedup(ms.toDF().toDF("doc_id", "lang", "text"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      val counts = spark.table(name)
+    replay(spark, None, rows, nBatches) { (r, in) =>
+      r.memory(streamingExactDedup(in.toDF("doc_id", "lang", "text")), "append")
+    } { r =>
+      val counts = r.table
         .groupBy("lang").agg(count("*").as("n_unique"))
         .as[(String, Long)].collect()
       spark.createDataset(counts.toIndexedSeq).toDF("lang", "n_unique")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
     }
   }
 
@@ -921,11 +956,10 @@ object StreamingOps {
       .toDF("user_id", "last_tu", "last_event_id", "last_cents", "n_events")
   }
 
-  /** Correctness-gate harness: replay the events table through a
-    * MemoryStream in EVENT-TIME order (the realistic CDC arrival order;
-    * the state logic itself is arrival-order-independent) across
-    * `nBatches` triggers of [[streamingLatestPerKey]]; the final update
-    * row per key — the one with the maximal running count — must equal
+  /** Correctness-gate harness: [[replay]] the events table in
+    * EVENT-TIME order (the realistic CDC arrival order; the state logic
+    * itself is arrival-order-independent) through
+    * [[streamingLatestPerKey]]; the final update row per key must equal
     * the batch argmax-by-(ts, event_id) answer. Keys whose updates span
     * triggers exercise the cross-batch state path.
     */
@@ -937,32 +971,13 @@ object StreamingOps {
         round(col("value") * 100).cast("long").as("cents"))
       .as[(Long, Long, Long, Long)].collect()
     rows.sortInPlaceBy(r => (r._3, r._2))
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long)]
-    val name = "graft_replay_lpk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-lpk")
-    val q = streamingLatestPerKey(
-        ms.toDF().toDF("user_id", "event_id", "tu", "cents"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      // the changelog's last row per key = the row with the maximal
-      // running count (n_events is strictly increasing per key)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      val fin = stream.table(name)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1).drop("rn")
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      r.memory(streamingLatestPerKey(in.toDF("user_id", "event_id", "tu", "cents")), "update")
+    } { r =>
+      val fin = lastUpdate(r.table, "n_events", "user_id")
         .as[(Long, Long, Long, Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq)
         .toDF("user_id", "last_tu", "last_event_id", "last_cents", "n_events")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1012,8 +1027,7 @@ object StreamingOps {
   }
 
   /** Correctness-gate harness for [[streamingLatestPerKeyCdc]] — the
-    * [[replayLatestPerKey]] replay (event-time order, `nBatches`
-    * triggers, final update row per key) with the delete op derived
+    * [[replayLatestPerKey]] replay with the delete op derived
     * deterministically from the data: `del = (event_id % 7 == 0)`.
     * The final changelog row per key must equal the batch
     * argmax-by-(ts, event_id) answer with its alive flag.
@@ -1027,30 +1041,14 @@ object StreamingOps {
         (col("event_id") % 7 === 0).cast("long").as("del"))
       .as[(Long, Long, Long, Long, Long)].collect()
     rows.sortInPlaceBy(r => (r._3, r._2))
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long, Long)]
-    val name = "graft_replay_cdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-cdc")
-    val q = streamingLatestPerKeyCdc(
-        ms.toDF().toDF("user_id", "event_id", "tu", "cents", "del"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("n_events").desc)
-      val fin = stream.table(name)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1).drop("rn")
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      r.memory(streamingLatestPerKeyCdc(
+        in.toDF("user_id", "event_id", "tu", "cents", "del")), "update")
+    } { r =>
+      val fin = lastUpdate(r.table, "n_events", "user_id")
         .as[(Long, Long, Long, Long, Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq)
         .toDF("user_id", "last_tu", "last_event_id", "last_cents", "alive", "n_events")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1090,14 +1088,10 @@ object StreamingOps {
       .toDF("src", "dst", "alive", "n_ops")
   }
 
-  /** Replay harness for [[streamingEdgeCdc]] (the harness, not the
-    * operator: collect/addData feed the MemoryStream; the keyed state
-    * is the thing under test): the changelog (src, dst, seq, del) is
-    * replayed in (seq, src, dst) order over `nBatches` triggers and the
-    * FINAL per-edge state returns as a batch DataFrame on the PARENT
-    * session — the bridge the q210/q211 CDC-driven maintenance queries
-    * consume. The last update per edge is the row with the maximal
-    * running op count (strictly increasing per touched key).
+  /** Replay harness for [[streamingEdgeCdc]]: the changelog (src, dst,
+    * seq, del) is [[replay]]ed in (seq, src, dst) order and the FINAL
+    * per-edge state returns as a batch DataFrame on the PARENT session
+    * — the bridge the q210/q211 CDC-driven maintenance queries consume.
     */
   def replayEdgeCdc(changelog: DataFrame, nBatches: Int = 4): DataFrame = {
     val spark = changelog.sparkSession
@@ -1106,29 +1100,13 @@ object StreamingOps {
         col("seq").cast("long"), col("del").cast("long"))
       .as[(Long, Long, Long, Long)].collect()
     rows.sortInPlaceBy(r => (r._3, r._1, r._2))
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long)]
-    val name = "graft_replay_ecdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-ecdc")
-    val q = streamingEdgeCdc(ms.toDF().toDF("src", "dst", "seq", "del"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("src", "dst").orderBy(col("n_ops").desc)
-      val fin = stream.table(name)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1).drop("rn")
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      r.memory(streamingEdgeCdc(in.toDF("src", "dst", "seq", "del")), "update")
+    } { r =>
+      val fin = lastUpdate(r.table, "n_ops", "src", "dst")
         .as[(Long, Long, Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq)
         .toDF("src", "dst", "alive", "n_ops")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1148,9 +1126,8 @@ object StreamingOps {
     * [[replayHyperballRounds]]' per-batch-overwrite discipline applied
     * to a catalog table). Serving unions the side table through
     * [[graft.functions.PQ.load]]; [[graft.functions.PQ.delete]]
-    * compacts it back into the bucketed base. The collect/addData feed
-    * is the harness, not the operator (the encode projection and the
-    * idempotent append are the things under test).
+    * compacts it back into the bucketed base. The encode projection
+    * and the idempotent append are the things under test.
     */
   def replayPqIngest(newVecs: DataFrame, model: graft.functions.PQ.Model,
                      name: String, nBatches: Int = 3): Unit = {
@@ -1161,22 +1138,13 @@ object StreamingOps {
       .as[(Long, Seq[Double])].collect()
     rows.sortInPlaceBy(_._1)
     graft.functions.PQ.ensureIngestTable(spark, name)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val ckpt = replayCkpt("graft-replay-pqingest")
-    val q = graft.functions.PQ.index(
-        ms.toDF().toDF("vec_id", "embedding"), model)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        graft.functions.PQ.ingestBatch(df, name, batchId)
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-    } finally q.stop()
+    replay(spark, Some(8), rows, nBatches) { (_, in) =>
+      graft.functions.PQ.index(in.toDF("vec_id", "embedding"), model)
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          graft.functions.PQ.ingestBatch(df, name, batchId)
+        }
+    } { _ => () }
   }
 
   /** Streaming ingest into the PERSISTED IVF index —
@@ -1189,8 +1157,7 @@ object StreamingOps {
     * ([[graft.functions.IVF.ingestBatch]]) — exactly-once stored state
     * under foreachBatch's at-least-once delivery. Serving unions the
     * side table through [[graft.functions.IVF.load]];
-    * [[graft.functions.IVF.delete]] prunes it by batch. The
-    * collect/addData feed is the harness, not the operator.
+    * [[graft.functions.IVF.delete]] prunes it by batch.
     */
   def replayIvfIngest(newVecs: DataFrame, model: graft.functions.IVF.Model,
                       name: String, nBatches: Int = 3): Unit = {
@@ -1201,22 +1168,13 @@ object StreamingOps {
       .as[(Long, Seq[Double])].collect()
     rows.sortInPlaceBy(_._1)
     graft.functions.IVF.ensureIngestTable(spark, name)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val ckpt = replayCkpt("graft-replay-ivfingest")
-    val q = graft.functions.IVF.index(
-        ms.toDF().toDF("vec_id", "embedding"), model)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        graft.functions.IVF.ingestBatch(df, name, batchId)
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-    } finally q.stop()
+    replay(spark, Some(8), rows, nBatches) { (_, in) =>
+      graft.functions.IVF.index(in.toDF("vec_id", "embedding"), model)
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          graft.functions.IVF.ingestBatch(df, name, batchId)
+        }
+    } { _ => () }
   }
 
   /** Streaming ingest into the PERSISTED dedup index —
@@ -1232,9 +1190,8 @@ object StreamingOps {
     * Serving unions the side table through
     * [[graft.functions.DedupIndex.loadBuckets]];
     * [[graft.functions.DedupIndex.delete]] prunes it by batch. The
-    * collect/addData feed is the harness, not the operator (the
     * frozen-family encode and the idempotent append are the things
-    * under test).
+    * under test.
     */
   def replayDedupIngest(newDocs: DataFrame, name: String,
                         nBatches: Int = 3): Unit = {
@@ -1247,39 +1204,31 @@ object StreamingOps {
       .as[(Long, String)].collect()
     rows.sortInPlaceBy(_._1)
     graft.functions.DedupIndex.ensureIngestTable(spark, name)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val ckpt = replayCkpt("graft-replay-dedupingest")
-    val q = ms.toDF().toDF("doc_id", "text")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // the signature aggregation is a per-batch BATCH computation
-        // (foreachBatch hands us a plain DataFrame) — streaming-side
-        // state would be wrong here: a document's signature must come
-        // from its own shingles only, exactly as the bulk build's
-        graft.functions.DedupIndex.ingestBatch(
-          graft.functions.DedupIndex.encode(df, n, bands, rowsPerBand),
-          name, batchId)
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-    } finally q.stop()
+    replay(spark, Some(8), rows, nBatches) { (_, in) =>
+      in.toDF("doc_id", "text")
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          // the signature aggregation is a per-batch BATCH computation
+          // (foreachBatch hands us a plain DataFrame) — streaming-side
+          // state would be wrong here: a document's signature must come
+          // from its own shingles only, exactly as the bulk build's
+          graft.functions.DedupIndex.ingestBatch(
+            graft.functions.DedupIndex.encode(df, n, bands, rowsPerBand),
+            name, batchId)
+        }
+    } { _ => () }
   }
 
   /** Streaming ingest into the persisted perceptual-hash image index
     * — [[replayDedupIngest]]'s exactly-once loop for the multimodal
-    * family: new image ids stream through in `nBatches` triggers; each
-    * trigger DECODES AND HASHES only its own batch's images through
-    * the index's persisted chunking (the payload bytes are touched
-    * exactly once, per-partition, never shuffled) and lands the chunk
-    * rows in its own `ingest_batch` partition via dynamic partition
-    * overwrite — a replayed trigger rewrites its own partition with
-    * identical rows, so the stored state is bit-identical however many
-    * times a trigger fires.
+    * family: new image ids stream through; each trigger DECODES AND
+    * HASHES only its own batch's images through the index's persisted
+    * chunking (the payload bytes are touched exactly once,
+    * per-partition, never shuffled) and lands the chunk rows in its own
+    * `ingest_batch` partition via dynamic partition overwrite — a
+    * replayed trigger rewrites its own partition with identical rows,
+    * so the stored state is bit-identical however many times a trigger
+    * fires.
     */
   def replayPhashIngest(newDocs: DataFrame, name: String,
                         nBatches: Int = 3): Unit = {
@@ -1289,28 +1238,20 @@ object StreamingOps {
     val ids = newDocs.select(col("doc_id").cast("long")).as[Long].collect()
     scala.util.Sorting.quickSort(ids)
     graft.functions.PhashIndex.ensureIngestTable(spark, name)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-    val ckpt = replayCkpt("graft-replay-phashingest")
-    val q = ms.toDF().toDF("doc_id")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // hashing is a per-batch BATCH computation over the batch's
-        // own images only — exactly the bulk build's pipeline
-        graft.functions.PhashIndex.ingestBatch(
-          graft.functions.PhashIndex.encode(
-            graft.operators.Multimodal.perceptualHashes(
-              graft.operators.Multimodal.syntheticImages(df).toDF()),
-            maxHamming),
-          name, batchId)
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (ids.length + nBatches - 1) / nBatches)
-      ids.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-    } finally q.stop()
+    replay(spark, Some(8), ids, nBatches) { (_, in) =>
+      in.toDF("doc_id")
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          // hashing is a per-batch BATCH computation over the batch's
+          // own images only — exactly the bulk build's pipeline
+          graft.functions.PhashIndex.ingestBatch(
+            graft.functions.PhashIndex.encode(
+              graft.operators.Multimodal.perceptualHashes(
+                graft.operators.Multimodal.syntheticImages(df).toDF()),
+              maxHamming),
+            name, batchId)
+        }
+    } { _ => () }
   }
 
   /** Streaming HLL++ distinct-count parity — the sketch-as-streaming-
@@ -1340,30 +1281,15 @@ object StreamingOps {
         coalesce(col("text"), lit("")))
       .as[(Long, String, String)].collect()
     rows.sortInPlaceBy(_._1)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
-    val name = "graft_replay_hll_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-hll")
-    val agg = ms.toDF().toDF("doc_id", "lang", "text")
-      .select(col("lang"), explode(split(col("text"), " ")).as("token"))
-      .where(col("token") =!= "")
-      .groupBy("lang")
-      .agg(approx_count_distinct(col("token"), rsd).as("n_approx"),
-        count(lit(1)).as("n_tok"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      // last update per lang = the row with the maximal running token
-      // count (strictly increasing per touched lang)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang").orderBy(col("n_tok").desc)
-      val fin = stream.table(name)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      r.memory(in.toDF("doc_id", "lang", "text")
+        .select(col("lang"), explode(split(col("text"), " ")).as("token"))
+        .where(col("token") =!= "")
+        .groupBy("lang")
+        .agg(approx_count_distinct(col("token"), rsd).as("n_approx"),
+          count(lit(1)).as("n_tok")), "update")
+    } { r =>
+      val fin = lastUpdate(r.table, "n_tok", "lang")
         .select(col("lang"), col("n_approx"))
         .as[(String, Long)].collect()
       val streamed = spark.createDataset(fin.toIndexedSeq)
@@ -1372,9 +1298,6 @@ object StreamingOps {
         .join(streamed, Seq("lang"))
         .select(col("lang"), col("n_exact"), col("within_tol"),
           (col("n_approx_stream") === col("n_approx_batch")).as("stream_eq_batch"))
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1400,31 +1323,18 @@ object StreamingOps {
     val rows = docs.select(col("doc_id").cast("long"), coalesce(col("text"), lit("")))
       .as[(Long, String)].collect()
     rows.sortInPlaceBy(_._1)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val name = "graft_replay_cms_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-cms")
-    val agg = ms.toDF().toDF("doc_id", "text")
-      .select(explode(split(col("text"), " ")).as("token"))
-      .where(col("token") =!= "")
-      .agg(expr(cmsAgg).as("sketch"), count(lit(1)).as("n_tok"))
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      r.memory(in.toDF("doc_id", "text")
+        .select(explode(split(col("text"), " ")).as("token"))
+        .where(col("token") =!= "")
+        .agg(expr(cmsAgg).as("sketch"), count(lit(1)).as("n_tok")), "update")
+    } { r =>
       // a token-less corpus produces no sink rows: the parity claim is
       // vacuously true (and the gate side is empty anyway)
-      val sinkRows = stream.table(name)
-        .orderBy(col("n_tok").desc).limit(1).collect()
+      val sinkRows = r.table.orderBy(col("n_tok").desc).limit(1).collect()
       val eq = sinkRows.isEmpty ||
         java.util.Arrays.equals(batchBytes, sinkRows(0).getAs[Array[Byte]](0))
       gate.withColumn("stream_eq_batch", lit(eq))
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1447,32 +1357,20 @@ object StreamingOps {
       .select(col("user_id").cast("long"), col("event_id").cast("long"))
       .as[(Long, Long)].collect()
     rows.sortInPlaceBy(_._2)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val name = "graft_replay_topk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-topk")
-    val ranked = ms.toDF().toDF("user_id", "event_id")
-      .groupBy("user_id").agg(count(lit(1)).as("n_events"))
-      .orderBy(col("n_events").desc, col("user_id").asc)
-      .limit(k)
-    val q = ranked.writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      r.memory(in.toDF("user_id", "event_id")
+        .groupBy("user_id").agg(count(lit(1)).as("n_events"))
+        .orderBy(col("n_events").desc, col("user_id").asc)
+        .limit(k), "complete")
+    } { r =>
       // complete mode REPLACES the sink table each trigger — it already
       // holds exactly the final ranking; stamp ranks on the k rows
-      val fin = stream.table(name)
+      val fin = r.table
         .orderBy(col("n_events").desc, col("user_id").asc)
         .as[(Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq.zipWithIndex
           .map { case ((u, n), i) => (u, (i + 1).toLong, n) })
         .toDF("user_id", "rnk", "n_events")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1551,10 +1449,10 @@ object StreamingOps {
   }
 
   /** Correctness-gate harness for streaming near-dup — the highest-value
-    * pipeline operator's streaming story: replay the documents in doc_id
-    * order across `nBatches` triggers of [[streamingMinhashCandidates]]
-    * (duplicate groups split across triggers exercise the cross-batch
-    * bucket state), then batch-verify the accumulated candidates with
+    * pipeline operator's streaming story: [[replay]] the documents in
+    * doc_id order through [[streamingMinhashCandidates]] (duplicate
+    * groups split across triggers exercise the cross-batch bucket
+    * state), then batch-verify the accumulated candidates with
     * exact Jaccard. The result must equal the one-shot batch
     * [[graft.functions.Dedup.minhashPairs]] answer — and therefore
     * hash-check against q30's exact-Jaccard DuckDB oracle. Only the
@@ -1570,41 +1468,23 @@ object StreamingOps {
     rows.sortInPlaceBy(_._1)
     // bucket-keyed state: a handful of state partitions keeps per-trigger
     // commit overhead proportional to real work at replay scale
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val ckpt = replayCkpt("graft-replay-minhash")
-    // q193's sink discipline: a pair colliding in several of the 8
-    // bands is emitted once PER BAND (state is (band, key)-keyed), so
-    // candidates sink executor-side to tmpfs parquet via the
-    // exactly-once per-batch writer instead of accumulating multiplied
-    // on the driver memory sink + collect; the caller session reads
-    // the PATH (no cross-session table, no collect)
-    val outDir = replayCkpt("graft-replay-minhash-out") + "/pairs"
-    val sink = graft.sources.Sources.idempotentBatchWriter(outDir)
-    val empty = stream.createDataFrame(
-      stream.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_a", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("doc_b", org.apache.spark.sql.types.LongType))))
-    sink(empty, -1L) // schema anchor in its own batch dir
-    val q = streamingMinhashCandidates(ms.toDF().toDF("doc_id", "text"), n)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(sink).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      val candsDF = spark.read.parquet(outDir)
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      // q193's sink discipline: a pair colliding in several of the 8
+      // bands is emitted once PER BAND (state is (band, key)-keyed), so
+      // candidates sink executor-side to tmpfs parquet instead of
+      // accumulating multiplied on the driver memory sink + collect; the
+      // caller session reads the PATH (no cross-session table, no collect)
+      streamingMinhashCandidates(in.toDF("doc_id", "text"), n)
+        .writeStream.outputMode("append")
+        .foreachBatch(pairSink(r, "doc_a", "doc_b"))
+    } { r =>
+      // checkpointed off the files, which the driver deletes on return
+      val candsDF = spark.read.parquet(r.scratch)
         .select(col("doc_a"), col("doc_b")).distinct()
         .localCheckpoint(true)
       val sh = graft.functions.Dedup.shingles(docs, n).localCheckpoint(true)
       val counts = sh.groupBy(col("doc_id")).agg(count("*").as("n_sh"))
       graft.functions.Dedup.jaccardOfPairs(candsDF, sh, counts, threshold)
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(outDir).getParentFile)
     }
   }
 
@@ -1656,9 +1536,9 @@ object StreamingOps {
       }.toDF("vec_a", "vec_b")
   }
 
-  /** Correctness-gate harness for streaming ANN maintenance: replay the
-    * embeddings in vec_id order across `nBatches` triggers of
-    * [[streamingLshCandidates]] (near-dup pairs split across triggers
+  /** Correctness-gate harness for streaming ANN maintenance: [[replay]]
+    * the embeddings in vec_id order through [[streamingLshCandidates]]
+    * (near-dup pairs split across triggers
     * exercise the cross-batch bucket state), sized exactly as the batch
     * operator sizes itself ([[graft.functions.Similarity.lshSizing]] at
     * the same row count and threshold), then batch-verify the
@@ -1680,40 +1560,25 @@ object StreamingOps {
     rows.sortInPlaceBy(_._1)
     val dim = rows.collectFirst { case (_, e) if e != null => e.length }.getOrElse(1)
     val (nPlanes, nTables) = Similarity.lshSizing(rows.length.toLong, threshold)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val ckpt = replayCkpt("graft-replay-lsh")
-    // candidates sink to tmpfs parquet via foreachBatch, NOT the driver
-    // memory sink: a pair colliding in several of the ~dozens of tables
-    // is emitted once PER TABLE (state is keyed (tbl, sig) — cross-table
-    // dedup can't happen in state), so the memory sink used to
-    // accumulate the multiplied stream on the driver and the final
-    // distinct().collect() hauled it all back again — measured as
-    // nearly all of q193's wall. Executor-side per-batch OVERWRITE
-    // directories (Sources.idempotentBatchWriter — exactly-once under
-    // retry) + a path-based re-read keep every pair off the driver;
-    // the caller session reads the path directly (no cross-session
-    // table, no collect)
-    val outDir = replayCkpt("graft-replay-lsh-out") + "/pairs"
-    val sink = graft.sources.Sources.idempotentBatchWriter(outDir)
-    val empty = stream.createDataFrame(
-      stream.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_a", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("vec_b", org.apache.spark.sql.types.LongType))))
-    sink(empty, -1L) // schema anchor in its own batch dir: zero candidates still read
-    val q = streamingLshCandidates(ms.toDF().toDF("vec_id", "embedding"),
-        nTables, nPlanes, dim)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(sink).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      // candidates sink to tmpfs parquet via foreachBatch, NOT the driver
+      // memory sink: a pair colliding in several of the ~dozens of tables
+      // is emitted once PER TABLE (state is keyed (tbl, sig) — cross-table
+      // dedup can't happen in state), so the memory sink used to
+      // accumulate the multiplied stream on the driver and the final
+      // distinct().collect() hauled it all back again — measured as
+      // nearly all of q193's wall. Executor-side per-batch OVERWRITE
+      // directories (exactly-once under retry) + a path-based re-read
+      // keep every pair off the driver; the caller session reads the
+      // path directly (no cross-session table, no collect)
+      streamingLshCandidates(in.toDF("vec_id", "embedding"), nTables, nPlanes, dim)
+        .writeStream.outputMode("append")
+        .foreachBatch(pairSink(r, "vec_a", "vec_b"))
+    } { r =>
       // verify on the CALLER's session with the exact formula —
-      // candidates ∝ true near-dups, tiny by design
-      val candsDF = spark.read.parquet(outDir)
+      // candidates ∝ true near-dups, tiny by design; checkpointed off
+      // the files, which the driver deletes on return
+      val candsDF = spark.read.parquet(r.scratch)
         .select(col("vec_a"), col("vec_b")).distinct()
         .localCheckpoint(true)
       val vecs = corpus.select(col("vec_id"),
@@ -1726,11 +1591,6 @@ object StreamingOps {
         .select(col("vec_a"), col("vec_b"),
           round(Similarity.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("sim"))
         .where(col("sim") >= threshold)
-    } finally {
-      q.stop()
-      // the candidate set is checkpointed off the files — safe to clean
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(outDir).getParentFile)
     }
   }
 
@@ -1756,42 +1616,24 @@ object StreamingOps {
     val rows = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].collect()
     rows.sortInPlaceBy(identity)
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val name = "graft_replay_hb_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-hb")
-    val e = ms.toDF().toDF("src", "dst").where(col("src") =!= col("dst"))
-    val contrib = e.select(col("src").as("id"), col("dst").as("n"))
-      .unionByName(e.select(col("dst").as("id"), col("src").as("n")))
-      .unionByName(e.select(col("src").as("id"), col("src").as("n")))
-      .unionByName(e.select(col("dst").as("id"), col("dst").as("n")))
-    val withRegs = contrib.select(
-      col("id") +: graft.operators.HyperBall.regColsOf(col("n")): _*)
     val regNames = (0 until 16).map(j => s"r$j")
-    val agg = withRegs.groupBy("id")
-      .agg(max(col("r0")).as("r0"),
-        regNames.tail.map(c => max(col(c)).as(c)) :+ count(lit(1)).as("nc"): _*)
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      // last update per id = the row with the maximal running
-      // contribution count (strictly increasing per touched id)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id").orderBy(col("nc").desc)
-      val fin = stream.table(name)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      val e = in.toDF("src", "dst").where(col("src") =!= col("dst"))
+      val contrib = e.select(col("src").as("id"), col("dst").as("n"))
+        .unionByName(e.select(col("dst").as("id"), col("src").as("n")))
+        .unionByName(e.select(col("src").as("id"), col("src").as("n")))
+        .unionByName(e.select(col("dst").as("id"), col("dst").as("n")))
+      val withRegs = contrib.select(
+        col("id") +: graft.operators.HyperBall.regColsOf(col("n")): _*)
+      r.memory(withRegs.groupBy("id")
+        .agg(max(col("r0")).as("r0"),
+          regNames.tail.map(c => max(col(c)).as(c)) :+ count(lit(1)).as("nc"): _*), "update")
+    } { r =>
+      val fin = lastUpdate(r.table, "nc", "id")
         .select(col("id"),
           graft.operators.HyperBall.estimator.as("est"))
         .as[(Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq).toDF("id", "est")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 
@@ -1819,8 +1661,7 @@ object StreamingOps {
     * stays per-trigger cheap.
     *
     * Output: (id, t, est) for t = 1..k from the final persisted
-    * register tables. The collect/addData feed is the harness; the
-    * registers never touch the driver.
+    * register tables. The registers never touch the driver.
     */
   def replayHyperballRounds(edges: DataFrame, k: Int = 2,
                             nBatches: Int = 4): DataFrame = {
@@ -1835,115 +1676,93 @@ object StreamingOps {
     // (review finding r11)
     if (rows.isEmpty)
       return spark.emptyDataset[(Long, Long, Long)].toDF("id", "t", "est")
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val ckpt = replayCkpt("graft-replay-hbr")
-    val stateRoot = replayCkpt("graft-replay-hbr-state")
     val regNames = (0 until 16).map(j => s"r$j")
     // latest persisted register-table paths, advanced per trigger —
     // deployment state lives in a catalog; the paths are its harness twin
     @volatile var latest: Map[Int, String] = Map.empty
-    val q = ms.toDF().toDF("src", "dst")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val ss = df.sparkSession
-        val e = df.where(col("src") =!= col("dst"))
-          .select(col("src").as("u"), col("dst").as("v")).distinct()
-          .localCheckpoint(true)
-        // 1. exactly-once edge append: per-batch overwrite dir
-        e.write.mode("overwrite").parquet(s"$stateRoot/acc/batch=$batchId")
-        // 2. incremental R1 fold: new edges' contributions only
-        val contrib = e.select(col("u").as("id"), col("v").as("n"))
-          .unionByName(e.select(col("v").as("id"), col("u").as("n")))
-          .unionByName(e.select(col("u").as("id"), col("u").as("n")))
-          .unionByName(e.select(col("v").as("id"), col("v").as("n")))
-          .select(col("id") +:
-            graft.operators.HyperBall.regColsOf(col("n")): _*)
-        val r1 = latest.get(1)
-          .map(p => ss.read.parquet(p).unionByName(contrib))
-          .getOrElse(contrib)
-          .groupBy("id")
-          .agg(max(col("r0")).as("r0"),
-            regNames.tail.map(c => max(col(c)).as(c)): _*)
-          .localCheckpoint(true)
-        r1.write.mode("overwrite").parquet(s"$stateRoot/regs1/batch=$batchId")
-        latest += 1 -> s"$stateRoot/regs1/batch=$batchId"
-        // 3. periodic batch rounds 2..k from the maintained R1 over the
-        // accumulated edge set
-        val acc = ss.read.parquet(s"$stateRoot/acc")
-          .select(col("u"), col("v"))
-        val accSym = acc.unionByName(acc.select(col("v").as("u"), col("u").as("v")))
-          .distinct().localCheckpoint(true)
-        var state = r1
-        (2 to k).foreach { t =>
-          val pulled = accSym.join(state, accSym("v") === state("id"))
-            .select(col("u").as("id") +: regNames.map(col): _*)
-          state = state.unionByName(pulled)
+    replay(spark, Some(8), rows, nBatches) { (r, in) =>
+      val stateRoot = r.scratch
+      in.toDF("src", "dst")
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          val ss = df.sparkSession
+          val e = df.where(col("src") =!= col("dst"))
+            .select(col("src").as("u"), col("dst").as("v")).distinct()
+            .localCheckpoint(true)
+          // 1. exactly-once edge append: per-batch overwrite dir
+          e.write.mode("overwrite").parquet(s"$stateRoot/acc/batch=$batchId")
+          // 2. incremental R1 fold: new edges' contributions only
+          val contrib = e.select(col("u").as("id"), col("v").as("n"))
+            .unionByName(e.select(col("v").as("id"), col("u").as("n")))
+            .unionByName(e.select(col("u").as("id"), col("u").as("n")))
+            .unionByName(e.select(col("v").as("id"), col("v").as("n")))
+            .select(col("id") +:
+              graft.operators.HyperBall.regColsOf(col("n")): _*)
+          val r1 = latest.get(1)
+            .map(p => ss.read.parquet(p).unionByName(contrib))
+            .getOrElse(contrib)
             .groupBy("id")
             .agg(max(col("r0")).as("r0"),
               regNames.tail.map(c => max(col(c)).as(c)): _*)
             .localCheckpoint(true)
-          state.write.mode("overwrite")
-            .parquet(s"$stateRoot/regs$t/batch=$batchId")
-          latest += t -> s"$stateRoot/regs$t/batch=$batchId"
+          r1.write.mode("overwrite").parquet(s"$stateRoot/regs1/batch=$batchId")
+          latest += 1 -> s"$stateRoot/regs1/batch=$batchId"
+          // 3. periodic batch rounds 2..k from the maintained R1 over the
+          // accumulated edge set
+          val acc = ss.read.parquet(s"$stateRoot/acc")
+            .select(col("u"), col("v"))
+          val accSym = acc.unionByName(acc.select(col("v").as("u"), col("u").as("v")))
+            .distinct().localCheckpoint(true)
+          var state = r1
+          (2 to k).foreach { t =>
+            val pulled = accSym.join(state, accSym("v") === state("id"))
+              .select(col("u").as("id") +: regNames.map(col): _*)
+            state = state.unionByName(pulled)
+              .groupBy("id")
+              .agg(max(col("r0")).as("r0"),
+                regNames.tail.map(c => max(col(c)).as(c)): _*)
+              .localCheckpoint(true)
+            state.write.mode("overwrite")
+              .parquet(s"$stateRoot/regs$t/batch=$batchId")
+            latest += t -> s"$stateRoot/regs$t/batch=$batchId"
+          }
+          ()
         }
-        ()
-      }
-      .start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
+    } { r =>
       val fin = (1 to k).map { t =>
-        stream.read.parquet(latest(t))
+        r.session.read.parquet(latest(t))
           .select(col("id"), lit(t.toLong).as("t"),
             graft.operators.HyperBall.estimator.as("est"))
       }.reduce(_ unionByName _)
         .as[(Long, Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq).toDF("id", "t", "est")
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateRoot))
     }
   }
 
   /** Correctness-gate harness for the continuous globalAggregate (O15):
-    * replay the edge VALUES through a MemoryStream across `nBatches`
-    * complete-mode triggers of the running histogram; the final table
-    * must equal the one-shot batch answer (q18's oracle). Only the
-    * (value) doubles cross the driver — the replay feed, not the
-    * operator.
+    * [[replay]] the ascending edge VALUES, on the caller's session,
+    * through the complete-mode running histogram; the final table must
+    * equal the one-shot batch answer (q18's oracle).
     */
   def replayHistogram(edges: DataFrame, nBatches: Int = 4): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = edges.select(col("value").cast("double")).as[Double].collect()
     java.util.Arrays.sort(rows)
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Double]
-    val name = "graft_replay_hist_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-hist")
-    val q = ms.toDF().toDF("value")
-      .groupBy((floor(col("value") / 5) * 5).cast("long").as("bin"))
-      .agg(count("*").as("cnt"))
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val chunk = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(chunk).foreach { g => ms.addData(g.toSeq); q.processAllAvailable() }
-      val fin = spark.table(name).as[(Long, Long)].collect()
+    replay(spark, None, rows, nBatches) { (r, in) =>
+      r.memory(in.toDF("value")
+        .groupBy((floor(col("value") / 5) * 5).cast("long").as("bin"))
+        .agg(count("*").as("cnt")), "complete")
+    } { r =>
+      val fin = r.table.as[(Long, Long)].collect()
       spark.createDataset(fin.toIndexedSeq).toDF("bin", "cnt")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
     }
   }
 
   /** Correctness-gate harness for stream-stream interval joins: replay
     * clicks and purchases (from the events table, µs timestamps) through
-    * TWO MemoryStreams in time-aligned chunks, join them on user within
+    * TWO MemoryStreams in time-aligned chunks (its own feed to
+    * [[runReplay]], not [[replay]]'s row chunks), join them on user within
     * a [-10 min, 0] event-time interval under watermark 0, and return
     * per-click purchase counts and cent-exact sums — which must equal
     * the one-shot batch join. Chunks share global time boundaries so
@@ -1973,47 +1792,37 @@ object StreamingOps {
     // a trigger commits every state-store partition of every stateful
     // operator (two watermarks + both join sides): 32 shuffle partitions
     // × 3 triggers is pure commit overhead at replay scale — pin to 8
-    // (production raises it with the data) on a cloned session, leaving
-    // the caller's conf untouched
-    val stream = pinnedShuffleSession(spark, 8)
-    implicit val ctx: org.apache.spark.sql.SQLContext = stream.sqlContext
-    val msC = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msP = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val cDf = msC.toDF().toDF("event_id", "c_user", "c_tu")
-      .withColumn("c_ts", timestamp_micros(col("c_tu")))
-      .withWatermark("c_ts", "0 seconds")
-    val pDf = msP.toDF().toDF("p_user", "p_tu", "cents")
-      .withColumn("p_ts", timestamp_micros(col("p_tu")))
-      .withWatermark("p_ts", "0 seconds")
-    val joined = cDf.join(pDf,
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") - expr("interval 10 minutes") &&
-        col("p_ts") <= col("c_ts"))
-    val name = "graft_replay_ij_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = replayCkpt("graft-replay-ij")
-    val q = joined.select(col("event_id"), col("cents"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(name).start()
-    try {
-      val bounds = cuts :+ Long.MaxValue
+    // (production raises it with the data)
+    runReplay(spark, Some(8)) { r =>
+      val msC = r.stream[(Long, Long, Long)]
+      val msP = r.stream[(Long, Long, Long)]
+      val cDf = msC.toDF().toDF("event_id", "c_user", "c_tu")
+        .withColumn("c_ts", timestamp_micros(col("c_tu")))
+        .withWatermark("c_ts", "0 seconds")
+      val pDf = msP.toDF().toDF("p_user", "p_tu", "cents")
+        .withColumn("p_ts", timestamp_micros(col("p_tu")))
+        .withWatermark("p_ts", "0 seconds")
+      val joined = cDf.join(pDf,
+        col("c_user") === col("p_user") &&
+          col("p_ts") >= col("c_ts") - expr("interval 10 minutes") &&
+          col("p_ts") <= col("c_ts"))
+      // one trigger per cut: both sides' rows up to the cut
       var (loC, loP) = (0, 0)
-      bounds.foreach { hi =>
+      def feedBelow(hi: Long): Unit = {
         val hiC = clicks.indexWhere(_._3 >= hi, loC) match { case -1 => clicks.length; case i => i }
         val hiP = purchases.indexWhere(_._2 >= hi, loP) match { case -1 => purchases.length; case i => i }
         msC.addData(clicks.slice(loC, hiC).toSeq)
         msP.addData(purchases.slice(loP, hiP).toSeq)
         loC = hiC; loP = hiP
-        q.processAllAvailable()
       }
-      val out = stream.table(name)
+      (r.memory(joined.select(col("event_id"), col("cents")), "append"),
+        (cuts :+ Long.MaxValue).iterator.map(hi => () => feedBelow(hi)))
+    } { r =>
+      val out = r.table
         .groupBy("event_id")
         .agg(count("*").as("n_purchases"), sum("cents").as("sum_cents"))
         .as[(Long, Long, Long)].collect()
       spark.createDataset(out.toIndexedSeq).toDF("event_id", "n_purchases", "sum_cents")
-    } finally {
-      q.stop()
-      stream.catalog.dropTempView(name)
     }
   }
 

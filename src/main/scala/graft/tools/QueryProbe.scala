@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dev-only per-query profiler (optimization guide §1: measure first).
   * For each named query: dumps `.explain("formatted")` to
@@ -22,14 +21,7 @@ object QueryProbe {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = args.lift(3).map(_.toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val b = GraftSession.localBuilder(cpus.toInt)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";;").foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.nonEmpty => b.config(k, v)

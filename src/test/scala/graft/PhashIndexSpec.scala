@@ -101,6 +101,21 @@ class PhashIndexSpec extends SparkTestBase {
     assert(pairSet(PhashIndex.probe(spark, "graft_pidx_ing", queries)) == lsm)
   }
 
+  test("replayed ingest stores exactly the bulk encoding of the streamed ids") {
+    PhashIndex.save(hashesOf(col("doc_id") % 10 =!= 5), "graft_pidx_replay")
+    graft.streaming.StreamingOps.replayPhashIngest(
+      docs.where(col("doc_id") % 10 === 5), "graft_pidx_replay")
+    val bulk = PhashIndex.encode(hashesOf(col("doc_id") % 10 === 5), 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(bulk.columns.toSeq.map(col): _*).collect()
+        .map(_.toSeq).sortBy(_.mkString(","))
+    val stored = spark.table("graft_pidx_replay_chunks_ingest")
+    assert(rows(stored).toSeq == rows(bulk).toSeq)
+    assert(rows(bulk).nonEmpty)
+    // default nBatches = 3: one ingest partition per trigger
+    assert(stored.select("ingest_batch").distinct().count() == 3)
+  }
+
   test("delete: pruned rewrite, untouched partitions keep their files, idempotent") {
     PhashIndex.save(hashesOf(col("doc_id") % 10 =!= 7), "graft_pidx_del")
     val tomb = hashesOf(col("doc_id") % 10 === 3)

@@ -250,6 +250,56 @@ class StreamingSpec extends SparkTestBase {
     assert(got == batch)
   }
 
+  test("replay harnesses leave no checkpoint directory behind") {
+    def replayDirs(): Set[java.io.File] =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+        .flatMap(d => Option(new java.io.File(d).listFiles()).toSeq.flatten)
+        .filter(f => f.isDirectory && f.getName.startsWith("graft-replay-")).toSet
+    val before = replayDirs()
+    StreamingOps.replayConnectedComponents(
+      edgeDf(Seq((1L, 2L), (2L, 3L), (7L, 8L))), nBatches = 3).collect()
+    val docs = graft.model.Tables.documents(spark, sf)
+    graft.functions.DedupIndex.save(docs.where(col("doc_id") % 10 =!= 5),
+      "graft_dedup_leak_spec")
+    StreamingOps.replayDedupIngest(docs.where(col("doc_id") % 10 === 5),
+      "graft_dedup_leak_spec")
+    val leaked = replayDirs() -- before
+    assert(leaked.isEmpty, s"left behind: ${leaked.mkString(", ")}")
+  }
+
+  test("replayed exact dedup equals per-language counts of the batch survivors") {
+    import spark.implicits._
+    // copies of one text land in different triggers at every split
+    val synthetic = Seq((1L, "en", "alpha beta"), (2L, "en", "gamma"),
+      (3L, "de", "alpha beta"), (4L, "en", "Alpha  Beta"), (5L, "de", "delta"),
+      (6L, "en", "gamma"), (7L, "de", "alpha beta")).toDF("doc_id", "lang", "text")
+    for (docs <- Seq(synthetic, graft.model.Tables.documents(spark, sf))) {
+      // the streaming key is (lang, text): survivors are per language
+      val batch = docs.select("lang").distinct().as[String].collect().map { l =>
+        l -> graft.functions.Dedup.exactSurvivors(docs.where(col("lang") <=> l)).count()
+      }.toMap
+      for (nb <- Seq(1, 3, 4)) {
+        val got = StreamingOps.replayExactDedup(docs, nb)
+          .as[(String, Long)].collect().toMap
+        assert(got == batch, s"nBatches=$nb")
+      }
+    }
+  }
+
+  test("replayed value histogram equals the batch floor(value/5)*5 count") {
+    import spark.implicits._
+    val synthetic = Seq(12.0, -5.0, 4.999, -0.1, 5.0, 0.0, 10.5).toDF("value")
+    for (edges <- Seq(synthetic, graft.model.GraphFixtures.edgeStream(spark, sf))) {
+      val batch = edges.select(col("value").cast("double")).as[Double].collect()
+        .groupBy(v => (math.floor(v / 5) * 5).toLong).map { case (b, vs) => b -> vs.length.toLong }
+      for (nb <- Seq(1, 4)) {
+        val got = StreamingOps.replayHistogram(edges, nb)
+          .as[(Long, Long)].collect().toMap
+        assert(got == batch, s"nBatches=$nb")
+      }
+    }
+  }
+
   test("TTL'd running CC: bounded state evicts expired vertices, keeps merges for survivors") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -562,6 +612,30 @@ class StreamingSpec extends SparkTestBase {
       } yield (cid, ps)).toSet
       assert(streamed == expected && expected.nonEmpty)
     } finally q.stop()
+    // the replayIntervalJoin harness over the same sample (as events
+    // rows) and over the fixture events: per-click purchase count and
+    // cent sum equal the batch interval join
+    val sampleEvents = (clicks.map { case (u, cid, cs) => (cid, u, "click", cs, 0.0) } ++
+      purchases.zipWithIndex.map { case ((u, ps), i) =>
+        (900L + i, u, "purchase", ps, 1.25 * (i + 1)) })
+      .toDF("event_id", "user_id", "event_type", "secs", "value")
+      .withColumn("ts_ns", col("secs") * 1000000000L).drop("secs")
+    for (events <- Seq(sampleEvents, graft.model.Tables.events(spark, sf))) {
+      val ev = events.select(col("event_id").cast("long"), col("user_id").cast("long"),
+        col("event_type"), expr("ts_ns div 1000").as("tu"),
+        round(col("value") * 100).cast("long").as("cents"))
+      val c = ev.where(col("event_type") === "click")
+        .select(col("event_id"), col("user_id").as("cu"), col("tu").as("ctu"))
+      val p = ev.where(col("event_type") === "purchase")
+        .select(col("user_id").as("pu"), col("tu").as("ptu"), col("cents"))
+      val batch = c.join(p, col("cu") === col("pu") &&
+          col("ptu") >= col("ctu") - 600000000L && col("ptu") <= col("ctu"))
+        .groupBy("event_id").agg(count("*"), sum("cents"))
+        .as[(Long, Long, Long)].collect().toSet
+      val got = StreamingOps.replayIntervalJoin(events)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(got == batch && batch.nonEmpty, s"got ${got.take(5)} batch ${batch.take(5)}")
+    }
   }
 
   test("dropDuplicatesWithinWatermark dedups within the horizon and evicts state after it") {
