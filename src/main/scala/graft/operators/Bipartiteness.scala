@@ -92,11 +92,7 @@ object Bipartiteness {
       .distinct()
       .cutLineage()
 
-    // scale-adaptive: per-group replay of the same 2-hop rounds,
-    // conflict checks and convergence defaults in one task — bit-equal
-    // verdicts by construction (spec A/B at oneTaskBar = 0); the fused
-    // keyed rounds remain the over-bar path.
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("bipartiteByGroup", sym, oneTaskBar))
       return LocalCommunities.bipartiteByGroupLocal(sym, maxIter)
 
     var state = sym.select(col("g"), col("u").as("id")).distinct()
@@ -198,13 +194,8 @@ object Bipartiteness {
     val arcs = sym.count()
     if (arcs == 0)
       return Seq.empty[(Long, Long)].toDF("component", "is_bipartite")
-    // scale-adaptive (the LocalGraph twin discipline): the parity-pair
-    // fixpoint is replayed round for round in one task (same monotone
-    // labels, same convergence detection, same maxIter budget), so the
-    // per-component verdicts are bit-equal by construction — spec A/B
-    // at oneTaskBar = 0; the propagation rounds remain the over-bar
-    // 100 TB path. One count replaces the isEmpty probe.
-    if (arcs <= oneTaskBar)
+    // one count serves the empty check and the gate
+    if (LocalGraph.oneTask("bipartiteByComponent", arcs, oneTaskBar))
       return LocalCommunities.bipartiteByComponentLocal(sym, maxIter)
     var state = sym.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("e"), lit(null).cast("long").as("o"))

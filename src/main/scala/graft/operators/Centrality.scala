@@ -77,12 +77,8 @@ object Centrality {
                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     require(sources.nonEmpty, "stressCentrality: need at least one source")
     val sym = symmetrize(edges).cutLineage()
-    // scale-adaptive (the LocalGraph twin discipline): the forward σ
-    // layers and backward DAG path counts are exact integers from fixed
-    // sources, so the one-task replay is bit-equal by construction
-    // (spec A/B at oneTaskBar = 0); the layer rounds remain the
-    // over-bar 100 TB path. The maxDepth budget is mirrored exactly.
-    if (sym.count() <= oneTaskBar)
+    // the one-task leg mirrors the maxDepth budget exactly
+    if (LocalGraph.oneTask("stressCentrality", sym, oneTaskBar))
       return LocalCentrality.centralityLocal(sym, sources, maxDepth, 0L,
         LocalCentrality.Stress, "stressCentrality")
     val layers = forwardLayers(sym, sources, maxDepth, "stressCentrality")
@@ -135,7 +131,7 @@ object Centrality {
                         oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     require(sources.nonEmpty, "harmonicCloseness: need at least one source")
     val sym = symmetrize(edges).cutLineage()
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("harmonicCloseness", sym, oneTaskBar))
       return LocalCentrality.centralityLocal(sym, sources, maxDepth, scale,
         LocalCentrality.Harmonic, "harmonicCloseness")
     val layers = forwardLayers(sym, sources, maxDepth, "harmonicCloseness")
@@ -178,7 +174,7 @@ object Centrality {
                             oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     require(sources.nonEmpty, "betweennessCentrality: need at least one source")
     val sym = symmetrize(edges).cutLineage()
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("betweennessCentrality", sym, oneTaskBar))
       return LocalCentrality.centralityLocal(sym, sources, maxDepth, scale,
         LocalCentrality.Betweenness, "betweennessCentrality")
     val layers = forwardLayers(sym, sources, maxDepth, "betweennessCentrality")

@@ -34,12 +34,7 @@ object Communities {
       .where(col("u") =!= col("v"))
       .distinct()
       .cutLineage()
-    // scale-adaptive (the greedyColoring discipline): the synchronous
-    // rounds are a pure function of the symmetric pair list, so under
-    // the one-task bar a single-task replay is bit-equal by
-    // construction (spec A/B at oneTaskBar = 0); the per-round
-    // join+agg+window rounds remain the over-bar 100 TB path.
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("labelPropagation", sym, oneTaskBar))
       return LocalCommunities.lpaLocal(sym, rounds)
     var labels = sym.select(col("u").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -95,13 +90,10 @@ object Communities {
       .where(col("u") =!= col("v"))
       .distinct()
       .cutLineage()
-    // scale-adaptive: the parallel fixpoint EQUALS the sequential
-    // greedy in (prio31, id) order (the header's determinism contract),
-    // so under the one-task bar the sequential greedy computes the
-    // identical coloring in one job (spec-pinned A/B); the fused
-    // Jones–Plassmann rounds below remain the over-bar 100 TB path.
-    // `trace` callers (round-shape probes) always take the round path.
-    if (trace.isEmpty && sym.count() <= oneTaskBar)
+    // the parallel fixpoint EQUALS the sequential greedy in (prio31, id)
+    // order, which the one-task leg computes directly; `trace` callers
+    // (round-shape probes) take the rounds
+    if (LocalGraph.oneTask("greedyColoring", sym, if (trace.isEmpty) oneTaskBar else 0L))
       return LocalGraph.coloringLocal(sym).select(col("id"), col("color"))
     def pr(c: org.apache.spark.sql.Column) =
       struct(graft.Portable.prio31(c).as("p"), c.as("i"))
@@ -189,10 +181,8 @@ object Communities {
     val c = edges.select(col("src").cast("long").as("x"), col("dst").cast("long").as("y"))
       .cutLineage()
     val m = c.count()
-    // one synchronous pass + gate = a pure function of (edge rows,
-    // labels); under the bar (sym rows ≤ 2m) the one-task replay is
-    // bit-equal by construction — spec A/B at oneTaskBar = 0
-    if (2 * m <= oneTaskBar)
+    // sym rows ≤ 2m
+    if (LocalGraph.oneTask("modularityRefine", 2 * m, oneTaskBar))
       return LocalCommunities.refineLocal(c,
         labels.select(col("id"), col("label")))
     val sym = c.select(col("x").as("u"), col("y").as("v"))
@@ -323,14 +313,10 @@ object Communities {
     */
   private def louvainCore(g0: DataFrame, levels: Int, movesPerLevel: Int,
                           leiden: Boolean,
-                          oneTaskBar: Long = LocalGraph.SymRowBar / 2): (DataFrame, Seq[Long]) = {
-    // scale-adaptive: the fixed unroll (gated synchronous passes,
-    // optional Leiden refinement, coarsening) is a pure function of the
-    // canonical weighted graph, so under the bar (canonical rows ≈ half
-    // the symmetric-row bar) the one-task replay is bit-equal by
-    // construction (spec A/B at oneTaskBar = 0). The per-pass history
-    // is only produced by the round path (the Detail spec probes).
-    if (oneTaskBar > 0 && g0.count() <= oneTaskBar)
+                          oneTaskBar: Long): (DataFrame, Seq[Long]) = {
+    // the per-pass history is only produced by the round path (the
+    // Detail spec probes)
+    if (LocalGraph.oneTask("louvain", g0, oneTaskBar))
       return (LocalCommunities.louvainLocal(g0, levels, movesPerLevel,
         leiden, compLocal = false), Nil)
     var g = g0
@@ -541,15 +527,9 @@ object Communities {
     */
   private def louvainCompCore(g0: DataFrame, levels: Int,
                               movesPerLevel: Int,
-                              oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame = {
-    // scale-adaptive: identical discipline to [[louvainCore]]'s gate —
-    // the component-local unroll is a pure function of the canonical
-    // weighted graph (components, per-component masses and gates are
-    // derived inside), so the one-task replay is bit-equal by
-    // construction; spec A/B at oneTaskBar = 0. The maintenance path's
-    // affected subgraphs stay under the bar and take the cheap leg,
-    // exactly as its carve-out scaladoc intends.
-    if (oneTaskBar > 0 && g0.count() <= oneTaskBar)
+                              oneTaskBar: Long): DataFrame = {
+    // the maintenance path's affected subgraphs stay under the bar
+    if (LocalGraph.oneTask("louvainByComponent", g0, oneTaskBar))
       return LocalCommunities.louvainLocal(g0, levels, movesPerLevel,
         leiden = false, compLocal = true)
     var g = g0.cutLineage()

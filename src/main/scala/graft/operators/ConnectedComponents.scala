@@ -31,9 +31,9 @@ object ConnectedComponents {
   def singlePass(edges: DataFrame): DataFrame =
     SummaryAggregations.connectedComponents(edges)
 
-  /** Scale-adaptive CC — the subroutine entry point: one count job
-    * decides between [[singlePass]] (per-task union-find buffer ∝
-    * vertices — the cheap path while the vertex set fits task memory;
+  /** Scale-adaptive CC — the subroutine entry point: the
+    * [[LocalGraph.oneTask]] gate decides between [[singlePass]]
+    * (per-task union-find buffer ∝ vertices — the cheap path while the vertex set fits task memory;
     * ≤ 2·edgeBar vertices by construction) and [[iterative]] (the
     * shuffle-bound 100 TB path). Both paths share the exact (id,
     * component = min member id) output contract (spec-pinned equal),
@@ -47,12 +47,10 @@ object ConnectedComponents {
            edgeBar: Long = 1000000L): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    // count the projection directly — no localCheckpoint copy of the
-    // full edge set just to decide the path (r12 advice: the over-bar
-    // leg paid an extra full materialization per call; [[iterative]]
-    // checkpoints its own symmetrized frame anyway, and the count's
-    // column pruning makes the probe a metadata-cheap scan)
-    if (e.count() <= edgeBar) singlePass(e) else iterative(e, maxIter)
+    // probe the projection directly — [[iterative]] checkpoints its own
+    // symmetrized frame, so no copy of the full edge set just to decide
+    if (LocalGraph.oneTask("connectedComponents", e, edgeBar)) singlePass(e)
+    else iterative(e, maxIter)
   }
 
   /** Scalable iterative CC. `edges`: (src, dst, …).

@@ -56,13 +56,7 @@ object Hits {
                  oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-    // scale-adaptive (the LocalGraph twin discipline): the integer
-    // round map is a pure function of the arc multiset — under the
-    // one-task bar a single-task replay of the same rounds (same sparse
-    // row semantics, same truncating division) is bit-equal by
-    // construction (spec A/B at oneTaskBar = 0); the double-partitioned
-    // distributed rounds remain the over-bar 100 TB path.
-    if (e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("hits", e, oneTaskBar))
       return LocalRank.hitsLocal(e, iters, None)
     // Static per-round join inputs, partitioned once per join key.
     // MEMORY BILL: the edge list is checkpointed TWICE (u-keyed and
@@ -144,7 +138,7 @@ object Hits {
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
     // `trace` callers (per-round Δ-sentinel probes) always take the
     // round path — the twin has no per-round driver channel
-    if (trace.isEmpty && e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("hitsFrom", e, if (trace.isEmpty) oneTaskBar else 0L))
       return LocalRank.hitsLocal(e, iters, Some(prev))
     val eByU = e.repartition(col("u")).cutLineage()
     val eByV = e.repartition(col("v")).cutLineage()

@@ -92,15 +92,9 @@ object HyperBall {
                 oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     require(k >= 1 && k <= 16, s"hyperball k=$k out of the sane 1..16 range")
     val sym = symmetrize(edges)
-    // scale-adaptive (the LocalGraph twin discipline): the register
-    // rounds are pure integer state (hash → bucket/rank → element-wise
-    // max) and the estimator is a floor division of exact integers, so
-    // the one-task replay is bit-equal by construction (spec A/B at
-    // oneTaskBar = 0); the per-round join+max rounds remain the
-    // over-bar 100 TB path. This also puts the maintenance carve-outs'
-    // affected-slice recomputes ([[ballSizesMaintain]]) on the cheap
-    // leg.
-    if (sym.count() <= oneTaskBar)
+    // also puts [[ballSizesMaintain]]'s affected-slice recomputes on
+    // the one-task leg
+    if (LocalGraph.oneTask("ballSizes", sym, oneTaskBar))
       return ballSizesLocal(sym, k, includeZero)
     // ONE definition of the rounds ([[registerRounds]] — the shared
     // register contract with the q227 streaming parity, the q228
@@ -209,12 +203,9 @@ object HyperBall {
                      oneTaskBar: Long = LocalGraph.SymRowBar): Seq[DataFrame] = {
     require(k >= 1 && k <= 16, s"hyperball k=$k out of the sane 1..16 range")
     val sym = symmetrize(edges)
-    // scale-adaptive: all k+1 round tables from ONE task + ONE
-    // checkpoint (each returned table is a filter on the round column)
-    // — register values bit-equal to the per-round join+max tables by
-    // the same replay argument as [[ballSizesLocal]]; spec A/B at
-    // oneTaskBar = 0
-    if (sym.count() <= oneTaskBar) return registerRoundsLocal(sym, k)
+    // one-task leg: all k+1 round tables from ONE task + ONE checkpoint
+    // (each returned table is a filter on the round column)
+    if (LocalGraph.oneTask("registerRounds", sym, oneTaskBar)) return registerRoundsLocal(sym, k)
     registerRoundsFromSym(sym, k)
   }
 
@@ -343,14 +334,10 @@ object HyperBall {
     val symIns = symmetrize(inserts)
       .join(symOld, Seq("u", "v"), "left_anti").cutLineage()
     val symNet = symOld.unionByName(symIns)
-    // scale-adaptive: the growth recursion's OWN contract (scaladoc
-    // above, spec-pinned) is bit-equality to the cold rounds over the
-    // grown graph — the r12 landmark discipline (maintained ≡ fresh):
-    // under the bar the cold one-task replay computes the identical
-    // rows in one job; the systolic wavefront propagation remains the
-    // over-bar path (and the tier2hbgrow probe its scale evidence).
-    // `trace` callers (wavefront probes) always take the round path.
-    if (trace.isEmpty && symNet.count() <= oneTaskBar)
+    // the growth recursion is bit-equal to the cold rounds over the
+    // grown graph (maintained ≡ fresh), so the one-task leg replays the
+    // cold rounds; `trace` callers (wavefront probes) take the rounds
+    if (LocalGraph.oneTask("ballSizesGrowFrom", symNet, if (trace.isEmpty) oneTaskBar else 0L))
       return ballSizesLocal(symNet, k, includeZero)
     val estCol: Column = estimator
     val newVerts = symIns.select(col("u").as("id")).distinct()

@@ -32,6 +32,52 @@ object LocalGraph {
     */
   val SymRowBar: Long = 4000000L
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.LocalGraph")
+
+  /** The one twin gate: true when operator `op` should run its one-task
+    * leg on `in` rather than its distributed rounds. Every leg choice in
+    * the operators goes through here.
+    *
+    * The twin contract: a one-task leg computes its operator's exact
+    * output in one task, most by replaying the rounds in one
+    * `coalesce(1)` task, so it is bit-equal to the round path by
+    * construction. Specs pin each pair at bar 0 (LocalTwinsSpec, plus
+    * TraversalsSpec, TrianglesSpec and SummarySpec).
+    *
+    * A bar ≤ 0 forces the rounds without probing; otherwise one-task
+    * runs when `in` has ≤ `bar` rows. The probe is one job with no
+    * exchange: each partition stops counting after `bar + 1` rows, so
+    * above the bar its last stage reads at most P·(bar + 1) rows (stages
+    * upstream of an un-checkpointed `in` still run in full, as for
+    * `count()`). Each call logs one INFO line: operator, leg, rows (or
+    * `>bar`) and bar.
+    */
+  def oneTask(op: String, in: DataFrame, bar: Long): Boolean =
+    decide(op, if (bar <= 0) None else Some(probeRows(in, bar)), bar)
+
+  /** [[oneTask]] for a caller that already holds the row count. */
+  def oneTask(op: String, rows: Long, bar: Long): Boolean =
+    decide(op, if (bar <= 0) None else Some(rows), bar)
+
+  /** Rows of `in`, except that each partition stops at `bar + 1`: the sum
+    * is ≤ `bar` exactly when `in.count()` is.
+    */
+  private def probeRows(in: DataFrame, bar: Long): Long = {
+    val cap = bar + 1
+    in.select().queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      while (n < cap && it.hasNext) { it.next(); n += 1 }
+      Iterator.single(n)
+    }.fold(0L)(_ + _)
+  }
+
+  private def decide(op: String, rows: Option[Long], bar: Long): Boolean = {
+    val local = rows.exists(_ <= bar)
+    val seen = rows.fold("not probed")(r => if (r > bar) s">$bar" else r.toString)
+    log.info(s"twin gate: $op -> ${if (local) "one-task" else "rounds"} (rows $seen, bar $bar)")
+    local
+  }
+
   /** Exact core decomposition of a SYMMETRIC edge list (u, v) — the
     * Matula–Beck 1983 min-degree peel, whose output IS the unique
     * coreness fixpoint the distributed h-index loop converges to

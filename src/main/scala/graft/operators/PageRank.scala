@@ -40,12 +40,7 @@ object PageRank {
                  oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-    // scale-adaptive (the LocalGraph twin discipline): the integer round
-    // map is a pure function of the arc multiset, so under the one-task
-    // bar a single-task replay of the same rounds is bit-equal by
-    // construction (spec A/B at oneTaskBar = 0); the pre-partitioned
-    // distributed rounds remain the over-bar 100 TB path.
-    if (e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("pagerank", e, oneTaskBar))
       return LocalRank.pageRankLocal(e, iters, None)
     val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg"))
     // static per-round join input, partitioned once on the join key
@@ -107,7 +102,7 @@ object PageRank {
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
     // `trace` callers (per-round Δ-sentinel probes) always take the
     // round path — the twin has no per-round driver channel
-    if (trace.isEmpty && e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("pagerankFrom", e, if (trace.isEmpty) oneTaskBar else 0L))
       return LocalRank.pageRankLocal(e, iters, Some(prev))
     val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg"))
     val eDeg = e.join(deg, "u").repartition(col("u")).cutLineage()
@@ -157,7 +152,7 @@ object PageRank {
                          oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val e = edges.select(col("src").cast("long").as("u"),
       col("dst").cast("long").as("v"), col("value").cast("long").as("w"))
-    if (e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("weightedPagerank", e, oneTaskBar))
       return LocalRank.weightedPageRankLocal(e, iters)
     val tot = e.groupBy("u").agg(sum("w").as("totw"))
     val eW = e.join(tot, "u").where(col("totw") > 0)
@@ -195,7 +190,7 @@ object PageRank {
                    oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-    if (e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("personalizedPagerank", e, oneTaskBar))
       return LocalRank.personalizedLocal(e, sources, iters)
     val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg"))
     val eDeg = e.join(deg, "u").repartition(col("u")).cutLineage()

@@ -58,10 +58,7 @@ object Scc {
       .where(col("u") =!= col("v"))
       .distinct()
       .cutLineage()
-    // scale-adaptive: the SCC partition is unique and labels are min
-    // member ids, so the one-task Tarjan twin is bit-equal; the
-    // trim/fwd-bwd peel below stays the 100 TB path
-    if (e.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("scc", e, oneTaskBar))
       return LocalGraph.sccLocal(e)
     var live = e.select(col("u").as("id")).union(e.select(col("v")))
       .distinct().cutLineage()

@@ -49,12 +49,11 @@ object Traversals {
     * shuffle once.
     */
   private def bfsFromSym(sym: DataFrame, source: Long, maxIter: Int,
-                         oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                         oneTaskBar: Long): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
-    // scale-adaptive: BFS levels are unique, so the one-task twin is
-    // bit-equal (incl. the silent maxIter truncation — failLoud=false)
-    if (sym.count() <= oneTaskBar)
+    // the one-task leg keeps the silent maxIter truncation (failLoud=false)
+    if (LocalGraph.oneTask("bfsDepths", sym, oneTaskBar))
       return LocalGraph.multiBfsLocal(sym, Seq(source), maxIter,
         "bfsDepths", failLoud = false).select(col("id"), col("dist"))
 
@@ -106,10 +105,8 @@ object Traversals {
     val lms = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("id").asc).limit(nLandmarks)
       .select(col("id").as("lm")).cutLineage()
-    // scale-adaptive: under the one-task bar the whole multi-source BFS
-    // is one job — distances are unique, the fail-loud ecc budget is
-    // mirrored, and the ≤nLandmarks collect is the audited scalar class
-    if (sym.count() <= oneTaskBar)
+    // the one-task leg mirrors the fail-loud ecc budget
+    if (LocalGraph.oneTask("landmarkDistances", sym, oneTaskBar))
       return LocalGraph.multiBfsLocal(sym,
         lms.collect().map(_.getLong(0)).toSeq, maxIter, "landmarkDistances")
     var frontiers = List(
@@ -230,11 +227,9 @@ object Traversals {
                               maxIter: Int = 100,
                               oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val sym = symmetrize(grownEdges).cutLineage()
-    // scale-adaptive: the maintained index is row-equal to a fresh BFS
-    // over the GROWN graph from the build-time landmarks (the q231/q239
-    // oracle identity), so under the one-task bar the multi-source BFS
-    // twin computes it in one job; the relaxation stays the 100 TB path
-    if (sym.count() <= oneTaskBar)
+    // the maintained index is row-equal to a fresh BFS over the GROWN
+    // graph from the build-time landmarks, which the one-task leg runs
+    if (LocalGraph.oneTask("landmarkMaintainInserts", sym, oneTaskBar))
       return LocalGraph.multiBfsLocal(sym,
         index.select(col("lm").cast("long")).distinct()
           .collect().map(_.getLong(0)).toSeq,
@@ -335,12 +330,9 @@ object Traversals {
     val dsym = symmetrize(deletes).cutLineage()
     val symS = symmetrize(oldEdges).join(dsym, Seq("u", "v"), "left_anti")
       .cutLineage()
-    // scale-adaptive: the maintained index is row-equal to a fresh BFS
-    // over the SHRUNK graph from the build-time landmarks (the scaladoc
-    // contract the q236 oracle hash-checks), so under the one-task bar
-    // the BFS twin computes it in one job; cascade invalidation +
-    // boundary repair stay the 100 TB path
-    if (symS.count() <= oneTaskBar)
+    // the maintained index is row-equal to a fresh BFS over the SHRUNK
+    // graph from the build-time landmarks, which the one-task leg runs
+    if (LocalGraph.oneTask("landmarkMaintainDeletes", symS, oneTaskBar))
       return LocalGraph.multiBfsLocal(symS,
         index.select(col("lm").cast("long")).distinct()
           .collect().map(_.getLong(0)).toSeq,
@@ -449,9 +441,7 @@ object Traversals {
       .groupBy("u", "v").agg(min("w").as("w"))
       .cutLineage()
 
-    // scale-adaptive: the one-task twin replays the identical
-    // round-synchronous frontier relaxation (same maxIter truncation)
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("sssp", sym, oneTaskBar))
       return LocalGraph.ssspLocal(sym, source, maxIter)
     var dist = Seq((source, 0L)).toDF("id", "dist").cutLineage()
     // frontier = vertices whose distance improved last round. Only their
@@ -545,12 +535,8 @@ object Traversals {
             oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     var sym = symmetrize(edges).cutLineage()
     var m = sym.count()
-    // scale-adaptive (the LocalGraph twin discipline): the peel is a
-    // pure function of the arc set — the twin replays the same
-    // synchronous rounds, edge-count convergence and silent maxIter
-    // truncation, so it is bit-equal by construction (spec A/B at
-    // oneTaskBar = 0); the gate reuses the loop-control count.
-    if (m <= oneTaskBar)
+    // the gate reuses the loop-control count
+    if (LocalGraph.oneTask("kcore", m, oneTaskBar))
       return LocalGraph.kcoreLocal(sym, k, maxIter)
     var changed = m > 0
     var iter = 0
@@ -605,11 +591,7 @@ object Traversals {
                sortFree: Boolean = false,
                oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val sym = symmetrize(edges).cutLineage()
-    // scale-adaptive: under the one-task bar the whole fixpoint is the
-    // Matula–Beck peel in a single job — the core decomposition is
-    // UNIQUE, so this is bit-equal to the round path (spec-pinned A/B);
-    // the distributed rounds below remain the over-bar 100 TB path
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("coreness", sym, oneTaskBar))
       return LocalGraph.corenessLocal(sym)
         .select(col("id"), col("coreness"))
     var c = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("h"))
@@ -757,12 +739,10 @@ object Traversals {
     // test suffices
     val subSym = netSym.join(affVerts.toDF("u"), Seq("u"), "left_semi")
       .cutLineage()
-    // scale-adaptive: the capped-monotone iteration converges to the
-    // UNIQUE coreness of the affected induced subgraph from ANY upper
-    // bound (scaladoc proof), so under the one-task bar the Matula–Beck
-    // peel computes the identical values in one job — seeds and caps
-    // only speed the over-bar round path up, they never change it
-    if (subSym.count() <= oneTaskBar)
+    // the capped-monotone iteration converges to the UNIQUE coreness of
+    // the affected induced subgraph from ANY upper bound, so seeds and
+    // caps only speed the round path up and the one-task leg skips them
+    if (LocalGraph.oneTask("corenessMaintain", subSym, oneTaskBar))
       return passThrough.unionByName(
         LocalGraph.corenessLocal(subSym).select(col("id"), col("coreness")))
     val bIns = insSym.where(col("u") < col("v")).count()
@@ -904,12 +884,8 @@ object Traversals {
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var r = 0L
     var msym = sym.count()
-    // scale-adaptive (the LocalGraph twin discipline): the peel is a
-    // deterministic pure function of the arc set, so the one-task
-    // replay is bit-equal by construction (spec A/B at oneTaskBar = 0);
-    // the semi-join rounds remain the over-bar 100 TB path. The gate
-    // reuses the loop-control count — no extra job.
-    if (msym <= oneTaskBar)
+    // the gate reuses the loop-control count
+    if (LocalGraph.oneTask("densestSubgraph", msym, oneTaskBar))
       return LocalDensest.densestLocal(sym, maxRounds)
     while (msym > 0 && r < maxRounds) {
       val n = sym.select(col("u")).distinct().count()
@@ -1002,13 +978,10 @@ object Traversals {
       .toDF("component", "round", "n_vertices", "n_edges", "density_micro", "is_best")
     val arcs0 = sym0.count()
     if (arcs0 == 0) return emptySchema
-    // scale-adaptive: the per-component peel is a pure function of the
-    // arc set; the twin derives the identical min-label decomposition
-    // internally (`labels`, when given, must be exactly that
-    // decomposition by its own contract), so the replay is bit-equal by
-    // construction — spec A/B at oneTaskBar = 0. One count replaces the
-    // isEmpty probe; the keyed rounds remain the over-bar 100 TB path.
-    if (arcs0 <= oneTaskBar)
+    // the one-task leg derives the min-label decomposition itself
+    // (`labels`, when given, must be exactly that decomposition); one
+    // count serves the empty check and the gate
+    if (LocalGraph.oneTask("densestByComponent", arcs0, oneTaskBar))
       return LocalDensest.densestByComponentLocal(sym0, maxRounds)
     val vcomp = labels.getOrElse(ConnectedComponents.auto(
         sym0.select(col("u").as("src"), col("v").as("dst"))))
@@ -1152,9 +1125,8 @@ object Traversals {
     val spark = tedges.sparkSession
     import spark.implicits._
     val sym = symmetrizeTemporal(tedges).cutLineage()
-    // scale-adaptive: latest departures are the dual unique fixpoint —
-    // the one-task max-heap twin is bit-equal
-    if (trace.isEmpty && sym.count() <= oneTaskBar)
+    // `trace` callers probe round shape and take the rounds
+    if (LocalGraph.oneTask("temporalDeparture", sym, if (trace.isEmpty) oneTaskBar else 0L))
       return LocalGraph.temporalDepartureLocal(sym, target, deadline)
     var lt = Seq((target, deadline)).toDF("id", "a").cutLineage()
     var changed = lt.select(col("id"))
@@ -1210,10 +1182,8 @@ object Traversals {
     val spark = tedges.sparkSession
     import spark.implicits._
     val sym = symmetrizeTemporal(tedges).cutLineage()
-    // scale-adaptive: earliest arrivals are a unique fixpoint — the
-    // one-task Dijkstra-by-arrival twin is bit-equal (trace callers
-    // probe round shape and always take the round path)
-    if (trace.isEmpty && sym.count() <= oneTaskBar)
+    // `trace` callers probe round shape and take the rounds
+    if (LocalGraph.oneTask("temporalBfs", sym, if (trace.isEmpty) oneTaskBar else 0L))
       return LocalGraph.temporalArrivalLocal(sym, source, startT)
     var arr = Seq((source, startT)).toDF("id", "a").cutLineage()
     var changed = arr.select(col("id"))

@@ -513,11 +513,7 @@ object Triangles {
         greatest(col("src"), col("dst")).cast("long").as("dst"))
       .where(col("src") < col("dst")).distinct()
       .cutLineage()
-    // scale-adaptive: the k-truss is the unique maximal subgraph with
-    // support ≥ k−2, so under the one-task bar the in-JVM level peel
-    // yields the identical classes in one job (spec-pinned A/B); the
-    // distributed hybrid peel below remains the over-bar 100 TB path
-    if (edges.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("trussness", edges, oneTaskBar))
       return LocalGraph.trussnessLocal(edges, kMax)
     var sup = withSupport(edges)
     var parts = List.empty[DataFrame]

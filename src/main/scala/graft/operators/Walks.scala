@@ -65,11 +65,7 @@ object Walks {
                          oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     require(len >= 0, s"walk length must be non-negative, got $len")
     val sym = symOf(edges)
-    // scale-adaptive (the LocalGraph twin discipline): every step is a
-    // pure integer-hash argmin over the static adjacency, so the
-    // one-task replay is bit-equal by construction (spec A/B at
-    // oneTaskBar = 0); the per-step join rounds remain the 100 TB path.
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("deterministicWalks", sym, oneTaskBar))
       return walksLocal(sym, len, biased = false, 0L, 0L, 0L)
     var cur = sym.select(col("u").as("start_id")).distinct()
       .withColumn("cur", col("start_id")).cutLineage()
@@ -121,7 +117,7 @@ object Walks {
     require(len >= 0, s"walk length must be non-negative, got $len")
     require(fReturn > 0 && fNear > 0 && fFar > 0, "bias factors must be positive")
     val sym = symOf(edges)
-    if (sym.count() <= oneTaskBar)
+    if (LocalGraph.oneTask("biasedWalks", sym, oneTaskBar))
       return walksLocal(sym, len, biased = true, fReturn, fNear, fFar)
     var cur = sym.select(col("u").as("start_id")).distinct()
       .withColumn("cur", col("start_id")).cutLineage()

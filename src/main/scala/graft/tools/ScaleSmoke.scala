@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale smoke (results recorded in SCALE.md): drive the
@@ -13,12 +12,7 @@ object ScaleSmoke {
     val nDocs = args.headOption.map(_.toInt).getOrElse(100000)
     // "all" | "docs" | "graph" | "summary" — section selector for quick reruns
     val mode = args.lift(1).getOrElse("all")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
+    val spark = graft.GraftSession.localBuilder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -1,8 +1,14 @@
 package graft
 
 import graft.operators._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** r13 scale-adaptive A/B pins: every operator that gained a one-task
   * replay twin this round is run BOTH ways — the default bar (one-task
@@ -12,13 +18,67 @@ import org.apache.spark.sql.functions._
   * synthetic shapes that exercise the edge semantics (multi-arcs,
   * weights, self-gated passes). Also covers the r12 twins the advice
   * flagged as untested on the round path (SCC, BFS, SSSP, landmarks).
+  * Each pair also reads the twin gate's decision log, so the pins fail if
+  * the gate never picks the one-task leg; the last two tests pin the
+  * gate's probe itself.
   */
 class LocalTwinsSpec extends SparkTestBase {
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.toVector).toVector.sortBy(_.mkString("|"))
 
-  private def pinEqual(local: DataFrame, round: DataFrame, what: String): Unit = {
+  /** Collects the twin gate's decision lines (one per gate call). */
+  private class GateLog extends AbstractAppender("twin-gate-spec", null, null, true,
+      Property.EMPTY_ARRAY) {
+    private val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    def during[A](f: => A): (A, Seq[Decision]) = {
+      lines.clear()
+      val a = f
+      (a, lines.asScala.toVector.collect {
+        case GateLine(op, leg, bar) => Decision(op, leg, bar.toLong)
+      })
+    }
+  }
+
+  private val GateLine = """twin gate: (\S+) -> (\S+) \(rows [^,]+, bar (-?\d+)\)""".r
+  private case class Decision(op: String, leg: String, bar: Long)
+
+  // installed after the session exists: Spark's first log use may
+  // reload the log4j configuration
+  private lazy val gateLog = {
+    spark
+    val log = new GateLog
+    log.start()
+    Configurator.setLevel("graft.operators.LocalGraph", Level.INFO)
+    LogManager.getLogger("graft.operators.LocalGraph").asInstanceOf[CoreLogger].addAppender(log)
+    log
+  }
+
+  /** Runs both legs and reads the gate log: each operator gated at bar 0
+    * in the `round` call took its rounds there, and its one-task leg in
+    * the `local` call.
+    */
+  private def legs[A](local: => A, round: => A, what: String): (A, A) = {
+    val (l, atDefault) = gateLog.during(local)
+    val (r, atZero) = gateLog.during(round)
+    val pinned = atZero.filter(_.bar == 0L)
+    assert(pinned.nonEmpty, s"$what: the bar-0 call logged no gate decision")
+    assert(pinned.forall(_.leg == "rounds"), s"$what: bar 0 did not force the rounds")
+    for (op <- pinned.map(_.op).distinct) {
+      val seen = atDefault.filter(_.op == op)
+      assert(seen.nonEmpty && seen.forall(_.leg == "one-task"),
+        s"$what: $op did not take its one-task leg at the default bar: $seen")
+    }
+    (l, r)
+  }
+
+  private def pinEqual(local: => DataFrame, round: => DataFrame, what: String): Unit = {
+    val (l, r) = legs(local, round, what)
+    sameRows(l, r, what)
+  }
+
+  private def sameRows(local: DataFrame, round: DataFrame, what: String): Unit = {
     assert(local.columns.toSeq == round.columns.toSeq, s"$what: schema")
     assert(rows(local) == rows(round), s"$what: one-task leg != round path")
   }
@@ -249,10 +309,12 @@ class LocalTwinsSpec extends SparkTestBase {
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (7L, 8L), (8L, 9L))
       .toDF("src", "dst")
-    val localRounds = HyperBall.registerRounds(base, 3)
-    val roundRounds = HyperBall.registerRounds(base, 3, oneTaskBar = 0L)
+    val (localRounds, roundRounds) = legs(
+      HyperBall.registerRounds(base, 3),
+      HyperBall.registerRounds(base, 3, oneTaskBar = 0L),
+      "registerRounds")
     localRounds.zip(roundRounds).zipWithIndex.foreach { case ((l, r), t) =>
-      pinEqual(l, r, s"registerRounds t=$t")
+      sameRows(l, r, s"registerRounds t=$t")
     }
     // growFrom: the one-task leg rides the operator's own
     // maintained ≡ cold contract; both legs must produce identical rows
@@ -329,5 +391,50 @@ class LocalTwinsSpec extends SparkTestBase {
       Traversals.landmarkDistances(c10, 4),
       Traversals.landmarkDistances(c10, 4, oneTaskBar = 0L),
       "landmarkDistances")
+  }
+
+  test("twin gate: the bounded probe decides exactly as bar > 0 && count() <= bar") {
+    val n = 10L
+    for ((name, in) <- Seq(
+        "range over 4 partitions" -> spark.range(0, n, 1, 4).toDF(),
+        "empty frame" -> spark.emptyDataFrame,
+        "one partition" -> spark.range(0, n, 1, 1).toDF());
+        bar <- Seq(0L, 1L, n - 1, n, n + 1)) {
+      val want = bar > 0 && in.count() <= bar
+      val (got, logged) = gateLog.during(LocalGraph.oneTask("probeSpec", in, bar))
+      assert(got == want, s"$name, bar $bar")
+      assert(logged == Seq(Decision("probeSpec", if (want) "one-task" else "rounds", bar)),
+        s"$name, bar $bar: $logged")
+    }
+  }
+
+  test("twin gate: the probe is one job with one stage (no exchange); bar 0 runs none") {
+    val sc = spark.sparkContext
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("twin-gate-probe") => stagesPerJob.add(e.stageInfos.size)
+          case Some("twin-gate-marker") => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val in = spark.range(0, 1000, 1, 4).toDF()
+      sc.setJobGroup("twin-gate-probe", "probe")
+      assert(!LocalGraph.oneTask("probeSpec", in, 10L))
+      assert(!LocalGraph.oneTask("probeSpec", in, 0L))
+      // listener events arrive in order: once the marker job is seen,
+      // every probe job has been
+      sc.setJobGroup("twin-gate-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(stagesPerJob.asScala.toSeq == Seq(1))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
