@@ -502,11 +502,6 @@ object VectorExpressions {
     ColumnBridge.column(DotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Intersection size of two bitset-encoded sets (`array<long>`). */
-  def bitAndCount(a: Column, b: Column): Column =
-    ColumnBridge.column(BitAndCount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   /** Allocation-free intersection count of two SORTED `array<bigint>`
     * sets (caller owns the sorted/distinct invariant).
     */

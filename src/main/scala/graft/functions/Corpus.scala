@@ -364,16 +364,6 @@ object Corpus {
       .select("host", "doc_id")
   }
 
-  /** Per-domain corpus profile: document and token counts per host —
-    * the dashboard aggregate domain curation decisions read. One
-    * projection + one shuffle on host.
-    */
-  def domainStats(docs: DataFrame): DataFrame =
-    docs.select(urlHost(col("url")).as("host"),
-        size(toks(col("text"))).cast("long").as("n_tokens"))
-      .groupBy("host")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-
   /** PII patterns — deliberately restricted to a regex subset on which
     * Java regex (Spark) and RE2 (DuckDB) agree token-for-token
     * (character classes, bounded quantifiers, \b word boundaries; no

@@ -277,16 +277,6 @@ object Communities {
     louvainCore(weightedGraph(edges), levels, movesPerLevel, leiden = false,
       oneTaskBar)._1
 
-  /** [[louvainWeighted]] with the Leiden connectivity guarantee — the
-    * full matrix point: weighted level-1 graph AND per-level component
-    * splits, same exact-integer contracts as both parents.
-    */
-  def louvainLeidenWeighted(edges: DataFrame, levels: Int = 2,
-                            movesPerLevel: Int = 2,
-                            oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame =
-    louvainCore(weightedGraph(edges), levels, movesPerLevel, leiden = true,
-      oneTaskBar)._1
-
   /** Canonical unit-weight graph: u < v, distinct, w = 1. */
   private def unitGraph(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))

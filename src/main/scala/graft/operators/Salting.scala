@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * ≤`salts` sub-aggregates per key — bounding any reducer's share of a
   * hub at ~1/salts.
   *
-  * When to use which (measured in ScaleSmoke's `salt` mode; numbers in
-  * SCALE.md, 10M-edge Zipf graph whose head vertex owns 5% of all edges):
+  * When to use which (measured on a 10M-edge Zipf graph whose head
+  * vertex owns 5% of all edges; SCALE.md, "Skew headroom"):
   *  - count/sum-like aggs: Spark's map-side partial aggregation already
   *    compresses a hub to ≤#partitions partial rows — [[saltedDegrees]]
   *    is the parity-checked template (q91 = q03's oracle), measured pure
@@ -53,8 +53,8 @@ object Salting {
       .agg(collect_list(col("peer")).as("part"))
       .groupBy("id").agg(array_sort(flatten(collect_list(col("part")))).as("nbrs"))
 
-  /** Plain single-phase adjacency — the baseline the smoke compares
-    * against (hub list materializes in one reducer).
+  /** Plain single-phase adjacency — the baseline SCALE.md's skew table
+    * compares against (hub list materializes in one reducer).
     */
   def plainAdjacency(edges: DataFrame): DataFrame =
     ends(edges).groupBy("id").agg(array_sort(collect_list(col("peer"))).as("nbrs"))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * A "snapshot" is any batch edge DataFrame — e.g. one window of a
   * stream, or the accumulated edge log. These run Pregel supersteps over
-  * partitioned RDDs; use them for label propagation, shortest paths and
-  * cross-checks of the single-pass operators.
+  * partitioned RDDs; use them for cross-checks of the single-pass
+  * operators.
   */
 object Snapshots {
 
@@ -58,19 +58,5 @@ object Snapshots {
     val spark = edges.sparkSession
     import spark.implicits._
     toGraphX(edges).pageRank(tol).vertices.toDF("id", "rank")
-  }
-
-  /** Single-source shortest paths (hop count) via Pregel. */
-  def shortestPaths(edges: DataFrame, source: Long): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraphX(edges).mapVertices((id, _) => if (id == source) 0.0 else Double.PositiveInfinity)
-    org.apache.spark.graphx.Pregel(g, Double.PositiveInfinity)(
-      (_, d, m) => math.min(d, m),
-      t => if (t.srcAttr + 1 < t.dstAttr) Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-      .vertices.filter(_._2 != Double.PositiveInfinity)
-      .toDF("id", "dist")
-      .select(col("id"), col("dist").cast("long").as("hops"))
   }
 }

@@ -864,8 +864,9 @@ object Traversals {
     * one-at-a-time peeling. The default `maxRounds` = 320 covers the
     * worst-case bound past 10¹² vertices, so the fail-loud `require`
     * below only fires on a genuine non-termination bug, never on a
-    * legitimately deep peel (real graphs peel far faster — ScaleSmoke's
-    * planted-core probe finishes 10M edges in a few dozen rounds).
+    * legitimately deep peel (real graphs peel far faster — the
+    * planted-core probe in SCALE.md's tier2dense table finishes 10M
+    * edges in a few dozen rounds).
     * The per-vertex threshold product 10·deg·n is computed in
     * DECIMAL(38,0): deg ≤ 10⁹ times n ≤ 10¹² overflows 64-bit at the
     * 100 TB target, and the loop-control stats (n, m_sym per round —

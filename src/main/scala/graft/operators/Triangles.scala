@@ -399,10 +399,11 @@ object Triangles {
     * below it maintains support incrementally — cost ∝ the removed
     * edges' neighborhoods, which is what keeps the LONG TAIL of
     * small-removal rounds from re-scanning a 100 TB graph each time.
-    * Measured warm on the sf0.1 co-purchase bench graph (ScaleSmoke
-    * `truss`, identical outputs): k=5 hybrid 3.7 s vs always-delta 4.5 s
-    * vs always-recount 5.3 s; k=7 hybrid 2.7 s vs 4.1 s vs 2.9 s — the
-    * hybrid takes recount's fat first round AND delta's cheap tail.
+    * Measured warm on the sf0.1 co-purchase bench graph (SCALE.md,
+    * "k-truss strategy A/B", identical outputs): k=5 hybrid 3.7 s vs
+    * always-delta 4.5 s vs always-recount 5.3 s; k=7 hybrid 2.7 s vs
+    * 4.1 s vs 2.9 s — the hybrid takes recount's fat first round AND
+    * delta's cheap tail.
     * 0 ⇒ always recount, 1 ⇒ always delta.
     */
   def ktruss(c: DataFrame, k: Int, maxIter: Int = 50,
@@ -584,42 +585,6 @@ object Triangles {
         col("trussness").cast("long").as("trussness"))
       .join(affVerts.toDF("src"), Seq("src"), "left_anti")
     passThrough.unionByName(trussness(affNet, kMax))
-  }
-
-  /** Full-recount k-truss — the r2 baseline kept for the ScaleSmoke A/B
-    * against the incremental [[ktruss]]: every round re-enumerates ALL
-    * triangles of the surviving graph. Wins when the peel converges in
-    * 1–2 rounds (nothing to maintain); loses once rounds multiply.
-    */
-  private[graft] def ktrussRecompute(c: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    require(k >= 3, s"ktruss: k must be >= 3, got $k")
-    var edges = c.select(
-        least(col("src"), col("dst")).cast("long").as("src"),
-        greatest(col("src"), col("dst")).cast("long").as("dst"))
-      .where(col("src") < col("dst")).distinct()
-      .cutLineage()
-    var m = edges.count()
-    var changed = m > 0
-    var iter = 0
-    while (changed && iter < maxIter) {
-      val sup = enumerate(edges).select(explode(array(
-          struct(least(col("ta"), col("tb")).as("s"), greatest(col("ta"), col("tb")).as("d")),
-          struct(least(col("ta"), col("tc")).as("s"), greatest(col("ta"), col("tc")).as("d")),
-          struct(least(col("tb"), col("tc")).as("s"), greatest(col("tb"), col("tc")).as("d"))))
-          .as("e"))
-        .groupBy(col("e.s").as("src"), col("e.d").as("dst"))
-        .agg(count("*").as("sup"))
-      val kept = edges.join(sup, Seq("src", "dst"), "left")
-        .where(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select("src", "dst")
-        .cutLineage()
-      val m2 = kept.count()
-      changed = m2 != m
-      m = m2
-      edges = kept
-      iter += 1
-    }
-    edges
   }
 
   /** DOULION-style sparsified triangle estimate: keep each edge iff

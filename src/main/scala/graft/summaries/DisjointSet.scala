@@ -59,10 +59,4 @@ final class DisjointSet extends Serializable {
     parent.foreachKey { v => out += v -> minOf(find(v)) }
     out.result()
   }
-
-  def numComponents: Int = {
-    val roots = mutable.LongMap.empty[Unit]
-    parent.foreachKey { v => roots(find(v)) = () }
-    roots.size
-  }
 }

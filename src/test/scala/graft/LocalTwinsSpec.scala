@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   * flagged as untested on the round path (SCC, BFS, SSSP, landmarks).
   * Each pair also reads the twin gate's decision log, so the pins fail if
   * the gate never picks the one-task leg; the last two tests pin the
-  * gate's probe itself.
+  * gate's probe itself. Each operator also runs on the empty edge frame
+  * (`pinEmpty`, or `sameNone` where it returns before the gate).
   */
 class LocalTwinsSpec extends SparkTestBase {
 
@@ -79,16 +80,41 @@ class LocalTwinsSpec extends SparkTestBase {
   }
 
   private def sameRows(local: DataFrame, round: DataFrame, what: String): Unit = {
-    assert(local.columns.toSeq == round.columns.toSeq, s"$what: schema")
+    def cols(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(cols(local) == cols(round), s"$what: schema")
     assert(rows(local) == rows(round), s"$what: one-task leg != round path")
   }
 
+  /** [[pinEqual]] on the empty edge frame: both legs also give exactly
+    * `want`, no rows unless the operator emits its sources.
+    */
+  private def pinEmpty(local: => DataFrame, round: => DataFrame, what: String,
+                       want: Seq[Seq[Any]] = Nil): Unit = {
+    val (l, r) = legs(local, round, s"$what on no edges")
+    sameNone(l, r, what, want)
+  }
+
+  /** The row check of [[pinEmpty]], for operators that return before the
+    * gate on no edges (so neither call logs a decision).
+    */
+  private def sameNone(local: DataFrame, round: DataFrame, what: String,
+                       want: Seq[Seq[Any]] = Nil): Unit = {
+    sameRows(local, round, s"$what on no edges")
+    assert(rows(local) == want, s"$what on no edges")
+  }
+
   private lazy val c10 = graft.model.GraphFixtures.coPurchase10(spark, sf)
+  /** The empty edge frame: c10's schema, no rows. */
+  private lazy val none = c10.limit(0)
 
   test("labelPropagation: one-task replay == round path") {
     pinEqual(
       Communities.labelPropagation(c10, 3),
       Communities.labelPropagation(c10, 3, oneTaskBar = 0L),
+      "labelPropagation")
+    pinEmpty(
+      Communities.labelPropagation(none, 3),
+      Communities.labelPropagation(none, 3, oneTaskBar = 0L),
       "labelPropagation")
   }
 
@@ -97,6 +123,11 @@ class LocalTwinsSpec extends SparkTestBase {
     pinEqual(
       Communities.modularityRefine(c10, lpa),
       Communities.modularityRefine(c10, lpa, oneTaskBar = 0L),
+      "modularityRefine")
+    val noLabels = Communities.labelPropagation(none, 3)
+    pinEmpty(
+      Communities.modularityRefine(none, noLabels),
+      Communities.modularityRefine(none, noLabels, oneTaskBar = 0L),
       "modularityRefine")
   }
 
@@ -109,6 +140,14 @@ class LocalTwinsSpec extends SparkTestBase {
       Communities.louvainLeiden(c10, 2, 2),
       Communities.louvainLeiden(c10, 2, 2, oneTaskBar = 0L),
       "louvainLeiden")
+    pinEmpty(
+      Communities.louvain(none, 2, 2),
+      Communities.louvain(none, 2, 2, oneTaskBar = 0L),
+      "louvain")
+    pinEmpty(
+      Communities.louvainLeiden(none, 2, 2),
+      Communities.louvainLeiden(none, 2, 2, oneTaskBar = 0L),
+      "louvainLeiden")
   }
 
   test("louvainWeighted: one-task replay == round path (incl. parallel-edge weights)") {
@@ -120,12 +159,20 @@ class LocalTwinsSpec extends SparkTestBase {
       Communities.louvainWeighted(weighted, 2, 2),
       Communities.louvainWeighted(weighted, 2, 2, oneTaskBar = 0L),
       "louvainWeighted")
+    pinEmpty(
+      Communities.louvainWeighted(weighted.limit(0), 2, 2),
+      Communities.louvainWeighted(weighted.limit(0), 2, 2, oneTaskBar = 0L),
+      "louvainWeighted")
   }
 
   test("louvainByComponent + louvainMaintain: one-task replay == round path") {
     pinEqual(
       Communities.louvainByComponent(c10, 2, 2),
       Communities.louvainByComponent(c10, 2, 2, oneTaskBar = 0L),
+      "louvainByComponent")
+    pinEmpty(
+      Communities.louvainByComponent(none, 2, 2),
+      Communities.louvainByComponent(none, 2, 2, oneTaskBar = 0L),
       "louvainByComponent")
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
@@ -139,6 +186,11 @@ class LocalTwinsSpec extends SparkTestBase {
       Communities.louvainMaintain(oldLabels, base, inserts, deletes,
         oneTaskBar = 0L),
       "louvainMaintain")
+    val noLabels = Communities.louvainByComponent(none, 2, 2).toDF("id", "community")
+    pinEmpty(
+      Communities.louvainMaintain(noLabels, none, none, none),
+      Communities.louvainMaintain(noLabels, none, none, none, oneTaskBar = 0L),
+      "louvainMaintain")
   }
 
   test("pagerank family: one-task replay == round path") {
@@ -147,15 +199,28 @@ class LocalTwinsSpec extends SparkTestBase {
       PageRank.fixedPoint(sym, 10),
       PageRank.fixedPoint(sym, 10, oneTaskBar = 0L),
       "pagerank.fixedPoint")
+    pinEmpty(
+      PageRank.fixedPoint(none, 10),
+      PageRank.fixedPoint(none, 10, oneTaskBar = 0L),
+      "pagerank.fixedPoint")
     val prev = PageRank.fixedPoint(sym, 3)
     pinEqual(
       PageRank.fixedPointFrom(c10, prev, 4),
       PageRank.fixedPointFrom(c10, prev, 4, oneTaskBar = 0L),
       "pagerank.fixedPointFrom")
+    val noRanks = PageRank.fixedPoint(none, 3)
+    pinEmpty(
+      PageRank.fixedPointFrom(none, noRanks, 4),
+      PageRank.fixedPointFrom(none, noRanks, 4, oneTaskBar = 0L),
+      "pagerank.fixedPointFrom")
     val src = c10.agg(min(col("src"))).head().getLong(0)
     pinEqual(
       PageRank.personalized(sym, Seq(src), 10),
       PageRank.personalized(sym, Seq(src), 10, oneTaskBar = 0L),
+      "pagerank.personalized")
+    pinEmpty(
+      PageRank.personalized(none, Seq(src), 10),
+      PageRank.personalized(none, Seq(src), 10, oneTaskBar = 0L),
       "pagerank.personalized")
     import spark.implicits._
     // multi-arc + zero-weight group: totw=0 vertices drop from the
@@ -166,6 +231,10 @@ class LocalTwinsSpec extends SparkTestBase {
     pinEqual(
       PageRank.weightedFixedPoint(weighted, 10),
       PageRank.weightedFixedPoint(weighted, 10, oneTaskBar = 0L),
+      "pagerank.weighted")
+    pinEmpty(
+      PageRank.weightedFixedPoint(weighted.limit(0), 10),
+      PageRank.weightedFixedPoint(weighted.limit(0), 10, oneTaskBar = 0L),
       "pagerank.weighted")
   }
 
@@ -178,6 +247,15 @@ class LocalTwinsSpec extends SparkTestBase {
     pinEqual(
       Hits.fixedPointFrom(c10, prev, 3),
       Hits.fixedPointFrom(c10, prev, 3, oneTaskBar = 0L),
+      "hits.fixedPointFrom")
+    pinEmpty(
+      Hits.fixedPoint(none, 5),
+      Hits.fixedPoint(none, 5, oneTaskBar = 0L),
+      "hits.fixedPoint")
+    val noScores = Hits.fixedPoint(none, 2)
+    pinEmpty(
+      Hits.fixedPointFrom(none, noScores, 3),
+      Hits.fixedPointFrom(none, noScores, 3, oneTaskBar = 0L),
       "hits.fixedPointFrom")
   }
 
@@ -196,6 +274,20 @@ class LocalTwinsSpec extends SparkTestBase {
       Centrality.harmonicCloseness(c10, srcs, 10),
       Centrality.harmonicCloseness(c10, srcs, 10, oneTaskBar = 0L),
       "harmonicCloseness")
+    pinEmpty(
+      Centrality.stressCentrality(none, srcs, 10),
+      Centrality.stressCentrality(none, srcs, 10, oneTaskBar = 0L),
+      "stressCentrality")
+    pinEmpty(
+      Centrality.betweennessCentrality(none, srcs, 10),
+      Centrality.betweennessCentrality(none, srcs, 10, oneTaskBar = 0L),
+      "betweennessCentrality")
+    // no edges leave every source isolated: both legs fail loud
+    for (bar <- Seq(LocalGraph.SymRowBar, 0L)) {
+      val ex = intercept[Exception](
+        Centrality.harmonicCloseness(none, srcs, 10, oneTaskBar = bar).collect())
+      assert(ex.getMessage.contains("isolated sources"), s"bar $bar: $ex")
+    }
   }
 
   test("centrality: one-task leg mirrors the maxDepth fail-loud budget") {
@@ -227,6 +319,14 @@ class LocalTwinsSpec extends SparkTestBase {
       Traversals.densestByComponent(c10),
       Traversals.densestByComponent(c10, oneTaskBar = 0L),
       "densestByComponent")
+    pinEmpty(
+      Traversals.densestSubgraph(none),
+      Traversals.densestSubgraph(none, oneTaskBar = 0L),
+      "densestSubgraph")
+    sameNone(
+      Traversals.densestByComponent(none),
+      Traversals.densestByComponent(none, oneTaskBar = 0L),
+      "densestByComponent")
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (12L, 10L), (10L, 12L), (20L, 21L)).toDF("src", "dst")
@@ -237,6 +337,11 @@ class LocalTwinsSpec extends SparkTestBase {
       Traversals.densestMaintain(oldStats, base, inserts, deletes),
       Traversals.densestMaintain(oldStats, base, inserts, deletes,
         oneTaskBar = 0L),
+      "densestMaintain")
+    val noStats = Traversals.densestByComponent(none)
+    sameNone(
+      Traversals.densestMaintain(noStats, none, none, none),
+      Traversals.densestMaintain(noStats, none, none, none, oneTaskBar = 0L),
       "densestMaintain")
   }
 
@@ -250,12 +355,22 @@ class LocalTwinsSpec extends SparkTestBase {
       Bipartiteness.bipartitenessByComponent(mixed),
       Bipartiteness.bipartitenessByComponent(mixed, oneTaskBar = 0L),
       "bipartitenessByComponent")
+    sameNone(
+      Bipartiteness.bipartitenessByComponent(none),
+      Bipartiteness.bipartitenessByComponent(none, oneTaskBar = 0L),
+      "bipartitenessByComponent")
     val inserts = Seq((21L, 22L), (22L, 20L)).toDF("src", "dst")
     val deletes = Seq((3L, 1L)).toDF("src", "dst")
     val oldV = Bipartiteness.bipartitenessByComponent(mixed)
     pinEqual(
       Bipartiteness.bipartitenessMaintain(oldV, mixed, inserts, deletes),
       Bipartiteness.bipartitenessMaintain(oldV, mixed, inserts, deletes,
+        oneTaskBar = 0L),
+      "bipartitenessMaintain")
+    val noVerdicts = Bipartiteness.bipartitenessByComponent(none)
+    sameNone(
+      Bipartiteness.bipartitenessMaintain(noVerdicts, none, none, none),
+      Bipartiteness.bipartitenessMaintain(noVerdicts, none, none, none,
         oneTaskBar = 0L),
       "bipartitenessMaintain")
     val tagged = mixed.where(col("src") < 20)
@@ -266,6 +381,10 @@ class LocalTwinsSpec extends SparkTestBase {
       Bipartiteness.iterativeByGroup(tagged),
       Bipartiteness.iterativeByGroup(tagged, oneTaskBar = 0L),
       "iterativeByGroup")
+    pinEmpty(
+      Bipartiteness.iterativeByGroup(tagged.limit(0)),
+      Bipartiteness.iterativeByGroup(tagged.limit(0), oneTaskBar = 0L),
+      "iterativeByGroup")
   }
 
   test("kcore: one-task replay == round path (incl. maxIter truncation)") {
@@ -275,6 +394,10 @@ class LocalTwinsSpec extends SparkTestBase {
         Traversals.kcore(c10, k, oneTaskBar = 0L),
         s"kcore k=$k")
     }
+    pinEmpty(
+      Traversals.kcore(none, 4),
+      Traversals.kcore(none, 4, oneTaskBar = 0L),
+      "kcore")
     // truncation semantics: a 1-round budget leaves the partial peel —
     // both legs must leave the SAME partial state
     pinEqual(
@@ -292,6 +415,14 @@ class LocalTwinsSpec extends SparkTestBase {
       HyperBall.ballSizes(c10, 2, includeZero = true),
       HyperBall.ballSizes(c10, 2, includeZero = true, oneTaskBar = 0L),
       "hyperball.ballSizes includeZero")
+    pinEmpty(
+      HyperBall.ballSizes(none, 3),
+      HyperBall.ballSizes(none, 3, oneTaskBar = 0L),
+      "hyperball.ballSizes")
+    pinEmpty(
+      HyperBall.ballSizes(none, 2, includeZero = true),
+      HyperBall.ballSizes(none, 2, includeZero = true, oneTaskBar = 0L),
+      "hyperball.ballSizes includeZero")
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (20L, 21L)).toDF("src", "dst")
@@ -302,6 +433,11 @@ class LocalTwinsSpec extends SparkTestBase {
       HyperBall.ballSizesMaintain(oldBalls, base, inserts, deletes, 3),
       HyperBall.ballSizesMaintain(oldBalls, base, inserts, deletes, 3,
         oneTaskBar = 0L),
+      "hyperball.ballSizesMaintain")
+    val noBalls = HyperBall.ballSizes(none, 3)
+    pinEmpty(
+      HyperBall.ballSizesMaintain(noBalls, none, none, none, 3),
+      HyperBall.ballSizesMaintain(noBalls, none, none, none, 3, oneTaskBar = 0L),
       "hyperball.ballSizesMaintain")
   }
 
@@ -332,6 +468,18 @@ class LocalTwinsSpec extends SparkTestBase {
         HyperBall.registerRounds(c10, 2, oneTaskBar = 0L), c10,
         srcs, 2, oneTaskBar = 0L),
       "ballSizesGrowFrom c10")
+    val (localNone, roundNone) = legs(
+      HyperBall.registerRounds(none, 2),
+      HyperBall.registerRounds(none, 2, oneTaskBar = 0L),
+      "registerRounds on no edges")
+    localNone.zip(roundNone).zipWithIndex.foreach { case ((l, r), t) =>
+      sameRows(l, r, s"registerRounds on no edges t=$t")
+      assert(l.isEmpty, s"registerRounds on no edges t=$t: rows")
+    }
+    pinEmpty(
+      HyperBall.ballSizesGrowFrom(localNone, none, none, 2),
+      HyperBall.ballSizesGrowFrom(roundNone, none, none, 2, oneTaskBar = 0L),
+      "ballSizesGrowFrom")
   }
 
   test("walks: one-task replay == round path (uniform and node2vec-biased)") {
@@ -342,6 +490,14 @@ class LocalTwinsSpec extends SparkTestBase {
     pinEqual(
       Walks.biasedWalks(c10, 6),
       Walks.biasedWalks(c10, 6, oneTaskBar = 0L),
+      "biasedWalks")
+    pinEmpty(
+      Walks.deterministicWalks(none, 5),
+      Walks.deterministicWalks(none, 5, oneTaskBar = 0L),
+      "deterministicWalks")
+    pinEmpty(
+      Walks.biasedWalks(none, 6),
+      Walks.biasedWalks(none, 6, oneTaskBar = 0L),
       "biasedWalks")
   }
 
@@ -390,6 +546,26 @@ class LocalTwinsSpec extends SparkTestBase {
     pinEqual(
       Traversals.landmarkDistances(c10, 4),
       Traversals.landmarkDistances(c10, 4, oneTaskBar = 0L),
+      "landmarkDistances")
+    pinEmpty(
+      Scc.stronglyConnectedComponents(none),
+      Scc.stronglyConnectedComponents(none, oneTaskBar = 0L),
+      "scc")
+    pinEmpty(
+      Traversals.bfsDepths(none, src),
+      Traversals.bfsDepths(none, src, oneTaskBar = 0L),
+      "bfsDepths", want = Seq(Seq(src, 0L)))
+    pinEmpty(
+      Traversals.doubleSweepDiameter(none, src),
+      Traversals.doubleSweepDiameter(none, src, oneTaskBar = 0L),
+      "doubleSweepDiameter", want = Seq(Seq(src, 0L, src, 0L)))
+    pinEmpty(
+      Traversals.sssp(weighted.limit(0), 1L),
+      Traversals.sssp(weighted.limit(0), 1L, oneTaskBar = 0L),
+      "sssp", want = Seq(Seq(1L, 0L)))
+    pinEmpty(
+      Traversals.landmarkDistances(none, 4),
+      Traversals.landmarkDistances(none, 4, oneTaskBar = 0L),
       "landmarkDistances")
   }
 

@@ -26,13 +26,9 @@ class SnapshotsSpec extends SparkTestBase {
     assert(a == b)
   }
 
-  test("pageRank and shortestPaths run and return sane values") {
+  test("pageRank runs and returns sane values") {
     val edges = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)))
     val pr = Snapshots.pageRank(edges).collect()
     assert(pr.length == 4 && pr.forall(_.getDouble(1) > 0))
-    val undirected = GraphStream(edges).undirected.edges
-    val sp = Snapshots.shortestPaths(undirected, 1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sp == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
   }
 }
