@@ -1,8 +1,10 @@
 package graft.functions
 
 import graft.Lineage.CutOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.IndexTables
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** PERSISTED MinHash-LSH near-duplicate index — the ANN-index lifecycle
   * (build → persist → probe from a fresh session → exactly-once
@@ -60,33 +62,25 @@ object DedupIndex {
     withKp(Dedup.bandedFromShingles(Dedup.shingles(docs, n).cutLineage(),
       bands, rowsPerBand))
 
+  /** The kp-partitioned buckets table of index `name`. */
+  private[graft] def buckets(name: String) =
+    IndexTables.Partitioned(s"${name}_buckets", "kp", "doc_id")
+
   /** Build and persist the index over `docs`: the kp-partitioned
-    * buckets table plus the one-row `<name>_meta` parameter table.
-    * Idempotent across processes ([[graft.sources.Sources
-    * .dropManagedTable]]'s stale-location contract); a fresh save also
-    * clears any prior ingest state — stale streamed partitions must
-    * never survive into a rebuilt index.
+    * buckets table (one file per kp directory — the banding union's
+    * task fan-out is routed to the kp owner first) plus the one-row
+    * `<name>_meta` parameter table. Idempotent across processes; a
+    * fresh save also clears any prior ingest state.
     */
   def save(docs: DataFrame, name: String, n: Int = 2, bands: Int = 8,
            rowsPerBand: Int = 4): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    Seq(s"${name}_buckets", s"${name}_meta", s"${name}_buckets_ingest")
-      .foreach(graft.sources.Sources.dropManagedTable(spark, _))
-    // route rows to their kp owner before the write: the banding union
-    // has `bands` branches × shuffle-partitions tasks, and without the
-    // repartition EVERY task writes its own file into every kp
-    // directory it touches (~8 files/dir measured at sf0.001; at 100 TB
-    // a small-file storm). One hash shuffle on kp → one file per
-    // partition directory.
-    encode(docs, n, bands, rowsPerBand)
-      .repartition(col("kp"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("kp").saveAsTable(s"${name}_buckets")
-    Seq((n, bands, rowsPerBand)).toDF("n", "bands", "rows_per_band")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_meta")
+    IndexTables.dropForSave(spark, buckets(name).base, s"${name}_meta")
+    IndexTables.writePartitioned(encode(docs, n, bands, rowsPerBand), buckets(name))
+    IndexTables.writeSmall(
+      Seq((n, bands, rowsPerBand)).toDF("n", "bands", "rows_per_band"),
+      s"${name}_meta")
   }
 
   /** The persisted hash-family parameters: (n, bands, rowsPerBand). */
@@ -99,20 +93,10 @@ object DedupIndex {
   /** The full bucket view a probe serves from: the base table unioned
     * with the exactly-once ingest side table's rows when one exists.
     * The DataFrame IS the (partitioned) table scan — nothing is
-    * re-signatured; a fresh session sees the tables through the shared
-    * catalog.
+    * re-signatured. Heals any interrupted [[compact]] first.
     */
-  def loadBuckets(spark: SparkSession, name: String): DataFrame = {
-    // heal any interrupted compact first — no probe ever serves the
-    // fold's duplicate window
-    graft.sources.Compaction.healFold(spark, s"${name}_buckets",
-      s"${name}_buckets_ingest", "kp", "doc_id")
-    val base = spark.table(s"${name}_buckets")
-    if (spark.catalog.tableExists(s"${name}_buckets_ingest"))
-      base.unionByName(
-        spark.table(s"${name}_buckets_ingest").drop("ingest_batch"))
-    else base
-  }
+  def loadBuckets(spark: SparkSession, name: String): DataFrame =
+    IndexTables.serve(spark, buckets(name))
 
   /** Near-duplicate lookup of `queryDocs` against the persisted index:
     * `(query_id, corpus_id, jac)` for every indexed document with
@@ -145,15 +129,8 @@ object DedupIndex {
     // the bucket lookup into a partition-pruned read
     val kps = qb.select(col("kp")).distinct().collect().map(_.getLong(0))
     if (kps.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("corpus_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("jac",
-            org.apache.spark.sql.types.DoubleType))))
+      return spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType.fromDDL("query_id BIGINT, corpus_id BIGINT, jac DOUBLE"))
     val idx = loadBuckets(spark, name)
       .where(col("kp").isin(kps.map(java.lang.Long.valueOf): _*))
     val cands = qb.select(col("doc_id").as("query_id"), col("band"), col("key"))
@@ -191,121 +168,50 @@ object DedupIndex {
       .where(col("jac") >= threshold)
   }
 
-  /** Create the EXACTLY-ONCE streaming-append side table if absent:
-    * `<name>_buckets_ingest`, the buckets schema plus an
-    * `ingest_batch` hive partition column — each trigger lands in its
-    * own partition via [[ingestBatch]], so a replayed/duplicated
-    * trigger rewrites ITS OWN partition with identical rows (the
-    * [[PQ.ensureIngestTable]] discipline).
+  /** Create the exactly-once ingest table `<name>_buckets_ingest` if
+    * absent ([[IndexTables.ensureIngest]]).
     */
   def ensureIngestTable(spark: SparkSession, name: String): Unit =
-    if (!spark.catalog.tableExists(s"${name}_buckets_ingest")) {
-      import org.apache.spark.sql.types._
-      graft.sources.Sources.dropManagedTable(spark, s"${name}_buckets_ingest")
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("band", IntegerType),
-        StructField("key", LongType),
-        StructField("kp", LongType),
-        StructField("ingest_batch", LongType)))
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          schema)
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("ingest_batch")
-        .saveAsTable(s"${name}_buckets_ingest")
-    }
+    IndexTables.ensureIngest(spark, buckets(name).base)
 
-  /** Idempotent per-trigger append: write `rows` ([[encode]]d
-    * signature rows) into the `ingest_batch = batchId` partition
-    * through dynamic partition overwrite — re-delivery rewrites the
-    * same partition with the same rows, so the stored state is
-    * bit-identical however many times a trigger fires.
+  /** Idempotent per-trigger append of [[encode]]d signature `rows` into
+    * the `ingest_batch = batchId` partition ([[IndexTables.ingestBatch]]).
     */
-  def ingestBatch(rows: DataFrame, name: String, batchId: Long): Unit = {
-    val spark = rows.sparkSession
-    val t = s"${name}_buckets_ingest"
-    val cols = spark.table(t).columns
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // one batch = one partition directory: collapse the banding
-    // union's task fan-out to a single file per trigger
-    try rows.withColumn("ingest_batch", lit(batchId))
-      .select(cols.map(col): _*)
-      .repartition(1)
-      .write.mode("overwrite").insertInto(t)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def ingestBatch(rows: DataFrame, name: String, batchId: Long): Unit =
+    IndexTables.ingestBatch(rows, buckets(name).base, batchId)
 
   /** COMPACTION — fold the streamed ingest delta into the
-    * kp-partitioned buckets table ([[graft.sources.Compaction]]'s
-    * marker-scoped, crash-safe, partition-pruned fold — the
-    * [[IVF.compact]] discipline for the LSH family): probes go back
-    * to a purely kp-pruned bucket scan with no whole-delta side read,
-    * and the per-trigger small files stop accumulating. Affected kp
-    * partitions are exactly those of the folded batches' rows (ingest
-    * rows were encoded through the persisted hash family, so they
-    * already carry their kp); unaffected partitions' files are
-    * untouched. The hash family never changes — compaction is a
-    * storage fold.
+    * kp-partitioned buckets table ([[IndexTables.fold]]): probes go back
+    * to a purely kp-pruned bucket scan with no whole-delta side read.
+    * Ingest rows were encoded through the persisted hash family, so they
+    * already carry their kp; the hash family never changes — compaction
+    * is a storage fold.
     */
   def compact(spark: SparkSession, name: String): Unit =
-    graft.sources.Compaction.foldIngest(spark, s"${name}_buckets",
-      s"${name}_buckets_ingest", "kp", "doc_id")
+    IndexTables.fold(spark, buckets(name))
 
   /** DELETE maintenance — the takedown / right-to-erasure half of the
-    * lifecycle, genuinely partition-pruned (the [[IVF.delete]] shape):
-    * the tombstoned documents' band keys are RECOMPUTED from their
-    * text through the persisted hash family, so the kp partitions
-    * their index rows live in are known exactly (≤ [[KP]] driver
-    * values); only those partitions are read (PartitionFilters —
-    * spec-asserted) and rewritten through dynamic partition overwrite,
-    * fully-emptied partitions dropped by DDL FIRST (the overwrite
-    * writes no rows into them, and dropping first closes the crash
-    * window where tombstoned rows kept being served). Unaffected
-    * partitions' files are untouched (spec asserts files + mtimes).
-    * The ingest side table gets the same treatment keyed by its own
-    * partition column (affected ingest batches only).
+    * lifecycle, genuinely partition-pruned ([[IndexTables.delete]]): the
+    * tombstoned documents' band keys are RECOMPUTED from their text
+    * through the persisted hash family, so the kp partitions their index
+    * rows live in are known exactly (≤ [[KP]] driver values); only those
+    * partitions are read (PartitionFilters — spec-asserted) and
+    * rewritten, fully-emptied ones DDL-dropped first. Unaffected
+    * partitions' files are untouched (spec asserts files + mtimes). The
+    * ingest batches the tombstones landed in get the same rewrite.
     *
     * CONTRACT: `tombstoneDocs` carries the documents' text AS INDEXED
     * — the key recomputation must reproduce the stored rows' keys. A
-    * takedown with no surviving text falls back to the full-scan
-    * rewrite: pass `pruned = false`. Idempotent: deleting an absent
-    * document finds nothing to remove.
+    * takedown with no surviving text passes `pruned = false`: the
+    * affected partitions are then found by a semi-join over the whole
+    * buckets table. Idempotent: deleting an absent document finds
+    * nothing to remove.
     */
   def delete(spark: SparkSession, name: String, tombstoneDocs: DataFrame,
              pruned: Boolean = true): Unit = {
     val (n, bands, rowsPerBand) = params(spark, name)
-    val tombIds = broadcast(
-      tombstoneDocs.select(col("doc_id").cast("long").as("doc_id")).distinct())
-    val affKps: Option[Array[Long]] =
-      if (pruned)
-        Some(encode(tombstoneDocs, n, bands, rowsPerBand)
-          .select(col("kp")).distinct().collect().map(_.getLong(0)))
-      else None
-    rewritePartitioned(spark, s"${name}_buckets", "kp", tombIds,
-      affKps.map(_.map(java.lang.Long.valueOf(_): Number)))
-    if (spark.catalog.tableExists(s"${name}_buckets_ingest")) {
-      // the ingest table is partitioned by batch, not kp: prune by the
-      // batches the tombstones actually landed in (bounded by the
-      // trigger count between compactions)
-      val affBatches = spark.table(s"${name}_buckets_ingest")
-        .join(tombIds, Seq("doc_id"), "left_semi")
-        .select(col("ingest_batch")).distinct().collect().map(_.getLong(0))
-      if (affBatches.nonEmpty)
-        rewritePartitioned(spark, s"${name}_buckets_ingest", "ingest_batch",
-          tombIds, Some(affBatches.map(java.lang.Long.valueOf(_): Number)))
-    }
+    IndexTables.delete(spark, buckets(name),
+      broadcast(tombstoneDocs.select(col("doc_id").cast("long").as("doc_id")).distinct()),
+      if (pruned) Some(encode(tombstoneDocs, n, bands, rowsPerBand)) else None)
   }
-
-  /** The partition-confined anti-join rewrite — shared with the other
-    * partitioned index families as [[TableRewrite.rewritePartitioned]].
-    */
-  private def rewritePartitioned(spark: SparkSession, table: String,
-                                 pcol: String, tombIds: DataFrame,
-                                 affected: Option[Array[Number]]): Unit =
-    TableRewrite.rewritePartitioned(spark, table, pcol, "doc_id", tombIds,
-      affected)
 }

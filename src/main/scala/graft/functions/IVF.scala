@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.Lineage.CutOps
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.IndexTables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -132,176 +133,73 @@ object IVF {
     topK(index(corpus, model), queries, model, k, nprobe)
   }
 
+  /** The cid-partitioned cells table of index `name`. */
+  private[graft] def cells(name: String) =
+    IndexTables.Partitioned(s"${name}_cells", "cid", "vec_id")
+
   /** Persist the index for the build-once / query-many lifecycle
     * ([[graft.functions.PQ.save]]'s sibling for the cell-probing
     * family): the indexed corpus as a catalog table PARTITIONED BY
-    * CELL — one hive directory per cell, the layout under which a
-    * probe of nprobe cells is a partition-pruned read of nprobe/k of
-    * the corpus, never a full scan — and the centroids (model state,
-    * k×dim doubles) as a tiny table (cid, pos, mu). Overwrite
-    * semantics, idempotent across JVMs.
+    * CELL — one hive directory (and one file) per cell, the layout under
+    * which a probe of nprobe cells is a partition-pruned read of
+    * nprobe/k of the corpus, never a full scan — and the centroids
+    * (model state, k×dim doubles) as a tiny table (cid, pos, mu).
+    * Overwrite semantics, idempotent across JVMs; a fresh save also
+    * clears any prior ingest state.
     */
   def save(model: Model, indexed: DataFrame, name: String): Unit = {
     val spark = indexed.sparkSession
     import spark.implicits._
-    // a fresh save also clears any prior ingest state — stale streamed
-    // partitions must never survive into a rebuilt index (the PQ.save
-    // contract)
-    Seq(s"${name}_cells", s"${name}_centroids", s"${name}_cells_ingest")
-      .foreach(graft.sources.Sources.dropManagedTable(spark, _))
-    indexed.write.mode("overwrite").format("parquet")
-      .partitionBy("cid").saveAsTable(s"${name}_cells")
+    IndexTables.dropForSave(spark, cells(name).base, s"${name}_centroids")
+    IndexTables.writePartitioned(indexed, cells(name))
     val rows = for {
       (cent, cid) <- model.centroids.zipWithIndex.toIndexedSeq
       (mu, pos) <- cent.zipWithIndex.toIndexedSeq
     } yield (cid, pos, mu)
-    spark.createDataset(rows).toDF("cid", "pos", "mu")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_centroids")
+    IndexTables.writeSmall(spark.createDataset(rows).toDF("cid", "pos", "mu"),
+      s"${name}_centroids")
   }
 
   /** DELETE maintenance for a [[save]]d index — the IVF leg of the
     * takedown half ([[graft.functions.PQ.delete]] is the PQ leg, which
     * rewrites the whole bucketed table): the cid-PARTITIONED cells
-    * layout makes deletion genuinely partition-pruned, the 100 TB
-    * shape — (1) one broadcast semi-join finds the cids the tombstones
-    * live in (a tiny driver list, ≤ k), (2) ONLY those hive partitions
-    * are read (PartitionFilters — spec-asserted) and rewritten through
-    * dynamic partition overwrite, after (3) any partition whose every
-    * vector is tombstoned is dropped by DDL UP FRONT (dynamic
-    * overwrite cannot touch a partition it writes no rows into, and
-    * dropping first means no crash point leaves a fully-tombstoned
-    * cell still being served). Centroids untouched, no re-assignment,
-    * idempotent for absent/replayed deletes.
+    * layout makes deletion genuinely partition-pruned
+    * ([[IndexTables.delete]]) — one broadcast semi-join finds the cids
+    * the tombstones live in (a tiny driver list, ≤ k), ONLY those hive
+    * partitions are read (PartitionFilters — spec-asserted) and
+    * rewritten, and any cell whose every vector is tombstoned is dropped
+    * by DDL up front, so no crash point leaves a fully-tombstoned cell
+    * still being served. The ingest batches the tombstones landed in get
+    * the same rewrite. Centroids untouched, no re-assignment, idempotent
+    * for absent/replayed deletes.
     */
-  def delete(spark: org.apache.spark.sql.SparkSession, name: String,
-             tombstones: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.broadcast
-    val cells = spark.table(s"${name}_cells")
-    val tomb = broadcast(tombstones.select(col("vec_id")).distinct())
-    val affCids = cells.join(tomb, Seq("vec_id"), "left_semi")
-      .select(col("cid")).distinct().collect().map(_.getInt(0))
-    if (affCids.nonEmpty) {
-      val kept = cells.where(col("cid").isin(affCids.map(Integer.valueOf): _*))
-        .join(tomb, Seq("vec_id"), "left_anti")
-        .localCheckpoint(true)
-      val emptied = affCids.toSet --
-        kept.select(col("cid")).distinct().collect().map(_.getInt(0)).toSet
-      // drop fully-emptied cells FIRST (review finding r11): the dynamic
-      // overwrite writes no rows into them, so ordering the DDL ahead of
-      // it closes the crash window where tombstoned vectors kept being
-      // served from a stale partition with nothing recording the delete —
-      // a failure after these drops but before the overwrite leaves the
-      // emptied cells already gone and the partially-tombstoned cells
-      // intact, and a replayed delete heals the rest
-      emptied.foreach(c => spark.sql(
-        s"ALTER TABLE ${name}_cells DROP IF EXISTS PARTITION (cid = $c)"))
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        // insertInto resolves columns BY POSITION against the table
-        // schema (partition column last in the on-disk layout)
-        kept.select(cells.columns.map(col): _*)
-          .write.mode("overwrite").insertInto(s"${name}_cells")
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-    // the exactly-once ingest side table is pruned by ITS partition key
-    // (the batches the tombstones actually landed in — bounded by the
-    // trigger count between compactions), same rewrite discipline
-    if (spark.catalog.tableExists(s"${name}_cells_ingest")) {
-      val ing = spark.table(s"${name}_cells_ingest")
-      val affBatches = ing.join(tomb, Seq("vec_id"), "left_semi")
-        .select(col("ingest_batch")).distinct().collect().map(_.getLong(0))
-      if (affBatches.nonEmpty) {
-        val keptI = ing.where(col("ingest_batch")
-            .isin(affBatches.map(java.lang.Long.valueOf): _*))
-          .join(tomb, Seq("vec_id"), "left_anti")
-          .localCheckpoint(true)
-        val emptiedB = affBatches.toSet --
-          keptI.select(col("ingest_batch")).distinct().collect()
-            .map(_.getLong(0)).toSet
-        emptiedB.foreach(b => spark.sql(
-          s"ALTER TABLE ${name}_cells_ingest DROP IF EXISTS PARTITION (ingest_batch = $b)"))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try keptI.select(ing.columns.map(col): _*)
-          .write.mode("overwrite").insertInto(s"${name}_cells_ingest")
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
-    }
-  }
+  def delete(spark: SparkSession, name: String, tombstones: DataFrame): Unit =
+    IndexTables.delete(spark, cells(name),
+      broadcast(tombstones.select(col("vec_id")).distinct()), None)
 
-  /** Create the EXACTLY-ONCE streaming-append side table for a [[save]]d
-    * index if absent: `<name>_cells_ingest`, the cells schema plus an
-    * `ingest_batch` hive partition column — the
-    * [[graft.functions.PQ.ensureIngestTable]] discipline for the
-    * cell-probing family. Serving unions it through [[load]]; the base
-    * stays cid-partition-pruned while the (small, recent) ingest delta
-    * is scanned whole — the standard LSM read shape; a periodic rebuild
-    * ([[save]] over the unioned corpus) is the compaction.
+  /** Create the exactly-once ingest table `<name>_cells_ingest` for a
+    * [[save]]d index if absent ([[IndexTables.ensureIngest]]); serving
+    * unions it through [[load]] and [[compact]] folds it into the cells.
     */
-  def ensureIngestTable(spark: org.apache.spark.sql.SparkSession,
-                        name: String): Unit =
-    if (!spark.catalog.tableExists(s"${name}_cells_ingest")) {
-      import org.apache.spark.sql.types._
-      graft.sources.Sources.dropManagedTable(spark, s"${name}_cells_ingest")
-      val schema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("e", ArrayType(DoubleType)),
-        StructField("nn", DoubleType),
-        StructField("cid", IntegerType),
-        StructField("ingest_batch", LongType)))
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          schema)
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("ingest_batch")
-        .saveAsTable(s"${name}_cells_ingest")
-    }
+  def ensureIngestTable(spark: SparkSession, name: String): Unit =
+    IndexTables.ensureIngest(spark, cells(name).base)
 
-  /** Idempotent per-trigger append: write `indexed` ([[index]]ed rows
+  /** Idempotent per-trigger append of `indexed` ([[index]]ed rows
     * through the FROZEN centroids) into the `ingest_batch = batchId`
-    * partition through dynamic partition overwrite — re-delivery
-    * rewrites the same partition with the same rows (exactly-once
-    * stored state, the [[graft.functions.PQ.ingestBatch]] contract).
+    * partition ([[IndexTables.ingestBatch]]).
     */
-  def ingestBatch(indexed: DataFrame, name: String, batchId: Long): Unit = {
-    val spark = indexed.sparkSession
-    val t = s"${name}_cells_ingest"
-    val cols = spark.table(t).columns
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try indexed.withColumn("ingest_batch", lit(batchId))
-      .select(cols.map(col): _*)
-      .repartition(1)
-      .write.mode("overwrite").insertInto(t)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def ingestBatch(indexed: DataFrame, name: String, batchId: Long): Unit =
+    IndexTables.ingestBatch(indexed, cells(name).base, batchId)
 
   /** COMPACTION — fold the streamed ingest delta into the
-    * cid-partitioned cells table ([[graft.sources.Compaction]]'s
-    * marker-scoped, crash-safe, partition-pruned fold): serving goes
-    * back to a purely cid-pruned scan (no whole-delta side read on
-    * every probe) and the per-trigger small files stop accumulating.
-    * Affected cells are exactly the distinct cids of the folded
-    * batches (ingest rows were encoded through the frozen centroids,
-    * so they already carry their home cell); unaffected cells' files
-    * are untouched. Centroids never change — compaction is a storage
-    * fold, not a refit.
+    * cid-partitioned cells table ([[IndexTables.fold]]): serving goes
+    * back to a purely cid-pruned scan and the per-trigger small files
+    * stop accumulating. Ingest rows were encoded through the frozen
+    * centroids, so they already carry their home cell; centroids never
+    * change — compaction is a storage fold, not a refit.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-              name: String): Unit =
-    graft.sources.Compaction.foldIngest(spark, s"${name}_cells",
-      s"${name}_cells_ingest", "cid", "vec_id")
+  def compact(spark: SparkSession, name: String): Unit =
+    IndexTables.fold(spark, cells(name))
 
   /** Reload a [[save]]d index: (model, cells). The cells DataFrame IS
     * the partitioned table scan — unioned with the exactly-once ingest
@@ -310,22 +208,14 @@ object IVF {
     * catalog. Heals any interrupted [[compact]] first, so no reader
     * ever serves the fold's duplicate window.
     */
-  def load(spark: org.apache.spark.sql.SparkSession,
-           name: String): (Model, DataFrame) = {
-    graft.sources.Compaction.healFold(spark, s"${name}_cells",
-      s"${name}_cells_ingest", "cid", "vec_id")
+  def load(spark: SparkSession, name: String): (Model, DataFrame) = {
+    val served = IndexTables.serve(spark, cells(name))
     val rows = spark.table(s"${name}_centroids").collect()
     require(rows.nonEmpty, s"no centroids found in table ${name}_centroids")
     val k = rows.map(_.getInt(0)).max + 1
     val dim = rows.map(_.getInt(1)).max + 1
     val cents = Array.fill(k, dim)(0.0)
     rows.foreach(r => cents(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-    val base = spark.table(s"${name}_cells")
-    val cells =
-      if (spark.catalog.tableExists(s"${name}_cells_ingest"))
-        base.unionByName(
-          spark.table(s"${name}_cells_ingest").drop("ingest_batch"))
-      else base
-    (Model(cents), cells)
+    (Model(cents), served)
   }
 }

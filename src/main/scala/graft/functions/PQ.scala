@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.Lineage.CutOps
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.{IndexTables, Sources}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -175,6 +176,9 @@ object PQ {
     topK(index(corpus, model), corpus, queries, model, k, shortlist)
   }
 
+  /** The vec_id-bucketed codes table of index `name`. */
+  private[graft] def codesTable(name: String) = s"${name}_codes"
+
   /** Persist the index for the build-once / query-many lifecycle a
     * 10⁹-vector deployment actually runs: the CODES as a
     * vec_id-bucketed catalog table ([[graft.sources.Sources
@@ -183,30 +187,24 @@ object PQ {
     * M×Ks×dsub doubles — as a tiny single-file catalog table
     * (m, cid, pos, mu). Overwrite semantics; both tables live in the
     * shared catalog, so ANY session of the deployment (not just the
-    * builder's) can [[load]] and serve.
+    * builder's) can [[load]] and serve. A fresh save also clears any
+    * prior ingest/swap state.
     */
   def save(model: Model, indexed: DataFrame, name: String,
            nBuckets: Int = 8): Unit = {
     val spark = indexed.sparkSession
     import spark.implicits._
-    // idempotent across PROCESSES, not just sessions (stale-location
-    // contract in [[graft.sources.Sources.dropManagedTable]]); a fresh
-    // save also clears any prior ingest/swap state — stale streamed
-    // partitions must never survive into a rebuilt index
-    Seq(s"${name}_codes", s"${name}_codebooks",
-        s"${name}_codes_ingest", s"${name}_codes_swap")
-      .foreach(graft.sources.Sources.dropManagedTable(spark, _))
-    graft.sources.Sources.writeBucketed(indexed, s"${name}_codes",
-      "vec_id", nBuckets, sortCols = Seq("vec_id"))
+    IndexTables.dropForSave(spark, codesTable(name), s"${name}_codebooks",
+      IndexTables.swap(codesTable(name)))
+    Sources.writeBucketed(indexed, codesTable(name), "vec_id", nBuckets,
+      sortCols = Seq("vec_id"))
     val rows = for {
       (mat, m) <- model.codebooks.zipWithIndex.toIndexedSeq
       (cent, cid) <- mat.zipWithIndex.toIndexedSeq
       (mu, pos) <- cent.zipWithIndex.toIndexedSeq
     } yield (m, cid, pos, mu)
-    spark.createDataset(rows).toDF("m", "cid", "pos", "mu")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_codebooks")
+    IndexTables.writeSmall(spark.createDataset(rows).toDF("m", "cid", "pos", "mu"),
+      s"${name}_codebooks")
   }
 
   /** DELETE maintenance for a [[save]]d index — the takedown /
@@ -219,7 +217,9 @@ object PQ {
     * nature — broadcast — so the scan side never shuffles), the
     * codebooks are untouched, and NO surviving vector is re-encoded
     * (re-training on deletion would change every code and every
-    * cached query's distance table for no accuracy gain).
+    * cached query's distance table for no accuracy gain). Any
+    * streamed-ingest rows are folded into the rewrite (compaction at
+    * takedown).
     *
     * This harness-scale writer rewrites the whole codes table
     * (copy-on-write). At 10⁹ vectors, partition the codes table by
@@ -230,171 +230,116 @@ object PQ {
     * both read paths are this same anti-join, just scheduled
     * differently.
     *
-    * CRASH SAFETY (review finding r11 — the old shape dropped the
-    * codes table BEFORE writing survivors, so a crash in between lost
-    * the whole index): survivors are written to a `_codes_swap` table
-    * FIRST, then the old table is dropped and the swap renamed into
-    * place. A complete codes table therefore exists on disk at every
-    * instant; the only crash window leaves a finished `_codes_swap`
-    * beside (or instead of) the old `_codes`, and [[healSwap]] —
-    * invoked by both [[delete]] and [[load]] — completes the rename on
-    * the next touch.
-    *
+    * Crash safety is [[rewriteCodes]]'s swap-rename discipline.
     * Idempotent: deleting an absent vec_id is a no-op; a replayed
     * delete finds nothing left to remove.
     */
-  def delete(spark: org.apache.spark.sql.SparkSession, name: String,
-             tombstones: DataFrame, nBuckets: Int = 8): Unit = {
+  def delete(spark: SparkSession, name: String, tombstones: DataFrame,
+             nBuckets: Int = 8): Unit = {
     healSwap(spark, name)
-    // fold any streamed-ingest partitions into the rewrite (compaction
-    // at takedown): the swap then carries the WHOLE surviving index,
-    // and completing the swap drops the folded ingest table
-    val codesBase = spark.table(s"${name}_codes")
-    val codes =
-      if (spark.catalog.tableExists(s"${name}_codes_ingest")) {
-        // ingest-wins on vec_id (the [[compact]] precedence): a
-        // re-ingested vector's base codes must not survive the fold
-        val ingD = spark.table(s"${name}_codes_ingest").drop("ingest_batch")
-        codesBase.join(ingD.select(col("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-          .unionByName(ingD)
-      } else codesBase
-    // the rewrite must PRESERVE the saved layout: read the table's own
-    // bucket spec rather than trusting this call's default — a delete
-    // against an index saved with a different bucket count would
-    // otherwise silently degrade the Exchange-free-scan contract
-    // (review finding r11); `nBuckets` is only the fallback for a
-    // spec-less table
-    val actualBuckets = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser
-        .parseTableIdentifier(s"${name}_codes"))
-      .bucketSpec.map(_.numBuckets).getOrElse(nBuckets)
-    // write survivors to the swap table first — the read side is the
-    // live `_codes` scan (no overwrite-read cycle, so no checkpoint
-    // pin), and the live table stays intact until the swap is complete
-    val kept = codes.join(
+    rewriteCodes(spark, name, nBuckets)(_.join(
       broadcast(tombstones.select(col("vec_id")).distinct()),
-      Seq("vec_id"), "left_anti")
-    graft.sources.Sources.dropManagedTable(spark, s"${name}_codes_swap")
-    graft.sources.Sources.writeBucketed(kept, s"${name}_codes_swap",
-      "vec_id", actualBuckets, sortCols = Seq("vec_id"))
-    // the ingest table (already folded into the swap) drops BEFORE the
-    // old codes table: every crash window from here leaves the swap on
-    // disk, so healSwap completes the rename — the old ordering
-    // (rename first, ingest drop last) had a window where a crash left
-    // the folded ingest rows served TWICE (once from the renamed
-    // codes, once from the not-yet-dropped ingest table) with no swap
-    // left to trigger the heal
-    graft.sources.Sources.dropManagedTable(spark, s"${name}_codes_ingest")
-    graft.sources.Sources.dropManagedTable(spark, s"${name}_codes")
-    spark.sql(s"ALTER TABLE ${name}_codes_swap RENAME TO ${name}_codes")
+      Seq("vec_id"), "left_anti"))
   }
 
   /** COMPACTION — fold the streamed ingest delta into the
-    * vec_id-bucketed codes table: [[delete]] with an empty tombstone
-    * set, structurally — the same swap-rename crash discipline, the
-    * same layout preservation (the rewrite reads the table's own
-    * bucket spec), no anti-join. A bucketed table has no partition
-    * directories to fold into, so PQ's unit of atomicity is the
-    * whole-table rename ([[graft.sources.Compaction]] is the
-    * partition-pruned fold the cid/kp-partitioned families use);
-    * after the fold, serving is one Exchange-free bucketed scan again
-    * and the per-trigger ingest files are gone. Codebooks never
-    * change — compaction is a storage fold, not a re-encode.
+    * vec_id-bucketed codes table: [[delete]] with no tombstones,
+    * structurally — the same swap-rename crash discipline, the same
+    * layout preservation, no anti-join. A bucketed table has no
+    * partition directories to fold into, so PQ's unit of atomicity is
+    * the whole-table rename ([[IndexTables.fold]] is the
+    * partition-pruned fold the partitioned families use); after the
+    * fold, serving is one Exchange-free bucketed scan again and the
+    * per-trigger ingest files are gone. No ingest table, or an empty
+    * one, is a no-op. Codebooks never change — compaction is a storage
+    * fold, not a re-encode.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, name: String,
-              nBuckets: Int = 8): Unit = {
+  def compact(spark: SparkSession, name: String, nBuckets: Int = 8): Unit = {
     healSwap(spark, name)
-    if (!spark.catalog.tableExists(s"${name}_codes_ingest")) return
-    val ing = spark.table(s"${name}_codes_ingest").drop("ingest_batch")
-    if (ing.isEmpty) return
-    val base = spark.table(s"${name}_codes")
-    // ingest-wins on vec_id: replay-idempotent however many times a
-    // crashed fold re-runs, and a re-ingested vector replaces its old
-    // codes instead of doubling
-    val kept = base.join(ing.select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-      .unionByName(ing.select(base.columns.map(col): _*))
-    val actualBuckets = spark.sessionState.catalog
+    val ing = IndexTables.ingest(codesTable(name))
+    if (spark.catalog.tableExists(ing) && !spark.table(ing).isEmpty)
+      rewriteCodes(spark, name, nBuckets)(identity)
+  }
+
+  /** The swap-rename rewrite behind [[delete]] and [[compact]]: the
+    * served rows (base ∪ ingest, ingest-wins on vec_id — replay-
+    * idempotent, and a re-ingested vector replaces its old codes
+    * instead of doubling) pass through `keep` into the swap table.
+    *
+    * The rewrite PRESERVES the saved layout: it reads the table's own
+    * bucket spec rather than trusting this call's default (`nBuckets` is
+    * only the fallback for a spec-less table).
+    *
+    * CRASH SAFETY: survivors are written to `<name>_codes_swap` FIRST,
+    * then the old table is dropped and the swap renamed into place
+    * ([[finishSwap]]). A complete codes table therefore exists on disk
+    * at every instant; the only crash window leaves a finished swap
+    * beside (or instead of) the old codes, and [[healSwap]] — invoked
+    * by [[delete]], [[compact]] and [[load]] — completes the rename on
+    * the next touch.
+    */
+  private def rewriteCodes(spark: SparkSession, name: String, nBuckets: Int)(
+      keep: DataFrame => DataFrame): Unit = {
+    val t = codesTable(name)
+    val base = spark.table(t)
+    val ing = IndexTables.ingest(t)
+    val all =
+      if (spark.catalog.tableExists(ing)) {
+        val d = spark.table(ing).drop("ingest_batch")
+        base.join(d.select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
+          .unionByName(d)
+      } else base
+    val buckets = spark.sessionState.catalog
       .getTableMetadata(spark.sessionState.sqlParser
-        .parseTableIdentifier(s"${name}_codes"))
+        .parseTableIdentifier(t))
       .bucketSpec.map(_.numBuckets).getOrElse(nBuckets)
-    graft.sources.Sources.dropManagedTable(spark, s"${name}_codes_swap")
-    graft.sources.Sources.writeBucketed(kept, s"${name}_codes_swap",
-      "vec_id", actualBuckets, sortCols = Seq("vec_id"))
-    graft.sources.Sources.dropManagedTable(spark, s"${name}_codes_ingest")
-    graft.sources.Sources.dropManagedTable(spark, s"${name}_codes")
-    spark.sql(s"ALTER TABLE ${name}_codes_swap RENAME TO ${name}_codes")
+    // the read side is the live codes scan (no overwrite-read cycle, so
+    // no checkpoint pin), and the live table stays intact until the
+    // swap is complete
+    Sources.dropManagedTable(spark, IndexTables.swap(t))
+    Sources.writeBucketed(keep(all), IndexTables.swap(t), "vec_id", buckets,
+      sortCols = Seq("vec_id"))
+    finishSwap(spark, name)
   }
 
-  /** Complete a [[delete]] interrupted between its drop and rename: if
-    * the swap table exists, it is a FINISHED survivor set (with any
-    * ingest rows already folded in) — rename it into place, dropping
-    * any half-state old table and the now-folded ingest table. No swap
-    * → no-op.
+  /** Complete an interrupted [[rewriteCodes]]: if the swap table
+    * exists, it is a FINISHED survivor set (with any ingest rows already
+    * folded in) — rename it into place. No swap → no-op.
     */
-  private def healSwap(spark: org.apache.spark.sql.SparkSession,
-                       name: String): Unit =
-    if (spark.catalog.tableExists(s"${name}_codes_swap")) {
-      // same ordering as the writers: ingest (already folded into the
-      // swap) first, so no crash point inside the heal itself leaves
-      // folded rows served twice
-      graft.sources.Sources.dropManagedTable(spark, s"${name}_codes_ingest")
-      graft.sources.Sources.dropManagedTable(spark, s"${name}_codes")
-      spark.sql(s"ALTER TABLE ${name}_codes_swap RENAME TO ${name}_codes")
-    }
+  private def healSwap(spark: SparkSession, name: String): Unit =
+    if (spark.catalog.tableExists(IndexTables.swap(codesTable(name))))
+      finishSwap(spark, name)
 
-  /** Create the EXACTLY-ONCE streaming-append side table for a [[save]]d
-    * index if it does not exist: `<name>_codes_ingest`, the codes schema
-    * plus an `ingest_batch` hive partition column. Each trigger lands in
-    * its own partition via [[ingestBatch]], so a replayed/duplicated
-    * trigger rewrites ITS OWN partition with identical rows — the write
-    * IS the commit, nothing is appended twice (the q234
-    * per-batch-overwrite discipline applied to the catalog). Serving
-    * ([[load]]) unions this table with the base codes; [[delete]]
-    * compacts it away.
+  /** Drop the ingest table (already folded into the swap) BEFORE the
+    * old codes table, then rename the swap into place: every crash
+    * window leaves the swap on disk, so [[healSwap]] completes the
+    * rename — dropping the ingest table last would leave a window where
+    * the folded ingest rows are served TWICE with no swap left to
+    * trigger the heal.
     */
-  def ensureIngestTable(spark: org.apache.spark.sql.SparkSession,
-                        name: String): Unit =
-    if (!spark.catalog.tableExists(s"${name}_codes_ingest")) {
-      import org.apache.spark.sql.types._
-      // a location left behind by a previous PROCESS (the catalog is
-      // per-JVM, the warehouse directory is not) blocks the create —
-      // the dropManagedTable stale-location contract clears it
-      graft.sources.Sources.dropManagedTable(spark, s"${name}_codes_ingest")
-      val schema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("codes", ArrayType(IntegerType)),
-        StructField("ingest_batch", LongType)))
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          schema)
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("ingest_batch")
-        .saveAsTable(s"${name}_codes_ingest")
-    }
-
-  /** Idempotent per-trigger append: write `codes` (vec_id, codes) into
-    * the ingest table's `ingest_batch = batchId` partition through
-    * dynamic partition overwrite. Re-delivery of a batch (failure/retry
-    * replay — Structured Streaming's at-least-once foreachBatch
-    * contract) overwrites the same partition with the same rows, so the
-    * stored state is bit-identical however many times a trigger fires:
-    * effectively exactly-once without a transaction log.
-    */
-  def ingestBatch(codes: DataFrame, name: String, batchId: Long): Unit = {
-    val spark = codes.sparkSession
-    val t = s"${name}_codes_ingest"
-    val cols = spark.table(t).columns
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try codes.withColumn("ingest_batch", lit(batchId))
-      .select(cols.map(col): _*)
-      .write.mode("overwrite").insertInto(t)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+  private def finishSwap(spark: SparkSession, name: String): Unit = {
+    val t = codesTable(name)
+    Sources.dropManagedTable(spark, IndexTables.ingest(t))
+    Sources.dropManagedTable(spark, t)
+    spark.sql(s"ALTER TABLE ${IndexTables.swap(t)} RENAME TO $t")
   }
+
+  /** Create the exactly-once ingest table `<name>_codes_ingest` for a
+    * [[save]]d index if absent ([[IndexTables.ensureIngest]]). Serving
+    * ([[load]]) unions it with the base codes; [[compact]] and
+    * [[delete]] fold it away.
+    */
+  def ensureIngestTable(spark: SparkSession, name: String): Unit =
+    IndexTables.ensureIngest(spark, codesTable(name))
+
+  /** Idempotent per-trigger append of `codes` (vec_id, codes) into the
+    * `ingest_batch = batchId` partition ([[IndexTables.ingestBatch]]):
+    * re-delivery of a batch (failure/retry replay — Structured
+    * Streaming's at-least-once foreachBatch contract) overwrites the
+    * same partition with the same rows.
+    */
+  def ingestBatch(codes: DataFrame, name: String, batchId: Long): Unit =
+    IndexTables.ingestBatch(codes, codesTable(name), batchId)
 
   /** Reload a [[save]]d index: (model, codes). The codes DataFrame IS
     * the bucketed table scan — unioned with the exactly-once ingest
@@ -403,8 +348,7 @@ object PQ {
     * corpus-side encoder); a fresh session sees the tables through the
     * shared catalog.
     */
-  def load(spark: org.apache.spark.sql.SparkSession,
-           name: String): (Model, DataFrame) = {
+  def load(spark: SparkSession, name: String): (Model, DataFrame) = {
     healSwap(spark, name)
     val rows = spark.table(s"${name}_codebooks").collect()
     require(rows.nonEmpty, s"no codebooks found in table ${name}_codebooks")
@@ -413,12 +357,6 @@ object PQ {
     val dsub = rows.map(_.getInt(2)).max + 1
     val cb = Array.fill(m, ks, dsub)(0.0)
     rows.foreach(r => cb(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
-    val codes = spark.table(s"${name}_codes")
-    val served =
-      if (spark.catalog.tableExists(s"${name}_codes_ingest"))
-        codes.unionByName(
-          spark.table(s"${name}_codes_ingest").drop("ingest_batch"))
-      else codes
-    (Model(cb), served)
+    (Model(cb), IndexTables.serve(spark, codesTable(name)))
   }
 }

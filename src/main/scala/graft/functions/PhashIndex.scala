@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.IndexTables
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** PERSISTED perceptual-hash near-duplicate IMAGE index — the
   * [[DedupIndex]] lifecycle (build → persist → probe from a fresh
@@ -68,27 +70,21 @@ object PhashIndex {
   def encode(hashes: DataFrame, maxHamming: Int): DataFrame =
     withCp(graft.operators.Multimodal.hashChunks(hashes, maxHamming))
 
+  /** The cp-partitioned chunks table of index `name`. */
+  private[graft] def chunks(name: String) =
+    IndexTables.Partitioned(s"${name}_chunks", "cp", "id")
+
   /** Build and persist the index over `hashes`: the cp-partitioned
-    * chunks table plus the one-row `<name>_meta` parameter table.
-    * Idempotent across processes; a fresh save also clears any prior
-    * ingest state — stale streamed partitions must never survive into
-    * a rebuilt index.
+    * chunks table (one file per cp directory) plus the one-row
+    * `<name>_meta` parameter table. Idempotent across processes; a
+    * fresh save also clears any prior ingest state.
     */
   def save(hashes: DataFrame, name: String, maxHamming: Int = 4): Unit = {
     val spark = hashes.sparkSession
     import spark.implicits._
-    Seq(s"${name}_chunks", s"${name}_meta", s"${name}_chunks_ingest")
-      .foreach(graft.sources.Sources.dropManagedTable(spark, _))
-    // route rows to their cp owner before the write — one file per
-    // partition directory, not one per (task × directory)
-    encode(hashes, maxHamming)
-      .repartition(col("cp"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("cp").saveAsTable(s"${name}_chunks")
-    Seq(maxHamming).toDF("max_hamming")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_meta")
+    IndexTables.dropForSave(spark, chunks(name).base, s"${name}_meta")
+    IndexTables.writePartitioned(encode(hashes, maxHamming), chunks(name))
+    IndexTables.writeSmall(Seq(maxHamming).toDF("max_hamming"), s"${name}_meta")
   }
 
   /** The persisted chunking parameter: max_hamming. */
@@ -100,18 +96,10 @@ object PhashIndex {
 
   /** The full chunk view a probe serves from: the base table unioned
     * with the exactly-once ingest side table's rows when one exists.
-    * Heals any interrupted compact first — no probe ever serves the
-    * fold's duplicate window.
+    * Heals any interrupted [[compact]] first.
     */
-  def loadChunks(spark: SparkSession, name: String): DataFrame = {
-    graft.sources.Compaction.healFold(spark, s"${name}_chunks",
-      s"${name}_chunks_ingest", "cp", "id")
-    val base = spark.table(s"${name}_chunks")
-    if (spark.catalog.tableExists(s"${name}_chunks_ingest"))
-      base.unionByName(
-        spark.table(s"${name}_chunks_ingest").drop("ingest_batch"))
-    else base
-  }
+  def loadChunks(spark: SparkSession, name: String): DataFrame =
+    IndexTables.serve(spark, chunks(name))
 
   /** Near-duplicate lookup of `queryHashes` (id, h_lo, h_hi) against
     * the persisted index: `(query_id, corpus_id, hamming)` for every
@@ -126,16 +114,11 @@ object PhashIndex {
     val maxHamming = params(spark, name)
     val qc = encode(queryHashes, maxHamming).localCheckpoint(true)
     val cps = qc.select(col("cp")).distinct().collect().map(_.getLong(0))
+    // the empty result is typed like a probe of perceptualHashes output,
+    // whose never-null ids keep query_id NOT NULL through the checkpoint
     if (cps.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("corpus_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("hamming",
-            org.apache.spark.sql.types.LongType))))
+      return spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType.fromDDL("query_id BIGINT NOT NULL, corpus_id BIGINT, hamming BIGINT"))
     val idx = loadChunks(spark, name)
       .where(col("cp").isin(cps.map(java.lang.Long.valueOf): _*))
     qc.select(col("id").as("query_id"), col("h_lo").as("qlo"),
@@ -155,97 +138,43 @@ object PhashIndex {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Create the EXACTLY-ONCE streaming-append side table if absent:
-    * the chunks schema plus an `ingest_batch` hive partition column —
-    * each trigger lands in its own partition via [[ingestBatch]], so a
-    * replayed trigger rewrites ITS OWN partition with identical rows.
+  /** Create the exactly-once ingest table `<name>_chunks_ingest` if
+    * absent ([[IndexTables.ensureIngest]]).
     */
   def ensureIngestTable(spark: SparkSession, name: String): Unit =
-    if (!spark.catalog.tableExists(s"${name}_chunks_ingest")) {
-      import org.apache.spark.sql.types._
-      graft.sources.Sources.dropManagedTable(spark, s"${name}_chunks_ingest")
-      val schema = StructType(Seq(
-        StructField("id", LongType),
-        StructField("h_lo", LongType),
-        StructField("h_hi", LongType),
-        StructField("band", IntegerType),
-        StructField("chunk", LongType),
-        StructField("cp", LongType),
-        StructField("ingest_batch", LongType)))
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          schema)
-        .write.mode("overwrite").format("parquet")
-        .partitionBy("ingest_batch")
-        .saveAsTable(s"${name}_chunks_ingest")
-    }
+    IndexTables.ensureIngest(spark, chunks(name).base)
 
-  /** Idempotent per-trigger append: `rows` ([[encode]]d chunk rows)
-    * land in the `ingest_batch = batchId` partition through dynamic
-    * partition overwrite — re-delivery rewrites the same partition
-    * with the same rows.
+  /** Idempotent per-trigger append of [[encode]]d chunk `rows` into the
+    * `ingest_batch = batchId` partition ([[IndexTables.ingestBatch]]).
     */
-  def ingestBatch(rows: DataFrame, name: String, batchId: Long): Unit = {
-    val spark = rows.sparkSession
-    val t = s"${name}_chunks_ingest"
-    val cols = spark.table(t).columns
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rows.withColumn("ingest_batch", lit(batchId))
-      .select(cols.map(col): _*)
-      .repartition(1)
-      .write.mode("overwrite").insertInto(t)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def ingestBatch(rows: DataFrame, name: String, batchId: Long): Unit =
+    IndexTables.ingestBatch(rows, chunks(name).base, batchId)
 
   /** COMPACTION — fold the streamed ingest delta into the
-    * cp-partitioned chunks table through the shared marker-scoped,
-    * crash-safe, partition-pruned fold ([[graft.sources.Compaction]]):
-    * probes go back to a purely cp-pruned scan with no whole-delta
-    * side read. The chunking never changes — compaction is a storage
-    * fold.
+    * cp-partitioned chunks table ([[IndexTables.fold]]): probes go back
+    * to a purely cp-pruned scan with no whole-delta side read. The
+    * chunking never changes — compaction is a storage fold.
     */
   def compact(spark: SparkSession, name: String): Unit =
-    graft.sources.Compaction.foldIngest(spark, s"${name}_chunks",
-      s"${name}_chunks_ingest", "cp", "id")
+    IndexTables.fold(spark, chunks(name))
 
   /** DELETE maintenance — the takedown half of the lifecycle,
-    * genuinely partition-pruned: the tombstoned images' chunk rows are
-    * RECOMPUTED from their hashes through the persisted chunking, so
-    * the cp partitions their index rows live in are known exactly
-    * (≤ [[CP]] driver values); only those are read and rewritten
-    * through dynamic partition overwrite, fully-emptied partitions
-    * DDL-dropped FIRST. The ingest side table gets the same treatment
-    * keyed by its own partition column.
+    * genuinely partition-pruned ([[IndexTables.delete]]): the tombstoned
+    * images' chunk rows are RECOMPUTED from their hashes through the
+    * persisted chunking, so the cp partitions their index rows live in
+    * are known exactly (≤ [[CP]] driver values); only those are read and
+    * rewritten, fully-emptied partitions DDL-dropped first. The ingest
+    * batches the tombstones landed in get the same rewrite.
     *
     * CONTRACT: `tombstoneHashes` carries the hashes AS INDEXED. A
-    * takedown with no surviving hash falls back to the full-scan
-    * rewrite: pass `pruned = false`. Idempotent: deleting an absent
-    * image finds nothing to remove.
+    * takedown with no surviving hash passes `pruned = false`: the
+    * affected partitions are then found by a semi-join over the whole
+    * chunks table. Idempotent: deleting an absent image finds nothing
+    * to remove.
     */
   def delete(spark: SparkSession, name: String, tombstoneHashes: DataFrame,
-             pruned: Boolean = true): Unit = {
-    val maxHamming = params(spark, name)
-    val tombIds = broadcast(
-      tombstoneHashes.select(col("id").cast("long").as("id")).distinct())
-    val affCps: Option[Array[Number]] =
-      if (pruned)
-        Some(encode(tombstoneHashes, maxHamming)
-          .select(col("cp")).distinct().collect()
-          .map(r => java.lang.Long.valueOf(r.getLong(0)): Number))
-      else None
-    TableRewrite.rewritePartitioned(spark, s"${name}_chunks", "cp", "id",
-      tombIds, affCps)
-    if (spark.catalog.tableExists(s"${name}_chunks_ingest")) {
-      val affBatches = spark.table(s"${name}_chunks_ingest")
-        .join(tombIds, Seq("id"), "left_semi")
-        .select(col("ingest_batch")).distinct().collect().map(_.getLong(0))
-      if (affBatches.nonEmpty)
-        TableRewrite.rewritePartitioned(spark, s"${name}_chunks_ingest",
-          "ingest_batch", "id", tombIds,
-          Some(affBatches.map(java.lang.Long.valueOf(_): Number)))
-    }
-  }
+             pruned: Boolean = true): Unit =
+    IndexTables.delete(spark, chunks(name),
+      broadcast(tombstoneHashes.select(col("id").cast("long").as("id")).distinct()),
+      if (pruned) Some(encode(tombstoneHashes, params(spark, name))) else None)
 }

@@ -1110,148 +1110,106 @@ object StreamingOps {
     }
   }
 
+  /** THE streaming ingest loop behind the persisted-index harnesses
+    * ([[replayPqIngest]], [[replayIvfIngest]], [[replayDedupIngest]],
+    * [[replayPhashIngest]]): `feed` is collected, sorted by its first
+    * (id) column and [[replay]]ed in `nBatches` triggers. Each trigger
+    * ENCODES only its own batch through the index's frozen model or
+    * persisted hash family — a per-batch BATCH computation
+    * (foreachBatch hands over a plain DataFrame), exactly the bulk
+    * build's pipeline; the model is never refit in-stream — and lands
+    * the rows in its own `ingest_batch = batchId` partition of `base`'s
+    * ingest table ([[graft.sources.IndexTables.ingestBatch]]).
+    * foreachBatch is at-least-once under failure/retry, but a
+    * re-delivered trigger REWRITES its own partition with identical
+    * rows — the write is the commit, so the stored state is
+    * EXACTLY-ONCE however many times a batch fires.
+    */
+  private def replayIndexIngest(base: String, feed: DataFrame, nBatches: Int)(
+      encode: DataFrame => DataFrame): Unit = {
+    val spark = feed.sparkSession
+    implicit val rowEnc: Encoder[Row] = Encoders.row(feed.schema)
+    val rows = feed.collect()
+    rows.sortInPlaceBy(_.getLong(0))
+    graft.sources.IndexTables.ensureIngest(spark, base)
+    replay(spark, Some(8), rows, nBatches) { (_, in) =>
+      in.writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          graft.sources.IndexTables.ingestBatch(encode(df), base, batchId)
+        }
+    } { _ => () }
+  }
+
+  /** (vec_id, embedding) rows of `vecs` — the vector indexes' feed. */
+  private def vectorFeed(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").cast("long"),
+      col("embedding").cast("array<double>").as("embedding"))
+
   /** Streaming ingest into the PERSISTED PQ index — q193's streaming
     * ANN state taken to its deployment conclusion (build once, persist,
     * ingest continuously, serve from the reloaded table): new vectors
     * stream through the FROZEN codebooks ([[graft.functions.PQ.index]]'s
-    * encode projection — the model is never retrained in-stream, the
-    * standard IVF/PQ ingest contract) and each trigger lands its codes
-    * in the `ingest_batch = batchId` partition of the
-    * `<name>_codes_ingest` side table through dynamic partition
-    * overwrite ([[graft.functions.PQ.ingestBatch]]). foreachBatch is
-    * at-least-once under failure/retry, but a re-delivered trigger
-    * REWRITES its own partition with the identical rows — the write is
-    * the commit, so the stored state is EXACTLY-ONCE however many
-    * times a batch fires (the r11 at-least-once caveat closed;
-    * [[replayHyperballRounds]]' per-batch-overwrite discipline applied
-    * to a catalog table). Serving unions the side table through
-    * [[graft.functions.PQ.load]]; [[graft.functions.PQ.delete]]
-    * compacts it back into the bucketed base. The encode projection
-    * and the idempotent append are the things under test.
+    * encode projection — the standard IVF/PQ ingest contract) into the
+    * `<name>_codes_ingest` side table, exactly-once per trigger
+    * ([[replayIndexIngest]]). Serving unions the side table through
+    * [[graft.functions.PQ.load]]; [[graft.functions.PQ.compact]] and
+    * [[graft.functions.PQ.delete]] fold it back into the bucketed base.
     */
   def replayPqIngest(newVecs: DataFrame, model: graft.functions.PQ.Model,
-                     name: String, nBatches: Int = 3): Unit = {
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    val rows = newVecs.select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect()
-    rows.sortInPlaceBy(_._1)
-    graft.functions.PQ.ensureIngestTable(spark, name)
-    replay(spark, Some(8), rows, nBatches) { (_, in) =>
-      graft.functions.PQ.index(in.toDF("vec_id", "embedding"), model)
-        .writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          graft.functions.PQ.ingestBatch(df, name, batchId)
-        }
-    } { _ => () }
-  }
+                     name: String, nBatches: Int = 3): Unit =
+    replayIndexIngest(graft.functions.PQ.codesTable(name), vectorFeed(newVecs),
+      nBatches)(graft.functions.PQ.index(_, model))
 
-  /** Streaming ingest into the PERSISTED IVF index —
-    * [[replayPqIngest]]'s loop for the cell-probing family: new vectors
-    * stream through the FROZEN centroids
-    * ([[graft.functions.IVF.index]]'s shuffle-free assignment
-    * projection — the model is never refit in-stream) and each trigger
-    * lands its assigned rows in the `ingest_batch = batchId` partition
-    * of `<name>_cells_ingest` through dynamic partition overwrite
-    * ([[graft.functions.IVF.ingestBatch]]) — exactly-once stored state
-    * under foreachBatch's at-least-once delivery. Serving unions the
-    * side table through [[graft.functions.IVF.load]];
+  /** Streaming ingest into the PERSISTED IVF index: new vectors stream
+    * through the FROZEN centroids ([[graft.functions.IVF.index]]'s
+    * shuffle-free assignment projection) into `<name>_cells_ingest`,
+    * exactly-once per trigger ([[replayIndexIngest]]). Serving unions
+    * the side table through [[graft.functions.IVF.load]];
+    * [[graft.functions.IVF.compact]] folds it into the cells and
     * [[graft.functions.IVF.delete]] prunes it by batch.
     */
   def replayIvfIngest(newVecs: DataFrame, model: graft.functions.IVF.Model,
-                      name: String, nBatches: Int = 3): Unit = {
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    val rows = newVecs.select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect()
-    rows.sortInPlaceBy(_._1)
-    graft.functions.IVF.ensureIngestTable(spark, name)
-    replay(spark, Some(8), rows, nBatches) { (_, in) =>
-      graft.functions.IVF.index(in.toDF("vec_id", "embedding"), model)
-        .writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          graft.functions.IVF.ingestBatch(df, name, batchId)
-        }
-    } { _ => () }
-  }
+                      name: String, nBatches: Int = 3): Unit =
+    replayIndexIngest(graft.functions.IVF.cells(name).base, vectorFeed(newVecs),
+      nBatches)(graft.functions.IVF.index(_, model))
 
-  /** Streaming ingest into the PERSISTED dedup index —
-    * [[replayPqIngest]]'s discipline applied to the MinHash-LSH bucket
-    * table: new documents stream in, each trigger ENCODES its batch
-    * through the index's persisted hash family
-    * ([[graft.functions.DedupIndex.encode]] with the `<name>_meta`
-    * parameters — the family is never re-derived in-stream) and lands
-    * the signature rows in the `ingest_batch = batchId` partition of
-    * `<name>_buckets_ingest` through dynamic partition overwrite. A
-    * re-delivered trigger rewrites its own partition with identical
-    * rows — exactly-once stored state without a transaction log.
-    * Serving unions the side table through
+  /** Streaming ingest into the PERSISTED dedup index: new documents
+    * stream in and each trigger encodes its batch through the index's
+    * persisted hash family ([[graft.functions.DedupIndex.encode]] with
+    * the `<name>_meta` parameters — a document's signature comes from
+    * its own shingles only, exactly as the bulk build's) into
+    * `<name>_buckets_ingest`, exactly-once per trigger
+    * ([[replayIndexIngest]]). Serving unions the side table through
     * [[graft.functions.DedupIndex.loadBuckets]];
-    * [[graft.functions.DedupIndex.delete]] prunes it by batch. The
-    * frozen-family encode and the idempotent append are the things
-    * under test.
+    * [[graft.functions.DedupIndex.compact]] folds it into the buckets.
     */
   def replayDedupIngest(newDocs: DataFrame, name: String,
                         nBatches: Int = 3): Unit = {
-    val spark = newDocs.sparkSession
-    import spark.implicits._
     val (n, bands, rowsPerBand) =
-      graft.functions.DedupIndex.params(spark, name)
-    val rows = newDocs.select(col("doc_id").cast("long"),
-        coalesce(col("text"), lit("")))
-      .as[(Long, String)].collect()
-    rows.sortInPlaceBy(_._1)
-    graft.functions.DedupIndex.ensureIngestTable(spark, name)
-    replay(spark, Some(8), rows, nBatches) { (_, in) =>
-      in.toDF("doc_id", "text")
-        .writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // the signature aggregation is a per-batch BATCH computation
-          // (foreachBatch hands us a plain DataFrame) — streaming-side
-          // state would be wrong here: a document's signature must come
-          // from its own shingles only, exactly as the bulk build's
-          graft.functions.DedupIndex.ingestBatch(
-            graft.functions.DedupIndex.encode(df, n, bands, rowsPerBand),
-            name, batchId)
-        }
-    } { _ => () }
+      graft.functions.DedupIndex.params(newDocs.sparkSession, name)
+    replayIndexIngest(graft.functions.DedupIndex.buckets(name).base,
+      newDocs.select(col("doc_id").cast("long"),
+        coalesce(col("text"), lit("")).as("text")),
+      nBatches)(graft.functions.DedupIndex.encode(_, n, bands, rowsPerBand))
   }
 
-  /** Streaming ingest into the persisted perceptual-hash image index
-    * — [[replayDedupIngest]]'s exactly-once loop for the multimodal
-    * family: new image ids stream through; each trigger DECODES AND
-    * HASHES only its own batch's images through the index's persisted
-    * chunking (the payload bytes are touched exactly once,
-    * per-partition, never shuffled) and lands the chunk rows in its own
-    * `ingest_batch` partition via dynamic partition overwrite — a
-    * replayed trigger rewrites its own partition with identical rows,
-    * so the stored state is bit-identical however many times a trigger
-    * fires.
+  /** Streaming ingest into the persisted perceptual-hash image index:
+    * new image ids stream through; each trigger DECODES AND HASHES only
+    * its own batch's images through the index's persisted chunking (the
+    * payload bytes are touched exactly once, per-partition, never
+    * shuffled) into `<name>_chunks_ingest`, exactly-once per trigger
+    * ([[replayIndexIngest]]).
     */
   def replayPhashIngest(newDocs: DataFrame, name: String,
                         nBatches: Int = 3): Unit = {
-    val spark = newDocs.sparkSession
-    import spark.implicits._
-    val maxHamming = graft.functions.PhashIndex.params(spark, name)
-    val ids = newDocs.select(col("doc_id").cast("long")).as[Long].collect()
-    scala.util.Sorting.quickSort(ids)
-    graft.functions.PhashIndex.ensureIngestTable(spark, name)
-    replay(spark, Some(8), ids, nBatches) { (_, in) =>
-      in.toDF("doc_id")
-        .writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // hashing is a per-batch BATCH computation over the batch's
-          // own images only — exactly the bulk build's pipeline
-          graft.functions.PhashIndex.ingestBatch(
-            graft.functions.PhashIndex.encode(
-              graft.operators.Multimodal.perceptualHashes(
-                graft.operators.Multimodal.syntheticImages(df).toDF()),
-              maxHamming),
-            name, batchId)
-        }
-    } { _ => () }
+    val maxHamming = graft.functions.PhashIndex.params(newDocs.sparkSession, name)
+    replayIndexIngest(graft.functions.PhashIndex.chunks(name).base,
+      newDocs.select(col("doc_id").cast("long")), nBatches) { df =>
+      graft.functions.PhashIndex.encode(
+        graft.operators.Multimodal.perceptualHashes(
+          graft.operators.Multimodal.syntheticImages(df).toDF()),
+        maxHamming)
+    }
   }
 
   /** Streaming HLL++ distinct-count parity — the sketch-as-streaming-

@@ -78,6 +78,9 @@ class DedupIndexSpec extends SparkTestBase {
     DedupIndex.ingestBatch(enc, "graft_didx_ing", 0L)
     assert(state().toSeq == once.toSeq)
     assert(once.length == enc.count())
+    // one file per trigger: the banding union's task fan-out collapses
+    val files = parquetFilesPerBatch("graft_didx_ing_buckets_ingest")
+    assert(files == Map("ingest_batch=0" -> 1), files)
     // serving through the union equals a one-shot index of base ∪ batch
     DedupIndex.save(base.unionByName(batch), "graft_didx_oneshot")
     val viaIngest = DedupIndex.probe(spark, "graft_didx_ing", queries,
@@ -166,8 +169,13 @@ class DedupIndexSpec extends SparkTestBase {
     // a query batch whose every doc is too short to shingle → no
     // partitions to read, empty result, no crash
     val shorts = Seq((900L, "single")).toDF("doc_id", "text")
-    assert(DedupIndex.probe(spark, "graft_didx_degen", shorts,
-      docs.limit(20), 0.5).isEmpty)
+    val empty = DedupIndex.probe(spark, "graft_didx_degen", shorts,
+      docs.limit(20), 0.5)
+    assert(empty.isEmpty)
+    // the empty frame is typed exactly like a probe that reads partitions
+    val probed = DedupIndex.probe(spark, "graft_didx_degen", docs.limit(5),
+      docs.limit(20), 0.5)
+    assert(empty.schema == probed.schema, s"${empty.schema} vs ${probed.schema}")
     // deleting a shingle-less doc touches nothing
     val before = spark.table("graft_didx_degen_buckets").count()
     DedupIndex.delete(spark, "graft_didx_degen", shorts)

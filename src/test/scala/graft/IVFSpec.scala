@@ -166,6 +166,9 @@ class IVFSpec extends SparkTestBase {
     // through load (the exactly-once side table, not raw appends)
     graft.streaming.StreamingOps.replayPqIngest(
       tombVecs, model, "graft_pq_del_spec", nBatches = 2)
+    // one ingest file per trigger
+    val files = parquetFilesPerBatch("graft_pq_del_spec_codes_ingest")
+    assert(files.size == 2 && files.values.forall(_ == 1), files)
     // read through a fresh session: the appends came from another
     // session, and this one's cached table relation would be stale
     assert(codeSet(PQ.load(spark.newSession(), "graft_pq_del_spec")._2) ==
@@ -244,6 +247,9 @@ class IVFSpec extends SparkTestBase {
     IVF.save(model, IVF.index(base, model), "graft_ivf_ing_spec")
     graft.streaming.StreamingOps.replayIvfIngest(batch, model,
       "graft_ivf_ing_spec", nBatches = 2)
+    // one ingest file per trigger
+    val files = parquetFilesPerBatch("graft_ivf_ing_spec_cells_ingest")
+    assert(files.size == 2 && files.values.forall(_ == 1), files)
     def cellSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cid"))).toSet
     // served state (fresh session — the appends came from another

@@ -75,6 +75,10 @@ class PhashIndexSpec extends SparkTestBase {
       hashesOf(col("doc_id") < -1))
     assert(empty.columns.toSeq == Seq("query_id", "corpus_id", "hamming"))
     assert(empty.count() == 0)
+    // typed exactly like a probe that reads partitions
+    val probed = PhashIndex.probe(spark, "graft_pidx_meta",
+      hashesOf(col("doc_id") < 10))
+    assert(empty.schema == probed.schema, s"${empty.schema} vs ${probed.schema}")
   }
 
   test("ingest is exactly-once and the compacted index serves the identical pairs") {
@@ -112,8 +116,10 @@ class PhashIndexSpec extends SparkTestBase {
     val stored = spark.table("graft_pidx_replay_chunks_ingest")
     assert(rows(stored).toSeq == rows(bulk).toSeq)
     assert(rows(bulk).nonEmpty)
-    // default nBatches = 3: one ingest partition per trigger
+    // default nBatches = 3: one ingest partition, and one file, per trigger
     assert(stored.select("ingest_batch").distinct().count() == 3)
+    val files = parquetFilesPerBatch("graft_pidx_replay_chunks_ingest")
+    assert(files.size == 3 && files.values.forall(_ == 1), files)
   }
 
   test("delete: pruned rewrite, untouched partitions keep their files, idempotent") {
@@ -146,5 +152,31 @@ class PhashIndexSpec extends SparkTestBase {
     val after = spark.table("graft_pidx_del_chunks").count()
     PhashIndex.delete(spark, "graft_pidx_del", tomb)
     assert(spark.table("graft_pidx_del_chunks").count() == after)
+    // two images with disjoint chunk partitions: deleting one DDL-drops
+    // every cp partition it does not share with the other
+    import spark.implicits._
+    val a = Seq((1L, 0x0F0F0F0FL, 0x12345678L)).toDF("id", "h_lo", "h_hi")
+    val b = Seq((2L, 0x70F0F0F0L, 0x6543210FL)).toDF("id", "h_lo", "h_hi")
+    PhashIndex.save(a.unionByName(b), "graft_pidx_empty")
+    def cpsOf(h: org.apache.spark.sql.DataFrame) = PhashIndex.encode(h, 4)
+      .select("cp").distinct().collect().map(_.getLong(0)).toSet
+    val (aCps, bCps) = (cpsOf(a), cpsOf(b))
+    assert((aCps -- bCps).nonEmpty, "fixture must empty some partition")
+    PhashIndex.delete(spark, "graft_pidx_empty", a)
+    assert(spark.table("graft_pidx_empty_chunks")
+      .select("cp").distinct().collect().map(_.getLong(0)).toSet == bCps)
+    (aCps -- bCps).foreach(k => assert(
+      !new java.io.File(wh, s"graft_pidx_empty_chunks/cp=$k").exists(),
+      s"emptied cp=$k still on disk"))
+    // delete reaches the ingest batches, pruned by their own partition key
+    PhashIndex.ensureIngestTable(spark, "graft_pidx_empty")
+    val c = Seq((3L, 0x00FF00FFL, 0x0F00F00FL)).toDF("id", "h_lo", "h_hi")
+    PhashIndex.ingestBatch(PhashIndex.encode(c, 4), "graft_pidx_empty", 5L)
+    PhashIndex.delete(spark, "graft_pidx_empty", c)
+    assert(spark.table("graft_pidx_empty_chunks_ingest").count() == 0)
+    assert(!new java.io.File(wh,
+      "graft_pidx_empty_chunks_ingest/ingest_batch=5").exists())
+    assert(spark.table("graft_pidx_empty_chunks")
+      .select("cp").distinct().collect().map(_.getLong(0)).toSet == bCps)
   }
 }

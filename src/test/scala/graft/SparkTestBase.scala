@@ -32,4 +32,16 @@ trait SparkTestBase extends AnyFunSuite {
 
   def collectPairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Parquet files in each `ingest_batch=<b>` directory of the catalog
+    * table `table`: the one-file-per-trigger write shape of the
+    * persisted indexes' ingest tables.
+    */
+  def parquetFilesPerBatch(table: String): Map[String, Int] = {
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    new java.io.File(wh, table).listFiles
+      .filter(_.getName.startsWith("ingest_batch="))
+      .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
+      .toMap
+  }
 }
