@@ -3,7 +3,7 @@ package graft.functions
 import graft.sources.IndexTables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** PERSISTED perceptual-hash near-duplicate IMAGE index — the
   * [[DedupIndex]] lifecycle (build → persist → probe from a fresh
@@ -114,11 +114,13 @@ object PhashIndex {
     val maxHamming = params(spark, name)
     val qc = encode(queryHashes, maxHamming).localCheckpoint(true)
     val cps = qc.select(col("cp")).distinct().collect().map(_.getLong(0))
-    // the empty result is typed like a probe of perceptualHashes output,
-    // whose never-null ids keep query_id NOT NULL through the checkpoint
+    // the empty result is typed like a non-empty probe: query_id is the
+    // query's id column, so it is NOT NULL exactly when that column is
     if (cps.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](),
-        StructType.fromDDL("query_id BIGINT NOT NULL, corpus_id BIGINT, hamming BIGINT"))
+      return spark.createDataFrame(new java.util.ArrayList[Row](), StructType(Seq(
+        StructField("query_id", LongType, qc.schema("id").nullable),
+        StructField("corpus_id", LongType),
+        StructField("hamming", LongType))))
     val idx = loadChunks(spark, name)
       .where(col("cp").isin(cps.map(java.lang.Long.valueOf): _*))
     qc.select(col("id").as("query_id"), col("h_lo").as("qlo"),

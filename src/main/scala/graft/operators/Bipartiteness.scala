@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -191,7 +192,7 @@ object Bipartiteness {
       .union(edges.select(col("dst").cast("long"), col("src").cast("long")))
       .distinct()
       .cutLineage()
-    val arcs = sym.count()
+    val arcs = Lineage.rows(sym)
     if (arcs == 0)
       return Seq.empty[(Long, Long)].toDF("component", "is_bipartite")
     // one count serves the empty check and the gate

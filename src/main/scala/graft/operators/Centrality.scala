@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -57,7 +58,7 @@ object Centrality {
         .groupBy(col("s"), col("v")).agg(sum(col("msig")).as("sig"))
         .join(settled, Seq("s", "v"), "left_anti")
         .cutLineage()
-      frontierSize = nxt.count()
+      frontierSize = Lineage.rows(nxt)
       if (frontierSize > 0) {
         layers ::= nxt
         settled = settled.unionByName(nxt.select("s", "v")).cutLineage()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -112,7 +113,7 @@ object Communities {
     // survives, it IS the returned frame (ADVICE r7: the old shape
     // pinned three edge-scale tables for the session's life)
     val initIds: Seq[Int] = (sc.getPersistentRDDs.keySet -- before0).toSeq
-    var remaining = state.count()
+    var remaining = Lineage.rows(state)
     var rounds = 0
     var ownedIds: Seq[Int] = Nil
     try {
@@ -180,7 +181,7 @@ object Communities {
                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val c = edges.select(col("src").cast("long").as("x"), col("dst").cast("long").as("y"))
       .cutLineage()
-    val m = c.count()
+    val m = Lineage.rows(c)
     // sym rows ≤ 2m
     if (LocalGraph.oneTask("modularityRefine", 2 * m, oneTaskBar))
       return LocalCommunities.refineLocal(c,
@@ -381,7 +382,7 @@ object Communities {
     */
   private[graft] def connectivityRefine(g: DataFrame, labels: DataFrame): DataFrame = {
     val l = labels.select(col("id"), col("label")).cutLineage()
-    val nV = l.count() // one scalar on a checkpointed frame
+    val nV = Lineage.rows(l) // measured by the cut: no job
     val intra = g.where(col("u") =!= col("v"))
       .join(l.toDF("u", "la"), Seq("u"))
       .join(l.toDF("v", "lb"), Seq("v"))
@@ -535,7 +536,7 @@ object Communities {
     // small-diameter components — the safe default at multi-million
     // vertices. The maintenance path's affected subgraphs stay under
     // the bar and keep the cheap single-pass.
-    val nV = verts0.count()
+    val nV = Lineage.rows(verts0)
     var vcomp = (if (nV <= 2000000L) ConnectedComponents.singlePass(ccEdges)
                  else ConnectedComponents.iterative(ccEdges))
       .toDF("id", "cmp").cutLineage()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -100,7 +101,7 @@ object DegreeMetrics {
       p.select(col("u").as("id")).unionByName(p.select(col("v").as("id")))
     val touched = ends(added).unionByName(ends(removed)).distinct()
       .cutLineage()
-    trace.foreach(_ += touched.count())
+    trace.foreach(_ += Lineage.rows(touched))
     // net degrees on the touched set only; everyone else passes through
     val dAdj = ends(added).groupBy("id").agg(count(lit(1)).as("plus"))
       .join(ends(removed).groupBy("id").agg(count(lit(1)).as("minus")),

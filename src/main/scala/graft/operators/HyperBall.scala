@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -379,7 +380,7 @@ object HyperBall {
         .select(col("id") +: regCols.map(col): _*)
         .cutLineage()
       changed = changedRows.select("id")
-      trace.foreach(_ += changed.count())
+      trace.foreach(_ += Lineage.rows(changedRows))
       cur = oldT.join(changed, Seq("id"), "left_anti")
         .unionByName(changedRows)
         .cutLineage()

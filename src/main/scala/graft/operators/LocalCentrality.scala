@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * maxDepth fail-loud budget is mirrored exactly: the round path
   * errors when the layer at depth == maxDepth is non-empty, with the
   * count of exactly that layer's (source, vertex) pairs in the
-  * message.
+  * message. The output is cut, so both checks fail at the call, as on
+  * the round path.
   */
 object LocalCentrality {
 
@@ -148,10 +149,12 @@ object LocalCentrality {
         }
         out.iterator
       }
-    mode match {
+    // the cut runs the task now, so the fail-loud checks above throw at
+    // the call, as the round path's do on the driver
+    graft.Lineage.cut(mode match {
       case Stress => ds.toDF("id", "stress")
       case Betweenness => ds.toDF("id", "btw_mu")
       case Harmonic => ds.toDF("id", "close_mu")
-    }
+    })
   }
 }

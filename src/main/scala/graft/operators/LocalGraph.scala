@@ -45,15 +45,18 @@ object LocalGraph {
     * TraversalsSpec, TrianglesSpec and SummarySpec).
     *
     * A bar ≤ 0 forces the rounds without probing; otherwise one-task
-    * runs when `in` has ≤ `bar` rows. The probe is one job with no
-    * exchange: each partition stops counting after `bar + 1` rows, so
-    * above the bar its last stage reads at most P·(bar + 1) rows (stages
-    * upstream of an un-checkpointed `in` still run in full, as for
-    * `count()`). Each call logs one INFO line: operator, leg, rows (or
-    * `>bar`) and bar.
+    * runs when `in` has ≤ `bar` rows. A cut `in` ([[graft.Lineage.cut]])
+    * already carries its measured count, so the gate reads it with no
+    * job. Any other `in` is probed: one job with no exchange, in which
+    * each partition stops counting after `bar + 1` rows, so above the
+    * bar its last stage reads at most P·(bar + 1) rows (stages upstream
+    * of an un-checkpointed `in` still run in full, as for `count()`).
+    * Each call logs one INFO line: operator, leg, rows (or `>bar`) and
+    * bar.
     */
   def oneTask(op: String, in: DataFrame, bar: Long): Boolean =
-    decide(op, if (bar <= 0) None else Some(probeRows(in, bar)), bar)
+    decide(op, if (bar <= 0) None
+      else Some(graft.Lineage.rowsIfCut(in).getOrElse(probeRows(in, bar))), bar)
 
   /** [[oneTask]] for a caller that already holds the row count. */
   def oneTask(op: String, rows: Long, bar: Long): Boolean =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -61,7 +62,7 @@ private[operators] object Maintenance {
       .select(col("component")).distinct()
     val affVerts = lbl.join(affComps, Seq("component"), "left_semi")
       .select(col("id")).cutLineage()
-    trace.foreach(_ += affVerts.count())
+    trace.foreach(_ += Lineage.rows(affVerts))
     (netC, affVerts)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -55,7 +56,7 @@ object Matching {
       s"maximalMatching: vertex ids must be < $KeyBase for the exact packed edge key")
 
     var matched = List.empty[DataFrame]
-    var live = e.count()
+    var live = Lineage.rows(e)
     var r = 0
     while (live > 0 && r < maxRounds) {
       val keyed = e.withColumn("k", col("u") * KeyBase + col("v"))
@@ -80,7 +81,7 @@ object Matching {
         .join(mv.toDF("v"), Seq("v"), "left_anti")
         .select("u", "v")
         .cutLineage()
-      live = e.count()
+      live = Lineage.rows(e)
       r += 1
     }
     require(live == 0,

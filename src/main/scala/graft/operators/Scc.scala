@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -62,7 +63,7 @@ object Scc {
       return LocalGraph.sccLocal(e)
     var live = e.select(col("u").as("id")).union(e.select(col("v")))
       .distinct().cutLineage()
-    var liveCount = live.count()
+    var liveCount = Lineage.rows(live)
     if (liveCount == 0)
       return live.select(col("id"), col("id").as("scc"))
     val assigned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -79,7 +80,7 @@ object Scc {
         .union(live.join(vset, Seq("id"), "left_anti"))
         .distinct()
         .cutLineage()
-      val nTrim = trimmed.count()
+      val nTrim = Lineage.rows(trimmed)
       if (nTrim > 0) {
         assigned += trimmed.select(col("id"), col("id").as("scc"))
         live = live.join(trimmed, Seq("id"), "left_anti").cutLineage()
@@ -151,7 +152,7 @@ object Scc {
 
         val done = lab.where(col("f") === col("b"))
           .select(col("id"), col("f").as("scc")).cutLineage()
-        val nDone = done.count()
+        val nDone = Lineage.rows(done)
         require(nDone > 0, "scc: no component peeled — unreachable (the " +
           "min live vertex's SCC always satisfies f == b)")
         assigned += done

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -145,7 +146,7 @@ object SpanningForest {
     val picked = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
     var round = 0
-    var remaining = e.count()
+    var remaining = Lineage.rows(e)
     while (remaining > tailEdgeBar && round < maxRounds) {
       // 1. min incident edge per component under total order (w,u,v)
       val out = e.select(col("cu").as("c"),
@@ -171,7 +172,7 @@ object SpanningForest {
           coalesce(col("ncv"), col("cv")).as("cv"))
         .where(col("cu") =!= col("cv"))
         .cutLineage()
-      remaining = e.count()
+      remaining = Lineage.rows(e)
       round += 1
     }
     require(remaining <= tailEdgeBar,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -534,7 +535,7 @@ object Traversals {
   def kcore(edges: DataFrame, k: Int, maxIter: Int = 100,
             oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     var sym = symmetrize(edges).cutLineage()
-    var m = sym.count()
+    var m = Lineage.rows(sym)
     // the gate reuses the loop-control count
     if (LocalGraph.oneTask("kcore", m, oneTaskBar))
       return LocalGraph.kcoreLocal(sym, k, maxIter)
@@ -548,7 +549,7 @@ object Traversals {
         .join(keep, sym("u") === keep("kid"), "left_semi")
         .join(keep, sym("v") === keep("kid"), "left_semi")
         .cutLineage()
-      val m2 = pruned.count()
+      val m2 = Lineage.rows(pruned)
       changed = m2 != m
       m = m2
       sym = pruned
@@ -730,7 +731,7 @@ object Traversals {
       .select(col("component")).distinct()
     val affVerts = lbl.join(affComps, Seq("component"), "left_semi")
       .select(col("id")).cutLineage()
-    trace.foreach(_ += affVerts.count())
+    trace.foreach(_ += Lineage.rows(affVerts))
     val passThrough = oldCore
       .select(col("id").cast("long").as("id"), col("coreness").cast("long"))
       .join(affVerts, Seq("id"), "left_anti")
@@ -840,7 +841,7 @@ object Traversals {
         .select(col("s"), col("v"))
         .distinct()
       val fresh = nxt.join(reached, Seq("s", "v"), "left_anti").cutLineage()
-      trace.foreach(_ += fresh.count())
+      trace.foreach(_ += Lineage.rows(fresh))
       // fresh is disjoint from reached by construction — plain union
       reached = reached.unionByName(fresh).cutLineage()
       frontier = fresh
@@ -884,7 +885,7 @@ object Traversals {
     var sym = symmetrize(edges).cutLineage()
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var r = 0L
-    var msym = sym.count()
+    var msym = Lineage.rows(sym)
     // the gate reuses the loop-control count
     if (LocalGraph.oneTask("densestSubgraph", msym, oneTaskBar))
       return LocalDensest.densestLocal(sym, maxRounds)
@@ -898,7 +899,7 @@ object Traversals {
         .join(keep, sym("u") === keep("kid"), "left_semi")
         .join(keep, sym("v") === keep("kid"), "left_semi")
         .cutLineage()
-      msym = sym.count()
+      msym = Lineage.rows(sym)
       r += 1
     }
     require(msym == 0,
@@ -977,7 +978,7 @@ object Traversals {
     val sym0 = symmetrize(edges).cutLineage()
     val emptySchema = Seq.empty[(Long, Long, Long, Long, Long, Long)]
       .toDF("component", "round", "n_vertices", "n_edges", "density_micro", "is_best")
-    val arcs0 = sym0.count()
+    val arcs0 = Lineage.rows(sym0)
     if (arcs0 == 0) return emptySchema
     // the one-task leg derives the min-label decomposition itself
     // (`labels`, when given, must be exactly that decomposition); one
@@ -991,7 +992,7 @@ object Traversals {
       .select(col("cmp"), col("u"), col("v")).cutLineage()
     val perRound = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var r = 0L
-    var arcs = sym.count()
+    var arcs = Lineage.rows(sym)
     while (arcs > 0 && r < maxRounds) {
       val stats = sym.groupBy(col("cmp"))
         .agg(countDistinct(col("u")).as("n"), count(lit(1)).as("ms"))
@@ -1008,7 +1009,7 @@ object Traversals {
         .join(keep, sym("u") === keep("kid"), "left_semi")
         .join(keep, sym("v") === keep("kid"), "left_semi")
         .cutLineage()
-      arcs = sym.count()
+      arcs = Lineage.rows(sym)
       r += 1
     }
     require(arcs == 0,

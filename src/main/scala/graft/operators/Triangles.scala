@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -249,7 +250,7 @@ object Triangles {
       p.select(col("x").as("id")).unionByName(p.select(col("y").as("id")))
     val touched = ends(added).unionByName(ends(removed)).distinct()
       .cutLineage()
-    trace.foreach(_ += touched.count())
+    trace.foreach(_ += Lineage.rows(touched))
     val dAdj = ends(added).groupBy("id").agg(count(lit(1)).as("plus"))
       .join(ends(removed).groupBy("id").agg(count(lit(1)).as("minus")),
         Seq("id"), "full")
@@ -443,7 +444,7 @@ object Triangles {
   private def peelFrom(support0: DataFrame, k: Int, maxIter: Int,
                        deltaFraction: Double): DataFrame = {
     var support = support0
-    var m = support.count()
+    var m = Lineage.rows(support)
     var below = support.where(col("sup") < k - 2).count()
     var iter = 0
     while (below > 0 && iter < maxIter) {
@@ -579,7 +580,7 @@ object Triangles {
     // components are endpoint-closed: testing src suffices
     val affNet = netE.join(affVerts.toDF("src"), Seq("src"), "left_semi")
       .cutLineage()
-    trace.foreach(_ += affNet.count())
+    trace.foreach(_ += Lineage.rows(affNet))
     val passThrough = oldTruss.select(
         col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
         col("trussness").cast("long").as("trussness"))

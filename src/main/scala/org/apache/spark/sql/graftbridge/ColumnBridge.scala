@@ -27,31 +27,19 @@ object PlanBridge {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }
 
-  /** Strip the inherited origin statistics (and constraints) from an
-    * eagerly-checkpointed Dataset's `LogicalRDD`.
-    *
-    * WHY THIS EXISTS: `Dataset.localCheckpoint` truncates lineage but
-    * PRESERVES the origin plan's `Statistics` on the `LogicalRDD`
-    * (Spark 4's `originStats`). Size-only estimation multiplies join
-    * children's `sizeInBytes` as unbounded `BigInt`s, so in an
-    * iterative operator whose round output self-joins the previous
-    * round's checkpoint (pointer-jumping CC, score-table fixed points),
-    * the PRESERVED estimate compounds multiplicatively: the digit count
-    * of `sizeInBytes` grows ~4× per round, and after a few dozen rounds
-    * the planner spends MINUTES inside `BigInteger.multiply` on numbers
-    * with millions of digits — planning, not execution, becomes the
-    * scale ceiling. Dropping the origin stats resets each round's
-    * leaves to `defaultSizeInBytes` (exactly the pre-Spark-3.4
-    * behavior), which is also the honest estimate: checkpointed RDD
-    * sizes are unknown to Catalyst anyway.
+  /** `cp`, a `localCheckpoint`-ed Dataset, with its `LogicalRDD` leaf
+    * carrying `stats` and no constraints in place of whatever the leaf
+    * inherited from the plan it checkpointed ([[graft.Lineage.cut]]
+    * passes the sizes it measured). The leaf's constructor and
+    * `Dataset.ofRows` are `private[sql]`, hence this shim.
     */
-  def withoutOriginStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        // LogicalRDD is curried: (output, rdd, partitioning, ordering,
-        // isStreaming, stream)(session, originStats, originConstraints)
-        org.apache.spark.sql.classic.Dataset.ofRows(spark, r.copy()(spark, None, None))
-      case _ => df
-    }
+  def withStats(cp: org.apache.spark.sql.DataFrame,
+                stats: org.apache.spark.sql.catalyst.plans.logical.Statistics)
+      : org.apache.spark.sql.DataFrame = {
+    val leaf = cp.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val spark = cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // LogicalRDD is curried: (output, rdd, partitioning, ordering,
+    // isStreaming, stream)(session, originStats, originConstraints)
+    org.apache.spark.sql.classic.Dataset.ofRows(spark, leaf.copy()(spark, Some(stats), None))
+  }
 }

@@ -5,7 +5,6 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{Configurator, Property}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -19,9 +18,10 @@ import scala.jdk.CollectionConverters._
   * weights, self-gated passes). Also covers the r12 twins the advice
   * flagged as untested on the round path (SCC, BFS, SSSP, landmarks).
   * Each pair also reads the twin gate's decision log, so the pins fail if
-  * the gate never picks the one-task leg; the last two tests pin the
-  * gate's probe itself. Each operator also runs on the empty edge frame
-  * (`pinEmpty`, or `sameNone` where it returns before the gate).
+  * the gate never picks the one-task leg; the last three tests pin the
+  * gate's probe and its read of a cut input's measured count. Each
+  * operator also runs on the empty edge frame (`pinEmpty`, or
+  * `sameNone` where it returns before the gate).
   */
 class LocalTwinsSpec extends SparkTestBase {
 
@@ -282,11 +282,14 @@ class LocalTwinsSpec extends SparkTestBase {
       Centrality.betweennessCentrality(none, srcs, 10),
       Centrality.betweennessCentrality(none, srcs, 10, oneTaskBar = 0L),
       "betweennessCentrality")
-    // no edges leave every source isolated: both legs fail loud
+    // no edges leave every source isolated: both legs fail loud, at the
+    // call
     for (bar <- Seq(LocalGraph.SymRowBar, 0L)) {
       val ex = intercept[Exception](
-        Centrality.harmonicCloseness(none, srcs, 10, oneTaskBar = bar).collect())
-      assert(ex.getMessage.contains("isolated sources"), s"bar $bar: $ex")
+        Centrality.harmonicCloseness(none, srcs, 10, oneTaskBar = bar))
+      assert(ex.getMessage.contains(
+        "harmonicCloseness: no vertex reachable from any source (isolated sources)"),
+        s"bar $bar: $ex")
     }
   }
 
@@ -297,12 +300,13 @@ class LocalTwinsSpec extends SparkTestBase {
     // maxDepth is non-empty, so budget 4 fails (layer 4 = {5}) and
     // budget 5 passes — both legs must agree on both.
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
-    val ex1 = intercept[Exception](
-      Centrality.stressCentrality(path, Seq(1L), 4).collect())
-    val ex2 = intercept[Exception](
-      Centrality.stressCentrality(path, Seq(1L), 4, oneTaskBar = 0L).collect())
-    assert(ex1.getMessage.contains("raise maxDepth"))
-    assert(ex2.getMessage.contains("raise maxDepth"))
+    // both legs fail at the call, with the same budget message
+    for (bar <- Seq(LocalGraph.SymRowBar, 0L)) {
+      val ex = intercept[Exception](
+        Centrality.stressCentrality(path, Seq(1L), 4, oneTaskBar = bar))
+      assert(ex.getMessage.contains("stressCentrality: BFS frontier still non-empty at " +
+        "maxDepth=4 (1 (source, vertex) pairs unreached) — raise maxDepth"), s"bar $bar: $ex")
+    }
     // both legs succeed and agree once the budget clears
     pinEqual(
       Centrality.stressCentrality(path, Seq(1L), 5),
@@ -585,32 +589,30 @@ class LocalTwinsSpec extends SparkTestBase {
   }
 
   test("twin gate: the probe is one job with one stage (no exchange); bar 0 runs none") {
-    val sc = spark.sparkContext
-    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("twin-gate-probe") => stagesPerJob.add(e.stageInfos.size)
-          case Some("twin-gate-marker") => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val in = spark.range(0, 1000, 1, 4).toDF()
-      sc.setJobGroup("twin-gate-probe", "probe")
+    val in = spark.range(0, 1000, 1, 4).toDF()
+    val (_, stagesPerJob) = jobsDuring {
       assert(!LocalGraph.oneTask("probeSpec", in, 10L))
       assert(!LocalGraph.oneTask("probeSpec", in, 0L))
-      // listener events arrive in order: once the marker job is seen,
-      // every probe job has been
-      sc.setJobGroup("twin-gate-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(stagesPerJob.asScala.toSeq == Seq(1))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+    }
+    assert(stagesPerJob == Seq(1))
+  }
+
+  test("twin gate: a cut input is decided from its measured count, with no job") {
+    val n = 10L
+    for ((name, frame) <- Seq(
+        "range over 4 partitions" -> spark.range(0, n, 1, 4).toDF(),
+        "empty frame" -> spark.range(0, 0, 1, 2).toDF(),
+        "one partition" -> spark.range(0, n, 1, 1).toDF())) {
+      val in = Lineage.cut(frame)
+      for (bar <- Seq(1L, n - 1, n, n + 1)) {
+        val want = in.count() <= bar
+        val ((got, logged), jobs) = jobsDuring(
+          gateLog.during(LocalGraph.oneTask("probeSpec", in, bar)))
+        assert(jobs.isEmpty, s"$name, bar $bar: the gate ran $jobs")
+        assert(got == want, s"$name, bar $bar")
+        assert(logged == Seq(Decision("probeSpec", if (want) "one-task" else "rounds", bar)),
+          s"$name, bar $bar: $logged")
+      }
     }
   }
 }

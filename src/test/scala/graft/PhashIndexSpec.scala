@@ -79,6 +79,18 @@ class PhashIndexSpec extends SparkTestBase {
     val probed = PhashIndex.probe(spark, "graft_pidx_meta",
       hashesOf(col("doc_id") < 10))
     assert(empty.schema == probed.schema, s"${empty.schema} vs ${probed.schema}")
+    // hashes read back from parquet have a nullable id: the empty probe
+    // follows it, as the non-empty one does
+    val dir = java.nio.file.Files.createTempDirectory("graft-phash-probe").toString
+    hashesOf(col("doc_id") < 10).write.mode("overwrite").parquet(dir)
+    val read = spark.read.parquet(dir)
+    assert(read.schema("id").nullable && read.count() > 0) // a non-empty cp set
+    val emptyRead = PhashIndex.probe(spark, "graft_pidx_meta", read.where(col("id") < -1))
+    val probedRead = PhashIndex.probe(spark, "graft_pidx_meta", read)
+    assert(emptyRead.count() == 0)
+    assert(emptyRead.schema == probedRead.schema,
+      s"${emptyRead.schema} vs ${probedRead.schema}")
+    assert(emptyRead.schema("query_id").nullable)
   }
 
   test("ingest is exactly-once and the compacted index serves the identical pairs") {

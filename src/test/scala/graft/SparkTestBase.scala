@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** One shared local session per suite (lazy; reused across suites within
   * a JVM via getOrCreate).
@@ -43,5 +45,39 @@ trait SparkTestBase extends AnyFunSuite {
       .filter(_.getName.startsWith("ingest_batch="))
       .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
       .toMap
+  }
+
+  /** Runs `f` and returns its result with the stage count of each Spark
+    * job it started, in start order. Jobs are matched by a job group that
+    * `f`'s thread sets (SQL's broadcast and query-stage threads inherit
+    * it); a marker job run after `f` flushes the listener bus.
+    */
+  def jobsDuring[A](f: => A): (A, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => stagesPerJob.add(e.stageInfos.size)
+          case Some(g) if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      val a = f
+      // listener events arrive in order: once the marker job is seen,
+      // every job of `f` has been
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (a, stagesPerJob.asScala.toVector)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
