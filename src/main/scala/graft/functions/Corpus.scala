@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Lineage
 import graft.Lineage.CutOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -148,7 +149,7 @@ object Corpus {
       .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
     val benchSh = graft.functions.Dedup.shingles(benchmark, n)
       .select(xxhash64(col("shingle")).as("h")).distinct().cutLineage()
-    val nBench = benchSh.count()
+    val nBench = Lineage.rows(benchSh)
     val m = math.max(64L, ((nBench * bitsPerKey + 63) / 64) * 64)
     require(m <= maxBits,
       s"bloom of $m bits exceeds cap $maxBits — lower bitsPerKey or shard the filter")
@@ -508,7 +509,7 @@ object Corpus {
                              maxBroadcastRows: Long = 1000000L,
                              nPlanes: Int = 0, nTables: Int = 0): DataFrame = {
     val bench = benchmark.cutLineage()
-    val benchRows = bench.count()
+    val benchRows = Lineage.rows(bench)
     if (benchRows <= maxBroadcastRows)
       embeddingContaminationBrute(train, bench, threshold, excludeSameId)
     else {

@@ -589,7 +589,6 @@ object Traversals {
     * budget is outlived; a silent one-sided truncation cannot happen.
     */
   def coreness(edges: DataFrame, maxRounds: Int = 200,
-               sortFree: Boolean = false,
                oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val sym = symmetrize(edges).cutLineage()
     if (LocalGraph.oneTask("coreness", sym, oneTaskBar))
@@ -607,7 +606,7 @@ object Traversals {
       val nv = sym.join(cand, Seq("u"), "left_semi")
         .join(c.toDF("v", "cv"), Seq("v"))
         .select(col("u"), col("cv"))
-      val upd = hIndex(nv, sortFree)
+      val upd = hIndex(nv)
       val next = c.join(upd, Seq("id"), "left")
         .select(col("id"), coalesce(col("nh"), col("h")).as("h"),
           (col("nh").isNotNull && col("nh") =!= col("h")).as("ch"))
@@ -625,34 +624,16 @@ object Traversals {
 
   /** The h-index inner round shared by [[coreness]] and
     * [[corenessMaintain]]: per candidate vertex u, H({cv of u's
-    * neighbors}) from the (u, cv) rows.
-    *
-    * Two value-identical formulations, A/B'd at tier 2 (tier2hindex):
-    *   - window (default): descending row_number, h = #ranks r with
-    *     cv_r ≥ r — one shuffle, but a 10⁷-degree hub's rows all sort
-    *     in ONE window task (the r11 verdict's watch item);
-    *   - sortFree: aggregate counts per (u, cv) FIRST (map-side
-    *     combine collapses the hub to its #distinct neighbor values),
-    *     then h = max over distinct values v of min(v, ge(v)) where
-    *     ge(v) = #neighbors with cv ≥ v (a running sum over the
-    *     distinct-value rows — the residual window task holds
-    *     #distinct values, not degree). The max is attained at an
-    *     observed value: between observed values ge is constant, so
-    *     min(v, ge) only grows toward the next observed v.
+    * neighbors}) from the (u, cv) rows — descending row_number, h =
+    * #ranks r with cv_r ≥ r. One shuffle; a 10⁷-degree hub's rows all
+    * sort in ONE window task (the r11 verdict's watch item).
     */
-  private def hIndex(nv: DataFrame, sortFree: Boolean): DataFrame = {
+  private def hIndex(nv: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    if (sortFree)
-      nv.groupBy(col("u"), col("cv")).agg(count(lit(1)).as("n"))
-        .withColumn("ge", sum(col("n")).over(
-          Window.partitionBy("u").orderBy(col("cv").desc)))
-        .select(col("u"), least(col("cv"), col("ge")).as("hv"))
-        .groupBy(col("u").as("id")).agg(max(col("hv")).as("nh"))
-    else
-      nv.withColumn("r", row_number().over(
-          Window.partitionBy("u").orderBy(col("cv").desc)))
-        .where(col("cv") >= col("r"))
-        .groupBy(col("u").as("id")).agg(count(lit(1)).as("nh"))
+    nv.withColumn("r", row_number().over(
+        Window.partitionBy("u").orderBy(col("cv").desc)))
+      .where(col("cv") >= col("r"))
+      .groupBy(col("u").as("id")).agg(count(lit(1)).as("nh"))
   }
 
   /** MAINTAINED core decomposition — the incremental/decremental leg of
@@ -711,7 +692,6 @@ object Traversals {
                        labels: Option[DataFrame] = None,
                        maxRounds: Int = 200,
                        trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                       sortFree: Boolean = false,
                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
     val oldSym = symmetrize(oldEdges)
     val insSym = symmetrize(inserts)
@@ -763,7 +743,7 @@ object Traversals {
       val nv = subSym.join(cand, Seq("u"), "left_semi")
         .join(c.toDF("v", "cv"), Seq("v"))
         .select(col("u"), col("cv"))
-      val upd = hIndex(nv, sortFree)
+      val upd = hIndex(nv)
       val next = c.join(upd, Seq("id"), "left")
         .select(col("id"),
           least(col("h"), coalesce(col("nh"), col("h"))).as("nxt"),

@@ -6,18 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** One shared local session per suite (lazy; reused across suites within
-  * a JVM via getOrCreate).
+  * a JVM via getOrCreate), with the conf Bench and Verify run under
+  * ([[GraftSession.localBuilder]]).
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.localBuilder(4, "graft-test").getOrCreate()
 
   lazy val sf = "/root/testdata/sf0.001"
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -115,54 +115,6 @@ class StreamingSpec extends SparkTestBase {
       val verdicts = spark.table("bip_mp").collect().map(_.getBoolean(0))
       assert(verdicts.nonEmpty && !verdicts.last)
     } finally q2.stop()
-  }
-
-  test("hierarchical fan-in: two-level partial merge equals single-level and batch") {
-    import spark.implicits._
-    // 8-partition micro-batches with fanIn=3: partials fold to ≤3
-    // second-level partials before the constant-keyed merger; the chain
-    // connects ONLY through correct cross-partial merging at both levels
-    val ms = MemoryStream[(Long, Long, Double, Long)](spark, numPartitions = 8)
-    val ckpt = Files.createTempDirectory("cc-fanin-ckpt").toString
-    val chain = (1L until 60L).map(i => (i, i + 1, 1.0, i * 60L)) ++
-      Seq((200L, 201L, 1.0, 4000L))
-    val q = StreamingOps.runningConnectedComponents(edgesFrom(ms), fanIn = 3)
-      .toDF("id", "component")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("cc_fanin").start()
-    try {
-      val (h, t) = chain.splitAt(30)
-      ms.addData(h); q.processAllAvailable()
-      ms.addData(t); q.processAllAvailable()
-      val streamed = spark.table("cc_fanin").groupBy("id")
-        .agg(min("component").as("component"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val batch = SummaryAggregations.connectedComponents(
-          chain.toDF("src", "dst", "value", "secs")
-            .withColumn("ts", timestamp_seconds(col("secs"))).drop("secs"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(streamed == batch)
-    } finally q.stop()
-    // TTL variants: fanIn=2 replay ≡ the single-level replay, including
-    // eviction behavior (watermark values are identical — max over
-    // second-level partials ≡ max over raw rows)
-    val rows = ((1L until 20L).map(i => (i, i + 1, 1.0, i * 60L)) ++
-      Seq((50L, 51L, 1.0, 999999L)))
-      .toDF("src", "dst", "value", "secs")
-      .withColumn("ts", timestamp_seconds(col("secs"))).drop("secs")
-    val base = StreamingOps.replayConnectedComponentsTtl(rows, "1 hour", nBatches = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fan = StreamingOps.replayConnectedComponentsTtl(rows, "1 hour", nBatches = 3,
-      fanIn = 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fan == base, s"fanIn=2 diverged: $fan vs $base")
-    // parity family: odd cycle split across partials still absorbs
-    val tri = Seq((1L, 2L, 1.0, 0L), (2L, 3L, 1.0, 60L), (3L, 1L, 1.0, 120L))
-      .toDF("src", "dst", "value", "secs")
-      .withColumn("ts", timestamp_seconds(col("secs"))).drop("secs")
-    assert(!StreamingOps.replayBipartitenessTtl(tri, "30 days", 3, fanIn = 2))
-    assert(StreamingOps.replayBipartitenessTtl(rows, "30 days", 3, fanIn = 2) ==
-      StreamingOps.replayBipartitenessTtl(rows, "30 days", 3))
   }
 
   test("restart recovery: CC summary state restores from the checkpoint across stop/start") {
@@ -360,6 +312,49 @@ class StreamingSpec extends SparkTestBase {
     val e = graft.model.GraphFixtures.edgeStream(spark, sf)
     val batch = SummaryAggregations.bipartiteness(e).collect().head.getBoolean(0)
     assert(StreamingOps.replayBipartitenessTtl(e, "3650 days", 3) == batch)
+  }
+
+  test("TTL'd running CC and bipartiteness: 4-partition micro-batches give the 1-partition answer") {
+    import spark.implicits._
+    // each trigger's four edges spread over four input tasks, so the
+    // even 4-cycle of trigger 1 and the odd triangle of trigger 3 close
+    // only in the merge of single-edge partials. Trigger 3 evicts 1, 2
+    // and 3 (last seen at t <= 30 s, below the previous trigger's
+    // watermark 7230 s - 1 h); 4 survives through its t = 7200 s edge
+    val triggers = Seq(
+      Seq((1L, 2L, 0L), (2L, 3L, 10L), (3L, 4L, 20L), (4L, 1L, 30L)),
+      Seq((4L, 20L, 7200L), (20L, 21L, 7210L), (21L, 22L, 7220L), (8L, 9L, 7230L)),
+      Seq((30L, 31L, 7300L), (31L, 32L, 7310L), (32L, 30L, 7320L), (21L, 40L, 7330L)))
+      .map(_.map { case (s, d, t) => (s, d, 1.0, t) })
+    // the rows each trigger emits, over `partitions`-partition batches
+    def run[T](partitions: Int)(op: DataFrame => DataFrame)(read: Row => T): Seq[Seq[T]] = {
+      val ms = MemoryStream[(Long, Long, Double, Long)](spark, numPartitions = partitions)
+      val out = scala.collection.mutable.ListBuffer.empty[Seq[T]]
+      val q = op(edgesFrom(ms)).writeStream.outputMode("update")
+        .option("checkpointLocation", Files.createTempDirectory("ttl-mp-ckpt").toString)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val rows = df.collect().toSeq.map(read)
+          if (rows.nonEmpty) out.synchronized { out += rows }; ()
+        }
+        .start()
+      try triggers.foreach { t => ms.addData(t); q.processAllAvailable() }
+      finally q.stop()
+      out.toList
+    }
+    // the premise: over 4 partitions, every trigger's rows sit in 4 tasks
+    assert(run(4)(_.select(spark_partition_id()))(_.getInt(0)).map(_.toSet.size) ==
+      Seq(4, 4, 4))
+    val Seq(cc1, cc4) = Seq(1, 4).map(p =>
+      run(p)(StreamingOps.runningConnectedComponentsTtl(_, "1 hour").toDF("id", "component"))(
+        r => r.getLong(0) -> r.getLong(1)).last.toMap)
+    assert(cc4 == cc1, s"4 partitions: $cc4, 1 partition: $cc1")
+    assert(cc1 == Map(4L -> 4L, 20L -> 4L, 21L -> 4L, 22L -> 4L, 40L -> 4L,
+      30L -> 30L, 31L -> 30L, 32L -> 30L, 8L -> 8L, 9L -> 8L), s"got $cc1")
+    val Seq(bip1, bip4) = Seq(1, 4).map(p =>
+      run(p)(StreamingOps.runningBipartitenessTtl(_, "1 hour").toDF("ok"))(_.getBoolean(0))
+        .map(_.last))
+    assert(bip4 == bip1, s"4 partitions: $bip4, 1 partition: $bip1")
+    assert(bip1 == Seq(true, true, false), s"got $bip1")
   }
 
   test("windowed neighborhood fold under watermark 0 emits batch-equal closed windows") {

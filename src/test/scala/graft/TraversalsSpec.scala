@@ -513,11 +513,6 @@ class TraversalsSpec extends SparkTestBase {
         .select("id").collect().map(_.getLong(0)).toSet
       assert(byCoreness == byPeel, s"coreness>=$k vs $k-core mismatch")
     }
-    // the sort-free conditional-count h-index round (the tier2hindex
-    // hub-skew alternative) is value-identical to the window form
-    val cSortFree = Traversals.coreness(c10, sortFree = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cSortFree == cAll)
     // r12 scale-adaptive A/B: oneTaskBar = 0 forces the distributed
     // h-index rounds; the default takes the one-task Matula–Beck peel —
     // the core decomposition is unique, so both must be bit-equal
