@@ -24,22 +24,46 @@ object Bench {
       s""""failed":${quoted.take(fits).mkString("[", ",", "]")}$cut,"sf":"$sfDir"$keptField}"""
   }
 
+  /** The full line: totals, the per-query seconds, the failed list and
+    * the per-query layers. `"layers"` is a top-level field, never inside
+    * `"queries"`, whose flat map [[parsePrev]] reads with a non-greedy
+    * regex.
+    */
+  private[graft] def fullLine(total: Double, cpus: Int, results: Seq[QueryRun.Result],
+                              failed: Seq[String], sfDir: String, keptField: String): String = {
+    def r3(x: Double) = math.round(x * 1000) / 1000.0
+    val qs = results.map(r => s"\"${r.name}\":${r.seconds}").mkString("{", ",", "}")
+    val fj = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val ls = results.map { r =>
+      val l = r.layers
+      s"\"${r.name}\":{\"jobs\":${l.jobs},\"stages\":${l.stages},\"tasks\":${l.tasks}," +
+        s"\"task_s\":${r3(l.taskS)},\"shuffle_read_mb\":${r3(l.shuffleReadMb)}," +
+        s"\"shuffle_write_mb\":${r3(l.shuffleWriteMb)}}"
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,""" +
+      s""""failed":$fj,"layers":$ls,"sf":"$sfDir"$keptField}"""
+  }
+
+  /** Total, query names, `sf` and `cpus` of a full line, as the sidecar
+    * guard compares them; None when the line lacks any of the first
+    * three.
+    */
+  private[graft] def parsePrev(s: String): Option[(Double, Set[String], String, Option[String])] = {
+    val v = """"value":([0-9.Ee+-]+)""".r.findFirstMatchIn(s).map(_.group(1).toDouble)
+    val names = """"queries":\{(.*?)\}""".r.findFirstMatchIn(s).map(m =>
+      """"([^"]+)":""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
+    val sf = """"sf":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
+    val cp = """"cpus":([0-9]+)""".r.findFirstMatchIn(s).map(_.group(1))
+    for (vv <- v; nn <- names; ss <- sf) yield (vv, nn, ss, cp)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // dev knobs: SPARK_GRAFT_ONLY=q36,q33 runs a subset;
-    // SPARK_GRAFT_STRICT_CODEGEN=1 forbids the silent interpreted-eval
-    // fallback so a Janino compile failure fails the query loudly.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val cpus = QueryRun.cpus(32)
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val startedAt = java.time.Instant.now().toString
-    val strict = sys.env.get("SPARK_GRAFT_STRICT_CODEGEN").contains("1")
-    val spark = GraftSession.localBuilder(cpus.toInt)
-      .config("spark.sql.codegen.fallback", (!strict).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session(cpus)
     // warm the session (codegen, parquet reader, shuffle infra) so the
     // first timed query doesn't absorb JVM startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -54,37 +78,20 @@ object Bench {
       .selectExpr("k", "explode(xs)")
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(f => f.exists(n.startsWith)) }
-    var failed = List.empty[String]
-    val results = names.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // noop-sink write: every column of every row is materialized, so
-      // projection-heavy queries can't be flattered by count()'s pruning
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        failed ::= name
-        System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      // queries are standalone: drop blocks pinned by localCheckpoint /
-      // cache between queries — accumulated blocks from earlier queries
-      // otherwise GC-thrash later ones (measured 3× inflation at sf0.1).
-      // Cross-query memos (SparkEntry.pinnedRddIds) are kept: they are
-      // locally-checkpointed and unrecomputable once unpersisted.
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!SparkEntry.pinnedRddIds(spark).contains(Int.box(id))) rdd.unpersist(false)
-      }
-      spark.catalog.clearCache()
-      // ContextCleaner reaps dead shuffles/broadcasts only after a GC;
-      // with a large heap none happens naturally between queries
-      System.gc()
-      name -> t
-    }.toMap
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fj = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    // noop-sink write: every column of every row is materialized, so
+    // projection-heavy queries can't be flattered by count()'s pruning
+    val results = QueryRun.run(spark, sfDir)((_, df) =>
+      df.write.format("noop").mode("overwrite").save())
+    val failed = results.collect { case QueryRun.Result(name, _, Some(e), _) =>
+      System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      name
+    }
+    val total = results.map(_.seconds).sum
+    // a dev run (a partial query set, extra session confs or a plan
+    // dump) is not comparable to the canonical record: it never writes
+    // the canonical sidecar or the history
+    val dev = Seq("SPARK_GRAFT_ONLY", "SPARK_GRAFT_CONF", "SPARK_GRAFT_PLANS_OUT")
+      .exists(sys.env.contains)
     // sidecar copy: the driver's BENCH_r{N}.json keeps only the last
     // ~2 KB of stdout, which truncates the per-query map past ~60
     // queries — persist the complete line so every query stays
@@ -102,22 +109,11 @@ object Bench {
     val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     val sidecarPath = java.nio.file.Paths.get(
       benchOut.getOrElse("BENCH_SIDECAR.json"))
-    val qNames = results.keySet
-    def parsePrev(p: java.nio.file.Path): Option[(Double, Set[String], String, Option[String])] =
-      try {
-        if (!java.nio.file.Files.exists(p)) None
-        else {
-          val s = java.nio.file.Files.readString(p)
-          val v = """"value":([0-9.Ee+-]+)""".r.findFirstMatchIn(s).map(_.group(1).toDouble)
-          val names = """"queries":\{(.*?)\}""".r.findFirstMatchIn(s).map(m =>
-            """"([^"]+)":""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
-          val sf = """"sf":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-          val cp = """"cpus":([0-9]+)""".r.findFirstMatchIn(s).map(_.group(1))
-          for (vv <- v; nn <- names; ss <- sf) yield (vv, nn, ss, cp)
-        }
-      } catch { case _: Throwable => None }
-    val prev = parsePrev(sidecarPath)
-    val keepPrev = benchOut.isEmpty && only.isEmpty && prev.exists {
+    val qNames = results.map(_.name).toSet
+    val prev =
+      try Some(java.nio.file.Files.readString(sidecarPath)).flatMap(parsePrev)
+      catch { case _: Throwable => None }
+    val keepPrev = benchOut.isEmpty && !dev && prev.exists {
       case (prevTotal, prevNames, prevSf, prevCpus) =>
         prevNames == qNames && prevSf == sfDir &&
           // cross-core-count totals are not comparable (the suite is
@@ -125,7 +121,7 @@ object Bench {
           // beat the canonical 32-thread one): a same-set run at a
           // DIFFERENT cpus never overwrites the snapshot (observed
           // live in r13: a c8 run clobbered the c32 floor)
-          (prevCpus.exists(_ != cpus) || failed.nonEmpty || prevTotal <= total)
+          (prevCpus.exists(_ != cpus.toString) || failed.nonEmpty || prevTotal <= total)
     }
     // when the best-of guard keeps a faster prior record, say so IN the
     // round artifact itself: a reader of BENCH_rN.json alone would
@@ -139,7 +135,7 @@ object Bench {
     }
     // cpus rides the line so the sidecar guard above can tell a c8 run
     // from the canonical c32 record (additions-only field)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"failed":$fj,"sf":"$sfDir"$keptField}"""
+    val line = fullLine(total, cpus, results, failed, sfDir, keptField)
     println(line)
     // the driver records only the last ~2 KB of stdout; at 265 queries
     // the full line above is ~12 KB, so the driver's BENCH_rN.json has
@@ -147,12 +143,11 @@ object Bench {
     // Emit a SECOND, compact, final line without the per-query map so
     // the tail always contains a complete parseable summary; the full
     // line and the sidecar keep the per-query record.
-    println(compactLine(total, cpus.toInt, results.size, failed, sfDir, keptField))
-    // a SPARK_GRAFT_ONLY dev run covers a PARTIAL query set: it must
-    // never touch the canonical snapshot (the "changed query set
-    // replaces" rule below would otherwise let a 3-query dev run
-    // clobber the full-set record — observed once)
-    if (only.nonEmpty && benchOut.isEmpty) { spark.stop(); return }
+    println(compactLine(total, cpus, results.size, failed, sfDir, keptField))
+    // a dev run must never touch the canonical snapshot (the "changed
+    // query set replaces" rule below would otherwise let a 3-query dev
+    // run clobber the full-set record — observed once)
+    if (dev && benchOut.isEmpty) { spark.stop(); return }
     if (keepPrev)
       System.err.println(s"[bench] sidecar kept: prior run over the same " +
         s"query set is faster (this run $total s)")
@@ -164,10 +159,9 @@ object Bench {
     // cross-round comparability in r6) — keep EVERY run with its wall
     // clock and machine load so a reader can tell a fair window from a
     // loaded one without git archaeology. CANONICAL runs only: a dev
-    // run with SPARK_GRAFT_ONLY (partial query set) or a redirected
-    // SPARK_GRAFT_BENCH_OUT (scratch output) must not pollute the
-    // fair-window record this file exists to keep clean
-    if (only.isEmpty && benchOut.isEmpty) {
+    // run or a redirected SPARK_GRAFT_BENCH_OUT (scratch output) must
+    // not pollute the fair-window record this file exists to keep clean
+    if (!dev && benchOut.isEmpty) {
       val loadEnd = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       // cpus is load-bearing for cross-run comparison: round-heavy

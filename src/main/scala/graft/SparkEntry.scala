@@ -51,9 +51,9 @@ object SparkEntry {
     * (session, dir), dropped with the session.
     *
     * The memoized checkpoint's RDD is recorded in [[pinnedRddIds]]:
-    * Bench/Verify unpersist all persistent RDDs between queries (heap
-    * hygiene), and a locally-checkpointed RDD cannot be recomputed after
-    * unpersist — they must skip the pinned ones. Build intermediates are
+    * [[releaseBetweenQueries]] unpersists all other persistent RDDs
+    * between queries, and a locally-checkpointed RDD cannot be
+    * recomputed after unpersist. Build intermediates are
     * released immediately; only the final relation stays pinned.
     */
   // pins are keyed by (session identity, rdd id): RDD ids restart per
@@ -61,14 +61,29 @@ object SparkEntry {
   // an unrelated RDD in a later one (ADVICE r3)
   private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Int)]()
 
-  /** RDD ids whose blocks back THIS session's cross-query memos —
-    * harness mains must not unpersist these between queries.
-    */
-  def pinnedRddIds(s: SparkSession): java.util.Set[Integer] = {
+  /** RDD ids whose blocks back THIS session's cross-query memos. */
+  private def pinnedRddIds(s: SparkSession): java.util.Set[Integer] = {
     val sid = System.identityHashCode(s)
     val out = new java.util.HashSet[Integer]()
     pinned.forEach(t => if (t._1 == sid) out.add(t._2))
     out
+  }
+
+  /** The release between two queries of a harness run: queries are
+    * standalone, so every persistent RDD except this session's pinned
+    * memos is unpersisted (blocks accumulated from earlier queries
+    * otherwise GC-thrash later ones: measured 3× inflation at sf0.1),
+    * the SQL cache is cleared, and a GC runs, because ContextCleaner
+    * reaps dead shuffles and broadcasts only after one and with a large
+    * heap none happens by itself between queries.
+    */
+  def releaseBetweenQueries(s: SparkSession): Unit = {
+    val keep = pinnedRddIds(s)
+    s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!keep.contains(Int.box(id))) rdd.unpersist(false)
+    }
+    s.catalog.clearCache()
+    System.gc()
   }
 
   /** Generic session-scoped cross-query memo with the pin/sweep

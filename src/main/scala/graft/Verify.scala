@@ -5,31 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = QueryRun.session(4)
     new java.io.File(outDir).mkdirs()
-    // dev knob (same as Bench): SPARK_GRAFT_ONLY=q54,q55 dumps a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // sorted like Bench: q14/q15 must run adjacently so their shared
-    // pinned memo is released right after its second consumer — Map
-    // iteration order would leave it resident across arbitrary queries
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(f => f.exists(n.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries are standalone: drop blocks pinned by localCheckpoint /
-      // cache so they can't accumulate heap pressure across the run —
-      // EXCEPT cross-query memos (unrecomputable once unpersisted)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!SparkEntry.pinnedRddIds(spark).contains(Int.box(id))) rdd.unpersist(false)
-      }
-      spark.catalog.clearCache()
-    }
+    QueryRun.run(spark, sfDir)((name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      .foreach(r => r.failure.foreach(e =>
+        System.err.println(s"[verify] ${r.name} failed: ${e.getMessage}")))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -28,8 +28,12 @@ import org.apache.spark.sql.functions._
   * scaling.
   *
   * Distributed shape at 100 TB: the edge list is static — partitioned
-  * once on each join key and localCheckpointed, so each round shuffles
-  * only the |V|-row score tables. The two normalizing maxima are
+  * once on each join key and cut, so that each round shuffles only the
+  * |V|-row score tables. The cut keeps that layout only when AQE does
+  * not re-plan the repartition: under AQE a small edge list comes back
+  * as one coalesced partition of unknown layout and is shuffled again
+  * each round (LineageSpec, "repartition(col("u")).cutLineage() keeps
+  * its partitioning", runs with AQE off to show the kept layout). The two normalizing maxima are
   * single-row aggregates cross-joined back (broadcast of one row — no
   * driver action inside the loop, no collect). Rounds are fixed, so no
   * per-round convergence probe either; lineage is cut every 3 rounds.

@@ -24,9 +24,13 @@ import org.apache.spark.sql.functions._
   * Distributed shape — identical to float power iteration and the right
   * one at 100 TB: per round, one join of ranks against the (static,
   * pre-partitioned) edge list on `u` and one aggregation shuffle on `v`.
-  * The edge list is hash-partitioned on `u` once and localCheckpointed,
-  * so each round shuffles only the (|V|-sized) rank table; lineage is
-  * truncated per round. Rounds are fixed (no convergence probe ⇒ no
+  * The edge list is hash-partitioned on `u` once and cut, so that each
+  * round shuffles only the (|V|-sized) rank table; lineage is truncated
+  * per round. The cut keeps that layout only when AQE does not re-plan
+  * the repartition: under AQE a small edge list comes back as one
+  * coalesced partition of unknown layout, and each round's join
+  * shuffles it again (LineageSpec, "repartition(col("u")).cutLineage()
+  * keeps its partitioning", runs with AQE off to show the kept layout). Rounds are fixed (no convergence probe ⇒ no
   * per-round driver action).
   */
 object PageRank {

@@ -43,3 +43,11 @@ object PlanBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(spark, leaf.copy()(spark, Some(stats), None))
   }
 }
+
+/** The listener bus, which is `private[spark]`. [[graft.RunRecorder]]
+  * drains it so that every event of a measured block has reached its
+  * listener before the block's totals are read.
+  */
+object BusBridge {
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
