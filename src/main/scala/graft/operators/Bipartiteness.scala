@@ -81,8 +81,7 @@ object Bipartiteness {
     * working set while the others keep iterating. Returns
     * `(g, bipartite)` — verdict scalars, built driver-side.
     */
-  def iterativeByGroup(edges: DataFrame, maxIter: Int = 100,
-                       oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def iterativeByGroup(edges: DataFrame, maxIter: Int = 100): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -93,7 +92,7 @@ object Bipartiteness {
       .distinct()
       .cutLineage()
 
-    if (LocalGraph.oneTask("bipartiteByGroup", sym, oneTaskBar))
+    if (LocalGraph.oneTask("bipartiteByGroup", sym))
       return LocalCommunities.bipartiteByGroupLocal(sym, maxIter)
 
     var state = sym.select(col("g"), col("u").as("id")).distinct()
@@ -184,8 +183,7 @@ object Bipartiteness {
     * key needs no separate CC pass; `labels` is accepted only for the
     * maintenance path's carve-out consistency and ignored here.
     */
-  def bipartitenessByComponent(edges: DataFrame, maxIter: Int = 100,
-                               oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def bipartitenessByComponent(edges: DataFrame, maxIter: Int = 100): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
@@ -196,7 +194,7 @@ object Bipartiteness {
     if (arcs == 0)
       return Seq.empty[(Long, Long)].toDF("component", "is_bipartite")
     // one count serves the empty check and the gate
-    if (LocalGraph.oneTask("bipartiteByComponent", arcs, oneTaskBar))
+    if (LocalGraph.oneTask("bipartiteByComponent", sym))
       return LocalCommunities.bipartiteByComponentLocal(sym, maxIter)
     var state = sym.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("e"), lit(null).cast("long").as("o"))
@@ -254,8 +252,7 @@ object Bipartiteness {
                             inserts: DataFrame, deletes: DataFrame,
                             maxIter: Int = 100,
                             labels: Option[DataFrame] = None,
-                            trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                            oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                            trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val (netC, affVerts) =
       Maintenance.carve(oldEdges, inserts, deletes, labels, trace)
     // the component label is a vertex id inside the component — one
@@ -265,6 +262,6 @@ object Bipartiteness {
     // component-closed in the net graph: one endpoint test suffices
     val sub = netC.join(affVerts.toDF("u"), Seq("u"), "left_semi")
     passThrough.unionByName(bipartitenessByComponent(
-      sub.select(col("u").as("src"), col("v").as("dst")), maxIter, oneTaskBar))
+      sub.select(col("u").as("src"), col("v").as("dst")), maxIter))
   }
 }

@@ -28,14 +28,13 @@ import org.apache.spark.sql.functions._
   */
 object Communities {
 
-  def labelPropagation(edges: DataFrame, rounds: Int = 3,
-                       oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val sym = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
       .union(edges.select(col("dst").cast("long"), col("src").cast("long")))
       .where(col("u") =!= col("v"))
       .distinct()
       .cutLineage()
-    if (LocalGraph.oneTask("labelPropagation", sym, oneTaskBar))
+    if (LocalGraph.oneTask("labelPropagation", sym))
       return LocalCommunities.lpaLocal(sym, rounds)
     var labels = sym.select(col("u").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -81,8 +80,7 @@ object Communities {
     * (logarithmic on random priorities), fail-loud at `maxRounds`.
     */
   def greedyColoring(edges: DataFrame, maxRounds: Int = 100,
-                     trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                     oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                     trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val spark = edges.sparkSession
     val sc = spark.sparkContext
     val before0 = sc.getPersistentRDDs.keySet
@@ -94,7 +92,7 @@ object Communities {
     // the parallel fixpoint EQUALS the sequential greedy in (prio31, id)
     // order, which the one-task leg computes directly; `trace` callers
     // (round-shape probes) take the rounds
-    if (LocalGraph.oneTask("greedyColoring", sym, if (trace.isEmpty) oneTaskBar else 0L))
+    if (LocalGraph.oneTask("greedyColoring", sym, cap = if (trace.isEmpty) Long.MaxValue else 0L))
       return LocalGraph.coloringLocal(sym).select(col("id"), col("color"))
     def pr(c: org.apache.spark.sql.Column) =
       struct(graft.Portable.prio31(c).as("p"), c.as("i"))
@@ -180,13 +178,12 @@ object Communities {
     * bounded top-1 window) plus two |C|-sized aggregates for the gate —
     * nothing touches more than one |E| join per term.
     */
-  def modularityRefine(edges: DataFrame, labels: DataFrame,
-                       oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def modularityRefine(edges: DataFrame, labels: DataFrame): DataFrame = {
     val c = edges.select(col("src").cast("long").as("x"), col("dst").cast("long").as("y"))
       .cutLineage()
     val m = Lineage.rows(c)
-    // sym rows ≤ 2m
-    if (LocalGraph.oneTask("modularityRefine", 2 * m, oneTaskBar))
+    // sym rows ≤ 2m, so gating m at half the bar bounds the sym rows
+    if (LocalGraph.oneTask("modularityRefine", c, div = 2))
       return LocalCommunities.refineLocal(c,
         labels.select(col("id"), col("label")))
     val sym = c.select(col("x").as("u"), col("y").as("v"))
@@ -252,11 +249,15 @@ object Communities {
     * per-vertex top-1 window + the two-scalar gate — the
     * [[modularityRefine]] shape; coarsening is one |E| relabel join +
     * keyed sum. Levels shrink geometrically, so level-2+ cost is noise.
+    *
+    * `oneTaskBar` caps the session's twin-gate bar for this call only;
+    * it exists for the perfbench harness, which still passes it, and
+    * goes once perfbench sets `spark.graft.oneTaskBar` instead.
     */
   def louvain(edges: DataFrame, levels: Int = 2, movesPerLevel: Int = 2,
-              oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame =
+              oneTaskBar: Long = Long.MaxValue): DataFrame =
     louvainCore(unitGraph(edges), levels, movesPerLevel, leiden = false,
-      oneTaskBar)._1
+      cap = oneTaskBar)._1
 
   /** [[louvain]] plus the per-pass exact-integer modularity history
     * (4m²·Q per accepted pass, in pass order) — the spec's monotonicity
@@ -266,7 +267,7 @@ object Communities {
   private[graft] def louvainDetail(edges: DataFrame, levels: Int,
                                    movesPerLevel: Int): (DataFrame, Seq[Long]) =
     louvainCore(unitGraph(edges), levels, movesPerLevel, leiden = false,
-      oneTaskBar = 0L)
+      cap = 0L)
 
   /** [[louvain]] over a WEIGHTED edge list (src, dst, weight): parallel
     * edges sum their integer weights into the canonical graph, and the
@@ -276,10 +277,8 @@ object Communities {
     * weight < ~1.5e9 (the [[weightedModularity]] envelope).
     */
   def louvainWeighted(edges: DataFrame, levels: Int = 2,
-                      movesPerLevel: Int = 2,
-                      oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame =
-    louvainCore(weightedGraph(edges), levels, movesPerLevel, leiden = false,
-      oneTaskBar)._1
+                      movesPerLevel: Int = 2): DataFrame =
+    louvainCore(weightedGraph(edges), levels, movesPerLevel, leiden = false)._1
 
   /** Canonical unit-weight graph: u < v, distinct, w = 1. */
   private def unitGraph(edges: DataFrame): DataFrame =
@@ -307,10 +306,10 @@ object Communities {
     */
   private def louvainCore(g0: DataFrame, levels: Int, movesPerLevel: Int,
                           leiden: Boolean,
-                          oneTaskBar: Long): (DataFrame, Seq[Long]) = {
+                          cap: Long = Long.MaxValue): (DataFrame, Seq[Long]) = {
     // the per-pass history is only produced by the round path (the
     // Detail spec probes)
-    if (LocalGraph.oneTask("louvain", g0, oneTaskBar))
+    if (LocalGraph.oneTask("louvain", g0, div = 2, cap = cap))
       return (LocalCommunities.louvainLocal(g0, levels, movesPerLevel,
         leiden, compLocal = false), Nil)
     var g = g0
@@ -409,15 +408,13 @@ object Communities {
     * additionally records the post-refinement score per level, and the
     * refinement's never-decreases invariant is asserted fail-loud.
     */
-  def louvainLeiden(edges: DataFrame, levels: Int = 2, movesPerLevel: Int = 2,
-                    oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame =
-    louvainCore(unitGraph(edges), levels, movesPerLevel, leiden = true,
-      oneTaskBar)._1
+  def louvainLeiden(edges: DataFrame, levels: Int = 2, movesPerLevel: Int = 2): DataFrame =
+    louvainCore(unitGraph(edges), levels, movesPerLevel, leiden = true)._1
 
   private[graft] def louvainLeidenDetail(edges: DataFrame, levels: Int,
                                          movesPerLevel: Int): (DataFrame, Seq[Long]) =
     louvainCore(unitGraph(edges), levels, movesPerLevel, leiden = true,
-      oneTaskBar = 0L)
+      cap = 0L)
 
   /** COMPONENT-LOCAL multi-level Louvain — [[louvain]]'s dynamics with
     * modularity evaluated PER CONNECTED COMPONENT (each component uses
@@ -449,9 +446,8 @@ object Communities {
     * the global version paid two scalar collects per pass.
     */
   def louvainByComponent(edges: DataFrame, levels: Int = 2,
-                         movesPerLevel: Int = 2,
-                         oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame =
-    louvainCompCore(unitGraph(edges), levels, movesPerLevel, oneTaskBar)
+                         movesPerLevel: Int = 2): DataFrame =
+    louvainCompCore(unitGraph(edges), levels, movesPerLevel)
 
   /** CDC-MAINTAINED communities — the maintenance-matrix leg for the
     * decomposition family's last member (coreness and trussness have
@@ -495,8 +491,7 @@ object Communities {
                       inserts: DataFrame, deletes: DataFrame,
                       levels: Int = 2, movesPerLevel: Int = 2,
                       labels: Option[DataFrame] = None,
-                      trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                      oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame = {
+                      trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val (netC, affVerts) =
       Maintenance.carve(oldEdges, inserts, deletes, labels, trace)
     val passThrough = oldLabels
@@ -508,7 +503,7 @@ object Communities {
     val sub = netC.join(affVerts.toDF("u"), Seq("u"), "left_semi")
     val recomputed = louvainCompCore(
       sub.select(col("u"), col("v"), lit(1L).as("w")).cutLineage(),
-      levels, movesPerLevel, oneTaskBar)
+      levels, movesPerLevel)
     passThrough.unionByName(recomputed.toDF("id", "community"))
   }
 
@@ -520,10 +515,9 @@ object Communities {
     * vertex-id space.
     */
   private def louvainCompCore(g0: DataFrame, levels: Int,
-                              movesPerLevel: Int,
-                              oneTaskBar: Long): DataFrame = {
+                              movesPerLevel: Int): DataFrame = {
     // the maintenance path's affected subgraphs stay under the bar
-    if (LocalGraph.oneTask("louvainByComponent", g0, oneTaskBar))
+    if (LocalGraph.oneTask("louvainByComponent", g0, div = 2))
       return LocalCommunities.louvainLocal(g0, levels, movesPerLevel,
         leiden = false, compLocal = true)
     var g = g0.cutLineage()

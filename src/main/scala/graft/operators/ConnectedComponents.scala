@@ -34,7 +34,8 @@ object ConnectedComponents {
   /** Scale-adaptive CC — the subroutine entry point: the
     * [[LocalGraph.oneTask]] gate decides between [[singlePass]]
     * (per-task union-find buffer ∝ vertices — the cheap path while the vertex set fits task memory;
-    * ≤ 2·edgeBar vertices by construction) and [[iterative]] (the
+    * ≤ 2·bar vertices by construction, the bar being a quarter of the
+    * session's: 1M edges by default) and [[iterative]] (the
     * shuffle-bound 100 TB path). Both paths share the exact (id,
     * component = min member id) output contract (spec-pinned equal),
     * so the choice is invisible to callers. The bar matches the
@@ -43,13 +44,12 @@ object ConnectedComponents {
     * Operators that ARE the iterative demonstration (q28) keep calling
     * [[iterative]] directly.
     */
-  def auto(edges: DataFrame, maxIter: Int = 50,
-           edgeBar: Long = 1000000L): DataFrame = {
+  def auto(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
     // probe the projection directly — [[iterative]] checkpoints its own
     // symmetrized frame, so no copy of the full edge set just to decide
-    if (LocalGraph.oneTask("connectedComponents", e, edgeBar)) singlePass(e)
+    if (LocalGraph.oneTask("connectedComponents", e, div = 4)) singlePass(e)
     else iterative(e, maxIter)
   }
 

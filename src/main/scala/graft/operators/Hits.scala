@@ -56,11 +56,10 @@ object Hits {
     * auth_mu BIGINT) after `iters` rounds; vertices with no in-edges
     * carry auth_mu 0, vertices with no out-edges carry hub_mu 0.
     */
-  def fixedPoint(edges: DataFrame, iters: Int = 5,
-                 oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def fixedPoint(edges: DataFrame, iters: Int = 5): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-    if (LocalGraph.oneTask("hits", e, oneTaskBar))
+    if (LocalGraph.oneTask("hits", e))
       return LocalRank.hitsLocal(e, iters, None)
     // Static per-round join inputs, partitioned once per join key.
     // MEMORY BILL: the edge list is checkpointed TWICE (u-keyed and
@@ -136,13 +135,12 @@ object Hits {
     * production passes None and pays no per-round barrier).
     */
   def fixedPointFrom(edges: DataFrame, prev: DataFrame, iters: Int = 3,
-                     trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                     oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                     trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
     // `trace` callers (per-round Δ-sentinel probes) always take the
     // round path — the twin has no per-round driver channel
-    if (LocalGraph.oneTask("hitsFrom", e, if (trace.isEmpty) oneTaskBar else 0L))
+    if (LocalGraph.oneTask("hitsFrom", e, cap = if (trace.isEmpty) Long.MaxValue else 0L))
       return LocalRank.hitsLocal(e, iters, Some(prev))
     val eByU = e.repartition(col("u")).cutLineage()
     val eByV = e.repartition(col("v")).cutLineage()

@@ -89,13 +89,12 @@ object HyperBall {
     * quotient only rises.
     */
   def ballSizes(edges: DataFrame, k: Int = 3,
-                includeZero: Boolean = false,
-                oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                includeZero: Boolean = false): DataFrame = {
     require(k >= 1 && k <= 16, s"hyperball k=$k out of the sane 1..16 range")
     val sym = symmetrize(edges)
     // also puts [[ballSizesMaintain]]'s affected-slice recomputes on
     // the one-task leg
-    if (LocalGraph.oneTask("ballSizes", sym, oneTaskBar))
+    if (LocalGraph.oneTask("ballSizes", sym))
       return ballSizesLocal(sym, k, includeZero)
     // ONE definition of the rounds ([[registerRounds]] — the shared
     // register contract with the q227 streaming parity, the q228
@@ -200,13 +199,12 @@ object HyperBall {
     * already persist R_1 this way) can absorb an insert batch with
     * work ∝ changed registers instead of re-running k full-|E| joins.
     */
-  def registerRounds(edges: DataFrame, k: Int,
-                     oneTaskBar: Long = LocalGraph.SymRowBar): Seq[DataFrame] = {
+  def registerRounds(edges: DataFrame, k: Int): Seq[DataFrame] = {
     require(k >= 1 && k <= 16, s"hyperball k=$k out of the sane 1..16 range")
     val sym = symmetrize(edges)
     // one-task leg: all k+1 round tables from ONE task + ONE checkpoint
     // (each returned table is a filter on the round column)
-    if (LocalGraph.oneTask("registerRounds", sym, oneTaskBar)) return registerRoundsLocal(sym, k)
+    if (LocalGraph.oneTask("registerRounds", sym)) return registerRoundsLocal(sym, k)
     registerRoundsFromSym(sym, k)
   }
 
@@ -327,8 +325,7 @@ object HyperBall {
   def ballSizesGrowFrom(oldRounds: Seq[DataFrame], oldEdges: DataFrame,
                         inserts: DataFrame, k: Int = 3,
                         includeZero: Boolean = false,
-                        trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                        trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     require(oldRounds.length == k + 1,
       s"expected ${k + 1} stored register rounds (R_0..R_$k), got ${oldRounds.length}")
     val symOld = symmetrize(oldEdges)
@@ -338,7 +335,8 @@ object HyperBall {
     // the growth recursion is bit-equal to the cold rounds over the
     // grown graph (maintained ≡ fresh), so the one-task leg replays the
     // cold rounds; `trace` callers (wavefront probes) take the rounds
-    if (LocalGraph.oneTask("ballSizesGrowFrom", symNet, if (trace.isEmpty) oneTaskBar else 0L))
+    if (LocalGraph.oneTask("ballSizesGrowFrom", symNet,
+        cap = if (trace.isEmpty) Long.MaxValue else 0L))
       return ballSizesLocal(symNet, k, includeZero)
     val estCol: Column = estimator
     val newVerts = symIns.select(col("u").as("id")).distinct()
@@ -427,8 +425,7 @@ object HyperBall {
                         inserts: DataFrame, deletes: DataFrame,
                         k: Int = 3, includeZero: Boolean = false,
                         labels: Option[DataFrame] = None,
-                        trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                        trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val (netC, affVerts) =
       Maintenance.carve(oldEdges, inserts, deletes, labels, trace)
     // unaffected components: identical induced edges ⇒ identical
@@ -439,8 +436,7 @@ object HyperBall {
     // test suffices
     val sub = netC.join(affVerts.toDF("u"), Seq("u"), "left_semi")
     val recomputed = ballSizes(
-      sub.select(col("u").as("src"), col("v").as("dst")), k, includeZero,
-      oneTaskBar)
+      sub.select(col("u").as("src"), col("v").as("dst")), k, includeZero)
     passThrough.unionByName(recomputed)
   }
 

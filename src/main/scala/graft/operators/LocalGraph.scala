@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Single-task EXACT solvers for the iterative decompositions — the
@@ -34,6 +34,18 @@ object LocalGraph {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.LocalGraph")
 
+  /** Session conf holding the twin gate's bar, in rows; unset means
+    * [[SymRowBar]]. Setting it to 0 forces every operator's rounds.
+    */
+  val BarConf = "spark.graft.oneTaskBar"
+
+  /** [[BarConf]] in `spark` as a Long, or [[SymRowBar]] when unset. */
+  private def sessionBar(spark: SparkSession): Long =
+    spark.conf.getOption(BarConf).fold(SymRowBar) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$BarConf must be a whole number of rows, got '$v'"))
+    }
+
   /** The one twin gate: true when operator `op` should run its one-task
     * leg on `in` rather than its distributed rounds. Every leg choice in
     * the operators goes through here.
@@ -44,23 +56,27 @@ object LocalGraph {
     * construction. Specs pin each pair at bar 0 (LocalTwinsSpec, plus
     * TraversalsSpec, TrianglesSpec and SummarySpec).
     *
-    * A bar ≤ 0 forces the rounds without probing; otherwise one-task
-    * runs when `in` has ≤ `bar` rows. A cut `in` ([[graft.Lineage.cut]])
-    * already carries its measured count, so the gate reads it with no
-    * job. Any other `in` is probed: one job with no exchange, in which
-    * each partition stops counting after `bar + 1` rows, so above the
-    * bar its last stage reads at most P·(bar + 1) rows (stages upstream
-    * of an un-checkpointed `in` still run in full, as for `count()`).
-    * Each call logs one INFO line: operator, leg, rows (or `>bar`) and
-    * bar.
+    * The bar is `min(cap, sessionBar / div)`: `div` scales it for an
+    * operator whose input rows weigh more than symmetric adjacency rows,
+    * and `cap = 0` lets a caller force the rounds. A bar ≤ 0 forces the
+    * rounds without probing; otherwise one-task runs when `in` has ≤
+    * `bar` rows. A cut `in` ([[graft.Lineage.cut]]) already carries its
+    * measured count, so the gate reads it with no job. Any other `in` is
+    * probed: one job with no exchange, in which each partition stops
+    * counting after `bar + 1` rows, so above the bar its last stage reads
+    * at most P·(bar + 1) rows (stages upstream of an un-checkpointed `in`
+    * still run in full, as for `count()`). Each call logs one INFO line:
+    * operator, leg, rows (or `>bar`) and bar.
     */
-  def oneTask(op: String, in: DataFrame, bar: Long): Boolean =
-    decide(op, if (bar <= 0) None
-      else Some(graft.Lineage.rowsIfCut(in).getOrElse(probeRows(in, bar))), bar)
-
-  /** [[oneTask]] for a caller that already holds the row count. */
-  def oneTask(op: String, rows: Long, bar: Long): Boolean =
-    decide(op, if (bar <= 0) None else Some(rows), bar)
+  def oneTask(op: String, in: DataFrame, div: Int = 1, cap: Long = Long.MaxValue): Boolean = {
+    val bar = math.min(cap, sessionBar(in.sparkSession) / div)
+    val rows = if (bar <= 0) None
+      else Some(graft.Lineage.rowsIfCut(in).getOrElse(probeRows(in, bar)))
+    val local = rows.exists(_ <= bar)
+    val seen = rows.fold("not probed")(r => if (r > bar) s">$bar" else r.toString)
+    log.info(s"twin gate: $op -> ${if (local) "one-task" else "rounds"} (rows $seen, bar $bar)")
+    local
+  }
 
   /** Rows of `in`, except that each partition stops at `bar + 1`: the sum
     * is ≤ `bar` exactly when `in.count()` is.
@@ -72,13 +88,6 @@ object LocalGraph {
       while (n < cap && it.hasNext) { it.next(); n += 1 }
       Iterator.single(n)
     }.fold(0L)(_ + _)
-  }
-
-  private def decide(op: String, rows: Option[Long], bar: Long): Boolean = {
-    val local = rows.exists(_ <= bar)
-    val seen = rows.fold("not probed")(r => if (r > bar) s">$bar" else r.toString)
-    log.info(s"twin gate: $op -> ${if (local) "one-task" else "rounds"} (rows $seen, bar $bar)")
-    local
   }
 
   /** Exact core decomposition of a SYMMETRIC edge list (u, v) — the

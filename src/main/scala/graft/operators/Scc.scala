@@ -49,8 +49,7 @@ object Scc {
     * singleton is an SCC with or without one). Returns (id, scc).
     */
   def stronglyConnectedComponents(edges: DataFrame, maxOuter: Int = 30,
-                                  maxInner: Int = 60,
-                                  oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame = {
+                                  maxInner: Int = 60): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -59,7 +58,7 @@ object Scc {
       .where(col("u") =!= col("v"))
       .distinct()
       .cutLineage()
-    if (LocalGraph.oneTask("scc", e, oneTaskBar))
+    if (LocalGraph.oneTask("scc", e, div = 2))
       return LocalGraph.sccLocal(e)
     var live = e.select(col("u").as("id")).union(e.select(col("v")))
       .distinct().cutLineage()

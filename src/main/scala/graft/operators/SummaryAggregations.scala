@@ -112,16 +112,17 @@ object SummaryAggregations {
 
   /** O20 with `transientState=true`: an independent summary per tumbling
     * window, reset between windows (GS/WindowGraphAggregation.java:~45).
-    * Input must carry a `win` column (e.g. from
-    * [[graft.model.GraphFixtures.coPurchaseWindowed]] or a `window()`
-    * projection); works identically on streaming inputs under a
-    * watermark. Output: (win, id, component).
+    * Groups by `win`, by default the input's `win` column (e.g. from
+    * [[graft.model.GraphFixtures.coPurchaseWindowed]]); a stream passes
+    * its `window()` column itself, so the aggregation keys on the
+    * watermarked event time. Output: (win, id, component).
     */
-  def connectedComponentsPerWindow(windowedEdges: DataFrame): DataFrame = {
+  def connectedComponentsPerWindow(windowedEdges: DataFrame,
+                                   win: Column = col("win")): DataFrame = {
     val ccUdaf = udaf(new ConnectedComponentsAgg,
       ExpressionEncoder[(Long, Long)]())
     windowedEdges
-      .groupBy(col("win"))
+      .groupBy(win.as("win"))
       .agg(ccUdaf(col("src"), col("dst")).as("m"))
       .select(col("win"), explode(col("m")))
       .toDF("win", "id", "component")

@@ -41,20 +41,18 @@ object Traversals {
     * of the source, each a constant number of shuffles — the standard
     * distributed-BFS cost model.
     */
-  def bfsDepths(edges: DataFrame, source: Long, maxIter: Int = 100,
-                oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame =
-    bfsFromSym(symmetrize(edges).cutLineage(), source, maxIter, oneTaskBar)
+  def bfsDepths(edges: DataFrame, source: Long, maxIter: Int = 100): DataFrame =
+    bfsFromSym(symmetrize(edges).cutLineage(), source, maxIter)
 
   /** BFS over an already-symmetrized, already-checkpointed `(u, v)` edge
     * set — lets multi-sweep compositions (diameter) pay the symmetrize
     * shuffle once.
     */
-  private def bfsFromSym(sym: DataFrame, source: Long, maxIter: Int,
-                         oneTaskBar: Long): DataFrame = {
+  private def bfsFromSym(sym: DataFrame, source: Long, maxIter: Int): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
     // the one-task leg keeps the silent maxIter truncation (failLoud=false)
-    if (LocalGraph.oneTask("bfsDepths", sym, oneTaskBar))
+    if (LocalGraph.oneTask("bfsDepths", sym))
       return LocalGraph.multiBfsLocal(sym, Seq(source), maxIter,
         "bfsDepths", failLoud = false).select(col("id"), col("dist"))
 
@@ -100,14 +98,13 @@ object Traversals {
     * pair.
     */
   def landmarkDistances(edges: DataFrame, nLandmarks: Int = 8,
-                        maxIter: Int = 100,
-                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                        maxIter: Int = 100): DataFrame = {
     val sym = symmetrize(edges).cutLineage()
     val lms = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("id").asc).limit(nLandmarks)
       .select(col("id").as("lm")).cutLineage()
     // the one-task leg mirrors the fail-loud ecc budget
-    if (LocalGraph.oneTask("landmarkDistances", sym, oneTaskBar))
+    if (LocalGraph.oneTask("landmarkDistances", sym))
       return LocalGraph.multiBfsLocal(sym,
         lms.collect().map(_.getLong(0)).toSeq, maxIter, "landmarkDistances")
     var frontiers = List(
@@ -225,12 +222,11 @@ object Traversals {
     */
   def landmarkMaintainInserts(index: DataFrame, grownEdges: DataFrame,
                               inserts: DataFrame,
-                              maxIter: Int = 100,
-                              oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                              maxIter: Int = 100): DataFrame = {
     val sym = symmetrize(grownEdges).cutLineage()
     // the maintained index is row-equal to a fresh BFS over the GROWN
     // graph from the build-time landmarks, which the one-task leg runs
-    if (LocalGraph.oneTask("landmarkMaintainInserts", sym, oneTaskBar))
+    if (LocalGraph.oneTask("landmarkMaintainInserts", sym))
       return LocalGraph.multiBfsLocal(sym,
         index.select(col("lm").cast("long")).distinct()
           .collect().map(_.getLong(0)).toSeq,
@@ -326,14 +322,13 @@ object Traversals {
     */
   def landmarkMaintainDeletes(index: DataFrame, oldEdges: DataFrame,
                               deletes: DataFrame,
-                              maxIter: Int = 100,
-                              oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                              maxIter: Int = 100): DataFrame = {
     val dsym = symmetrize(deletes).cutLineage()
     val symS = symmetrize(oldEdges).join(dsym, Seq("u", "v"), "left_anti")
       .cutLineage()
     // the maintained index is row-equal to a fresh BFS over the SHRUNK
     // graph from the build-time landmarks, which the one-task leg runs
-    if (LocalGraph.oneTask("landmarkMaintainDeletes", symS, oneTaskBar))
+    if (LocalGraph.oneTask("landmarkMaintainDeletes", symS))
       return LocalGraph.multiBfsLocal(symS,
         index.select(col("lm").cast("long")).distinct()
           .collect().map(_.getLong(0)).toSeq,
@@ -404,13 +399,12 @@ object Traversals {
     * exactly two BFS runs. Output: one row
     * `(source, ecc_source, far_vertex, diameter_lb)`.
     */
-  def doubleSweepDiameter(edges: DataFrame, start: Long, maxIter: Int = 100,
-                          oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def doubleSweepDiameter(edges: DataFrame, start: Long, maxIter: Int = 100): DataFrame = {
     val sym = symmetrize(edges).cutLineage()
-    val d1 = bfsFromSym(sym, start, maxIter, oneTaskBar)
+    val d1 = bfsFromSym(sym, start, maxIter)
     val farRow = d1.orderBy(col("dist").desc, col("id").asc).limit(1).head()
     val far = farRow.getLong(0)
-    val d2 = bfsFromSym(sym, far, maxIter, oneTaskBar)
+    val d2 = bfsFromSym(sym, far, maxIter)
     d2.agg(max(col("dist")).as("diameter_lb"))
       .select(lit(start).as("source"),
         lit(farRow.getLong(1)).as("ecc_source"),
@@ -431,8 +425,7 @@ object Traversals {
     * distance improved can improve anything). Convergence is the empty
     * frontier; the only driver action per round is that emptiness probe.
     */
-  def sssp(edges: DataFrame, source: Long, maxIter: Int = 60,
-           oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def sssp(edges: DataFrame, source: Long, maxIter: Int = 60): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val half = edges.select(col("src").cast("long").as("u"),
@@ -442,7 +435,7 @@ object Traversals {
       .groupBy("u", "v").agg(min("w").as("w"))
       .cutLineage()
 
-    if (LocalGraph.oneTask("sssp", sym, oneTaskBar))
+    if (LocalGraph.oneTask("sssp", sym))
       return LocalGraph.ssspLocal(sym, source, maxIter)
     var dist = Seq((source, 0L)).toDF("id", "dist").cutLineage()
     // frontier = vertices whose distance improved last round. Only their
@@ -532,12 +525,11 @@ object Traversals {
     * the degeneracy ordering depth — typically tens even on huge
     * graphs.
     */
-  def kcore(edges: DataFrame, k: Int, maxIter: Int = 100,
-            oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def kcore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     var sym = symmetrize(edges).cutLineage()
     var m = Lineage.rows(sym)
     // the gate reuses the loop-control count
-    if (LocalGraph.oneTask("kcore", m, oneTaskBar))
+    if (LocalGraph.oneTask("kcore", sym))
       return LocalGraph.kcoreLocal(sym, k, maxIter)
     var changed = m > 0
     var iter = 0
@@ -588,10 +580,9 @@ object Traversals {
     * this `require` fail independently and loudly if either side's
     * budget is outlived; a silent one-sided truncation cannot happen.
     */
-  def coreness(edges: DataFrame, maxRounds: Int = 200,
-               oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def coreness(edges: DataFrame, maxRounds: Int = 200): DataFrame = {
     val sym = symmetrize(edges).cutLineage()
-    if (LocalGraph.oneTask("coreness", sym, oneTaskBar))
+    if (LocalGraph.oneTask("coreness", sym))
       return LocalGraph.corenessLocal(sym)
         .select(col("id"), col("coreness"))
     var c = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("h"))
@@ -691,8 +682,7 @@ object Traversals {
                        inserts: DataFrame, deletes: DataFrame,
                        labels: Option[DataFrame] = None,
                        maxRounds: Int = 200,
-                       trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                       oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                       trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val oldSym = symmetrize(oldEdges)
     val insSym = symmetrize(inserts)
     val superSym = oldSym.unionByName(insSym).distinct().cutLineage()
@@ -723,7 +713,7 @@ object Traversals {
     // the capped-monotone iteration converges to the UNIQUE coreness of
     // the affected induced subgraph from ANY upper bound, so seeds and
     // caps only speed the round path up and the one-task leg skips them
-    if (LocalGraph.oneTask("corenessMaintain", subSym, oneTaskBar))
+    if (LocalGraph.oneTask("corenessMaintain", subSym))
       return passThrough.unionByName(
         LocalGraph.corenessLocal(subSym).select(col("id"), col("coreness")))
     val bIns = insSym.where(col("u") < col("v")).count()
@@ -859,15 +849,14 @@ object Traversals {
     * truncated. Fails loud if edges remain after `maxRounds` (a
     * truncated peel could silently miss the best round).
     */
-  def densestSubgraph(edges: DataFrame, maxRounds: Int = 320,
-                      oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def densestSubgraph(edges: DataFrame, maxRounds: Int = 320): DataFrame = {
     val spark = edges.sparkSession
     var sym = symmetrize(edges).cutLineage()
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var r = 0L
     var msym = Lineage.rows(sym)
     // the gate reuses the loop-control count
-    if (LocalGraph.oneTask("densestSubgraph", msym, oneTaskBar))
+    if (LocalGraph.oneTask("densestSubgraph", sym))
       return LocalDensest.densestLocal(sym, maxRounds)
     while (msym > 0 && r < maxRounds) {
       val n = sym.select(col("u")).distinct().count()
@@ -951,8 +940,7 @@ object Traversals {
     * set if the deployment keeps one; computed fresh when absent.
     */
   def densestByComponent(edges: DataFrame, maxRounds: Int = 320,
-                         labels: Option[DataFrame] = None,
-                         oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                         labels: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym0 = symmetrize(edges).cutLineage()
@@ -963,7 +951,7 @@ object Traversals {
     // the one-task leg derives the min-label decomposition itself
     // (`labels`, when given, must be exactly that decomposition); one
     // count serves the empty check and the gate
-    if (LocalGraph.oneTask("densestByComponent", arcs0, oneTaskBar))
+    if (LocalGraph.oneTask("densestByComponent", sym0))
       return LocalDensest.densestByComponentLocal(sym0, maxRounds)
     val vcomp = labels.getOrElse(ConnectedComponents.auto(
         sym0.select(col("u").as("src"), col("v").as("dst"))))
@@ -1056,8 +1044,7 @@ object Traversals {
                       inserts: DataFrame, deletes: DataFrame,
                       maxRounds: Int = 320,
                       labels: Option[DataFrame] = None,
-                      trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                      oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                      trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val (netC, affVerts) =
       Maintenance.carve(oldEdges, inserts, deletes, labels, trace)
     // an unaffected component's label is a vertex id INSIDE it, so one
@@ -1068,8 +1055,7 @@ object Traversals {
     // graph (net ⊆ old ∪ inserts): one endpoint test suffices
     val sub = netC.join(affVerts.toDF("u"), Seq("u"), "left_semi")
     val recomputed = densestByComponent(
-      sub.select(col("u").as("src"), col("v").as("dst")), maxRounds,
-      oneTaskBar = oneTaskBar)
+      sub.select(col("u").as("src"), col("v").as("dst")), maxRounds)
     passThrough.unionByName(recomputed)
   }
 
@@ -1102,13 +1088,13 @@ object Traversals {
     */
   def temporalDeparture(tedges: DataFrame, target: Long, deadline: Long,
                         maxRounds: Int = 64,
-                        trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                        oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                        trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val spark = tedges.sparkSession
     import spark.implicits._
     val sym = symmetrizeTemporal(tedges).cutLineage()
     // `trace` callers probe round shape and take the rounds
-    if (LocalGraph.oneTask("temporalDeparture", sym, if (trace.isEmpty) oneTaskBar else 0L))
+    if (LocalGraph.oneTask("temporalDeparture", sym,
+        cap = if (trace.isEmpty) Long.MaxValue else 0L))
       return LocalGraph.temporalDepartureLocal(sym, target, deadline)
     var lt = Seq((target, deadline)).toDF("id", "a").cutLineage()
     var changed = lt.select(col("id"))
@@ -1159,13 +1145,12 @@ object Traversals {
     */
   def temporalBfs(tedges: DataFrame, source: Long, startT: Long = -1L,
                   maxRounds: Int = 64,
-                  trace: Option[scala.collection.mutable.Buffer[Long]] = None,
-                  oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                  trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     val spark = tedges.sparkSession
     import spark.implicits._
     val sym = symmetrizeTemporal(tedges).cutLineage()
     // `trace` callers probe round shape and take the rounds
-    if (LocalGraph.oneTask("temporalBfs", sym, if (trace.isEmpty) oneTaskBar else 0L))
+    if (LocalGraph.oneTask("temporalBfs", sym, cap = if (trace.isEmpty) Long.MaxValue else 0L))
       return LocalGraph.temporalArrivalLocal(sym, source, startT)
     var arr = Seq((source, startT)).toDF("id", "a").cutLineage()
     var changed = arr.select(col("id"))

@@ -507,15 +507,14 @@ object Triangles {
     * chain would pay (the k=3 enumeration repeated per level) happens
     * exactly ONCE, on the original graph.
     */
-  def trussness(c: DataFrame, kMax: Int = 6,
-                oneTaskBar: Long = LocalGraph.SymRowBar / 2): DataFrame = {
+  def trussness(c: DataFrame, kMax: Int = 6): DataFrame = {
     require(kMax >= 3, s"trussness: kMax must be >= 3, got $kMax")
     val edges = c.select(
         least(col("src"), col("dst")).cast("long").as("src"),
         greatest(col("src"), col("dst")).cast("long").as("dst"))
       .where(col("src") < col("dst")).distinct()
       .cutLineage()
-    if (LocalGraph.oneTask("trussness", edges, oneTaskBar))
+    if (LocalGraph.oneTask("trussness", edges, div = 2))
       return LocalGraph.trussnessLocal(edges, kMax)
     var sup = withSupport(edges)
     var parts = List.empty[DataFrame]

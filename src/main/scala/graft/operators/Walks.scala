@@ -61,11 +61,10 @@ object Walks {
       .agg(min(struct(stepHash(t).as("h"), col("v").as("n"))).as("m"))
       .select(col("start_id"), col("m.n").as("cur"))
 
-  def deterministicWalks(edges: DataFrame, len: Int,
-                         oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+  def deterministicWalks(edges: DataFrame, len: Int): DataFrame = {
     require(len >= 0, s"walk length must be non-negative, got $len")
     val sym = symOf(edges)
-    if (LocalGraph.oneTask("deterministicWalks", sym, oneTaskBar))
+    if (LocalGraph.oneTask("deterministicWalks", sym))
       return walksLocal(sym, len, biased = false, 0L, 0L, 0L)
     var cur = sym.select(col("u").as("start_id")).distinct()
       .withColumn("cur", col("start_id")).cutLineage()
@@ -112,12 +111,11 @@ object Walks {
     */
   def biasedWalks(edges: DataFrame, len: Int,
                   fReturn: Long = 4L, fNear: Long = 1L,
-                  fFar: Long = 2L,
-                  oneTaskBar: Long = LocalGraph.SymRowBar): DataFrame = {
+                  fFar: Long = 2L): DataFrame = {
     require(len >= 0, s"walk length must be non-negative, got $len")
     require(fReturn > 0 && fNear > 0 && fFar > 0, "bias factors must be positive")
     val sym = symOf(edges)
-    if (LocalGraph.oneTask("biasedWalks", sym, oneTaskBar))
+    if (LocalGraph.oneTask("biasedWalks", sym))
       return walksLocal(sym, len, biased = true, fReturn, fNear, fFar)
     var cur = sym.select(col("u").as("start_id")).distinct()
       .withColumn("cur", col("start_id")).cutLineage()

@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.GraphStream
-import graft.operators.{BipartitenessAgg, ConnectedComponentsAgg, GraphAggregation}
+import graft.operators.{BipartitenessAgg, ConnectedComponentsAgg, GraphAggregation,
+  SummaryAggregations}
 import graft.summaries.{DisjointSet, ParityDisjointSet}
 
 /** Structured-Streaming forms of the graph operators.
@@ -1694,14 +1695,8 @@ object StreamingOps {
     * start.
     */
   def windowedConnectedComponents(edges: DataFrame, size: String,
-                                  delay: String = "0 seconds"): DataFrame = {
-    val ccUdaf = org.apache.spark.sql.functions.udaf(
-      new graft.operators.ConnectedComponentsAgg,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]())
-    edges.withWatermark("ts", delay)
-      .groupBy(window(col("ts"), size).as("w"))
-      .agg(ccUdaf(col("src"), col("dst")).as("m"))
-      .select(unix_timestamp(col("w.start")).as("win"), explode(col("m")))
-      .toDF("win", "id", "component")
-  }
+                                  delay: String = "0 seconds"): DataFrame =
+    SummaryAggregations.connectedComponentsPerWindow(
+        edges.withWatermark("ts", delay), window(col("ts"), size))
+      .withColumn("win", unix_timestamp(col("win.start")))
 }

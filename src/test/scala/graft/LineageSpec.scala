@@ -37,16 +37,6 @@ class LineageSpec extends SparkTestBase {
     case p => p
   }
 
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("Lineage.rows equals count(), on an empty frame too, and runs no job") {
     for ((name, df) <- Seq(
         "range over 4 partitions" -> spark.range(0, 1234, 1, 4).toDF(),

@@ -11,17 +11,18 @@ import scala.jdk.CollectionConverters._
 
 /** r13 scale-adaptive A/B pins: every operator that gained a one-task
   * replay twin this round is run BOTH ways — the default bar (one-task
-  * leg) against `oneTaskBar = 0` (the distributed round path) — and the
-  * outputs must be bit-equal. The fixtures mix the sf0.001 C10
-  * co-purchase graph (multi-component, triangles, odd cycles) with
-  * synthetic shapes that exercise the edge semantics (multi-arcs,
-  * weights, self-gated passes). Also covers the r12 twins the advice
-  * flagged as untested on the round path (SCC, BFS, SSSP, landmarks).
-  * Each pair also reads the twin gate's decision log, so the pins fail if
-  * the gate never picks the one-task leg; the last three tests pin the
-  * gate's probe and its read of a cut input's measured count. Each
-  * operator also runs on the empty edge frame (`pinEmpty`, or
-  * `sameNone` where it returns before the gate).
+  * leg) against session bar 0 (`spark.graft.oneTaskBar`, the distributed
+  * round path) — and the outputs must be bit-equal. The fixtures mix the
+  * sf0.001 C10 co-purchase graph (multi-component, triangles, odd
+  * cycles) with synthetic shapes that exercise the edge semantics
+  * (multi-arcs, weights, self-gated passes). Also covers the r12 twins
+  * the advice flagged as untested on the round path (SCC, BFS, SSSP,
+  * landmarks). Each pair also reads the twin gate's decision log, so the
+  * pins fail if the gate never picks the one-task leg; the last tests
+  * pin the gate's probe, its read of a cut input's measured count and
+  * its read of the session bar. Each operator also runs on the empty
+  * edge frame (`pinEmpty`, or `sameNone` where it returns before the
+  * gate).
   */
 class LocalTwinsSpec extends SparkTestBase {
 
@@ -56,26 +57,32 @@ class LocalTwinsSpec extends SparkTestBase {
     log
   }
 
-  /** Runs both legs and reads the gate log: each operator gated at bar 0
-    * in the `round` call took its rounds there, and its one-task leg in
-    * the `local` call.
+  /** Runs `op` at the default bar and at bar 0 and reads the gate log:
+    * every gate of the bar-0 call took its rounds at bar 0, and each
+    * operator gated there took its one-task leg in the default call.
+    * The exceptions are the `roundOnly` operators, which only a round
+    * path calls (nested gates): the default call must not gate them.
     */
-  private def legs[A](local: => A, round: => A, what: String): (A, A) = {
-    val (l, atDefault) = gateLog.during(local)
-    val (r, atZero) = gateLog.during(round)
-    val pinned = atZero.filter(_.bar == 0L)
-    assert(pinned.nonEmpty, s"$what: the bar-0 call logged no gate decision")
-    assert(pinned.forall(_.leg == "rounds"), s"$what: bar 0 did not force the rounds")
-    for (op <- pinned.map(_.op).distinct) {
-      val seen = atDefault.filter(_.op == op)
-      assert(seen.nonEmpty && seen.forall(_.leg == "one-task"),
-        s"$what: $op did not take its one-task leg at the default bar: $seen")
+  private def legs[A](op: => A, what: String, roundOnly: Set[String] = Set.empty): (A, A) = {
+    val (l, atDefault) = gateLog.during(op)
+    val (r, atZero) = gateLog.during(atBarZero(op))
+    assert(atZero.nonEmpty, s"$what: the bar-0 call logged no gate decision")
+    assert(atZero.forall(_.bar == 0L), s"$what: a bar-0 gate read another bar: $atZero")
+    assert(atZero.forall(_.leg == "rounds"), s"$what: bar 0 did not force the rounds")
+    val gated = atZero.map(_.op).distinct
+    assert(roundOnly.subsetOf(gated.toSet), s"$what: $roundOnly not all gated at bar 0: $gated")
+    for (g <- gated) {
+      val seen = atDefault.filter(_.op == g)
+      if (roundOnly(g)) assert(seen.isEmpty, s"$what: round-only $g gated at the default bar")
+      else assert(seen.nonEmpty && seen.forall(_.leg == "one-task"),
+        s"$what: $g did not take its one-task leg at the default bar: $seen")
     }
     (l, r)
   }
 
-  private def pinEqual(local: => DataFrame, round: => DataFrame, what: String): Unit = {
-    val (l, r) = legs(local, round, what)
+  private def pinEqual(op: => DataFrame, what: String,
+                       roundOnly: Set[String] = Set.empty): Unit = {
+    val (l, r) = legs(op, what, roundOnly)
     sameRows(l, r, what)
   }
 
@@ -88,17 +95,20 @@ class LocalTwinsSpec extends SparkTestBase {
   /** [[pinEqual]] on the empty edge frame: both legs also give exactly
     * `want`, no rows unless the operator emits its sources.
     */
-  private def pinEmpty(local: => DataFrame, round: => DataFrame, what: String,
+  private def pinEmpty(op: => DataFrame, what: String,
                        want: Seq[Seq[Any]] = Nil): Unit = {
-    val (l, r) = legs(local, round, s"$what on no edges")
-    sameNone(l, r, what, want)
+    val (l, r) = legs(op, s"$what on no edges")
+    noRows(l, r, what, want)
   }
 
   /** The row check of [[pinEmpty]], for operators that return before the
     * gate on no edges (so neither call logs a decision).
     */
-  private def sameNone(local: DataFrame, round: DataFrame, what: String,
-                       want: Seq[Seq[Any]] = Nil): Unit = {
+  private def sameNone(op: => DataFrame, what: String): Unit =
+    noRows(op, atBarZero(op), what, Nil)
+
+  private def noRows(local: DataFrame, round: DataFrame, what: String,
+                     want: Seq[Seq[Any]]): Unit = {
     sameRows(local, round, s"$what on no edges")
     assert(rows(local) == want, s"$what on no edges")
   }
@@ -108,46 +118,22 @@ class LocalTwinsSpec extends SparkTestBase {
   private lazy val none = c10.limit(0)
 
   test("labelPropagation: one-task replay == round path") {
-    pinEqual(
-      Communities.labelPropagation(c10, 3),
-      Communities.labelPropagation(c10, 3, oneTaskBar = 0L),
-      "labelPropagation")
-    pinEmpty(
-      Communities.labelPropagation(none, 3),
-      Communities.labelPropagation(none, 3, oneTaskBar = 0L),
-      "labelPropagation")
+    pinEqual(Communities.labelPropagation(c10, 3), "labelPropagation")
+    pinEmpty(Communities.labelPropagation(none, 3), "labelPropagation")
   }
 
   test("modularityRefine: one-task replay == round path") {
     val lpa = Communities.labelPropagation(c10, 3)
-    pinEqual(
-      Communities.modularityRefine(c10, lpa),
-      Communities.modularityRefine(c10, lpa, oneTaskBar = 0L),
-      "modularityRefine")
+    pinEqual(Communities.modularityRefine(c10, lpa), "modularityRefine")
     val noLabels = Communities.labelPropagation(none, 3)
-    pinEmpty(
-      Communities.modularityRefine(none, noLabels),
-      Communities.modularityRefine(none, noLabels, oneTaskBar = 0L),
-      "modularityRefine")
+    pinEmpty(Communities.modularityRefine(none, noLabels), "modularityRefine")
   }
 
   test("louvain / louvainLeiden: one-task replay == round path") {
-    pinEqual(
-      Communities.louvain(c10, 2, 2),
-      Communities.louvain(c10, 2, 2, oneTaskBar = 0L),
-      "louvain")
-    pinEqual(
-      Communities.louvainLeiden(c10, 2, 2),
-      Communities.louvainLeiden(c10, 2, 2, oneTaskBar = 0L),
-      "louvainLeiden")
-    pinEmpty(
-      Communities.louvain(none, 2, 2),
-      Communities.louvain(none, 2, 2, oneTaskBar = 0L),
-      "louvain")
-    pinEmpty(
-      Communities.louvainLeiden(none, 2, 2),
-      Communities.louvainLeiden(none, 2, 2, oneTaskBar = 0L),
-      "louvainLeiden")
+    pinEqual(Communities.louvain(c10, 2, 2), "louvain")
+    pinEqual(Communities.louvainLeiden(c10, 2, 2), "louvainLeiden")
+    pinEmpty(Communities.louvain(none, 2, 2), "louvain")
+    pinEmpty(Communities.louvainLeiden(none, 2, 2), "louvainLeiden")
   }
 
   test("louvainWeighted: one-task replay == round path (incl. parallel-edge weights)") {
@@ -155,25 +141,13 @@ class LocalTwinsSpec extends SparkTestBase {
     val weighted = Seq((1L, 2L, 5L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 7L),
       (4L, 5L, 7L), (5L, 3L, 7L), (6L, 7L, 1L), (1L, 2L, 3L))
       .toDF("src", "dst", "weight")
-    pinEqual(
-      Communities.louvainWeighted(weighted, 2, 2),
-      Communities.louvainWeighted(weighted, 2, 2, oneTaskBar = 0L),
-      "louvainWeighted")
-    pinEmpty(
-      Communities.louvainWeighted(weighted.limit(0), 2, 2),
-      Communities.louvainWeighted(weighted.limit(0), 2, 2, oneTaskBar = 0L),
-      "louvainWeighted")
+    pinEqual(Communities.louvainWeighted(weighted, 2, 2), "louvainWeighted")
+    pinEmpty(Communities.louvainWeighted(weighted.limit(0), 2, 2), "louvainWeighted")
   }
 
   test("louvainByComponent + louvainMaintain: one-task replay == round path") {
-    pinEqual(
-      Communities.louvainByComponent(c10, 2, 2),
-      Communities.louvainByComponent(c10, 2, 2, oneTaskBar = 0L),
-      "louvainByComponent")
-    pinEmpty(
-      Communities.louvainByComponent(none, 2, 2),
-      Communities.louvainByComponent(none, 2, 2, oneTaskBar = 0L),
-      "louvainByComponent")
+    pinEqual(Communities.louvainByComponent(c10, 2, 2), "louvainByComponent")
+    pinEmpty(Communities.louvainByComponent(none, 2, 2), "louvainByComponent")
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (12L, 10L), (20L, 21L)).toDF("src", "dst")
@@ -181,112 +155,54 @@ class LocalTwinsSpec extends SparkTestBase {
     val deletes = Seq((20L, 21L)).toDF("src", "dst")
     val oldLabels = Communities.louvainByComponent(base, 2, 2)
       .toDF("id", "community")
-    pinEqual(
-      Communities.louvainMaintain(oldLabels, base, inserts, deletes),
-      Communities.louvainMaintain(oldLabels, base, inserts, deletes,
-        oneTaskBar = 0L),
-      "louvainMaintain")
+    pinEqual(Communities.louvainMaintain(oldLabels, base, inserts, deletes), "louvainMaintain")
     val noLabels = Communities.louvainByComponent(none, 2, 2).toDF("id", "community")
-    pinEmpty(
-      Communities.louvainMaintain(noLabels, none, none, none),
-      Communities.louvainMaintain(noLabels, none, none, none, oneTaskBar = 0L),
-      "louvainMaintain")
+    pinEmpty(Communities.louvainMaintain(noLabels, none, none, none), "louvainMaintain")
   }
 
   test("pagerank family: one-task replay == round path") {
     val sym = c10.unionByName(c10.select(col("dst").as("src"), col("src").as("dst")))
-    pinEqual(
-      PageRank.fixedPoint(sym, 10),
-      PageRank.fixedPoint(sym, 10, oneTaskBar = 0L),
-      "pagerank.fixedPoint")
-    pinEmpty(
-      PageRank.fixedPoint(none, 10),
-      PageRank.fixedPoint(none, 10, oneTaskBar = 0L),
-      "pagerank.fixedPoint")
+    pinEqual(PageRank.fixedPoint(sym, 10), "pagerank.fixedPoint")
+    pinEmpty(PageRank.fixedPoint(none, 10), "pagerank.fixedPoint")
     val prev = PageRank.fixedPoint(sym, 3)
-    pinEqual(
-      PageRank.fixedPointFrom(c10, prev, 4),
-      PageRank.fixedPointFrom(c10, prev, 4, oneTaskBar = 0L),
-      "pagerank.fixedPointFrom")
+    pinEqual(PageRank.fixedPointFrom(c10, prev, 4), "pagerank.fixedPointFrom")
     val noRanks = PageRank.fixedPoint(none, 3)
-    pinEmpty(
-      PageRank.fixedPointFrom(none, noRanks, 4),
-      PageRank.fixedPointFrom(none, noRanks, 4, oneTaskBar = 0L),
-      "pagerank.fixedPointFrom")
+    pinEmpty(PageRank.fixedPointFrom(none, noRanks, 4), "pagerank.fixedPointFrom")
     val src = c10.agg(min(col("src"))).head().getLong(0)
-    pinEqual(
-      PageRank.personalized(sym, Seq(src), 10),
-      PageRank.personalized(sym, Seq(src), 10, oneTaskBar = 0L),
-      "pagerank.personalized")
-    pinEmpty(
-      PageRank.personalized(none, Seq(src), 10),
-      PageRank.personalized(none, Seq(src), 10, oneTaskBar = 0L),
-      "pagerank.personalized")
+    pinEqual(PageRank.personalized(sym, Seq(src), 10), "pagerank.personalized")
+    pinEmpty(PageRank.personalized(none, Seq(src), 10), "pagerank.personalized")
     import spark.implicits._
     // multi-arc + zero-weight group: totw=0 vertices drop from the
     // propagation but stay in the vertex table
     val weighted = Seq((1L, 2L, 3L), (1L, 2L, 2L), (2L, 3L, 1L),
       (3L, 1L, 4L), (4L, 5L, 0L)).map { case (s, d, w) => (s, d, w.toDouble) }
       .toDF("src", "dst", "value")
-    pinEqual(
-      PageRank.weightedFixedPoint(weighted, 10),
-      PageRank.weightedFixedPoint(weighted, 10, oneTaskBar = 0L),
-      "pagerank.weighted")
-    pinEmpty(
-      PageRank.weightedFixedPoint(weighted.limit(0), 10),
-      PageRank.weightedFixedPoint(weighted.limit(0), 10, oneTaskBar = 0L),
-      "pagerank.weighted")
+    pinEqual(PageRank.weightedFixedPoint(weighted, 10), "pagerank.weighted")
+    pinEmpty(PageRank.weightedFixedPoint(weighted.limit(0), 10), "pagerank.weighted")
   }
 
   test("hits family: one-task replay == round path") {
-    pinEqual(
-      Hits.fixedPoint(c10, 5),
-      Hits.fixedPoint(c10, 5, oneTaskBar = 0L),
-      "hits.fixedPoint")
+    pinEqual(Hits.fixedPoint(c10, 5), "hits.fixedPoint")
     val prev = Hits.fixedPoint(c10, 2)
-    pinEqual(
-      Hits.fixedPointFrom(c10, prev, 3),
-      Hits.fixedPointFrom(c10, prev, 3, oneTaskBar = 0L),
-      "hits.fixedPointFrom")
-    pinEmpty(
-      Hits.fixedPoint(none, 5),
-      Hits.fixedPoint(none, 5, oneTaskBar = 0L),
-      "hits.fixedPoint")
+    pinEqual(Hits.fixedPointFrom(c10, prev, 3), "hits.fixedPointFrom")
+    pinEmpty(Hits.fixedPoint(none, 5), "hits.fixedPoint")
     val noScores = Hits.fixedPoint(none, 2)
-    pinEmpty(
-      Hits.fixedPointFrom(none, noScores, 3),
-      Hits.fixedPointFrom(none, noScores, 3, oneTaskBar = 0L),
-      "hits.fixedPointFrom")
+    pinEmpty(Hits.fixedPointFrom(none, noScores, 3), "hits.fixedPointFrom")
   }
 
   test("centrality family: one-task replay == round path") {
     val srcs = c10.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct().orderBy("id").limit(3).collect().map(_.getLong(0)).toSeq
-    pinEqual(
-      Centrality.stressCentrality(c10, srcs, 10),
-      Centrality.stressCentrality(c10, srcs, 10, oneTaskBar = 0L),
-      "stressCentrality")
-    pinEqual(
-      Centrality.betweennessCentrality(c10, srcs, 10),
-      Centrality.betweennessCentrality(c10, srcs, 10, oneTaskBar = 0L),
-      "betweennessCentrality")
-    pinEqual(
-      Centrality.harmonicCloseness(c10, srcs, 10),
-      Centrality.harmonicCloseness(c10, srcs, 10, oneTaskBar = 0L),
-      "harmonicCloseness")
-    pinEmpty(
-      Centrality.stressCentrality(none, srcs, 10),
-      Centrality.stressCentrality(none, srcs, 10, oneTaskBar = 0L),
-      "stressCentrality")
-    pinEmpty(
-      Centrality.betweennessCentrality(none, srcs, 10),
-      Centrality.betweennessCentrality(none, srcs, 10, oneTaskBar = 0L),
-      "betweennessCentrality")
+    pinEqual(Centrality.stressCentrality(c10, srcs, 10), "stressCentrality")
+    pinEqual(Centrality.betweennessCentrality(c10, srcs, 10), "betweennessCentrality")
+    pinEqual(Centrality.harmonicCloseness(c10, srcs, 10), "harmonicCloseness")
+    pinEmpty(Centrality.stressCentrality(none, srcs, 10), "stressCentrality")
+    pinEmpty(Centrality.betweennessCentrality(none, srcs, 10), "betweennessCentrality")
     // no edges leave every source isolated: both legs fail loud, at the
     // call
     for (bar <- Seq(LocalGraph.SymRowBar, 0L)) {
-      val ex = intercept[Exception](
-        Centrality.harmonicCloseness(none, srcs, 10, oneTaskBar = bar))
+      val ex = intercept[Exception](withConf(LocalGraph.BarConf -> bar.toString)(
+        Centrality.harmonicCloseness(none, srcs, 10)))
       assert(ex.getMessage.contains(
         "harmonicCloseness: no vertex reachable from any source (isolated sources)"),
         s"bar $bar: $ex")
@@ -302,51 +218,32 @@ class LocalTwinsSpec extends SparkTestBase {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
     // both legs fail at the call, with the same budget message
     for (bar <- Seq(LocalGraph.SymRowBar, 0L)) {
-      val ex = intercept[Exception](
-        Centrality.stressCentrality(path, Seq(1L), 4, oneTaskBar = bar))
+      val ex = intercept[Exception](withConf(LocalGraph.BarConf -> bar.toString)(
+        Centrality.stressCentrality(path, Seq(1L), 4)))
       assert(ex.getMessage.contains("stressCentrality: BFS frontier still non-empty at " +
         "maxDepth=4 (1 (source, vertex) pairs unreached) — raise maxDepth"), s"bar $bar: $ex")
     }
     // both legs succeed and agree once the budget clears
-    pinEqual(
-      Centrality.stressCentrality(path, Seq(1L), 5),
-      Centrality.stressCentrality(path, Seq(1L), 5, oneTaskBar = 0L),
-      "stress path budget-clear")
+    pinEqual(Centrality.stressCentrality(path, Seq(1L), 5), "stress path budget-clear")
   }
 
   test("densest peels: one-task replay == round path") {
-    pinEqual(
-      Traversals.densestSubgraph(c10),
-      Traversals.densestSubgraph(c10, oneTaskBar = 0L),
-      "densestSubgraph")
-    pinEqual(
-      Traversals.densestByComponent(c10),
-      Traversals.densestByComponent(c10, oneTaskBar = 0L),
-      "densestByComponent")
-    pinEmpty(
-      Traversals.densestSubgraph(none),
-      Traversals.densestSubgraph(none, oneTaskBar = 0L),
-      "densestSubgraph")
-    sameNone(
-      Traversals.densestByComponent(none),
-      Traversals.densestByComponent(none, oneTaskBar = 0L),
-      "densestByComponent")
+    pinEqual(Traversals.densestSubgraph(c10), "densestSubgraph")
+    // the round path labels components with ConnectedComponents.auto,
+    // which the one-task leg never calls
+    pinEqual(Traversals.densestByComponent(c10), "densestByComponent",
+      roundOnly = Set("connectedComponents"))
+    pinEmpty(Traversals.densestSubgraph(none), "densestSubgraph")
+    sameNone(Traversals.densestByComponent(none), "densestByComponent")
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (12L, 10L), (10L, 12L), (20L, 21L)).toDF("src", "dst")
     val inserts = Seq((3L, 4L), (4L, 1L)).toDF("src", "dst")
     val deletes = Seq((20L, 21L)).toDF("src", "dst")
     val oldStats = Traversals.densestByComponent(base)
-    pinEqual(
-      Traversals.densestMaintain(oldStats, base, inserts, deletes),
-      Traversals.densestMaintain(oldStats, base, inserts, deletes,
-        oneTaskBar = 0L),
-      "densestMaintain")
+    pinEqual(Traversals.densestMaintain(oldStats, base, inserts, deletes), "densestMaintain")
     val noStats = Traversals.densestByComponent(none)
-    sameNone(
-      Traversals.densestMaintain(noStats, none, none, none),
-      Traversals.densestMaintain(noStats, none, none, none, oneTaskBar = 0L),
-      "densestMaintain")
+    sameNone(Traversals.densestMaintain(noStats, none, none, none), "densestMaintain")
   }
 
   test("bipartiteness: one-task replay == round path (odd cycles, per component, groups)") {
@@ -355,78 +252,41 @@ class LocalTwinsSpec extends SparkTestBase {
     // edge, self-loop (odd by definition)
     val mixed = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (12L, 13L), (13L, 10L), (20L, 21L), (30L, 30L)).toDF("src", "dst")
-    pinEqual(
-      Bipartiteness.bipartitenessByComponent(mixed),
-      Bipartiteness.bipartitenessByComponent(mixed, oneTaskBar = 0L),
-      "bipartitenessByComponent")
-    sameNone(
-      Bipartiteness.bipartitenessByComponent(none),
-      Bipartiteness.bipartitenessByComponent(none, oneTaskBar = 0L),
-      "bipartitenessByComponent")
+    pinEqual(Bipartiteness.bipartitenessByComponent(mixed), "bipartitenessByComponent")
+    sameNone(Bipartiteness.bipartitenessByComponent(none), "bipartitenessByComponent")
     val inserts = Seq((21L, 22L), (22L, 20L)).toDF("src", "dst")
     val deletes = Seq((3L, 1L)).toDF("src", "dst")
     val oldV = Bipartiteness.bipartitenessByComponent(mixed)
     pinEqual(
       Bipartiteness.bipartitenessMaintain(oldV, mixed, inserts, deletes),
-      Bipartiteness.bipartitenessMaintain(oldV, mixed, inserts, deletes,
-        oneTaskBar = 0L),
       "bipartitenessMaintain")
     val noVerdicts = Bipartiteness.bipartitenessByComponent(none)
     sameNone(
       Bipartiteness.bipartitenessMaintain(noVerdicts, none, none, none),
-      Bipartiteness.bipartitenessMaintain(noVerdicts, none, none, none,
-        oneTaskBar = 0L),
       "bipartitenessMaintain")
     val tagged = mixed.where(col("src") < 20)
       .select(lit("A").as("g"), col("src"), col("dst"))
       .unionByName(mixed.where(col("src") >= 20)
         .select(lit("B").as("g"), col("src"), col("dst")))
-    pinEqual(
-      Bipartiteness.iterativeByGroup(tagged),
-      Bipartiteness.iterativeByGroup(tagged, oneTaskBar = 0L),
-      "iterativeByGroup")
-    pinEmpty(
-      Bipartiteness.iterativeByGroup(tagged.limit(0)),
-      Bipartiteness.iterativeByGroup(tagged.limit(0), oneTaskBar = 0L),
-      "iterativeByGroup")
+    pinEqual(Bipartiteness.iterativeByGroup(tagged), "iterativeByGroup")
+    pinEmpty(Bipartiteness.iterativeByGroup(tagged.limit(0)), "iterativeByGroup")
   }
 
   test("kcore: one-task replay == round path (incl. maxIter truncation)") {
     for (k <- Seq(2, 4, 6)) {
-      pinEqual(
-        Traversals.kcore(c10, k),
-        Traversals.kcore(c10, k, oneTaskBar = 0L),
-        s"kcore k=$k")
+      pinEqual(Traversals.kcore(c10, k), s"kcore k=$k")
     }
-    pinEmpty(
-      Traversals.kcore(none, 4),
-      Traversals.kcore(none, 4, oneTaskBar = 0L),
-      "kcore")
+    pinEmpty(Traversals.kcore(none, 4), "kcore")
     // truncation semantics: a 1-round budget leaves the partial peel —
     // both legs must leave the SAME partial state
-    pinEqual(
-      Traversals.kcore(c10, 4, maxIter = 1),
-      Traversals.kcore(c10, 4, maxIter = 1, oneTaskBar = 0L),
-      "kcore truncated")
+    pinEqual(Traversals.kcore(c10, 4, maxIter = 1), "kcore truncated")
   }
 
   test("hyperball ballSizes: one-task replay == round path") {
-    pinEqual(
-      HyperBall.ballSizes(c10, 3),
-      HyperBall.ballSizes(c10, 3, oneTaskBar = 0L),
-      "hyperball.ballSizes")
-    pinEqual(
-      HyperBall.ballSizes(c10, 2, includeZero = true),
-      HyperBall.ballSizes(c10, 2, includeZero = true, oneTaskBar = 0L),
-      "hyperball.ballSizes includeZero")
-    pinEmpty(
-      HyperBall.ballSizes(none, 3),
-      HyperBall.ballSizes(none, 3, oneTaskBar = 0L),
-      "hyperball.ballSizes")
-    pinEmpty(
-      HyperBall.ballSizes(none, 2, includeZero = true),
-      HyperBall.ballSizes(none, 2, includeZero = true, oneTaskBar = 0L),
-      "hyperball.ballSizes includeZero")
+    pinEqual(HyperBall.ballSizes(c10, 3), "hyperball.ballSizes")
+    pinEqual(HyperBall.ballSizes(c10, 2, includeZero = true), "hyperball.ballSizes includeZero")
+    pinEmpty(HyperBall.ballSizes(none, 3), "hyperball.ballSizes")
+    pinEmpty(HyperBall.ballSizes(none, 2, includeZero = true), "hyperball.ballSizes includeZero")
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (20L, 21L)).toDF("src", "dst")
@@ -435,13 +295,10 @@ class LocalTwinsSpec extends SparkTestBase {
     val oldBalls = HyperBall.ballSizes(base, 3)
     pinEqual(
       HyperBall.ballSizesMaintain(oldBalls, base, inserts, deletes, 3),
-      HyperBall.ballSizesMaintain(oldBalls, base, inserts, deletes, 3,
-        oneTaskBar = 0L),
       "hyperball.ballSizesMaintain")
     val noBalls = HyperBall.ballSizes(none, 3)
     pinEmpty(
       HyperBall.ballSizesMaintain(noBalls, none, none, none, 3),
-      HyperBall.ballSizesMaintain(noBalls, none, none, none, 3, oneTaskBar = 0L),
       "hyperball.ballSizesMaintain")
   }
 
@@ -451,7 +308,6 @@ class LocalTwinsSpec extends SparkTestBase {
       .toDF("src", "dst")
     val (localRounds, roundRounds) = legs(
       HyperBall.registerRounds(base, 3),
-      HyperBall.registerRounds(base, 3, oneTaskBar = 0L),
       "registerRounds")
     localRounds.zip(roundRounds).zipWithIndex.foreach { case ((l, r), t) =>
       sameRows(l, r, s"registerRounds t=$t")
@@ -460,49 +316,31 @@ class LocalTwinsSpec extends SparkTestBase {
     // maintained ≡ cold contract; both legs must produce identical rows
     val ins = Seq((3L, 4L), (9L, 1L)).toDF("src", "dst")
     pinEqual(
-      HyperBall.ballSizesGrowFrom(localRounds, base, ins, 3),
-      HyperBall.ballSizesGrowFrom(roundRounds, base, ins, 3, oneTaskBar = 0L),
+      HyperBall.ballSizesGrowFrom(HyperBall.registerRounds(base, 3), base, ins, 3),
       "ballSizesGrowFrom")
     // and c10-scale: grow the base by a deterministic insert slice
     val srcs = c10.where(col("src") % 97 === 0)
     pinEqual(
       HyperBall.ballSizesGrowFrom(HyperBall.registerRounds(c10, 2), c10,
         srcs, 2),
-      HyperBall.ballSizesGrowFrom(
-        HyperBall.registerRounds(c10, 2, oneTaskBar = 0L), c10,
-        srcs, 2, oneTaskBar = 0L),
       "ballSizesGrowFrom c10")
     val (localNone, roundNone) = legs(
       HyperBall.registerRounds(none, 2),
-      HyperBall.registerRounds(none, 2, oneTaskBar = 0L),
       "registerRounds on no edges")
     localNone.zip(roundNone).zipWithIndex.foreach { case ((l, r), t) =>
       sameRows(l, r, s"registerRounds on no edges t=$t")
       assert(l.isEmpty, s"registerRounds on no edges t=$t: rows")
     }
     pinEmpty(
-      HyperBall.ballSizesGrowFrom(localNone, none, none, 2),
-      HyperBall.ballSizesGrowFrom(roundNone, none, none, 2, oneTaskBar = 0L),
+      HyperBall.ballSizesGrowFrom(HyperBall.registerRounds(none, 2), none, none, 2),
       "ballSizesGrowFrom")
   }
 
   test("walks: one-task replay == round path (uniform and node2vec-biased)") {
-    pinEqual(
-      Walks.deterministicWalks(c10, 5),
-      Walks.deterministicWalks(c10, 5, oneTaskBar = 0L),
-      "deterministicWalks")
-    pinEqual(
-      Walks.biasedWalks(c10, 6),
-      Walks.biasedWalks(c10, 6, oneTaskBar = 0L),
-      "biasedWalks")
-    pinEmpty(
-      Walks.deterministicWalks(none, 5),
-      Walks.deterministicWalks(none, 5, oneTaskBar = 0L),
-      "deterministicWalks")
-    pinEmpty(
-      Walks.biasedWalks(none, 6),
-      Walks.biasedWalks(none, 6, oneTaskBar = 0L),
-      "biasedWalks")
+    pinEqual(Walks.deterministicWalks(c10, 5), "deterministicWalks")
+    pinEqual(Walks.biasedWalks(c10, 6), "biasedWalks")
+    pinEmpty(Walks.deterministicWalks(none, 5), "deterministicWalks")
+    pinEmpty(Walks.biasedWalks(none, 6), "biasedWalks")
   }
 
   test("sparsifiedEstimateGate: fused one-pass counts == two-pass kept-subgraph shape") {
@@ -526,52 +364,28 @@ class LocalTwinsSpec extends SparkTestBase {
   }
 
   test("r12 twins gain round-path A/Bs: scc, bfs, sssp, landmarks (advice)") {
-    pinEqual(
-      Scc.stronglyConnectedComponents(c10),
-      Scc.stronglyConnectedComponents(c10, oneTaskBar = 0L),
-      "scc")
+    pinEqual(Scc.stronglyConnectedComponents(c10), "scc")
     val src = c10.agg(min(col("src"))).head().getLong(0)
-    pinEqual(
-      Traversals.bfsDepths(c10, src),
-      Traversals.bfsDepths(c10, src, oneTaskBar = 0L),
-      "bfsDepths")
-    pinEqual(
-      Traversals.doubleSweepDiameter(c10, src),
-      Traversals.doubleSweepDiameter(c10, src, oneTaskBar = 0L),
-      "doubleSweepDiameter")
+    pinEqual(Traversals.bfsDepths(c10, src), "bfsDepths")
+    pinEqual(Traversals.doubleSweepDiameter(c10, src), "doubleSweepDiameter")
     // sssp weights ride the `value` column — use the weighted edge
     // fixture (c10 carries no value)
     val weighted = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L),
       (4L, 5L), (2L, 5L), (6L, 7L)))
-    pinEqual(
-      Traversals.sssp(weighted, 1L),
-      Traversals.sssp(weighted, 1L, oneTaskBar = 0L),
-      "sssp")
-    pinEqual(
-      Traversals.landmarkDistances(c10, 4),
-      Traversals.landmarkDistances(c10, 4, oneTaskBar = 0L),
-      "landmarkDistances")
-    pinEmpty(
-      Scc.stronglyConnectedComponents(none),
-      Scc.stronglyConnectedComponents(none, oneTaskBar = 0L),
-      "scc")
-    pinEmpty(
-      Traversals.bfsDepths(none, src),
-      Traversals.bfsDepths(none, src, oneTaskBar = 0L),
-      "bfsDepths", want = Seq(Seq(src, 0L)))
+    pinEqual(Traversals.sssp(weighted, 1L), "sssp")
+    pinEqual(Traversals.landmarkDistances(c10, 4), "landmarkDistances")
+    pinEmpty(Scc.stronglyConnectedComponents(none), "scc")
+    pinEmpty(Traversals.bfsDepths(none, src), "bfsDepths", want = Seq(Seq(src, 0L)))
     pinEmpty(
       Traversals.doubleSweepDiameter(none, src),
-      Traversals.doubleSweepDiameter(none, src, oneTaskBar = 0L),
       "doubleSweepDiameter", want = Seq(Seq(src, 0L, src, 0L)))
-    pinEmpty(
-      Traversals.sssp(weighted.limit(0), 1L),
-      Traversals.sssp(weighted.limit(0), 1L, oneTaskBar = 0L),
-      "sssp", want = Seq(Seq(1L, 0L)))
-    pinEmpty(
-      Traversals.landmarkDistances(none, 4),
-      Traversals.landmarkDistances(none, 4, oneTaskBar = 0L),
-      "landmarkDistances")
+    pinEmpty(Traversals.sssp(weighted.limit(0), 1L), "sssp", want = Seq(Seq(1L, 0L)))
+    pinEmpty(Traversals.landmarkDistances(none, 4), "landmarkDistances")
   }
+
+  /** The gate on `in` at session bar `bar`. */
+  private def probe(in: DataFrame, bar: Long): Boolean =
+    withConf(LocalGraph.BarConf -> bar.toString)(LocalGraph.oneTask("probeSpec", in))
 
   test("twin gate: the bounded probe decides exactly as bar > 0 && count() <= bar") {
     val n = 10L
@@ -581,7 +395,7 @@ class LocalTwinsSpec extends SparkTestBase {
         "one partition" -> spark.range(0, n, 1, 1).toDF());
         bar <- Seq(0L, 1L, n - 1, n, n + 1)) {
       val want = bar > 0 && in.count() <= bar
-      val (got, logged) = gateLog.during(LocalGraph.oneTask("probeSpec", in, bar))
+      val (got, logged) = gateLog.during(probe(in, bar))
       assert(got == want, s"$name, bar $bar")
       assert(logged == Seq(Decision("probeSpec", if (want) "one-task" else "rounds", bar)),
         s"$name, bar $bar: $logged")
@@ -591,8 +405,8 @@ class LocalTwinsSpec extends SparkTestBase {
   test("twin gate: the probe is one job with one stage (no exchange); bar 0 runs none") {
     val in = spark.range(0, 1000, 1, 4).toDF()
     val (_, stagesPerJob) = jobsDuring {
-      assert(!LocalGraph.oneTask("probeSpec", in, 10L))
-      assert(!LocalGraph.oneTask("probeSpec", in, 0L))
+      assert(!probe(in, 10L))
+      assert(!probe(in, 0L))
     }
     assert(stagesPerJob == Seq(1))
   }
@@ -607,12 +421,35 @@ class LocalTwinsSpec extends SparkTestBase {
       for (bar <- Seq(1L, n - 1, n, n + 1)) {
         val want = in.count() <= bar
         val ((got, logged), jobs) = jobsDuring(
-          gateLog.during(LocalGraph.oneTask("probeSpec", in, bar)))
+          gateLog.during(probe(in, bar)))
         assert(jobs.isEmpty, s"$name, bar $bar: the gate ran $jobs")
         assert(got == want, s"$name, bar $bar")
         assert(logged == Seq(Decision("probeSpec", if (want) "one-task" else "rounds", bar)),
           s"$name, bar $bar: $logged")
       }
     }
+  }
+
+  test("twin gate: the bar is the session's spark.graft.oneTaskBar, default SymRowBar") {
+    def gates(f: => DataFrame): Seq[Decision] = gateLog.during(f)._2
+    val src = c10.agg(min(col("src"))).head().getLong(0)
+    val atDefault = Seq(Decision("pagerank", "one-task", LocalGraph.SymRowBar))
+    assert(spark.conf.getOption(LocalGraph.BarConf).isEmpty)
+    assert(gates(PageRank.fixedPoint(c10, 10)) == atDefault)
+    assert(gates(atBarZero(PageRank.personalized(c10, Seq(src), 10))) ==
+      Seq(Decision("personalizedPagerank", "rounds", 0L)))
+    // withConf restores the unset key, and the default bar with it
+    assert(spark.conf.getOption(LocalGraph.BarConf).isEmpty)
+    assert(gates(PageRank.fixedPoint(c10, 10)) == atDefault)
+    // the perfbench-held parameter caps the session bar for one call
+    assert(gates(PageRank.fixedPoint(c10, 10, oneTaskBar = 0L)) ==
+      Seq(Decision("pagerank", "rounds", 0L)))
+  }
+
+  test("twin gate: a malformed spark.graft.oneTaskBar fails naming the key and the value") {
+    val ex = intercept[IllegalArgumentException](
+      withConf(LocalGraph.BarConf -> "4M")(PageRank.fixedPoint(c10, 10)))
+    assert(ex.getMessage.contains("spark.graft.oneTaskBar") && ex.getMessage.contains("'4M'"),
+      ex.getMessage)
   }
 }

@@ -270,35 +270,31 @@ class SourcesSpec extends SparkTestBase {
       .select("l_orderkey", "l_partkey", "l_quantity")
     val o = graft.model.Tables.orders(spark, sf)
       .select("o_orderkey", "o_custkey")
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
     try {
       Sources.writeBucketed(li, "bspec_lineitem", "l_orderkey", 8, Seq("l_orderkey"))
       Sources.writeBucketed(o, "bspec_orders", "o_orderkey", 8, Seq("o_orderkey"))
       // force the join shape bucketing is FOR (fact-to-fact SMJ, no
       // broadcast escape hatch) and read the final plan, not AQE's
       // placeholder
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      val joined = spark.table("bspec_lineitem")
-        .join(spark.table("bspec_orders"), col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(400))
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle:\n${plan.take(800)}")
-      // and the answer matches the plain (shuffling) join
-      val expected = li.join(o, col("l_orderkey") === col("o_orderkey")).count()
-      assert(joined.count() === expected)
-      // a MISMATCHED bucket count must fall back to a correct (if
-      // shuffling) plan, never a wrong result
-      Sources.writeBucketed(o, "bspec_orders5", "o_orderkey", 5)
-      val mixed = spark.table("bspec_lineitem")
-        .join(spark.table("bspec_orders5"), col("l_orderkey") === col("o_orderkey"))
-      assert(mixed.count() === expected)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
+        val joined = spark.table("bspec_lineitem")
+          .join(spark.table("bspec_orders"), col("l_orderkey") === col("o_orderkey"))
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin"), plan.take(400))
+        assert(!plan.contains("Exchange"),
+          s"bucketed join must not shuffle:\n${plan.take(800)}")
+        // and the answer matches the plain (shuffling) join
+        val expected = li.join(o, col("l_orderkey") === col("o_orderkey")).count()
+        assert(joined.count() === expected)
+        // a MISMATCHED bucket count must fall back to a correct (if
+        // shuffling) plan, never a wrong result
+        Sources.writeBucketed(o, "bspec_orders5", "o_orderkey", 5)
+        val mixed = spark.table("bspec_lineitem")
+          .join(spark.table("bspec_orders5"), col("l_orderkey") === col("o_orderkey"))
+        assert(mixed.count() === expected)
+      }
     } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
       Seq("bspec_lineitem", "bspec_orders", "bspec_orders5")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }

@@ -38,6 +38,24 @@ trait SparkTestBase extends AnyFunSuite {
       .toMap
   }
 
+  /** Runs `f` with the session confs `kv` set, then restores each key as
+    * it was before, unsetting the keys that were unset.
+    */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `f` at twin-gate bar 0: every operator gate called inside it
+    * takes its distributed rounds ([[graft.operators.LocalGraph.oneTask]]).
+    */
+  def atBarZero[A](f: => A): A = withConf(graft.operators.LocalGraph.BarConf -> "0")(f)
+
   /** Runs `f` and returns its result with the completed-stage count of
     * each Spark job it started, in start order ([[RunRecorder.measure]]).
     */

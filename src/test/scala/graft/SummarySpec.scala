@@ -39,7 +39,7 @@ class SummarySpec extends SparkTestBase {
     val it = m(ConnectedComponents.iterative(df))
     assert(m(ConnectedComponents.singlePass(df)) == it)
     assert(m(ConnectedComponents.auto(df)) == it) // small side: singlePass
-    assert(m(ConnectedComponents.auto(df, edgeBar = 0L)) == it) // forced iterative
+    assert(m(atBarZero(ConnectedComponents.auto(df))) == it) // forced iterative
   }
 
   test("union-find result is invariant under edge order (100 seeded trials)") {

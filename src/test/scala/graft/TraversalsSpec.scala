@@ -241,15 +241,14 @@ class TraversalsSpec extends SparkTestBase {
     assert(run(Seq((1L, 2L)), Seq(9L)).isEmpty)
     // fail-loud: a frontier still live at maxDepth throws (mirrors the
     // SQL unroll's (-1,-1) sentinel) instead of silently undercounting.
-    // Round path (oneTaskBar = 0): driver-side IllegalArgumentException;
+    // Round path (bar 0): driver-side IllegalArgumentException;
     // one-task leg: the same require fires inside the task, so the
     // action surfaces it wrapped in a SparkException (documented
     // divergence — the failure is equally loud, the type differs).
-    intercept[IllegalArgumentException] {
+    intercept[IllegalArgumentException](atBarZero(
       Centrality.stressCentrality(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
-        Seq(1L), maxDepth = 2, oneTaskBar = 0L).collect()
-    }
+        Seq(1L), maxDepth = 2).collect()))
     val exL = intercept[Exception] {
       Centrality.stressCentrality(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
@@ -290,11 +289,10 @@ class TraversalsSpec extends SparkTestBase {
       Map(2L -> 2000000L, 3L -> 1000000L))
     // fail-loud at maxDepth, like stress (round path driver-side IAE;
     // one-task leg wraps the same require in the task failure)
-    intercept[IllegalArgumentException] {
+    intercept[IllegalArgumentException](atBarZero(
       Centrality.betweennessCentrality(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
-        Seq(1L), maxDepth = 2, oneTaskBar = 0L).collect()
-    }
+        Seq(1L), maxDepth = 2).collect()))
     val exL = intercept[Exception] {
       Centrality.betweennessCentrality(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
@@ -465,11 +463,10 @@ class TraversalsSpec extends SparkTestBase {
     assert(run(Seq((1L, 2L), (8L, 9L)), Seq(1L)) == Map(2L -> 1000000L))
     // fail-loud at maxDepth, like the other sampled-centrality ops
     // (round path driver-side IAE; one-task leg wraps it in the task)
-    intercept[IllegalArgumentException] {
+    intercept[IllegalArgumentException](atBarZero(
       Centrality.harmonicCloseness(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
-        Seq(1L), maxDepth = 2, oneTaskBar = 0L).collect()
-    }
+        Seq(1L), maxDepth = 2).collect()))
     val exL = intercept[Exception] {
       Centrality.harmonicCloseness(
         Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
@@ -513,10 +510,10 @@ class TraversalsSpec extends SparkTestBase {
         .select("id").collect().map(_.getLong(0)).toSet
       assert(byCoreness == byPeel, s"coreness>=$k vs $k-core mismatch")
     }
-    // r12 scale-adaptive A/B: oneTaskBar = 0 forces the distributed
-    // h-index rounds; the default takes the one-task Matula–Beck peel —
-    // the core decomposition is unique, so both must be bit-equal
-    val cRounds = Traversals.coreness(c10, oneTaskBar = 0L).collect()
+    // r12 scale-adaptive A/B: bar 0 forces the distributed h-index
+    // rounds; the default takes the one-task Matula–Beck peel — the
+    // core decomposition is unique, so both must be bit-equal
+    val cRounds = atBarZero(Traversals.coreness(c10).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cRounds == cAll)
   }
@@ -578,17 +575,14 @@ class TraversalsSpec extends SparkTestBase {
     assert(got3 == Traversals.coreness(base).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     // r12 scale-adaptive A/B: forcing the distributed rounds
-    // (oneTaskBar = 0) must reproduce the one-task peel bit-for-bit
-    val gotRounds = Traversals.corenessMaintain(oldCore, base, inserts,
-        deletes, oneTaskBar = 0L)
+    // (bar 0) must reproduce the one-task peel bit-for-bit
+    val gotRounds = atBarZero(Traversals.corenessMaintain(oldCore, base, inserts, deletes))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotRounds == got)
     // fail-loud on an exhausted round budget (a round-path contract —
     // the one-task peel has no rounds to exhaust)
-    intercept[IllegalArgumentException] {
-      Traversals.corenessMaintain(oldCore, base, inserts, deletes,
-        maxRounds = 0, oneTaskBar = 0L)
-    }
+    intercept[IllegalArgumentException](atBarZero(
+      Traversals.corenessMaintain(oldCore, base, inserts, deletes, maxRounds = 0)))
   }
 
   test("densestSubgraph peels to the clique and flags the best round") {
@@ -610,10 +604,8 @@ class TraversalsSpec extends SparkTestBase {
     // round path eagerly at call time (its loop runs driver-side);
     // one-task leg at action time inside the task (documented
     // divergence: equally loud at the sink, later and wrapped)
-    intercept[IllegalArgumentException] {
-      graft.operators.Traversals.densestSubgraph(g, maxRounds = 1,
-        oneTaskBar = 0L)
-    }
+    intercept[IllegalArgumentException](atBarZero(
+      graft.operators.Traversals.densestSubgraph(g, maxRounds = 1)))
     val exL = intercept[Exception] {
       graft.operators.Traversals.densestSubgraph(g, maxRounds = 1).collect()
     }
@@ -637,10 +629,8 @@ class TraversalsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> -1L, 2L -> 5L, 4L -> 7L, 5L -> 2L, 6L -> 6L,
       8L -> 1L, 9L -> 1L, 10L -> 2L), s"got $got")
-    intercept[IllegalArgumentException] {
-      graft.operators.Traversals.temporalBfs(te, 1L, maxRounds = 1,
-        oneTaskBar = 0L)
-    }
+    intercept[IllegalArgumentException](atBarZero(
+      graft.operators.Traversals.temporalBfs(te, 1L, maxRounds = 1)))
   }
 
   test("temporalDeparture: max-relax dual, increases reopen edges") {
@@ -657,10 +647,8 @@ class TraversalsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 100L, 2L -> 10L, 3L -> 9L, 4L -> 8L,
       5L -> 7L, 6L -> 2L, 7L -> 4L), s"got $got")
-    intercept[IllegalArgumentException] {
-      graft.operators.Traversals.temporalDeparture(te, 1L, 100L, maxRounds = 1,
-        oneTaskBar = 0L)
-    }
+    intercept[IllegalArgumentException](atBarZero(
+      graft.operators.Traversals.temporalDeparture(te, 1L, 100L, maxRounds = 1)))
   }
 
   test("landmarkDistances: multi-source BFS equals per-landmark BFS") {
@@ -773,10 +761,9 @@ class TraversalsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(maintained == bfsIndex(grown, lms))
     // r12 scale-adaptive A/B: forcing the distributed relaxation
-    // (oneTaskBar = 0) must reproduce the one-task BFS twin bit-for-bit
-    val maintainedRounds = graft.operators.Traversals.landmarkMaintainInserts(
-        idx, grown.toDF("src", "dst"), delta.toDF("src", "dst"),
-        oneTaskBar = 0L)
+    // (bar 0) must reproduce the one-task BFS twin bit-for-bit
+    val maintainedRounds = atBarZero(graft.operators.Traversals.landmarkMaintainInserts(
+        idx, grown.toDF("src", "dst"), delta.toDF("src", "dst")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(maintainedRounds == maintained)
     // a no-op delta (re-inserting existing edges) changes nothing
@@ -785,11 +772,9 @@ class TraversalsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(noop == bfsIndex(base, lms))
     // fail-loud when the relaxation budget is outlived mid-propagation
-    intercept[IllegalArgumentException] {
+    intercept[IllegalArgumentException](atBarZero(
       graft.operators.Traversals.landmarkMaintainInserts(
-        idx, grown.toDF("src", "dst"), delta.toDF("src", "dst"), maxIter = 1,
-        oneTaskBar = 0L)
-    }
+        idx, grown.toDF("src", "dst"), delta.toDF("src", "dst"), maxIter = 1)))
   }
 
   test("landmarkMaintainDeletes: cascade + repair equals a fresh BFS over the shrunk graph") {
@@ -830,16 +815,14 @@ class TraversalsSpec extends SparkTestBase {
     assert(maintained(multi) == fresh(multi))
     // r12 scale-adaptive A/B: the distributed cascade+repair path must
     // reproduce the one-task BFS twin bit-for-bit
-    assert(graft.operators.Traversals.landmarkMaintainDeletes(
-        idx, edges, multi.toDF("src", "dst"), oneTaskBar = 0L)
+    assert(atBarZero(graft.operators.Traversals.landmarkMaintainDeletes(
+        idx, edges, multi.toDF("src", "dst")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       == maintained(multi))
     // fail-loud on an exhausted cascade/relaxation budget
-    intercept[IllegalArgumentException] {
+    intercept[IllegalArgumentException](atBarZero(
       graft.operators.Traversals.landmarkMaintainDeletes(
-        idx, edges, Seq((2L, 3L)).toDF("src", "dst"), maxIter = 1,
-        oneTaskBar = 0L)
-    }
+        idx, edges, Seq((2L, 3L)).toDF("src", "dst"), maxIter = 1)))
   }
 
   test("CDC composition (q239): insert relaxation then delete cascade equals a fresh BFS over the net graph") {
@@ -906,10 +889,8 @@ class TraversalsSpec extends SparkTestBase {
       Seq.empty[(Long, Long)].toDF("src", "dst")).isEmpty)
     // fail-loud on an exhausted round budget (round path eagerly at
     // call; one-task leg at action, wrapped in the task failure)
-    intercept[IllegalArgumentException] {
-      graft.operators.Traversals.densestByComponent(g1, maxRounds = 1,
-        oneTaskBar = 0L)
-    }
+    intercept[IllegalArgumentException](atBarZero(
+      graft.operators.Traversals.densestByComponent(g1, maxRounds = 1)))
     val exL = intercept[Exception] {
       graft.operators.Traversals.densestByComponent(g1, maxRounds = 1).collect()
     }

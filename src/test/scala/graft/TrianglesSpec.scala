@@ -139,10 +139,10 @@ class TrianglesSpec extends SparkTestBase {
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(t((5L, 10L)) == 2L, s"got $t")
     assert(clique(Seq(1L, 2L, 3L, 4L, 5L)).forall(e => t(e) == 5L), s"got $t")
-    // r12 scale-adaptive A/B: oneTaskBar = 0 forces the distributed
-    // level peel; the default takes the one-task peel — the k-truss is
-    // the unique maximal subgraph per level, so both must be bit-equal
-    val tRounds = Triangles.trussness(g, oneTaskBar = 0L).collect()
+    // r12 scale-adaptive A/B: bar 0 forces the distributed level peel;
+    // the default takes the one-task peel — the k-truss is the unique
+    // maximal subgraph per level, so both must be bit-equal
+    val tRounds = atBarZero(Triangles.trussness(g).collect())
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val tLocal = Triangles.trussness(g).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
