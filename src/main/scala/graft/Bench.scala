@@ -25,9 +25,9 @@ object Bench {
   }
 
   /** The full line: totals, the per-query seconds, the failed list and
-    * the per-query layers. `"layers"` is a top-level field, never inside
-    * `"queries"`, whose flat map [[parsePrev]] reads with a non-greedy
-    * regex.
+    * the per-query layers (Spark work and Janino compiles). `"layers"`
+    * is a top-level field, never inside `"queries"`, whose flat map
+    * [[parsePrev]] reads with a non-greedy regex.
     */
   private[graft] def fullLine(total: Double, cpus: Int, results: Seq[QueryRun.Result],
                               failed: Seq[String], sfDir: String, keptField: String): String = {
@@ -38,7 +38,7 @@ object Bench {
       val l = r.layers
       s"\"${r.name}\":{\"jobs\":${l.jobs},\"stages\":${l.stages},\"tasks\":${l.tasks}," +
         s"\"task_s\":${r3(l.taskS)},\"shuffle_read_mb\":${r3(l.shuffleReadMb)}," +
-        s"\"shuffle_write_mb\":${r3(l.shuffleWriteMb)}}"
+        s"\"shuffle_write_mb\":${r3(l.shuffleWriteMb)},\"compiles\":${l.compiles}}"
     }.mkString("{", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,""" +
       s""""failed":$fj,"layers":$ls,"sf":"$sfDir"$keptField}"""

@@ -2,17 +2,21 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.BusBridge
 
 /** What the Spark jobs of one measured block did: job count, completed
-  * stages, their tasks, summed task run time and shuffle bytes, and the
-  * completed-stage count of each job in start order.
+  * stages, their tasks, summed task run time and shuffle bytes, the
+  * completed-stage count of each job in start order, and the Janino
+  * compiles (codegen cache misses) during the block. The compile counter
+  * is JVM-global: it also counts what other threads compiled meanwhile,
+  * labelled or not.
   */
 final case class Layers(jobs: Int, stages: Int, tasks: Long, taskS: Double,
                         shuffleReadMb: Double, shuffleWriteMb: Double,
-                        stagesPerJob: Seq[Int])
+                        stagesPerJob: Seq[Int], compiles: Long)
 
 /** Records the Spark jobs that start while the local property
   * [[RunRecorder.Key]] holds `label`. Stages are attributed to the job
@@ -41,9 +45,10 @@ final class RunRecorder private (label: String) extends SparkListener {
     }
   }
 
-  private def layers: Layers = synchronized {
+  private def layers(compiles: Long): Layers = synchronized {
     val perJob = stagesPerJob.values.toVector
-    Layers(perJob.size, perJob.sum, tasks, taskMs / 1e3, readBytes / 1e6, writeBytes / 1e6, perJob)
+    Layers(perJob.size, perJob.sum, tasks, taskMs / 1e3, readBytes / 1e6, writeBytes / 1e6,
+      perJob, compiles)
   }
 }
 
@@ -56,6 +61,9 @@ object RunRecorder {
     */
   val Key = "graft.run"
 
+  /** Janino compiles in this JVM so far: one per codegen cache miss. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Runs `f` with its jobs labelled `label` and returns its result with
     * the [[Layers]] of those jobs. The previous label is restored after
     * `f`, and the listener bus is drained before the totals are read.
@@ -67,9 +75,11 @@ object RunRecorder {
     val prev = sc.getLocalProperty(Key)
     try {
       sc.setLocalProperty(Key, label)
+      val c0 = compiles
       val a = try f finally sc.setLocalProperty(Key, prev)
+      val compiled = compiles - c0
       BusBridge.waitUntilEmpty(sc)
-      (a, rec.layers)
+      (a, rec.layers(compiled))
     } finally sc.removeSparkListener(rec)
   }
 }

@@ -48,6 +48,9 @@ object StreamingOps {
     * query starting on the same session would briefly observe (ADVICE
     * r4). Streams built from this clone's MemoryStream pick up the
     * pinned value at `.start()`; the parent's conf is never touched.
+    * A clone costs no recompile: [[graft.GraftSession.configure]]
+    * turns off the per-session executor class loader, so the clone's
+    * tasks reuse the classes the parent's tasks generated.
     */
   private def pinnedShuffleSession(parent: SparkSession, n: Int): SparkSession = {
     val s = parent.newSession()

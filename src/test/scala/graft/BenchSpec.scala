@@ -29,7 +29,8 @@ class BenchSpec extends AnyFunSuite {
 
   test("a full line with per-query layers parses back to its total, query names, sf and cpus") {
     val results = (1 to 265).map(i => QueryRun.Result(f"q$i%03d_synthetic", i / 64.0, None,
-      Layers(i % 5 + 1, i % 7 + 1, 4L * i, i / 10.0, i / 3.0, i / 7.0, Seq.fill(i % 5 + 1)(1))))
+      Layers(i % 5 + 1, i % 7 + 1, 4L * i, i / 10.0, i / 3.0, i / 7.0, Seq.fill(i % 5 + 1)(1),
+        compiles = 3L * i)))
     val total = results.map(_.seconds).sum
     val sf = "/root/testdata/sf0.1"
     val line = Bench.fullLine(total, 32, results, Seq("q007_synthetic"), sf, "")
@@ -40,5 +41,6 @@ class BenchSpec extends AnyFunSuite {
     assert(q2.get("jobs").asInt == 3 && q2.get("stages").asInt == 3 && q2.get("tasks").asInt == 8)
     assert(q2.get("task_s").asDouble == 0.2 && q2.get("shuffle_read_mb").asDouble == 0.667)
     assert(q2.get("shuffle_write_mb").asDouble == 0.286)
+    assert(q2.get("compiles").asLong == 6)
   }
 }

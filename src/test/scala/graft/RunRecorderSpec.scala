@@ -18,8 +18,22 @@ class RunRecorderSpec extends SparkTestBase {
     assert(first.jobs >= 1 && first.stages >= 2 && first.tasks >= 4, first)
     assert(first.shuffleWriteMb > 0 && first.shuffleReadMb > 0, first)
     assert(first.stagesPerJob.size == first.jobs && first.stagesPerJob.sum == first.stages)
-    // task time is a duration; everything else is a count of the same work
-    assert(first.copy(taskS = 0) == second.copy(taskS = 0))
+    // task time is a duration, and the first block may compile what the
+    // second reuses; everything else is a count of the same work
+    assert(first.copy(taskS = 0, compiles = 0) == second.copy(taskS = 0, compiles = 0))
+  }
+
+  test("a block records the Janino compiles of its new code, and none when it runs again") {
+    // a long literal is inlined into the generated source, so this
+    // projection's classes are new to the codegen cache
+    val k = System.nanoTime()
+    def block(): Long = spark.range(0, 100, 1, 2).selectExpr(s"id * ${k}L + 7 AS x")
+      .where(s"x % ${k}L = 7").count()
+    val (n1, first) = RunRecorder.measure(spark, "compiles")(block())
+    val (n2, again) = RunRecorder.measure(spark, "compiles")(block())
+    assert(n1 == 100 && n2 == 100)
+    assert(first.compiles >= 1, first)
+    assert(again.compiles == 0, again)
   }
 
   test("a job another thread starts during the block, outside its label, is not counted") {
@@ -35,7 +49,7 @@ class RunRecorderSpec extends SparkTestBase {
       sc.parallelize(1 to 10, 2).count()
     }
     assert(outside.get == 100 && n == 10)
-    assert(layers == Layers(1, 1, 2, layers.taskS, 0.0, 0.0, Seq(1)))
+    assert(layers == Layers(1, 1, 2, layers.taskS, 0.0, 0.0, Seq(1), layers.compiles))
   }
 
   test("a broadcast join's broadcast job is attributed to the block") {
