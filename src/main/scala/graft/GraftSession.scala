@@ -52,7 +52,13 @@ object GraftSession {
   }
 
   /** [[local]]'s builder, for callers that add confs of their own before
-    * `getOrCreate()`.
+    * `getOrCreate()`. Two listing thresholds are set out of reach, so
+    * file and partition listing stays on the driver: above them Spark
+    * lists with a job whose every task deserializes the whole Hadoop
+    * `Configuration`, e.g. the 64-task listing and 4-task stats jobs of
+    * a read or `saveAsTable` of the 64-directory dedup buckets table. In
+    * local mode those tasks run in the driver's JVM anyway, so they buy
+    * nothing. Left out of [[configure]], which clusters start from.
     */
   def localBuilder(cores: Int = Runtime.getRuntime.availableProcessors(),
                    appName: String = "graft"): SparkSession.Builder =
@@ -63,5 +69,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // single-box tuning: broadcasting a ~20MB side beats shuffling a
       // 40M-row probe side; lower on clusters with small executors
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m"))
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
+      .config("spark.rdd.parallelListingThreshold", Int.MaxValue.toString))
 }

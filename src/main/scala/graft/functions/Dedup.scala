@@ -1,14 +1,21 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.Lineage.CutOps
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
 
 /** Document deduplication for large-scale training-data pipelines.
   *
   * Four tiers, all deterministic (seeded hash families, no runtime
-  * randomness) and built from codegen'd expressions:
+  * randomness). Every n-gram comes from one per-document tokenizer
+  * ([[Ngrams]], one pass over the text's UTF-8 bytes), and the MinHash
+  * band keys from one per-document kernel ([[bandKeys]]) that index,
+  * probe, batch pairs and streaming candidates share:
   *
   *  - exact: normalize → hash → keep min doc_id per group. One shuffle
   *    on a 64-bit hash, never on the full text.
@@ -16,8 +23,9 @@ import org.apache.spark.sql.functions._
   *    (shingle → docs); pair candidates are generated only for docs
   *    sharing ≥1 shingle, then filtered by true Jaccard.
   *  - MinHash + LSH banding: near-dup candidates from banded minhash
-  *    signatures (shuffle on band keys, O(docs × bands) rows), verified
-  *    with exact Jaccard — the scale path: no all-pairs join anywhere.
+  *    signatures (a per-row projection, then one shuffle on band keys,
+  *    O(docs × bands) rows), verified with exact Jaccard — the scale
+  *    path: no all-pairs join anywhere.
   *  - SimHash: 64-bit weighted-bit fingerprint; Hamming-≤r pairs found
   *    via the pigeonhole band trick (r+1 chunks, equal-chunk join).
   */
@@ -51,15 +59,71 @@ object Dedup {
       .agg(countDistinct(h1, h2).as("n_unique"))
   }
 
+  /** The n-grams of one document, tokenized once. Tokens are what
+    * Spark's `split(text, " ")` returns, i.e. Java's `split(" ", -1)`:
+    * every space separates, empty tokens are kept. They are found on the
+    * text's UTF-8 bytes; a space byte is never part of a multi-byte
+    * character, so n-gram i (tokens i..i+n-1 joined with " ") is the
+    * byte slice [starts(i), starts(i) + length(i)) of the text itself.
+    * A null text, or one of fewer than n tokens, has no n-grams.
+    */
+  private[graft] final class Ngrams(text: String, n: Int) {
+    private val bytes = if (text == null) null else text.getBytes(UTF_8)
+    // token t starts at starts(t); starts(tokens) = bytes.length + 1; a
+    // null text has no tokens
+    private val starts = if (bytes == null) Array(0)
+      else (0 +: bytes.indices.filter(bytes(_) == ' ').map(_ + 1) :+ (bytes.length + 1)).toArray
+    val count: Int = math.max(starts.length - n, 0)
+    private def length(i: Int) = starts(i + n) - 1 - starts(i)
+    def hash(i: Int, seed: Long): Long =
+      XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + starts(i), length(i), seed)
+    def strings: Array[String] =
+      Array.tabulate(count)(i => new String(bytes, starts(i), length(i), UTF_8))
+  }
+
+  /** The seed Spark's `xxhash64` starts every row from. */
+  private val HashSeed = 42L
+
+  /** THE per-document MinHash kernel: the `bands` LSH band keys of
+    * `text`'s n-gram shingles, bit-identical to the SQL pipeline
+    * `mh_s` = min over the shingles of `xxhash64(s, shingle)`,
+    * band key b = `xxhash64(mh_{b·r}, …, mh_{b·r+r-1})` with
+    * r = `rowsPerBand`: `xxhash64` hashes its arguments in order from
+    * seed 42, an int with `hashInt`, a string's UTF-8 bytes with
+    * `hashUnsafeBytes` and a long with `hashLong`. Empty for a text with
+    * no n-grams.
+    */
+  private[graft] def bandKeys(text: String, n: Int, bands: Int,
+                              rowsPerBand: Int): Array[Long] = {
+    val g = new Ngrams(text, n)
+    if (g.count == 0) return Array.emptyLongArray
+    val mh = Array.tabulate(bands * rowsPerBand) { s =>
+      val seed = XXH64.hashInt(s, HashSeed)
+      var m = Long.MaxValue
+      for (i <- 0 until g.count) m = math.min(m, g.hash(i, seed))
+      m
+    }
+    Array.tabulate(bands)(b => mh.slice(b * rowsPerBand, (b + 1) * rowsPerBand)
+      .foldLeft(HashSeed)((key, row) => XXH64.hashLong(row, key)))
+  }
+
+  /** Banded LSH keys `(doc_id, band, key)` of `docs`: [[bandKeys]] as a
+    * UDF plus `posexplode`, one row per document and band. A pure
+    * per-row projection — no shuffle, no aggregation, no state — so it
+    * runs as is in an append-mode stream. Shared by [[minhashPairs]],
+    * [[DedupIndex]] and the streaming candidates. Documents with fewer
+    * than n tokens or a null text get no rows.
+    */
+  private[graft] def banded(docs: DataFrame, n: Int, bands: Int,
+                            rowsPerBand: Int): DataFrame = {
+    val keys = udf((text: String) => bandKeys(text, n, bands, rowsPerBand))
+    docs.select(col("doc_id"), posexplode(keys(col("text"))).as(Seq("band", "key")))
+  }
+
   /** Distinct n-gram token shingles per doc: (doc_id, shingle). */
   def shingles(docs: DataFrame, n: Int): DataFrame = {
-    val toks = split(col("text"), " ")
-    Spread(docs)
-      .where(size(toks) >= n)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n))))).as("shingle"))
-      .distinct()
+    val grams = udf((text: String) => new Ngrams(text, n).strings)
+    Spread(docs).select(col("doc_id"), explode(grams(col("text"))).as("shingle")).distinct()
   }
 
   /** Exact pairwise n-gram Jaccard with lossless prefix filtering
@@ -231,32 +295,6 @@ object Dedup {
       .where(col("jac") >= threshold)
   }
 
-  /** MinHash signature element s: min over shingles of a seeded 64-bit
-    * hash. Deterministic: hash_s(x) = xxhash64(s, x).
-    */
-  private def minhash(s: Int): Column = min(xxhash64(lit(s), col("shingle")))
-
-  /** Banded LSH keys `(doc_id, band, key)` from a shingle table — the
-    * signature/banding core shared by [[minhashPairs]] (in-query
-    * candidate generation) and [[DedupIndex]] (the persisted-index
-    * lifecycle): `bands × rowsPerBand` seeded minhash functions, band
-    * key = 64-bit hash of the band's signature rows. The signature
-    * aggregation is materialized once — the banding takes `bands`
-    * column slices of it, and without the checkpoint every band branch
-    * would re-run the full minhash aggregation.
-    */
-  private[graft] def bandedFromShingles(sh: DataFrame, bands: Int,
-                                        rowsPerBand: Int): DataFrame = {
-    val nHashes = bands * rowsPerBand
-    val sig = sh.groupBy(col("doc_id"))
-      .agg(minhash(0).as("mh0"), (1 until nHashes).map(s => minhash(s).as(s"mh$s")): _*)
-      .cutLineage()
-    (0 until bands).map { b =>
-      val rows = (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}"))
-      sig.select(col("doc_id"), lit(b).as("band"), xxhash64(rows: _*).as("key"))
-    }.reduce(_ unionByName _)
-  }
-
   /** Near-duplicate pairs via MinHash LSH banding, verified with exact
     * Jaccard. `bands × rowsPerBand` hash functions; candidate pairs share
     * all rows of ≥1 band.
@@ -264,9 +302,9 @@ object Dedup {
   def minhashPairs(docs: DataFrame, n: Int, threshold: Double,
                    bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     val sh = shingles(docs, n).cutLineage()
-    val banded = bandedFromShingles(sh, bands, rowsPerBand)
-    val cands = banded.toDF("doc_a", "band", "key")
-      .join(banded.toDF("doc_b", "band", "key"), Seq("band", "key"))
+    val keys = banded(Spread(docs), n, bands, rowsPerBand).cutLineage()
+    val cands = keys.toDF("doc_a", "band", "key")
+      .join(keys.toDF("doc_b", "band", "key"), Seq("band", "key"))
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
     // verify candidates with exact Jaccard (candidate set is small)
@@ -357,12 +395,11 @@ object Dedup {
     */
   def repeatedSpans(docs: DataFrame, k: Int, minDocs: Int = 2,
                     minOccurs: Int = 0): DataFrame = {
-    val toks = split(col("text"), " ")
+    // fp = xxhash64(shingle): the shingle's UTF-8 bytes from seed 42
+    val fps = udf { (text: String) =>
+      val g = new Ngrams(text, k); Array.tabulate(g.count)(g.hash(_, HashSeed)) }
     val pos = Spread(docs)
-      .where(size(toks) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(toks) - (k - 1)),
-          i => xxhash64(concat_ws(" ", slice(toks, i, lit(k)))))))
+      .select(col("doc_id"), posexplode(fps(col("text"))))
       .toDF("doc_id", "pos", "fp")
     // both criteria ride ONE aggregation on the 8 B fingerprint keys;
     // the occurrence count adds no shuffle

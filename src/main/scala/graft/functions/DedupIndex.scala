@@ -25,18 +25,19 @@ import org.apache.spark.sql.types.StructType
   * candidate corpus documents (the bloomDecontaminate confinement
   * rule: never a second full corpus text scan). The signature family
   * (seeded xxhash64 minhash, band key = hash of the band's rows) is
-  * [[Dedup.bandedFromShingles]] — ONE definition, so index and probe
-  * can never drift; its parameters persist in `<name>_meta` and are
-  * read back at probe/ingest/delete time rather than trusted from the
-  * caller.
+  * the per-document kernel [[Dedup.bandKeys]] — ONE definition for
+  * index, ingest, delete, probe, [[Dedup.minhashPairs]] and the
+  * streaming candidates, so none of them can drift; its parameters
+  * persist in `<name>_meta` and are read back at probe/ingest/delete
+  * time rather than trusted from the caller.
   *
   * Scale shape: index rows are `bands` 20-byte rows per document —
   * 160 B/doc at the defaults, independent of document size; the
-  * corpus text is touched only at build (one shingle pass) and at
-  * verify (candidates only). Candidate volume is the LSH collision
-  * count, never all-pairs. Small probe batches prune to few
-  * partitions; bulk probes/deletes touch all [[KP]] partitions — the
-  * same honest degenerate regime as IVF at nprobe = k.
+  * corpus text is touched only at build (one kernel pass, a per-row
+  * projection) and at verify (candidates only). Candidate volume is
+  * the LSH collision count, never all-pairs. Small probe batches prune
+  * to few partitions; bulk probes/deletes touch all [[KP]] partitions
+  * — the same honest degenerate regime as IVF at nprobe = k.
   *
   * Reference scope note: vasia/gelly-streaming has no dedup machinery;
   * this extends SURVEY §2.3's dedupNear to the persisted-index
@@ -50,25 +51,24 @@ object DedupIndex {
     */
   val KP = 64
 
-  private def withKp(banded: DataFrame): DataFrame =
-    banded.withColumn("kp", pmod(col("key"), lit(KP.toLong)))
-
   /** Banded signature rows for `docs` under the index's hash family:
-    * `(doc_id, band, key, kp)`. Shared by [[save]] (bulk build), the
-    * streaming ingest encode, and [[delete]]'s tombstone-key
-    * recomputation.
+    * `(doc_id, band, key, kp)`, one row per document and band. A
+    * projection of each document's own text ([[Dedup.banded]]): its
+    * plan has no Exchange and no Aggregate (spec-asserted), so an
+    * ingest trigger encodes in its scan stage. Shared by [[save]] (bulk
+    * build), the streaming ingest encode, [[probe]] and [[delete]]'s
+    * tombstone-key recomputation.
     */
   def encode(docs: DataFrame, n: Int, bands: Int, rowsPerBand: Int): DataFrame =
-    withKp(Dedup.bandedFromShingles(Dedup.shingles(docs, n).cutLineage(),
-      bands, rowsPerBand))
+    Dedup.banded(docs, n, bands, rowsPerBand).withColumn("kp", pmod(col("key"), lit(KP.toLong)))
 
   /** The kp-partitioned buckets table of index `name`. */
   private[graft] def buckets(name: String) =
     IndexTables.Partitioned(s"${name}_buckets", "kp", "doc_id")
 
   /** Build and persist the index over `docs`: the kp-partitioned
-    * buckets table (one file per kp directory — the banding union's
-    * task fan-out is routed to the kp owner first) plus the one-row
+    * buckets table (one file per kp directory — the encode's rows are
+    * routed to the kp owner first) plus the one-row
     * `<name>_meta` parameter table. Idempotent across processes; a
     * fresh save also clears any prior ingest state.
     */
@@ -122,8 +122,7 @@ object DedupIndex {
             corpusDocs: DataFrame, threshold: Double): DataFrame = {
     val (n, bands, rowsPerBand) = params(spark, name)
     val qsh = Dedup.shingles(queryDocs, n).cutLineage()
-    val qb = withKp(Dedup.bandedFromShingles(qsh, bands, rowsPerBand))
-      .cutLineage()
+    val qb = encode(queryDocs, n, bands, rowsPerBand).cutLineage()
     // the probe batch's partition list: bounded by KP, driver-side by
     // design (the IVF affected-cid discipline) — this is what turns
     // the bucket lookup into a partition-pruned read

@@ -336,7 +336,7 @@ object Multimodal {
     * chunk — so the persisted image near-dup index
     * ([[graft.functions.PhashIndex]]) encodes through the IDENTICAL
     * chunking as the in-query pair enumeration (the
-    * Dedup.bandedFromShingles one-definition rule).
+    * Dedup.bandKeys one-definition rule).
     */
   private[graft] def hashChunks(hashes: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,

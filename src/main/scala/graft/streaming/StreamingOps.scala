@@ -1223,33 +1223,18 @@ object StreamingOps {
     }
   }
 
-  /** Stateless per-document MinHash banding projection — the SAME hash
-    * family and band keys as [[graft.functions.Dedup.minhashPairs]]
-    * (shingle = n-gram of whitespace tokens; mh_s = min over shingles of
-    * xxhash64(s, shingle); band key = xxhash64 of the band's signature
-    * rows), but computed per ROW with higher-order functions instead of
-    * explode + groupBy. That makes it a pure projection — it runs in
-    * append mode on an unbounded stream with no shuffle and no state,
-    * and a document's band keys are bit-identical to the batch path's.
-    * Output: one row per (band, key, doc_id).
+  /** Stateless per-document MinHash banding projection: the kernel
+    * [[graft.functions.Dedup.banded]] that [[graft.functions.Dedup.minhashPairs]]
+    * and [[graft.functions.DedupIndex]] band with, so a document's band
+    * keys are the batch path's by construction. A pure projection — it
+    * runs in append mode on an unbounded stream with no shuffle and no
+    * state. Output: one row per (band, key, doc_id).
     */
   private[graft] def minhashBandRows(docs: DataFrame, n: Int,
-                                     bands: Int, rowsPerBand: Int): DataFrame = {
-    val toks = split(col("text"), " ")
-    val nHashes = bands * rowsPerBand
-    val shingleArr = transform(sequence(lit(1), size(toks) - (n - 1)),
-      i => concat_ws(" ", slice(toks, i, lit(n))))
-    val sig = (0 until nHashes).map(s =>
-      array_min(transform(col("__sh"), x => xxhash64(lit(s), x))).as(s"mh$s"))
-    val withSig = docs
-      .where(size(toks) >= n)
-      .withColumn("__sh", shingleArr)
-      .select(col("doc_id").cast("long").as("doc_id") +: sig: _*)
-    (0 until bands).map { b =>
-      val rows = (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}"))
-      withSig.select(lit(b).as("band"), xxhash64(rows: _*).as("key"), col("doc_id"))
-    }.reduce(_ unionByName _)
-  }
+                                     bands: Int, rowsPerBand: Int): DataFrame =
+    graft.functions.Dedup.banded(
+      docs.select(col("doc_id").cast("long").as("doc_id"), col("text")),
+      n, bands, rowsPerBand).select("band", "key", "doc_id")
 
   /** THE streaming near-dup candidate operator: LSH bucket membership
     * held in `flatMapGroupsWithState` KEYED STATE, keyed by (band, band
@@ -1271,9 +1256,7 @@ object StreamingOps {
                                  bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    minhashBandRows(docs, n, bands, rowsPerBand)
-      .select(col("band"), col("key"), col("doc_id"))
-      .as[(Int, Long, Long)]
+    minhashBandRows(docs, n, bands, rowsPerBand).as[(Int, Long, Long)]
       .groupByKey(r => (r._1, r._2))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: (Int, Long), it: Iterator[(Int, Long, Long)], state: GroupState[Array[Long]]) =>

@@ -320,4 +320,12 @@ class SourcesSpec extends SparkTestBase {
     assert(got2 == Set((1L, "a"), (2L, "b"), (4L, "d")))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("a localBuilder session lists files and partitions on the driver") {
+    // above these thresholds Spark lists with a Spark job whose every
+    // task deserializes the Hadoop Configuration; locally it buys nothing
+    val high = Int.MaxValue.toString
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == high)
+    assert(spark.sparkContext.getConf.get("spark.rdd.parallelListingThreshold") == high)
+  }
 }

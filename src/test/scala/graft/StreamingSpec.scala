@@ -830,16 +830,13 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     val docs = Seq((1L, "the quick brown fox jumps"), (2L, "the quick brown fox leaps"),
       (3L, "entirely different words here")).toDF("doc_id", "text")
-    // batch path: shingles → groupBy signature → band keys (minhashPairs'
-    // internals, reproduced from its published hash family)
-    val sh = graft.functions.Dedup.shingles(docs, 2)
-    def mh(s: Int) = min(xxhash64(lit(s), col("shingle"))).as(s"mh$s")
-    val sig = sh.groupBy(col("doc_id")).agg(mh(0), (1 until 32).map(mh): _*)
-    val batchKeys = (0 until 8).flatMap { b =>
-      val rows = (0 until 4).map(r => col(s"mh${b * 4 + r}"))
-      sig.select(col("doc_id"), lit(b).as("band"), xxhash64(rows: _*).as("key"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    // batch path: the per-document kernel minhashPairs and DedupIndex
+    // band with, called on the driver (MinhashKernelSpec pins it to the
+    // SQL signature pipeline it replaced)
+    val batchKeys = docs.as[(Long, String)].collect().flatMap { case (id, text) =>
+      graft.functions.Dedup.bandKeys(text, 2, 8, 4).zipWithIndex.map { case (k, b) => (id, b, k) }
     }.toSet
+    assert(batchKeys.size == 3 * 8)
     val streamKeys = StreamingOps.minhashBandRows(docs, 2, 8, 4)
       .collect().map(r => (r.getLong(2), r.getInt(0), r.getLong(1))).toSet
     assert(streamKeys == batchKeys)
