@@ -30,12 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Centrality {
 
-  private def symmetrize(edges: DataFrame): DataFrame =
-    edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .union(edges.select(col("dst").cast("long"), col("src").cast("long")))
-      .where(col("u") =!= col("v"))
-      .distinct()
-
   /** Forward BFS DAG layers shared by the centrality operators:
     * layers(d) = (s, v, sig) with σ summed over the predecessor layer,
     * first-reached discipline via anti-join against everything settled
@@ -76,7 +70,7 @@ object Centrality {
   def stressCentrality(edges: DataFrame, sources: Seq[Long],
                        maxDepth: Int = 20): DataFrame = {
     require(sources.nonEmpty, "stressCentrality: need at least one source")
-    val sym = symmetrize(edges).cutLineage()
+    val sym = Traversals.symmetrize(edges).cutLineage()
     // the one-task leg mirrors the maxDepth budget exactly
     if (LocalGraph.oneTask("stressCentrality", sym))
       return LocalCentrality.centralityLocal(sym, sources, maxDepth, 0L,
@@ -129,7 +123,7 @@ object Centrality {
   def harmonicCloseness(edges: DataFrame, sources: Seq[Long],
                         maxDepth: Int = 20, scale: Long = 1000000L): DataFrame = {
     require(sources.nonEmpty, "harmonicCloseness: need at least one source")
-    val sym = symmetrize(edges).cutLineage()
+    val sym = Traversals.symmetrize(edges).cutLineage()
     if (LocalGraph.oneTask("harmonicCloseness", sym))
       return LocalCentrality.centralityLocal(sym, sources, maxDepth, scale,
         LocalCentrality.Harmonic, "harmonicCloseness")
@@ -176,7 +170,7 @@ object Centrality {
                             maxDepth: Int = 20, scale: Long = 1000000L,
                             oneTaskBar: Long = Long.MaxValue): DataFrame = {
     require(sources.nonEmpty, "betweennessCentrality: need at least one source")
-    val sym = symmetrize(edges).cutLineage()
+    val sym = Traversals.symmetrize(edges).cutLineage()
     if (LocalGraph.oneTask("betweennessCentrality", sym, cap = oneTaskBar))
       return LocalCentrality.centralityLocal(sym, sources, maxDepth, scale,
         LocalCentrality.Betweenness, "betweennessCentrality")

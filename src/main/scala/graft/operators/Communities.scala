@@ -328,7 +328,7 @@ object Communities {
       var curQ =
         if (lvl == 1) weightedModularity(g, labels, m) else hist.last
       for (p <- 1 to movesPerLevel) {
-        val cand = weightedMovePass(g, labels, m, p % 2)
+        val cand = weightedMovePass(g, labels, Left(m), p % 2)
         val candQ = weightedModularity(g, cand, m)
         if (candQ >= curQ) { labels = cand; curQ = candQ }
         hist += curQ
@@ -375,25 +375,20 @@ object Communities {
     * Plan: one |E| two-sided label join to keep intra-community edges,
     * then connected components over them, then one |V| left join;
     * vertices with no intra-community edge become singletons named by
-    * their own id. The CC implementation follows the measured crossover
-    * (SCALE.md tier-2: the single-pass mergeable summary beats the
-    * iterative path 478 s vs 1998 s even at 10M vertices): single-pass
-    * while the vertex set fits a task's summary, distributed min-label
-    * pointer jumping past it. Both produce the identical min-id
+    * their own id. The CC leg is [[ConnectedComponents.auto]]'s: the
+    * single-pass summary while the intra-community edges fit its twin
+    * gate's bar, distributed min-label pointer jumping past it (and at
+    * `spark.graft.oneTaskBar=0`). Both produce the identical min-id
     * labeling, so the switch is invisible to the oracle.
     */
   private[graft] def connectivityRefine(g: DataFrame, labels: DataFrame): DataFrame = {
     val l = labels.select(col("id"), col("label")).cutLineage()
-    val nV = Lineage.rows(l) // measured by the cut: no job
     val intra = g.where(col("u") =!= col("v"))
       .join(l.toDF("u", "la"), Seq("u"))
       .join(l.toDF("v", "lb"), Seq("v"))
       .where(col("la") === col("lb"))
       .select(col("u").as("src"), col("v").as("dst"))
-    val cc =
-      if (nV <= 10000000L) ConnectedComponents.singlePass(intra)
-      else ConnectedComponents.iterative(intra)
-    l.join(cc.toDF("id", "rep"), Seq("id"), "left")
+    l.join(ConnectedComponents.auto(intra).toDF("id", "rep"), Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("label"))
       .cutLineage()
   }
@@ -439,11 +434,11 @@ object Communities {
     * per-component gate still yields global monotonicity (global Q is
     * the weighted sum of component terms, each non-decreasing).
     *
-    * Plan: one CC decomposition up front (min-label; the measured
-    * single-pass/iterative crossover), then the [[louvain]] per-pass
-    * shape with every scalar (m, gate) turned into a component-keyed
-    * |C|-sized table — no driver-side per-pass actions at all, where
-    * the global version paid two scalar collects per pass.
+    * Plan: one CC decomposition up front (min-label, through
+    * [[ConnectedComponents.auto]]'s twin gate), then the [[louvain]]
+    * per-pass shape with every scalar (m, gate) turned into a
+    * component-keyed |C|-sized table — no driver-side per-pass actions
+    * at all, where the global version paid two scalar collects per pass.
     */
   def louvainByComponent(edges: DataFrame, levels: Int = 2,
                          movesPerLevel: Int = 2): DataFrame =
@@ -525,18 +520,13 @@ object Communities {
       .select(col("u").as("src"), col("v").as("dst"))
     val verts0 = g.select(explode(array(col("u"), col("v"))).as("id")).distinct()
       .cutLineage()
-    // min-label components. Threshold BELOW connectivityRefine's 10M
-    // rule: the single-pass summary is a per-task O(|V|) union-find
-    // buffer, and tier2louvmaint's 8.3M-vertex block graph OOM'd it
-    // live (32 concurrent tasks × multi-M-entry typed buffers); the
-    // iterative path is shuffle-bound and converges in a few rounds on
-    // small-diameter components — the safe default at multi-million
-    // vertices. The maintenance path's affected subgraphs stay under
-    // the bar and keep the cheap single-pass.
-    val nV = Lineage.rows(verts0)
-    var vcomp = (if (nV <= 2000000L) ConnectedComponents.singlePass(ccEdges)
-                 else ConnectedComponents.iterative(ccEdges))
-      .toDF("id", "cmp").cutLineage()
+    // min-label components through the twin gate
+    // ([[ConnectedComponents.auto]]): the single-pass summary is a
+    // per-task O(|V|) union-find buffer, and tier2louvmaint's
+    // 8.3M-vertex block graph OOM'd it live (32 concurrent tasks ×
+    // multi-M-entry typed buffers), so past the gate's edge bar the
+    // shuffle-bound iterative path runs
+    var vcomp = ConnectedComponents.auto(ccEdges).toDF("id", "cmp").cutLineage()
     // per-component edge mass — constant across levels (coarsening
     // preserves each component's total weight)
     val mTbl = g.join(vcomp.toDF("u", "cmp"), Seq("u"))
@@ -550,8 +540,9 @@ object Communities {
       var labels = g.select(explode(array(col("u"), col("v"))).as("id")).distinct()
         .select(col("id"), col("id").as("label")).cutLineage()
       if (lvl == 1) curQ = modularityByComp(g, labels, vcomp, mTbl).cutLineage()
+      val mOf = vcomp.join(mTbl, Seq("cmp")).select(col("id").as("u"), col("m"))
       for (p <- 1 to movesPerLevel) {
-        val cand = movePassByComp(g, labels, vcomp, mTbl, p % 2)
+        val cand = weightedMovePass(g, labels, Right(mOf), p % 2)
         val candQ = modularityByComp(g, cand, vcomp, mTbl)
         val gate = curQ.toDF("cmp", "qi")
           .join(candQ.toDF("cmp", "qc"), Seq("cmp"))
@@ -609,45 +600,6 @@ object Communities {
           - coalesce(col("s2"), lit(0L))).as("q"))
   }
 
-  /** One gated synchronous move pass with COMPONENT-LOCAL m —
-    * [[weightedMovePass]] with the gain's 2m factor joined per vertex
-    * from the component mass table. Returns the CANDIDATE labeling;
-    * the caller gates it per component.
-    */
-  private def movePassByComp(g: DataFrame, l0: DataFrame, vcomp: DataFrame,
-                             mTbl: DataFrame, parity: Int): DataFrame = {
-    val e = g.where(col("u") =!= col("v"))
-    val sym = e.select(col("u").as("p"), col("v").as("o"), col("w"))
-      .unionByName(e.select(col("v").as("p"), col("u").as("o"), col("w")))
-    val deg = weightedDegrees(g)
-    val stot = l0.join(deg, Seq("id")).groupBy("label").agg(sum("k").as("stot"))
-    val kic = sym.join(l0.toDF("o", "lv"), Seq("o"))
-      .groupBy(col("p").as("u"), col("lv")).agg(sum("w").as("kc"))
-    val mOf = vcomp.join(mTbl, Seq("cmp"))
-      .select(col("id").as("u"), col("m"))
-    val cur = l0.select(col("id").as("u"), col("label").as("lu"))
-      .join(deg.toDF("u", "k"), Seq("u"))
-      .join(stot.toDF("lu", "stotd"), Seq("lu"))
-      .join(kic.toDF("u", "lu", "kd"), Seq("u", "lu"), "left")
-      .join(mOf, Seq("u"))
-      .select(col("u"), col("lu"), col("k"), col("stotd"),
-        coalesce(col("kd"), lit(0L)).as("kd"), col("m"))
-    val best = cur.join(kic, Seq("u"))
-      .where(col("lv") =!= col("lu") && pmod(col("u"), lit(2L)) === parity)
-      .join(stot.toDF("lv", "stotc"), Seq("lv"))
-      .select(col("u"), col("lv"),
-        (lit(2L) * col("m") * (col("kc") - col("kd"))
-          - col("k") * (col("stotc") - col("stotd") + col("k"))).as("gain"))
-      .where(col("gain") > 0)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("u").orderBy(col("gain").desc, col("lv").asc)))
-      .where(col("rn") === 1)
-      .select(col("u").as("id"), col("lv").as("new_label"))
-    l0.join(best, Seq("id"), "left")
-      .select(col("id"), coalesce(col("new_label"), col("label")).as("label"))
-      .cutLineage()
-  }
-
   /** Weighted degrees over a canonical weighted graph (u ≤ v, integer
     * w, self-loops allowed): k_i = Σ_{j≠i} w(i,j) + 2·w(i,i) — the
     * self-loop counts both endpoints, preserving Σk = 2m.
@@ -673,8 +625,13 @@ object Communities {
     * input labeling. Returns the CANDIDATE labeling; the caller gates
     * it against exact-integer modularity (one evaluation per pass —
     * the pre-pass score is the previous accepted score, memoized).
+    *
+    * `m` is the gain's edge mass: one constant for the global pass, or
+    * a per-vertex `(u, m)` table for the COMPONENT-LOCAL pass
+    * ([[louvainCompCore]]), joined onto each vertex's row; the caller
+    * then gates the candidate per component.
     */
-  private def weightedMovePass(g: DataFrame, l0: DataFrame, m: Long,
+  private def weightedMovePass(g: DataFrame, l0: DataFrame, m: Either[Long, DataFrame],
                                parity: Int): DataFrame = {
     val e = g.where(col("u") =!= col("v"))
     val sym = e.select(col("u").as("p"), col("v").as("o"), col("w"))
@@ -683,17 +640,19 @@ object Communities {
     val stot = l0.join(deg, Seq("id")).groupBy("label").agg(sum("k").as("stot"))
     val kic = sym.join(l0.toDF("o", "lv"), Seq("o"))
       .groupBy(col("p").as("u"), col("lv")).agg(sum("w").as("kc"))
-    val cur = l0.select(col("id").as("u"), col("label").as("lu"))
+    val cur0 = l0.select(col("id").as("u"), col("label").as("lu"))
       .join(deg.toDF("u", "k"), Seq("u"))
       .join(stot.toDF("lu", "stotd"), Seq("lu"))
       .join(kic.toDF("u", "lu", "kd"), Seq("u", "lu"), "left")
-      .select(col("u"), col("lu"), col("k"), col("stotd"),
-        coalesce(col("kd"), lit(0L)).as("kd"))
+    val (cur, twoM) = m match {
+      case Left(total) => (cur0, lit(2L * total))
+      case Right(perVertex) => (cur0.join(perVertex, Seq("u")), lit(2L) * col("m"))
+    }
     val best = cur.join(kic, Seq("u"))
       .where(col("lv") =!= col("lu") && pmod(col("u"), lit(2L)) === parity)
       .join(stot.toDF("lv", "stotc"), Seq("lv"))
       .select(col("u"), col("lv"),
-        (lit(2L * m) * (col("kc") - col("kd"))
+        (twoM * (col("kc") - coalesce(col("kd"), lit(0L)))
           - col("k") * (col("stotc") - col("stotd") + col("k"))).as("gain"))
       .where(col("gain") > 0)
       .withColumn("rn", row_number().over(

@@ -31,18 +31,19 @@ object ConnectedComponents {
   def singlePass(edges: DataFrame): DataFrame =
     SummaryAggregations.connectedComponents(edges)
 
-  /** Scale-adaptive CC — the subroutine entry point: the
-    * [[LocalGraph.oneTask]] gate decides between [[singlePass]]
-    * (per-task union-find buffer ∝ vertices — the cheap path while the vertex set fits task memory;
+  /** Scale-adaptive CC — the subroutine entry point, and the only CC
+    * leg choice in the operators: the [[LocalGraph.oneTask]] gate
+    * decides between [[singlePass]] (per-task union-find buffer ∝
+    * vertices — the cheap path while the vertex set fits task memory;
     * ≤ 2·bar vertices by construction, the bar being a quarter of the
     * session's: 1M edges by default) and [[iterative]] (the
     * shuffle-bound 100 TB path). Both paths share the exact (id,
     * component = min member id) output contract (spec-pinned equal),
-    * so the choice is invisible to callers. The bar matches the
-    * louvainCompCore crossover (its 8.3M-vertex javaSer OOM is the
-    * measured ceiling; 2M vertices ≈ 1M edges of margin below it).
-    * Operators that ARE the iterative demonstration (q28) keep calling
-    * [[iterative]] directly.
+    * so the choice is invisible to callers. The bar sits below the
+    * single-pass buffer's measured ceiling (an 8.3M-vertex javaSer OOM
+    * in the component-local Louvain; 2M vertices ≈ 1M edges of margin
+    * below it). Operators that ARE the iterative demonstration (q28)
+    * keep calling [[iterative]] directly.
     */
   def auto(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Lineage
 import graft.Lineage.CutOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** HyperBall — per-vertex ball-cardinality estimates |B(v, t)| for
@@ -43,6 +43,12 @@ import org.apache.spark.sql.functions._
   *
   * Output: (id, t, est) for every vertex and t = 1..k, est ≈ |B(v,t)|
   * including v itself.
+  *
+  * Variants: [[ballSizes]] emits `(id, t, est)` and [[registerRounds]]
+  * the register tables R_0..R_k themselves. Both run over the same
+  * undirected view ([[Traversals.symmetrize]]) and the same rounds:
+  * one distributed round definition, and one one-task register kernel
+  * with an emitter per output.
   */
 object HyperBall {
 
@@ -91,11 +97,11 @@ object HyperBall {
   def ballSizes(edges: DataFrame, k: Int = 3,
                 includeZero: Boolean = false): DataFrame = {
     require(k >= 1 && k <= 16, s"hyperball k=$k out of the sane 1..16 range")
-    val sym = symmetrize(edges)
+    val sym = Traversals.symmetrize(edges).cutLineage()
     // also puts [[ballSizesMaintain]]'s affected-slice recomputes on
     // the one-task leg
     if (LocalGraph.oneTask("ballSizes", sym))
-      return ballSizesLocal(sym, k, includeZero)
+      return ballEstimatesLocal(sym, k, includeZero)
     // ONE definition of the rounds ([[registerRounds]] — the shared
     // register contract with the q227 streaming parity, the q228
     // overlap sketch, and the insert-delta growth), estimates read off
@@ -111,13 +117,17 @@ object HyperBall {
     (zero ++ perRadius).reduce(_ unionByName _)
   }
 
-  /** One-task replay of the register rounds + estimator: registers as
-    * 16 bytes per vertex (ρ ≤ 28), rounds as element-wise max folds
-    * over the arc list against the frozen previous state — the exact
-    * synchronous round map of [[registerRounds]]. Returns (id, t, est).
+  /** The one one-task register kernel behind [[ballSizes]],
+    * [[registerRounds]] and [[ballSizesGrowFrom]]: registers as 16
+    * bytes per vertex (ρ ≤ 28), initialised as the JVM twin of
+    * [[regColsOf]], and each round an element-wise max fold over the
+    * arc list against the frozen previous state — the exact synchronous
+    * round map of [[registerRounds]]. `emit(id, t, state, i)` turns
+    * vertex slot `i` of the registers after round t into a row, for
+    * t = 0..k (1..k unless `withZero`), round-major.
     */
-  private def ballSizesLocal(sym: DataFrame, k: Int,
-                             includeZero: Boolean): DataFrame = {
+  private def registersLocal[T: Encoder](sym: DataFrame, k: Int, withZero: Boolean)(
+      emit: (Long, Int, Array[Byte], Int) => T): Dataset[T] = {
     val spark = sym.sparkSession
     import spark.implicits._
     sym.select(col("u").cast("long"), col("v").cast("long"))
@@ -134,7 +144,6 @@ object HyperBall {
         val ids = new Array[Long](n)
         idx.foreach { case (id, i) => ids(i) = id }
         val arcIdx = arcs.map { case (u, v) => (idx(u), idx(v)) }
-        // initial singleton sketches — the JVM twin of [[regColsOf]]
         var cur = new Array[Byte](n * M)
         var i = 0
         while (i < n) {
@@ -149,21 +158,12 @@ object HyperBall {
           cur(i * M + b) = rho.toByte
           i += 1
         }
-        def estOf(state: Array[Byte], vi: Int): Long = {
-          var denom = 0L
-          var j = 0
-          while (j < M) {
-            denom += 1L << (28 - state(vi * M + j))
-            j += 1
-          }
-          AlphaScaled / denom
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](
-          n * (k + 1))
-        if (includeZero) {
+        val out = new scala.collection.mutable.ArrayBuffer[T](n * (k + 1))
+        def emitRound(t: Int): Unit = {
           var vi = 0
-          while (vi < n) { out += ((ids(vi), 0L, estOf(cur, vi))); vi += 1 }
+          while (vi < n) { out += emit(ids(vi), t, cur, vi); vi += 1 }
         }
+        if (withZero) emitRound(0)
         for (t <- 1 to k) {
           val next = cur.clone()
           arcIdx.foreach { case (ui, vi) =>
@@ -175,21 +175,26 @@ object HyperBall {
             }
           }
           cur = next
-          var vi = 0
-          while (vi < n) { out += ((ids(vi), t.toLong, estOf(cur, vi))); vi += 1 }
+          emitRound(t)
         }
         out.iterator
       }
-      .toDF("id", "t", "est")
   }
 
-  /** The symmetrized, deduplicated, self-loop-free edge view every
-    * HyperBall entry point shares. */
-  private def symmetrize(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("u"),
-      col("dst").cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-    e.union(e.select(col("v"), col("u"))).distinct().cutLineage()
+  /** [[registersLocal]] emitting `(id, t, est)`: the one-task leg of
+    * [[ballSizes]], t = 0 only with `includeZero`. */
+  private def ballEstimatesLocal(sym: DataFrame, k: Int, includeZero: Boolean): DataFrame = {
+    val spark = sym.sparkSession
+    import spark.implicits._
+    registersLocal(sym, k, includeZero) { (id, t, state, vi) =>
+      var denom = 0L
+      var j = 0
+      while (j < M) {
+        denom += 1L << (28 - state(vi * M + j))
+        j += 1
+      }
+      (id, t.toLong, AlphaScaled / denom)
+    }.toDF("id", "t", "est")
   }
 
   /** The per-round register tables R_0..R_k of [[ballSizes]] —
@@ -201,7 +206,7 @@ object HyperBall {
     */
   def registerRounds(edges: DataFrame, k: Int): Seq[DataFrame] = {
     require(k >= 1 && k <= 16, s"hyperball k=$k out of the sane 1..16 range")
-    val sym = symmetrize(edges)
+    val sym = Traversals.symmetrize(edges).cutLineage()
     // one-task leg: all k+1 round tables from ONE task + ONE checkpoint
     // (each returned table is a filter on the round column)
     if (LocalGraph.oneTask("registerRounds", sym)) return registerRoundsLocal(sym, k)
@@ -209,65 +214,11 @@ object HyperBall {
   }
 
   private def registerRoundsLocal(sym: DataFrame, k: Int): Seq[DataFrame] = {
-    import graft.Lineage.CutOps
     val spark = sym.sparkSession
     import spark.implicits._
-    val all = sym.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val arcs = it.toArray
-        val idx = new scala.collection.mutable.LongMap[Int]()
-        arcs.foreach { case (u, v) =>
-          if (!idx.contains(u)) idx(u) = idx.size
-          if (!idx.contains(v)) idx(v) = idx.size
-        }
-        val n = idx.size
-        val ids = new Array[Long](n)
-        idx.foreach { case (id, i) => ids(i) = id }
-        val arcIdx = arcs.map { case (u, v) => (idx(u), idx(v)) }
-        var cur = new Array[Byte](n * M)
-        var i = 0
-        while (i < n) {
-          val v = ids(i)
-          val h = Math.floorMod(Math.floorMod(v, 2147483648L) * 2654435761L,
-            2147483648L)
-          val b = (h % M).toInt
-          val y = h >> 4
-          val rho =
-            if (y == 0L) 28
-            else 28 - (64 - java.lang.Long.numberOfLeadingZeros(y))
-          cur(i * M + b) = rho.toByte
-          i += 1
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Int, Seq[Int])](
-          n * (k + 1))
-        def emit(t: Int, state: Array[Byte]): Unit = {
-          var vi = 0
-          while (vi < n) {
-            out += ((ids(vi), t,
-              (0 until M).map(j => state(vi * M + j).toInt)))
-            vi += 1
-          }
-        }
-        emit(0, cur)
-        for (t <- 1 to k) {
-          val next = cur.clone()
-          arcIdx.foreach { case (ui, vi) =>
-            var j = 0
-            while (j < M) {
-              val c = cur(vi * M + j)
-              if (c > next(ui * M + j)) next(ui * M + j) = c
-              j += 1
-            }
-          }
-          cur = next
-          emit(t, cur)
-        }
-        out.iterator
-      }
-      .toDF("id", "t", "regs")
-      .cutLineage()
+    val all = registersLocal(sym, k, withZero = true) { (id, t, state, vi) =>
+      (id, t, (0 until M).map(j => state(vi * M + j).toInt))
+    }.toDF("id", "t", "regs").cutLineage()
     (0 to k).map(t =>
       all.where(col("t") === t)
         .select(col("id") +:
@@ -328,8 +279,8 @@ object HyperBall {
                         trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
     require(oldRounds.length == k + 1,
       s"expected ${k + 1} stored register rounds (R_0..R_$k), got ${oldRounds.length}")
-    val symOld = symmetrize(oldEdges)
-    val symIns = symmetrize(inserts)
+    val symOld = Traversals.symmetrize(oldEdges).cutLineage()
+    val symIns = Traversals.symmetrize(inserts).cutLineage()
       .join(symOld, Seq("u", "v"), "left_anti").cutLineage()
     val symNet = symOld.unionByName(symIns)
     // the growth recursion is bit-equal to the cold rounds over the
@@ -337,7 +288,7 @@ object HyperBall {
     // cold rounds; `trace` callers (wavefront probes) take the rounds
     if (LocalGraph.oneTask("ballSizesGrowFrom", symNet,
         cap = if (trace.isEmpty) Long.MaxValue else 0L))
-      return ballSizesLocal(symNet, k, includeZero)
+      return ballEstimatesLocal(symNet, k, includeZero)
     val estCol: Column = estimator
     val newVerts = symIns.select(col("u").as("id")).distinct()
       .join(oldRounds.head, Seq("id"), "left_anti").cutLineage()

@@ -12,6 +12,9 @@ import org.apache.spark.sql.functions._
   * round-latency-bound at small scale (2 exchanges × 10 rounds for
   * kilobytes of state); below the size bar one job replaces them all,
   * above it the distributed rounds run unchanged (the 100 TB path).
+  * One kernel replays all four PageRank variants (per-arc share, seed
+  * and teleport mask as inputs, as in [[PageRank]]); [[hitsLocal]]
+  * replays both HITS entry points, seeded or not.
   *
   * Multi-arc semantics are preserved: the round paths never dedup the
   * arc list (outdeg counts ROWS; a duplicated arc contributes twice),
@@ -61,48 +64,40 @@ object LocalRank {
   }
 
   /** Replay of [[PageRank.fixedPoint]] / [[PageRank.fixedPointFrom]]:
-    * `seeds` = None is the uniform SCALE start; otherwise absent ids
-    * seed at SCALE (the warm-start contract). Arcs carry w = 1 unused.
+    * `prev` = None is the uniform SCALE start; otherwise absent ids
+    * seed at SCALE (the warm-start contract).
     */
-  def pageRankLocal(e: DataFrame, iters: Int,
-                    prev: Option[DataFrame]): DataFrame =
-    runTagged(e.select(col("u"), col("v"), lit(1L).as("w")),
-      prev.map(_.select(col("id"), col("rank").as("seed")))) { (arcs, seeds) =>
-      val verts = vertsOf(arcs)
-      val outdeg = new LongMap[Long]()
-      arcs.foreach { case (u, _, _) => outdeg(u) = outdeg.getOrElse(u, 0L) + 1L }
-      var ranks = new LongMap[Long](verts.size * 2)
-      verts.foreachKey { id => ranks(id) = seeds.getOrElse(id, Scale) }
-      val base = 15L * Scale / 100
-      for (_ <- 1 to iters) {
-        val s = new LongMap[Long]()
-        arcs.foreach { case (u, v, _) =>
-          s(v) = s.getOrElse(v, 0L) + ranks(u) / outdeg(u)
-        }
-        val next = new LongMap[Long](verts.size * 2)
-        verts.foreachKey { id =>
-          next(id) = base + (85L * s.getOrElse(id, 0L)) / 100L
-        }
-        ranks = next
-      }
-      val out = new ArrayBuffer[(Long, Long)](ranks.size)
-      ranks.foreach { case (id, r) => out += ((id, r)) }
-      out.iterator
-    }
+  def pageRankLocal(e: DataFrame, iters: Int, prev: Option[DataFrame]): DataFrame =
+    pageRankKernel(unitArcs(e), iters, prev, None)
 
-  /** Replay of [[PageRank.weightedFixedPoint]]: per-edge share
-    * (rank·w) div totw(u); arcs with totw(u) ≤ 0 are dropped from the
-    * propagation (the round path's `where(totw > 0)`) but their
-    * endpoints stay in the vertex table.
-    */
+  /** Replay of [[PageRank.weightedFixedPoint]]. */
   def weightedPageRankLocal(e: DataFrame, iters: Int): DataFrame =
-    runTagged(e, None) { (arcs, _) =>
+    pageRankKernel(e, iters, None, None)
+
+  /** Replay of [[PageRank.personalized]]. */
+  def personalizedLocal(e: DataFrame, sources: Seq[Long], iters: Int): DataFrame =
+    pageRankKernel(unitArcs(e), iters, None, Some(sources))
+
+  private def unitArcs(e: DataFrame): DataFrame =
+    e.select(col("u"), col("v"), lit(1L).as("w"))
+
+  /** The one PageRank replay, with [[PageRank]]'s three inputs. The
+    * share is always `(rank·w) div totw(u)`: unit arcs carry w = 1, so
+    * totw = outdeg. Arcs with totw(u) ≤ 0 propagate nothing (the round
+    * path's `where(totw > 0)`) while their endpoints stay in the vertex
+    * table.
+    */
+  private def pageRankKernel(arcs: DataFrame, iters: Int, prev: Option[DataFrame],
+                             sources: Option[Seq[Long]]): DataFrame =
+    runTagged(arcs, prev.map(_.select(col("id"), col("rank").as("seed")))) { (arcs, seeds) =>
+      val src = sources.map { s => val m = new LongMap[Unit](); s.foreach(m(_) = ()); m }
+      def masked(id: Long, x: Long): Long = if (src.forall(_.contains(id))) x else 0L
       val verts = vertsOf(arcs)
       val totw = new LongMap[Long]()
       arcs.foreach { case (u, _, w) => totw(u) = totw.getOrElse(u, 0L) + w }
       val live = arcs.filter { case (u, _, _) => totw(u) > 0L }
       var ranks = new LongMap[Long](verts.size * 2)
-      verts.foreachKey { id => ranks(id) = Scale }
+      verts.foreachKey { id => ranks(id) = seeds.getOrElse(id, masked(id, Scale)) }
       val base = 15L * Scale / 100
       for (_ <- 1 to iters) {
         val s = new LongMap[Long]()
@@ -111,39 +106,7 @@ object LocalRank {
         }
         val next = new LongMap[Long](verts.size * 2)
         verts.foreachKey { id =>
-          next(id) = base + (85L * s.getOrElse(id, 0L)) / 100L
-        }
-        ranks = next
-      }
-      val out = new ArrayBuffer[(Long, Long)](ranks.size)
-      ranks.foreach { case (id, r) => out += ((id, r)) }
-      out.iterator
-    }
-
-  /** Replay of [[PageRank.personalized]]: teleport mass lands only on
-    * `sources`.
-    */
-  def personalizedLocal(e: DataFrame, sources: Seq[Long], iters: Int): DataFrame =
-    runTagged(e.select(col("u"), col("v"), lit(1L).as("w")), None) { (arcs, _) =>
-      val src = new LongMap[Unit]()
-      sources.foreach(s => src(s) = ())
-      val verts = vertsOf(arcs)
-      val outdeg = new LongMap[Long]()
-      arcs.foreach { case (u, _, _) => outdeg(u) = outdeg.getOrElse(u, 0L) + 1L }
-      var ranks = new LongMap[Long](verts.size * 2)
-      verts.foreachKey { id =>
-        ranks(id) = if (src.contains(id)) Scale else 0L
-      }
-      val base = 15L * Scale / 100
-      for (_ <- 1 to iters) {
-        val s = new LongMap[Long]()
-        arcs.foreach { case (u, v, _) =>
-          s(v) = s.getOrElse(v, 0L) + ranks(u) / outdeg(u)
-        }
-        val next = new LongMap[Long](verts.size * 2)
-        verts.foreachKey { id =>
-          next(id) = (if (src.contains(id)) base else 0L) +
-            (85L * s.getOrElse(id, 0L)) / 100L
+          next(id) = masked(id, base) + (85L * s.getOrElse(id, 0L)) / 100L
         }
         ranks = next
       }

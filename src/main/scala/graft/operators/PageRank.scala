@@ -21,17 +21,24 @@ import org.apache.spark.sql.functions._
   *   r_{k+1}(v) = (15 * SCALE) div 100
   *              + (85 * Σ_{u→v} (r_k(u) div outdeg(u))) div 100
   *
+  * The four entry points are this one round map with three inputs
+  * varied: the per-arc share (`r div outdeg`, or `(r·w) div totw` for
+  * [[weightedFixedPoint]]), the seed r_0 (SCALE, the previous ranks for
+  * [[fixedPointFrom]], or SCALE·[v ∈ S] for [[personalized]]) and the
+  * teleport mask (every vertex, or S for [[personalized]]). One
+  * distributed loop and one one-task kernel ([[LocalRank]]) run them.
+  *
   * Distributed shape — identical to float power iteration and the right
   * one at 100 TB: per round, one join of ranks against the (static,
   * pre-partitioned) edge list on `u` and one aggregation shuffle on `v`.
   * The edge list is hash-partitioned on `u` once and cut, so that each
-  * round shuffles only the (|V|-sized) rank table; lineage is truncated
-  * per round. The cut keeps that layout only when AQE does not re-plan
+  * round shuffles only the (|V|-sized) rank table; lineage is cut every
+  * third round. The cut keeps that layout only when AQE does not re-plan
   * the repartition: under AQE a small edge list comes back as one
   * coalesced partition of unknown layout, and each round's join
   * shuffles it again (LineageSpec, "repartition(col("u")).cutLineage()
-  * keeps its partitioning", runs with AQE off to show the kept layout). Rounds are fixed (no convergence probe ⇒ no
-  * per-round driver action).
+  * keeps its partitioning", runs with AQE off to show the kept layout).
+  * Rounds are fixed (no convergence probe ⇒ no per-round driver action).
   */
 object PageRank {
 
@@ -46,32 +53,10 @@ object PageRank {
     */
   def fixedPoint(edges: DataFrame, iters: Int = 10,
                  oneTaskBar: Long = Long.MaxValue): DataFrame = {
-    val e = edges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
+    val e = arcsOf(edges)
     if (LocalGraph.oneTask("pagerank", e, cap = oneTaskBar))
       return LocalRank.pageRankLocal(e, iters, None)
-    val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg"))
-    // static per-round join input, partitioned once on the join key
-    val eDeg = e.join(deg, "u").repartition(col("u")).cutLineage()
-    val verts = e.select(col("u").as("id")).union(e.select(col("v")))
-      .distinct().cutLineage()
-
-    var ranks = verts.withColumn("rank", lit(Scale))
-    for (k <- 1 to iters) {
-      val contrib = eDeg
-        .join(ranks, eDeg("u") === ranks("id"))
-        .select(col("v").as("id"), expr("rank div outdeg").as("c"))
-        .groupBy("id").agg(sum("c").as("s"))
-      ranks = verts
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(15L * Scale / 100) + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-      // no convergence probe ⇒ no need to materialize every round; cut
-      // lineage every few rounds to bound plan depth without paying a
-      // synchronous job barrier per iteration
-      if (k % 3 == 0 || k == iters) ranks = ranks.cutLineage()
-    }
-    ranks
+    rounds(e, iters)
   }
 
   /** WARM-START maintenance for [[fixedPoint]] — the incremental leg of
@@ -105,119 +90,110 @@ object PageRank {
     */
   def fixedPointFrom(edges: DataFrame, prev: DataFrame, iters: Int = 5,
                      trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
-    val e = edges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
+    val e = arcsOf(edges)
     // `trace` callers (per-round Δ-sentinel probes) always take the
     // round path — the twin has no per-round driver channel
     if (LocalGraph.oneTask("pagerankFrom", e, cap = if (trace.isEmpty) Long.MaxValue else 0L))
       return LocalRank.pageRankLocal(e, iters, Some(prev))
-    val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg"))
-    val eDeg = e.join(deg, "u").repartition(col("u")).cutLineage()
-    val verts = e.select(col("u").as("id")).union(e.select(col("v")))
-      .distinct().cutLineage()
-
-    var ranks = verts
-      .join(prev.select(col("id"), col("rank").as("pr")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("pr"), lit(Scale)).as("rank"))
-      .cutLineage()
-    for (k <- 1 to iters) {
-      val contrib = eDeg
-        .join(ranks, eDeg("u") === ranks("id"))
-        .select(col("v").as("id"), expr("rank div outdeg").as("c"))
-        .groupBy("id").agg(sum("c").as("s"))
-      val next = verts
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(15L * Scale / 100) + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-      if (trace.isDefined) {
-        val nx = next.cutLineage()
-        trace.foreach(_ += nx.toDF("id", "nr")
-          .join(ranks.toDF("id", "or"), Seq("id"))
-          .agg(coalesce(max(abs(col("nr") - col("or"))), lit(0L)))
-          .head().getLong(0))
-        // release the superseded round's checkpoint — the Δ above was
-        // its last reader, and a traced certification loop would
-        // otherwise pin O(iters) |V|-sized frames (OOM'd live in
-        // tier2prwarm at 2 × 30 rounds)
-        org.apache.spark.sql.graftbridge.PlanBridge.checkpointRddId(ranks)
-          .foreach(id => edges.sparkSession.sparkContext.getPersistentRDDs
-            .get(id).foreach(_.unpersist(false)))
-        ranks = nx
-      } else ranks = if (k % 3 == 0 || k == iters) next.cutLineage() else next
-    }
-    ranks
+    rounds(e, iters, prev = Some(prev), trace = trace)
   }
 
   /** Weighted PageRank: each out-edge carries mass proportional to its
-    * integer weight (`value` cast to BIGINT) instead of 1/outdeg. Same
-    * micro-unit determinism contract — the per-edge share
-    * `(rank·w) div totw(u)` is an independent exact integer, so the
-    * inbound sum is order-free. Same per-round plan as [[fixedPoint]];
-    * the static edge list just carries (w, totw) columns.
+    * integer weight (`value` cast to BIGINT) instead of 1/outdeg — the
+    * per-arc share is `(rank·w) div totw(u)`, an independent exact
+    * integer, so the inbound sum stays order-free. Arcs whose source has
+    * `totw ≤ 0` propagate nothing; their endpoints keep their rows.
+    * With every weight 1 this is [[fixedPoint]].
     */
   def weightedFixedPoint(edges: DataFrame, iters: Int = 10): DataFrame = {
     val e = edges.select(col("src").cast("long").as("u"),
       col("dst").cast("long").as("v"), col("value").cast("long").as("w"))
     if (LocalGraph.oneTask("weightedPagerank", e))
       return LocalRank.weightedPageRankLocal(e, iters)
-    val tot = e.groupBy("u").agg(sum("w").as("totw"))
-    val eW = e.join(tot, "u").where(col("totw") > 0)
-      .repartition(col("u")).cutLineage()
-    val verts = e.select(col("u").as("id")).union(e.select(col("v")))
-      .distinct().cutLineage()
-
-    var ranks = verts.withColumn("rank", lit(Scale))
-    for (k <- 1 to iters) {
-      val contrib = eW
-        .join(ranks, eW("u") === ranks("id"))
-        .select(col("v").as("id"), expr("(rank * w) div totw").as("c"))
-        .groupBy("id").agg(sum("c").as("s"))
-      ranks = verts
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(15L * Scale / 100) + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-      if (k % 3 == 0 || k == iters) ranks = ranks.cutLineage()
-    }
-    ranks
+    rounds(e, iters, weighted = true)
   }
 
   /** Personalized PageRank: the teleport term lands only on `sources`
     * instead of uniformly — the standard random-walk-with-restart
-    * scoring used for seed-set expansion / related-item retrieval. Same
-    * integer micro-unit contract and identical distributed shape as
-    * [[fixedPoint]] (the teleport mask is one extra broadcast-joined
-    * column on the static vertex table):
+    * scoring used for seed-set expansion / related-item retrieval:
     *
     *   r_0(v)     = SCALE·[v ∈ S]
     *   r_{k+1}(v) = (15·SCALE div 100)·[v ∈ S]
     *              + (85 · Σ_{u→v} (r_k(u) div outdeg(u))) div 100
+    *
+    * With every vertex a source this is [[fixedPoint]].
     */
   def personalized(edges: DataFrame, sources: Seq[Long], iters: Int = 10): DataFrame = {
-    val e = edges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
+    val e = arcsOf(edges)
     if (LocalGraph.oneTask("personalizedPagerank", e))
       return LocalRank.personalizedLocal(e, sources, iters)
-    val deg = e.groupBy("u").agg(count(lit(1)).as("outdeg"))
-    val eDeg = e.join(deg, "u").repartition(col("u")).cutLineage()
-    val verts = e.select(col("u").as("id")).union(e.select(col("v")))
-      .distinct()
-      .withColumn("is_src", col("id").isInCollection(sources))
-      .cutLineage()
+    rounds(e, iters, sources = Some(sources))
+  }
 
-    var ranks = verts.withColumn("rank",
-      when(col("is_src"), lit(Scale)).otherwise(lit(0L)))
-    for (k <- 1 to iters) {
-      val contrib = eDeg
-        .join(ranks, eDeg("u") === ranks("id"))
-        .select(col("v").as("id"), expr("rank div outdeg").as("c"))
-        .groupBy("id").agg(sum("c").as("s"))
-      ranks = verts
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"), col("is_src"),
-          (when(col("is_src"), lit(15L * Scale / 100)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
-      if (k % 3 == 0 || k == iters) ranks = ranks.cutLineage()
+  private def arcsOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
+
+  /** The one distributed round loop behind all four entry points, over
+    * arcs `e` = (u, v[, w]), with the three inputs above: `weighted`
+    * picks the `(rank·w) div totw` share over arcs with `totw > 0`,
+    * `prev` or `sources` the seed, and `sources` the teleport mask.
+    * With `trace`, every round is cut, its max |Δrank| recorded and the
+    * superseded round released; otherwise every third round (and the
+    * last) is cut.
+    */
+  private def rounds(e: DataFrame, iters: Int, weighted: Boolean = false,
+                     prev: Option[DataFrame] = None, sources: Option[Seq[Long]] = None,
+                     trace: Option[scala.collection.mutable.Buffer[Long]] = None): DataFrame = {
+    val (arcs, share) =
+      if (weighted)
+        (e.join(e.groupBy("u").agg(sum("w").as("totw")), "u").where(col("totw") > 0),
+          "(rank * w) div totw")
+      else (e.join(e.groupBy("u").agg(count(lit(1)).as("outdeg")), "u"), "rank div outdeg")
+    // static per-round join input, partitioned once on the join key
+    val eArc = arcs.repartition(col("u")).cutLineage()
+    val ids = e.select(col("u").as("id")).union(e.select(col("v"))).distinct()
+    val verts = sources.fold(ids)(s => ids.withColumn("is_src", col("id").isInCollection(s)))
+      .cutLineage()
+    def masked(x: Long) =
+      if (sources.isEmpty) lit(x) else when(col("is_src"), lit(x)).otherwise(lit(0L))
+
+    var ranks = prev match {
+      case Some(p) => verts
+        .join(p.select(col("id"), col("rank").as("pr")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("pr"), lit(Scale)).as("rank"))
+        .cutLineage()
+      case None => verts.select(col("id"), masked(Scale).as("rank"))
     }
-    ranks.select(col("id"), col("rank"))
+    for (k <- 1 to iters) {
+      val contrib = eArc
+        .join(ranks, eArc("u") === ranks("id"))
+        .select(col("v").as("id"), expr(share).as("c"))
+        .groupBy("id").agg(sum("c").as("s"))
+      val next = verts
+        .join(contrib, Seq("id"), "left")
+        .select(col("id"),
+          (masked(15L * Scale / 100) + expr("(85 * coalesce(s, 0L)) div 100")).as("rank"))
+      trace match {
+        case Some(buf) =>
+          val nx = next.cutLineage()
+          buf += nx.toDF("id", "nr")
+            .join(ranks.toDF("id", "or"), Seq("id"))
+            .agg(coalesce(max(abs(col("nr") - col("or"))), lit(0L)))
+            .head().getLong(0)
+          // release the superseded round's checkpoint — the Δ above was
+          // its last reader, and a traced certification loop would
+          // otherwise pin O(iters) |V|-sized frames (OOM'd live in
+          // tier2prwarm at 2 × 30 rounds)
+          org.apache.spark.sql.graftbridge.PlanBridge.checkpointRddId(ranks)
+            .foreach(id => e.sparkSession.sparkContext.getPersistentRDDs
+              .get(id).foreach(_.unpersist(false)))
+          ranks = nx
+        // no convergence probe ⇒ no need to materialize every round; cut
+        // lineage every few rounds to bound plan depth without paying a
+        // synchronous job barrier per iteration
+        case None => ranks = if (k % 3 == 0 || k == iters) next.cutLineage() else next
+      }
+    }
+    ranks
   }
 }

@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object Traversals {
 
-  /** Undirected view shared by the vertex-keyed iterative operators:
-    * both directions, self-loops dropped, exact-duplicate arcs merged.
+  /** The one undirected view of the operators: both directions,
+    * self-loops dropped, exact-duplicate arcs merged. Callers cut it
+    * where they reuse it.
     */
   private[operators] def symmetrize(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))

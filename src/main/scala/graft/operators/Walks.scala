@@ -31,17 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Walks {
 
-  /** Symmetrized, dedup'd, self-loop-free, checkpointed edge view —
-    * ONE definition for both walk variants (drift here silently breaks
-    * the documented step-1 equivalence between them).
-    */
-  private def symOf(edges: DataFrame): DataFrame = {
-    val half = edges.select(col("src").cast("long").as("u"),
-      col("dst").cast("long").as("v"))
-    half.union(half.select(col("v"), col("u")))
-      .where(col("u") =!= col("v")).distinct().cutLineage()
-  }
-
   /** The portable step-keyed coin h(cur, t, v) — the ONE hash both walk
     * variants and both oracles unroll.
     */
@@ -63,7 +52,7 @@ object Walks {
 
   def deterministicWalks(edges: DataFrame, len: Int): DataFrame = {
     require(len >= 0, s"walk length must be non-negative, got $len")
-    val sym = symOf(edges)
+    val sym = Traversals.symmetrize(edges).cutLineage()
     if (LocalGraph.oneTask("deterministicWalks", sym))
       return walksLocal(sym, len, biased = false, 0L, 0L, 0L)
     var cur = sym.select(col("u").as("start_id")).distinct()
@@ -114,7 +103,7 @@ object Walks {
                   fFar: Long = 2L): DataFrame = {
     require(len >= 0, s"walk length must be non-negative, got $len")
     require(fReturn > 0 && fNear > 0 && fFar > 0, "bias factors must be positive")
-    val sym = symOf(edges)
+    val sym = Traversals.symmetrize(edges).cutLineage()
     if (LocalGraph.oneTask("biasedWalks", sym))
       return walksLocal(sym, len, biased = true, fReturn, fNear, fFar)
     var cur = sym.select(col("u").as("start_id")).distinct()
@@ -156,7 +145,8 @@ object Walks {
   /** One-task replay of both walk variants: same step-keyed integer
     * hash, same (priority, neighbor) lexicographic argmin, same
     * return/near/far classification — bit-equal by construction. Input
-    * is the shared [[symOf]] view. Returns (start_id, step, vertex).
+    * is the shared [[Traversals.symmetrize]] view, cut. Returns
+    * (start_id, step, vertex).
     */
   private def walksLocal(sym: DataFrame, len: Int, biased: Boolean,
                          fReturn: Long, fNear: Long, fFar: Long): DataFrame = {

@@ -96,8 +96,9 @@ class LocalTwinsSpec extends SparkTestBase {
     * `want`, no rows unless the operator emits its sources.
     */
   private def pinEmpty(op: => DataFrame, what: String,
-                       want: Seq[Seq[Any]] = Nil): Unit = {
-    val (l, r) = legs(op, s"$what on no edges")
+                       want: Seq[Seq[Any]] = Nil,
+                       roundOnly: Set[String] = Set.empty): Unit = {
+    val (l, r) = legs(op, s"$what on no edges", roundOnly)
     noRows(l, r, what, want)
   }
 
@@ -112,6 +113,10 @@ class LocalTwinsSpec extends SparkTestBase {
     sameRows(local, round, s"$what on no edges")
     assert(rows(local) == want, s"$what on no edges")
   }
+
+  /** The nested CC gate ([[ConnectedComponents.auto]]) of round paths
+    * whose one-task leg labels components itself. */
+  private val ccGate = Set("connectedComponents")
 
   private lazy val c10 = graft.model.GraphFixtures.coPurchase10(spark, sf)
   /** The empty edge frame: c10's schema, no rows. */
@@ -131,9 +136,11 @@ class LocalTwinsSpec extends SparkTestBase {
 
   test("louvain / louvainLeiden: one-task replay == round path") {
     pinEqual(Communities.louvain(c10, 2, 2), "louvain")
-    pinEqual(Communities.louvainLeiden(c10, 2, 2), "louvainLeiden")
+    // the round path's connectivity refinement labels components with
+    // ConnectedComponents.auto, which the one-task leg never calls
+    pinEqual(Communities.louvainLeiden(c10, 2, 2), "louvainLeiden", roundOnly = ccGate)
     pinEmpty(Communities.louvain(none, 2, 2), "louvain")
-    pinEmpty(Communities.louvainLeiden(none, 2, 2), "louvainLeiden")
+    pinEmpty(Communities.louvainLeiden(none, 2, 2), "louvainLeiden", roundOnly = ccGate)
   }
 
   test("louvainWeighted: one-task replay == round path (incl. parallel-edge weights)") {
@@ -146,8 +153,11 @@ class LocalTwinsSpec extends SparkTestBase {
   }
 
   test("louvainByComponent + louvainMaintain: one-task replay == round path") {
-    pinEqual(Communities.louvainByComponent(c10, 2, 2), "louvainByComponent")
-    pinEmpty(Communities.louvainByComponent(none, 2, 2), "louvainByComponent")
+    // as in louvainLeiden, only the round path labels components
+    pinEqual(Communities.louvainByComponent(c10, 2, 2), "louvainByComponent",
+      roundOnly = ccGate)
+    pinEmpty(Communities.louvainByComponent(none, 2, 2), "louvainByComponent",
+      roundOnly = ccGate)
     import spark.implicits._
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L),
       (12L, 10L), (20L, 21L)).toDF("src", "dst")
@@ -232,7 +242,7 @@ class LocalTwinsSpec extends SparkTestBase {
     // the round path labels components with ConnectedComponents.auto,
     // which the one-task leg never calls
     pinEqual(Traversals.densestByComponent(c10), "densestByComponent",
-      roundOnly = Set("connectedComponents"))
+      roundOnly = ccGate)
     pinEmpty(Traversals.densestSubgraph(none), "densestSubgraph")
     sameNone(Traversals.densestByComponent(none), "densestByComponent")
     import spark.implicits._

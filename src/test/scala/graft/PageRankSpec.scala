@@ -60,6 +60,24 @@ class PageRankSpec extends SparkTestBase {
     }
     assert(r == Map(0L -> r0, 1L -> r1, 2L -> r2))
     assert(r(1L) > r(2L))
+    // every weight 1: the share (rank·1) div totw is rank div outdeg, so
+    // weightedFixedPoint is fixedPoint, on both legs (multi-arcs and
+    // dangling vertices included)
+    val g = multiArcs
+    val unit = g.withColumn("value", lit(1L))
+    assert(ranks(PageRank.weightedFixedPoint(unit, 5)) == ranks(PageRank.fixedPoint(g, 5)))
+    assert(atBarZero(ranks(PageRank.weightedFixedPoint(unit, 5))) ==
+      atBarZero(ranks(PageRank.fixedPoint(g, 5))))
+  }
+
+  private def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+
+  /** The directed C10 co-purchase graph (dangling vertices included)
+    * with every arc out of a multiple of 7 doubled. */
+  private def multiArcs: org.apache.spark.sql.DataFrame = {
+    val c = graft.model.GraphFixtures.coPurchase10(spark, sf)
+    c.unionByName(c.where(col("src") % 7 === 0))
   }
 
   test("personalized: mass concentrates at the source and decays with distance") {
@@ -81,6 +99,14 @@ class PageRankSpec extends SparkTestBase {
     val p = PageRank.personalized(cyc, Seq(1L, 2L), 10)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(p == Map(1L -> PageRank.Scale, 2L -> PageRank.Scale))
+    // every vertex a source: seed and teleport mask cover all vertices,
+    // so personalized is fixedPoint, on both legs
+    val g = multiArcs
+    val all = g.select(col("src")).union(g.select(col("dst"))).distinct()
+      .collect().map(_.getLong(0)).toSeq
+    assert(ranks(PageRank.personalized(g, all, 5)) == ranks(PageRank.fixedPoint(g, 5)))
+    assert(atBarZero(ranks(PageRank.personalized(g, all, 5))) ==
+      atBarZero(ranks(PageRank.fixedPoint(g, 5))))
   }
 
   test("warm start (q240): empty prev reproduces the cold loop; seeding is provably closer to stationary") {
